@@ -3,8 +3,11 @@
 Tuned for correctness-vs-DuckDB (UTC session timezone, ANSI mode pinned
 ON — query authors must use try_cast/when guards for null-on-error
 semantics) and for scale-minded defaults (AQE on, shuffle partitions
-sized to cores rather than the 200 default). On a real cluster the same
-builder is used with ``master`` unset (inherited from spark-submit).
+sized to cores rather than the 200 default). Parquet is written with
+zstd, ``functions.parquet_config.ParquetConfig``'s default codec, rather
+than Spark's snappy default, for every writer that does not pick its
+own. On a real cluster the same builder is used with ``master`` unset
+(inherited from spark-submit).
 """
 
 from __future__ import annotations
@@ -69,6 +72,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # ParquetConfig's default codec (see the module docstring)
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # the events fixture stores TIMESTAMP(NANOS); Spark reads those as
         # raw longs and sources/kafka_view converts to micros explicitly
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -44,7 +44,6 @@ from stream_loader_spark.model.idempotence import dedup_token
 from stream_loader_spark.operators.recovery import stream_ranges
 
 
-
 def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
     """Durable atomic JSON publish: fsync the temp file, rename, fsync
     the directory so the rename itself survives power loss. The ONE
@@ -66,6 +65,17 @@ def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def consume_replayed_batch(batch_df: DataFrame) -> None:
+    """Execute a replayed batch's plan without writing it anywhere.
+
+    A sink that already committed the batch has nothing to write, but
+    stateful operators upstream of it (e.g. watermark dedup) commit
+    their state stores only when the batch's plan runs: a sink that
+    returns without running it fails the restart with
+    STATE_STORE_COMMIT_VALIDATION_FAILED."""
+    batch_df.write.format("noop").mode("overwrite").save()
 
 
 @dataclass
@@ -184,6 +194,7 @@ class ManifestFileSink:
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
             # replayed micro-batch after restart: commit already atomic+durable
+            consume_replayed_batch(batch_df)
             return
         commit_started = time.monotonic()
         ranges: list[StreamRange] = []

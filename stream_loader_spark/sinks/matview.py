@@ -16,9 +16,10 @@ doing DELTA-sized work per batch:
 Replays are no-ops BEFORE any aggregation runs: a committed batch id
 short-circuits, so the merge can never double-count a delivered batch
 (the at-least-once → exactly-once bridge, same contract as every other
-sink in sinks/). At 100 TB the per-batch cost tracks the batch's key
-footprint — buckets touched × bucket size — not the view size, the
-property that makes continuous aggregation affordable.
+sink in sinks/); the replayed plan still runs into a no-op sink so
+upstream state stores commit. At 100 TB the per-batch cost tracks the
+batch's key footprint — buckets touched × bucket size — not the view
+size, the property that makes continuous aggregation affordable.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from stream_loader_spark.operators.matview import (
     finalize_aggregates,
     merge_aggregate_states,
 )
+from stream_loader_spark.sinks.manifest import consume_replayed_batch
 from stream_loader_spark.sinks.upsert import UpsertSink, null_safe_join
 
 # order column for the underlying upsert: the writing batch id — within
@@ -64,7 +66,9 @@ class IncrementalAggSink:
         from pyspark.sql import functions as F
 
         if self.upsert.is_batch_committed(batch_id):
-            return  # replay: state already reflects this batch
+            # replay: state already reflects this batch
+            consume_replayed_batch(batch_df)
+            return
         spark = batch_df.sparkSession
         delta = aggregate_state(batch_df, self.keys, self.value_cols).persist()
         try:
@@ -154,6 +158,7 @@ class SketchViewSink:
         from stream_loader_spark.operators.sketches import daily_hll_sketches
 
         if self.upsert.is_batch_committed(batch_id):
+            consume_replayed_batch(batch_df)
             return
         spark = batch_df.sparkSession
         keys = [self.key_col, self.date_col]

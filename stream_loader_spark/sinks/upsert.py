@@ -8,18 +8,30 @@ matrix), structured so a batch rewrites only the state it touches:
 
 - State is hash-bucketed by key. A batch reduces to its latest-per-key
   rows, finds the (few) buckets those keys hash into, merges ONLY
-  those buckets, and writes them in ONE job to
+  those buckets, and rewrites each into
   ``versions/v=<batch_id>/_bucket=<b>/``. Untouched buckets keep their
   old version — at 100 TB a batch touching 1% of the key space
   rewrites 1% of the snapshot, not all of it (the pruning Delta/Hudi
   get from file stats; here it is deterministic by layout).
-- One atomic manifest (temp + rename, driver-side) maps bucket → the
-  version directory holding its current rows and records committed
-  batch ids. Readers union exactly the manifest-named directories; a
-  crash between data and manifest leaves invisible files that the
-  deterministic replay overwrites. Data files are NEVER renamed —
-  object-store safe, same as the manifest file sink.
-- Replays are no-ops: the batch id is already in the manifest.
+- The merged rows are rebalanced by bucket before the write, so a
+  commit writes one parquet file per touched bucket (the reference's
+  one-file-per-partition-per-batch ``RecordBatcher`` shape), split only
+  when a bucket outgrows AQE's advisory partition size. The codec is
+  the session's (zstd, see session.py). That layout needs adaptive
+  query execution: when the batch comes from a plan with stateful
+  streaming operators (dedup, aggregation), Spark turns AQE off for it
+  and the write falls back to one file per task per touched bucket —
+  still correct, just more and smaller files.
+- One atomic manifest (``atomic_write_json``: fsynced temp file,
+  rename, fsynced directory) maps bucket → the version directory
+  holding its current rows and records committed batch ids. Readers
+  union exactly the manifest-named directories; a crash between data
+  and manifest leaves invisible files that the deterministic replay
+  overwrites. Data files are NEVER renamed — object-store safe, same
+  as the manifest file sink.
+- Replays write nothing: the batch id is already in the manifest. The
+  replayed batch's plan still runs into a no-op sink so stateful
+  operators upstream commit their state (``consume_replayed_batch``).
 
 Within-batch ties (same key twice in one batch) resolve by the caller-
 supplied ``order_col`` via ``max_by`` over a struct — one map-side-
@@ -30,10 +42,11 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from stream_loader_spark.sinks.manifest import atomic_write_json, consume_replayed_batch
 
 
 def null_safe_join(
@@ -139,11 +152,7 @@ class UpsertSink:
 
     def _write_manifest(self, manifest: dict) -> None:
         manifest.setdefault("config", self._config())
-        os.makedirs(self.path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.replace(tmp, self._manifest_path)  # atomic on POSIX
+        atomic_write_json(self.path, manifest, os.path.basename(self._manifest_path))
 
     def _bucket_dir(self, bucket: int, version: int) -> str:
         return os.path.join(
@@ -182,7 +191,8 @@ class UpsertSink:
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         manifest = self._read_manifest()
         if batch_id in manifest["batches"]:
-            return  # replay of a committed batch: no-op
+            consume_replayed_batch(batch_df)
+            return
         spark = batch_df.sparkSession
         tomb = self.tombstone_col
         data_cols = [c for c in batch_df.columns if c != tomb]
@@ -242,10 +252,12 @@ class UpsertSink:
                 merged = self._aligned(keep, types, all_cols + ["_bucket"]).unionByName(
                     self._aligned(live, types, all_cols + ["_bucket"])
                 )
-            # ONE job writes every touched bucket under the new version;
-            # the deterministic path makes a crashed replay overwrite it
+            # ONE job writes every touched bucket under the new version,
+            # one file per bucket (see the module docstring); the
+            # deterministic path makes a crashed replay overwrite it
             (
-                merged.write.partitionBy("_bucket")
+                merged.hint("rebalance", "_bucket")
+                .write.partitionBy("_bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(self.path, "versions", f"v={batch_id}"))
             )

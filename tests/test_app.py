@@ -63,6 +63,45 @@ class TestBuildApp:
         # 10 replayed offsets are deduplicated by the checkpoint, not re-written
         assert app.sink.committed_data(spark).count() == 20
 
+    def test_restart_replays_batch_the_sink_already_committed(self, spark, tmp_path):
+        """Crash after the sink's commit, before the engine's: the
+        restart replays a batch the manifest already holds. The sink
+        skips the write, but the dedup state store ahead of it must
+        still commit that batch's state, or the replay fails with
+        STATE_STORE_COMMIT_VALIDATION_FAILED."""
+        cfg = self._config(tmp_path)
+        cfg["source"]["options"] = {"maxFilesPerTrigger": 1}
+        cfg["watermark"] = {"column": "ts", "delay": "3 minutes"}
+        cfg["dedup"] = {"keys": ["topic", "partition", "offset"]}
+        src = cfg["source"]["path"]
+        for f in range(4):
+            # offsets 10f..10f+9 plus one redelivery of the previous file
+            offsets = list(range(10 * f, 10 * f + 10)) + ([10 * f - 1] if f else [])
+            spark.createDataFrame(
+                [
+                    ("t", o % 2, o, datetime(2024, 1, 1, 0, f), json.dumps({"k": o, "v": "x"}))
+                    for o in offsets
+                ],
+                REC_SCHEMA,
+            ).coalesce(1).write.mode("append").parquet(src)
+        app = build_app(spark, cfg)
+        app.pipeline.run_available()
+        last = max(b.batch_id for b in app.sink.committed_batches())
+
+        # the process dies after the sink commits `last`: the engine
+        # holds no commit for it (nor for any no-data batch after it)
+        chk = cfg["checkpoint"]
+        for log, first_gone in (("commits", last), ("offsets", last + 1)):
+            for name in os.listdir(os.path.join(chk, log)):
+                n = name.lstrip(".").split(".")[0]
+                if n.isdigit() and int(n) >= first_gone:
+                    os.remove(os.path.join(chk, log, name))
+
+        app = build_app(spark, cfg)
+        app.pipeline.run_available()
+        rows = app.sink.committed_data(spark).select("partition", "offset").collect()
+        assert len(rows) == len(set(rows)) == 40
+
     def test_unknown_keys_raise(self, spark, tmp_path):
         cfg = self._config(tmp_path)
         cfg["sink"]["compresion"] = "zstd"  # typo'd key

@@ -1419,6 +1419,54 @@ class TestUpsertSink:
         state = {r.k: r.val for r in sink.current_state(spark).collect()}
         assert state == {1: "a", 2: "B"}
 
+    def test_one_zstd_file_per_touched_bucket(self, spark, tmp_path):
+        """Each commit writes one file per touched bucket, however many
+        tasks the batch and the carried-over state arrive in."""
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]).repartition(4), 0)
+        sink.write_batch(self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)]).repartition(4), 1)
+        touched = [b for b, v in sink.bucket_versions().items() if v == 1]
+        assert len(touched) > 1
+        for b in touched:
+            files = [f for f in os.listdir(sink._bucket_dir(b, 1)) if f.endswith(".parquet")]
+            assert len(files) == 1 and files[0].endswith(".zstd.parquet"), (b, files)
+        assert sink.current_state(spark).count() == 64
+
+    def test_commit_fsyncs_manifest_and_directory(self, spark, tmp_path, monkeypatch):
+        sink = self._sink(tmp_path)
+        synced = set()
+        real_fsync = os.fsync
+
+        def counting_fsync(fd):
+            st = os.fstat(fd)
+            synced.add((st.st_dev, st.st_ino))
+            real_fsync(fd)
+
+        monkeypatch.setattr(os, "fsync", counting_fsync)
+        sink.write_batch(self._df(spark, [(1, "a", 1), (2, "b", 1)]), 0)
+        monkeypatch.undo()
+        for path in (sink._manifest_path, sink.path):
+            st = os.stat(path)
+            assert (st.st_dev, st.st_ino) in synced, path
+
+    def test_failed_manifest_publish_leaves_no_temp_file(self, spark, tmp_path, monkeypatch):
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(1, "a", 1)]), 0)
+        with open(sink._manifest_path) as fh:
+            before = fh.read()
+
+        def failing_dump(*a, **k):
+            raise RuntimeError("disk full")
+
+        monkeypatch.setattr(json, "dump", failing_dump)
+        with pytest.raises(RuntimeError, match="disk full"):
+            sink.write_batch(self._df(spark, [(1, "b", 2)]), 1)
+        monkeypatch.undo()
+        assert [f for f in os.listdir(sink.path) if f.endswith(".tmp")] == []
+        with open(sink._manifest_path) as fh:
+            assert fh.read() == before
+        assert [r.val for r in sink.current_state(spark).collect()] == ["a"]
+
 
 
     def test_null_key_state_merges(self, spark, tmp_path):
