@@ -6,22 +6,27 @@ keeps only the latest row per key. This sink provides that on plain
 parquet with the repo's manifest discipline (sinks/manifest.py crash
 matrix), structured so a batch rewrites only the state it touches:
 
-- State is hash-bucketed by key. A batch reduces to its latest-per-key
-  rows, finds the (few) buckets those keys hash into, merges ONLY
-  those buckets, and rewrites each into
+- State is hash-bucketed by key. A batch merges ONLY the buckets its
+  keys hash into and rewrites each into
   ``versions/v=<batch_id>/_bucket=<b>/``. Untouched buckets keep their
   old version — at 100 TB a batch touching 1% of the key space
   rewrites 1% of the snapshot, not all of it (the pruning Delta/Hudi
   get from file stats; here it is deterministic by layout).
-- The merged rows are rebalanced by bucket before the write, so a
-  commit writes one parquet file per touched bucket (the reference's
-  one-file-per-partition-per-batch ``RecordBatcher`` shape), split only
-  when a bucket outgrows AQE's advisory partition size. The codec is
-  the session's (zstd, see session.py). That layout needs adaptive
-  query execution: when the batch comes from a plan with stateful
-  streaming operators (dedup, aggregation), Spark turns AQE off for it
-  and the write falls back to one file per task per touched bucket —
-  still correct, just more and smaller files.
+- A commit scans the batch once: the rows are persisted with their
+  bucket, and the no-op write that fills the cache observes the set of
+  touched buckets. The touched buckets' stored rows and the batch rows
+  then meet in ONE exchange on the bucket and one aggregate per key, so
+  each bucket lands whole in one shuffle partition and a commit writes
+  one parquet file per touched bucket (the reference's
+  one-file-per-partition-per-batch ``RecordBatcher`` shape), with
+  adaptive query execution on or off. The codec is the session's
+  (zstd, see session.py).
+- The stored schema is pinned in the manifest (``schema``, next to
+  ``config``), so stored rows are read without inferring it. The pin
+  is the running union of every batch's columns: a batch may add
+  columns (older rows read back NULL) or omit them (carried rows keep
+  their values). A manifest without the pin is inferred once from its
+  live buckets and pinned by its next commit.
 - One atomic manifest (``atomic_write_json``: fsynced temp file,
   rename, fsynced directory) maps bucket → the version directory
   holding its current rows and records committed batch ids. Readers
@@ -33,9 +38,13 @@ matrix), structured so a batch rewrites only the state it touches:
   replayed batch's plan still runs into a no-op sink so stateful
   operators upstream commit their state (``consume_replayed_batch``).
 
-Within-batch ties (same key twice in one batch) resolve by the caller-
-supplied ``order_col`` via ``max_by`` over a struct — one map-side-
-combinable aggregate, no window. ``order_col`` must not be a key.
+The newest row per key wins. A batch row beats the stored row whatever
+its ``order_col`` value; inside one batch the greatest ``order_col``
+wins and a non-NULL value beats NULL (rows that tie on it resolve
+arbitrarily). The tombstone marker rides through the same ``max_by``,
+so delete-then-reinsert in one batch resolves by ``order_col`` too,
+and NULL keys group like any other value. ``order_col`` must not be a
+key.
 """
 
 from __future__ import annotations
@@ -43,10 +52,16 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stream_loader_spark.sinks.manifest import atomic_write_json, consume_replayed_batch
+
+# merge-only columns: a batch row's tombstone flag and its priority
+# over stored rows; neither is ever stored
+_TOMB = "_upsert_tomb"
+_PRIO = "_upsert_prio"
 
 
 def null_safe_join(
@@ -173,20 +188,20 @@ class UpsertSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.write_batch(batch_df, batch_id)
 
-    @staticmethod
-    def _aligned(df: DataFrame, types: dict, cols: list[str]) -> DataFrame:
-        """Project onto ``cols``, filling columns the frame lacks with
-        NULLs of the canonical type — the additive-schema-evolution
-        contract: a batch may add columns (old rows read back NULL) or
-        omit columns (carried rows keep their stored values), and
-        neither direction crashes the merge or silently drops data."""
-        have = set(df.columns)
-        return df.select(
-            *[
-                F.col(c) if c in have else F.lit(None).cast(types[c]).alias(c)
-                for c in cols
-            ]
-        )
+    def _state_schema(self, spark: SparkSession, manifest: dict) -> StructType:
+        """The stored state's columns: the manifest's pin, or for a
+        manifest written before the pin existed, the schema merged from
+        every live bucket directory (one footer-reading job, paid once:
+        the next commit pins it). Inferring from the touched buckets
+        alone would miss a column only untouched buckets hold, and the
+        pin would then drop it on their next rewrite."""
+        if "schema" in manifest:
+            return StructType.fromJson(manifest["schema"])
+        dirs = [self._bucket_dir(int(b), v) for b, v in manifest["versions"].items()]
+        dirs = [d for d in dirs if self._dirs_have_files([d])]
+        if not dirs:
+            return StructType()
+        return spark.read.option("mergeSchema", "true").parquet(*dirs).schema
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         manifest = self._read_manifest()
@@ -195,69 +210,65 @@ class UpsertSink:
             return
         spark = batch_df.sparkSession
         tomb = self.tombstone_col
-        data_cols = [c for c in batch_df.columns if c != tomb]
-
-        # latest row per key WITHIN the batch: one hash aggregate. The
-        # tombstone marker rides through the max_by so delete-then-
-        # reinsert (and the reverse) resolve by order_col like any
-        # other same-key tie.
-        others = [c for c in batch_df.columns if c not in self.key_cols]
-        latest = (
-            batch_df.groupBy(*self.key_cols)
-            .agg(F.max_by(F.struct(*others), F.col(self.order_col)).alias("_row"))
-            .select(*self.key_cols, "_row.*")
-            .withColumn("_bucket", self._bucket_col())
-            .persist()
-        )
+        is_tomb = F.lit(False)
+        if tomb in batch_df.columns:
+            is_tomb = F.coalesce(F.col(tomb), F.lit(False))
+        batch = batch_df.withColumns(
+            {"_bucket": self._bucket_col(), _TOMB: is_tomb, _PRIO: F.lit(1)}
+        ).persist()
         try:
-            touched = sorted(
-                r["_bucket"] for r in latest.select("_bucket").distinct().collect()
+            # the no-op write that fills the cache also observes the
+            # touched buckets: the batch is scanned once, in one job
+            seen = Observation()
+            (
+                batch.observe(seen, F.collect_set("_bucket").alias("b"))
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
             )
+            touched = sorted(seen.get["b"])
             if not touched:
                 manifest["batches"].append(batch_id)
                 self._write_manifest(manifest)
                 return
 
+            stored = self._state_schema(spark, manifest)
             old_dirs = [
                 self._bucket_dir(b, manifest["versions"][str(b)])
                 for b in touched
                 if str(b) in manifest["versions"]
             ]
-            # a prior all-delete batch leaves empty-but-present bucket
-            # dirs; zero-file paths carry no rows and would only break
-            # schema inference when every old dir is empty
+            # a prior all-delete batch leaves empty-but-present bucket dirs
             old_dirs = [d for d in old_dirs if self._dirs_have_files([d])]
-            # tombstoned keys leave state entirely: they still anti-join
-            # the old rows away (via latest's keys) but contribute no
-            # replacement row, and the marker itself is never stored
-            live = latest
-            if tomb is not None and tomb in latest.columns:
-                live = latest.where(~F.coalesce(F.col(tomb), F.lit(False))).drop(tomb)
-            merged = live.select(*data_cols, "_bucket")
+            rows = batch
             if old_dirs:
-                # mergeSchema: touched buckets may span versions written
-                # under different (additively evolved) schemas
-                old = spark.read.option("mergeSchema", "true").parquet(*old_dirs)
-                keep = null_safe_join(
-                    old, latest.select(*self.key_cols), self.key_cols, "left_anti"
-                ).withColumn("_bucket", self._bucket_col())
-                # target schema = batch columns ∪ stored columns; the
-                # side missing a column contributes NULLs (see _aligned)
-                all_cols = data_cols + [
-                    c for c in old.columns if c not in data_cols and c != "_bucket"
-                ]
-                types = {f.name: f.dataType for f in live.schema.fields}
-                for f in old.schema.fields:
-                    types.setdefault(f.name, f.dataType)
-                merged = self._aligned(keep, types, all_cols + ["_bucket"]).unionByName(
-                    self._aligned(live, types, all_cols + ["_bucket"])
+                # additive schema evolution: the side that lacks a column
+                # (older files, or a batch omitting it) contributes NULLs
+                old = spark.read.schema(stored).parquet(*old_dirs).withColumns(
+                    {"_bucket": self._bucket_col(), _TOMB: F.lit(False), _PRIO: F.lit(0)}
                 )
-            # ONE job writes every touched bucket under the new version,
-            # one file per bucket (see the module docstring); the
-            # deterministic path makes a crashed replay overwrite it
+                rows = batch.unionByName(old, allowMissingColumns=True)
+            # ONE exchange: each touched bucket lands whole in one shuffle
+            # partition, so the write below makes one file per bucket. The
+            # newest row per key wins (batch rows over stored ones, see the
+            # module docstring); tombstoned winners are dropped.
+            cols = [c for c in rows.columns if c not in ("_bucket", _TOMB, _PRIO, tomb)]
+            values = [c for c in cols if c not in self.key_cols]
+            merged = (
+                rows.repartition("_bucket")
+                .groupBy("_bucket", *self.key_cols)
+                .agg(
+                    F.max_by(
+                        F.struct(*values, _TOMB), F.struct(_PRIO, self.order_col)
+                    ).alias("_row")
+                )
+                .select(*self.key_cols, "_row.*", "_bucket")
+                .where(~F.col(_TOMB))
+                .select(*cols, "_bucket")
+            )
+            # the deterministic path makes a crashed replay overwrite it
             (
-                merged.hint("rebalance", "_bucket")
-                .write.partitionBy("_bucket")
+                merged.write.partitionBy("_bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(self.path, "versions", f"v={batch_id}"))
             )
@@ -267,13 +278,17 @@ class UpsertSink:
             for b in touched:
                 os.makedirs(self._bucket_dir(b, batch_id), exist_ok=True)
         finally:
-            latest.unpersist()
+            batch.unpersist()
 
         for bucket in touched:
             manifest["versions"][str(bucket)] = batch_id
         manifest["batches"].append(batch_id)
         # per-batch snapshot of the bucket→version map: time-travel reads
         manifest["history"][str(batch_id)] = dict(manifest["versions"])
+        # the pin only widens: stored columns this batch did not carry stay
+        written = merged.drop("_bucket").schema
+        kept = [f for f in stored.fields if f.name not in written.names]
+        manifest["schema"] = StructType(written.fields + kept).jsonValue()
         self._write_manifest(manifest)
 
     # -- read path ------------------------------------------------------

@@ -177,9 +177,11 @@ def _is_by_repartition(df: DataFrame, by: tuple[str, ...], min_partitions: int) 
     m = re.match(r"^RepartitionByExpression \[(.*)\], (\d+)\s*$", first)
     if not m or int(m.group(2)) < min_partitions:
         return False
-    # attribute refs print as name#id[type]; keep the bare names
-    cols = [c.strip().split("#", 1)[0] for c in m.group(1).split(",")]
-    return cols == list(by)
+    # a hash repartition lists bare attribute refs (name#id, L suffix for
+    # longs); a range repartition prints the same node with sort orders
+    # (``doc_id#1L ASC NULLS FIRST``) and must not count
+    refs = [re.fullmatch(r"([^\s#]+)#\d+L?", c.strip()) for c in m.group(1).split(",")]
+    return all(refs) and [r.group(1) for r in refs] == list(by)
 
 
 _SCATTER_MEMO: WeakKeyDictionary = WeakKeyDictionary()

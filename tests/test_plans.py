@@ -637,6 +637,18 @@ class TestScatterByKey:
         assert plan2.count("Exchange ") == 1
         assert "hashpartitioning(k" in plan2
 
+    def test_scatter_by_respreads_a_range_repartition_on_the_key(self, spark):
+        # a range repartition prints the same RepartitionByExpression
+        # node as a hash one; it is not hash clustering, so scatter(by=)
+        # must still add its hash exchange
+        from stream_loader_spark.sources.tables import scatter
+
+        ranged = spark.range(1000).selectExpr("id AS doc_id").repartitionByRange(8, "doc_id")
+        out = scatter(ranged, by=("doc_id",), min_partitions=8)
+        assert out is not ranged
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning(doc_id" in plan
+
     def test_scatter_by_memoized_separately_from_round_robin(self, spark):
         from stream_loader_spark.sources.tables import scatter
 

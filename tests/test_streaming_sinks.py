@@ -1421,16 +1421,59 @@ class TestUpsertSink:
 
     def test_one_zstd_file_per_touched_bucket(self, spark, tmp_path):
         """Each commit writes one file per touched bucket, however many
-        tasks the batch and the carried-over state arrive in."""
+        tasks the batch and the carried-over state arrive in, with
+        adaptive query execution on (the default) or off (as for a batch
+        from a plan with stateful streaming operators)."""
+        for aqe in ("true", "false"):
+            sink = self._sink(tmp_path / f"aqe_{aqe}")
+            prev = spark.conf.get("spark.sql.adaptive.enabled")
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            try:
+                sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]).repartition(4), 0)
+                sink.write_batch(
+                    self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)]).repartition(4), 1
+                )
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", prev)
+            touched = [b for b, v in sink.bucket_versions().items() if v == 1]
+            assert len(touched) > 1
+            for b in touched:
+                files = [f for f in os.listdir(sink._bucket_dir(b, 1)) if f.endswith(".parquet")]
+                assert len(files) == 1 and files[0].endswith(".zstd.parquet"), (aqe, b, files)
+            assert sink.current_state(spark).count() == 64
+
+    def test_commit_on_existing_state_runs_at_most_four_jobs(self, spark, tmp_path):
+        """A commit is one scan of the batch (which also observes the
+        touched buckets) and one shuffled write; no job collects the
+        bucket set, infers the stored schema or joins against state."""
         sink = self._sink(tmp_path)
-        sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]).repartition(4), 0)
-        sink.write_batch(self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)]).repartition(4), 1)
-        touched = [b for b, v in sink.bucket_versions().items() if v == 1]
-        assert len(touched) > 1
-        for b in touched:
-            files = [f for f in os.listdir(sink._bucket_dir(b, 1)) if f.endswith(".parquet")]
-            assert len(files) == 1 and files[0].endswith(".zstd.parquet"), (b, files)
-        assert sink.current_state(spark).count() == 64
+        sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]), 0)
+        batch = self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)])
+        sc = spark.sparkContext
+        sc.setJobGroup("upsert-commit-jobs", "one upsert commit")
+        try:
+            sink.write_batch(batch, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("upsert-commit-jobs"))
+        assert 1 <= len(jobs) <= 4, jobs
+        state = {r.k: r.val for r in sink.current_state(spark).collect()}
+        assert state == {k: "b" if k % 5 == 0 else "a" for k in range(64)}
+
+    def test_null_order_value_still_updates_its_key(self, spark, tmp_path):
+        """A batch row beats stored state whatever its order value; in
+        one batch a non-NULL order value beats NULL. Before, a key whose
+        only batch row had a NULL order value was stored as all NULLs."""
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        sink = UpsertSink(str(tmp_path / "state"), ["k"], "n", num_buckets=4)
+        schema = "k long, n long, v string"
+        sink.write_batch(spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], schema), 0)
+        sink.write_batch(
+            spark.createDataFrame([(1, None, "a2"), (2, None, "b0"), (2, 5, "b2")], schema), 1
+        )
+        state = {r.k: (r.n, r.v) for r in sink.current_state(spark).collect()}
+        assert state == {1: (None, "a2"), 2: (5, "b2")}
 
     def test_commit_fsyncs_manifest_and_directory(self, spark, tmp_path, monkeypatch):
         sink = self._sink(tmp_path)
@@ -1812,6 +1855,64 @@ class TestUpsertSchemaEvolution:
         state = {r["k"]: r for r in sink.current_state(spark).collect()}
         assert state[1]["extra"] == "keepme"  # carried row: NOT dropped
         assert state[2]["val"] == "B" and state[2]["extra"] is None
+
+    def _bucket_keys(self, spark, sink):
+        """Keys a and a2 in one bucket, and b in another."""
+        rows = (
+            spark.createDataFrame([(k,) for k in range(32)], "k long")
+            .select("k", sink._bucket_col().alias("b"))
+            .collect()
+        )
+        a = rows[0]
+        a2 = next(r for r in rows[1:] if r.b == a.b)
+        b = next(r for r in rows if r.b != a.b)
+        return a.k, a2.k, b.k
+
+    def test_column_added_in_one_bucket_survives_rewrites_of_others(self, spark, tmp_path):
+        """The stored schema pin is a running union: a batch that writes
+        only a new bucket B, without the column bucket A gained, does not
+        drop the column from the pin, so bucket A's next rewrite still
+        reads it for the rows it carries over."""
+        sink = self._sink(tmp_path)
+        a, a2, b = self._bucket_keys(spark, sink)
+        base = "k long, val string, ver long"
+        sink.write_batch(spark.createDataFrame([(a, "a", 1)], base), 0)
+        sink.write_batch(
+            spark.createDataFrame([(a, "A", "x", 2)], "k long, val string, extra string, ver long"),
+            1,
+        )
+        sink.write_batch(spark.createDataFrame([(b, "B", 3)], base), 2)
+        state = {r["k"]: (r["val"], r["extra"]) for r in sink.current_state(spark).collect()}
+        assert state == {a: ("A", "x"), b: ("B", None)}
+        # bucket A rewritten by a batch that omits the column: a is carried
+        sink.write_batch(spark.createDataFrame([(a2, "n", 4)], base), 3)
+        state = {r["k"]: (r["val"], r["extra"]) for r in sink.current_state(spark).collect()}
+        assert state == {a: ("A", "x"), a2: ("n", None), b: ("B", None)}
+
+    def test_manifest_without_schema_pin_merges_and_gains_it(self, spark, tmp_path):
+        """A manifest written before the schema pin existed: its schema
+        is inferred from every live bucket once, the merge is correct,
+        and the commit pins the schema."""
+        sink = self._sink(tmp_path)
+        a, _, b = self._bucket_keys(spark, sink)
+        base = "k long, val string, ver long"
+        sink.write_batch(spark.createDataFrame([(a, "a", 1), (b, "b", 1)], base), 0)
+        sink.write_batch(
+            spark.createDataFrame([(a, "A", "x", 2)], "k long, val string, extra string, ver long"),
+            1,
+        )
+        with open(sink._manifest_path) as fh:
+            m = json.load(fh)
+        del m["schema"]
+        with open(sink._manifest_path, "w") as fh:
+            json.dump(m, fh)
+        # touches only bucket B, whose files predate the extra column
+        sink.write_batch(spark.createDataFrame([(b, "B", 3)], base), 2)
+        with open(sink._manifest_path) as fh:
+            pinned = [f["name"] for f in json.load(fh)["schema"]["fields"]]
+        assert sorted(pinned) == ["extra", "k", "val", "ver"]
+        state = {r["k"]: (r["val"], r["extra"]) for r in sink.current_state(spark).collect()}
+        assert state == {a: ("A", "x"), b: ("B", None)}
 
     def test_change_feed_across_schema_change(self, spark, tmp_path):
         sink = self._sink(tmp_path)
