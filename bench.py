@@ -294,6 +294,28 @@ def warm_session(spark, sf_dir: str, first_query: str | None = None) -> None:
             pass
 
 
+def bench_session(app_name: str, sf_dir: str):
+    """The session the query bench measures with; tools/profile_query.py
+    uses it too, so a solo profile sees the same settings."""
+    split = split_bytes_for(sf_dir)
+    return get_spark(
+        app_name,
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(split),
+            "spark.sql.files.openCostInBytes": str(min(split, 1 << 20)),
+            # shuffles at this SF are a few MB: target post-shuffle
+            # partitions at 8 MB so small stages run 1-2 tasks while the
+            # larger sorts keep multi-way parallelism (the production
+            # default of 64 MB is sized for real file splits)
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+            # fewer, larger Arrow batches through the mapInPandas
+            # operators: the per-batch Python call overhead dominates at
+            # fixture scale (payloads here are small binaries)
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+        },
+    )
+
+
 def split_bytes_for(sf_dir: str) -> int:
     """Size file splits to the benchmarked SF: the largest table should
     fan out across the cores instead of scanning as one task (the
@@ -310,23 +332,7 @@ def split_bytes_for(sf_dir: str) -> int:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    split = split_bytes_for(sf_dir)
-    spark = get_spark(
-        "bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(min(split, 1 << 20)),
-            # shuffles at this SF are a few MB: target post-shuffle
-            # partitions at 8 MB so small stages run 1-2 tasks while the
-            # larger sorts keep multi-way parallelism (the production
-            # default of 64 MB is sized for real file splits)
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            # fewer, larger Arrow batches through the mapInPandas
-            # operators: the per-batch Python call overhead dominates at
-            # fixture scale (payloads here are small binaries)
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        },
-    )
+    spark = bench_session("bench", sf_dir)
 
     warm_session(spark, sf_dir, first_query=BENCH_QUERIES[0])
 

@@ -32,11 +32,6 @@ from stream_loader_spark.operators.dedup import (
 )
 
 
-# persisted cleaned-base memo for the current session (see clean_corpus)
-_BASE_MEMO: dict = {}
-_BASE_MEMO_CAPACITY = 4  # distinct (input, base-config) bases kept persisted
-
-
 @dataclass(frozen=True)
 class CorpusCleanConfig:
     keep_langs: tuple[str, ...] = ()  # empty = keep all
@@ -64,60 +59,20 @@ def clean_corpus(documents: DataFrame, config: CorpusCleanConfig = CorpusCleanCo
         df = df.where(F.col("quality_score") >= config.min_quality)
 
     # The filtered+scored base feeds the exact-dedup digest aggregate
-    # and its semi-join left side; the dedup SURVIVORS then feed three
+    # and its semi-join left side; the dedup survivors then feed three
     # more consumers (LSH shingling, the verify semi-join, the
     # representative anti-join). Persist each once instead of re-running
     # the scan + lang-id + stats (+ content-hash dedup) lineage per
     # consumer; at cluster scale the same role is played by
     # checkpointing the cleaned/deduped corpus to storage between
-    # stages (the multi-pass shape is inherent to the pipeline, not to
-    # this persist). Both pins are MEMOIZED per
-    # (input frame, config): repeated invocations over the memoized
-    # fixture tables (bench passes, correctness runs) must reuse one
-    # cached copy, not stack a new persisted corpus per call.
-    # key on only the config fields the BASE depends on (the near-dup
-    # threshold applies downstream of the persist, so sweeping it must
-    # hit the same cached base, not stack a new one per threshold)
-    memo_key = (id(documents), config.keep_langs, config.min_quality,
-                config.id_col, config.text_col)
-    if _BASE_MEMO.get("_session_id") != id(documents.sparkSession):
-        for entry in list(_BASE_MEMO.values()):
-            if isinstance(entry, tuple):
-                entry[1].unpersist()
-                entry[2].unpersist()
-        _BASE_MEMO.clear()
-        _BASE_MEMO["_session_id"] = id(documents.sparkSession)
-    if memo_key in _BASE_MEMO:
-        df = _BASE_MEMO[memo_key][2]
-    else:
-        # BOUNDED cache (FIFO, small): evicted bases are unpersisted —
-        # an unbounded memo filled executor storage one never-released
-        # corpus per distinct (input, config) for the session's life
-        data_keys = [k for k in _BASE_MEMO if k != "_session_id"]
-        while len(data_keys) >= _BASE_MEMO_CAPACITY:
-            evicted = _BASE_MEMO.pop(data_keys.pop(0))
-            evicted[1].unpersist()
-            evicted[2].unpersist()
-        base = df.persist()
-        # r13: ALSO persist the exact-dedup SURVIVORS. The near-dup
-        # stage consumes the survivors three times (LSH banding, the
-        # verify's semi-join side, the representative anti-join); with
-        # only the base pinned, each consumer re-ran the content-hash
-        # aggregate and its semi-join — two redundant corpus passes +
-        # two hash aggregations at any scale (the survivor pin is what
-        # a cluster run writes to storage between the exact and
-        # near-dup stages). exact dedup is deterministic given the
-        # base, so the survivors share the base's memo key.
-        keep_exact = exact_dedup(base, text_col, id_col).select(
-            F.col("keep_id").alias(id_col)
-        )
-        survivors = base.join(keep_exact, id_col, "left_semi").persist()
-        # the memo value PINS the input frame: the key embeds
-        # id(documents), and CPython recycles addresses after GC — a
-        # collected input must never leave a live entry that a future,
-        # unrelated frame at the same address would silently hit
-        _BASE_MEMO[memo_key] = (documents, base, survivors)
-        df = survivors
+    # stages. A repeated call over the same input plans the same two
+    # frames, so Spark's CacheManager hands back the cached data instead
+    # of stacking a second persisted copy.
+    base = df.persist()
+    keep_exact = exact_dedup(base, text_col, id_col).select(
+        F.col("keep_id").alias(id_col)
+    )
+    df = base.join(keep_exact, id_col, "left_semi").persist()
 
     # near-dup dedup on the exact-dedup survivors
     pairs = minhash_lsh_pairs(df, text_col, id_col, threshold=config.near_dup_threshold)

@@ -18,7 +18,9 @@ deterministic-batch-directory idempotence as the manifest sink; the
 plugs in (single transaction per batch: ``INSERT`` + offsets commit,
 with the batch token as the dedup key — ClickHouse
 ``insert_deduplication_token``, or a unique index on
-``(consumer_group, topic, partition, end_offset)``).
+``(consumer_group, topic, partition, end_offset)``). A replayed batch
+that is already committed writes nothing, but its plan still runs so
+that stateful operators upstream commit their state.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from stream_loader_spark.operators.recovery import (
     committed_positions_external,
     stream_ranges,
 )
+from stream_loader_spark.sinks.manifest import consume_replayed_batch
 from stream_loader_spark.sources.kafka_view import kafka_metadata_columns
 
 
@@ -56,6 +59,7 @@ class InRowOffsetsSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
+            consume_replayed_batch(batch_df)
             return
         cols = kafka_metadata_columns()
         payload = self.payload_cols
@@ -115,6 +119,7 @@ class ExternalOffsetsSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
+            consume_replayed_batch(batch_df)
             return
         batch_df = batch_df.persist()
         try:

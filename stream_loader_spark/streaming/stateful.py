@@ -15,6 +15,11 @@ the watermark lives in grouped state keyed by (topic, partition):
   seeded from state, stamps each row;
 - Arrow-batched pandas transfer, grouped by partition → parallel across
   partitions, exactly the reference's per-partition tracker layout.
+
+The operator is built on ``applyInPandasWithState``, which runs on Spark
+3.5 and 4. Spark 4's ``transformWithStateInPandas`` could hold the same
+state, but its Python state server needs the ``protobuf`` package,
+which this project does not depend on.
 """
 
 from __future__ import annotations
@@ -31,9 +36,8 @@ DEFAULT_VALID_DIFF_MS = 3_600_000
 
 
 def _stamp_watermarks(chunks, wm, now_ms, valid_diff_ms, in_cols, tz):
-    """Shared v1/v2 core: buffer → offset order → epoch ms → validity
-    clamp → state-floored cumulative max. ONE definition, because the
-    two API variants must never diverge semantically.
+    """Stamp one (topic, partition) group: buffer → offset order →
+    epoch ms → validity clamp → state-floored cumulative max.
 
     Timezone correctness: Spark's Arrow conversion delivers timestamps
     LOCALIZED to spark.sql.session.timeZone with tzinfo stripped, so a
@@ -105,73 +109,4 @@ def with_tracked_watermark(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-try:  # Spark 4+ API; absent on 3.5 — v2 entry point guards on this
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SP
-except ImportError:  # pragma: no cover
-    _SP = object
-
-
-class _WatermarkProcessor(_SP):
-    """StatefulProcessor for the transformWithStateInPandas variant —
-    defined module-level so cloudpickle ships only the tiny config."""
-
-    def __init__(self, in_cols, valid_diff_ms, now_ms_fn, tz="UTC"):
-        self.in_cols = in_cols
-        self.valid_diff_ms = valid_diff_ms
-        self.now_ms_fn = now_ms_fn
-        self.tz = tz
-
-    def init(self, handle):
-        self._wm = handle.getValueState("wm", "watermark_ms bigint")
-
-    def handleInputRows(self, key, rows, timer_values):
-        wm = self._wm.get()[0] if self._wm.exists() else -1
-        out, wm = _stamp_watermarks(
-            list(rows), wm, self.now_ms_fn(), self.valid_diff_ms, self.in_cols, self.tz
-        )
-        self._wm.update((wm,))
-        if out is not None:
-            yield out
-
-    def close(self):
-        pass
-
-
-def with_tracked_watermark_v2(
-    stream: DataFrame,
-    valid_diff_ms: int = DEFAULT_VALID_DIFF_MS,
-    now_ms_fn=lambda: int(time.time() * 1000),
-) -> DataFrame:
-    """``with_tracked_watermark`` on the transformWithState API (the
-    arbitrary-stateful-processing successor to applyInPandasWithState,
-    Spark 4+): identical MaxWatermarkProvider semantics, but state goes
-    through a named ValueState handle, which buys schema evolution and
-    the RocksDB state-store backend for free. Prefer this on Spark 4
-    clusters; the v1 form remains for Spark 3.5 compatibility.
-
-    Runtime requirement: the transformWithState state-server protocol
-    speaks protobuf — environments without ``google.protobuf`` can
-    build this plan but not run it (the streaming driver worker exits
-    at init). The pytest is importorskip-gated on exactly that.
-    """
-    if _SP is object:  # pragma: no cover
-        raise RuntimeError("transformWithStateInPandas requires Spark >= 4.0")
-
-    in_cols = stream.schema.fieldNames()
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in stream.schema.fields
-    )
-    out_schema += ", watermark_ms bigint"
-
-    tz = stream.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    proc = _WatermarkProcessor(in_cols, valid_diff_ms, now_ms_fn, tz)
-
-    return stream.groupBy("topic", "partition").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
     )

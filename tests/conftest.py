@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# test the checkout this file belongs to, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stream_loader_spark.session import get_spark
 

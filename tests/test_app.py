@@ -63,13 +63,11 @@ class TestBuildApp:
         # 10 replayed offsets are deduplicated by the checkpoint, not re-written
         assert app.sink.committed_data(spark).count() == 20
 
-    def test_restart_replays_batch_the_sink_already_committed(self, spark, tmp_path):
-        """Crash after the sink's commit, before the engine's: the
-        restart replays a batch the manifest already holds. The sink
-        skips the write, but the dedup state store ahead of it must
-        still commit that batch's state, or the replay fails with
-        STATE_STORE_COMMIT_VALIDATION_FAILED."""
-        cfg = self._config(tmp_path)
+    def _crash_after_sink_commit(self, spark, cfg, committed_batches):
+        """Drain 4 files through watermark + dedup, then drop the
+        engine's commit of the last batch the sink committed (and every
+        later offset) and restart: the restart replays a batch the sink
+        already holds. Returns the rebuilt app after its drain."""
         cfg["source"]["options"] = {"maxFilesPerTrigger": 1}
         cfg["watermark"] = {"column": "ts", "delay": "3 minutes"}
         cfg["dedup"] = {"keys": ["topic", "partition", "offset"]}
@@ -86,7 +84,7 @@ class TestBuildApp:
             ).coalesce(1).write.mode("append").parquet(src)
         app = build_app(spark, cfg)
         app.pipeline.run_available()
-        last = max(b.batch_id for b in app.sink.committed_batches())
+        last = max(committed_batches(app.sink))
 
         # the process dies after the sink commits `last`: the engine
         # holds no commit for it (nor for any no-data batch after it)
@@ -99,7 +97,33 @@ class TestBuildApp:
 
         app = build_app(spark, cfg)
         app.pipeline.run_available()
+        return app
+
+    def test_restart_replays_batch_the_sink_already_committed(self, spark, tmp_path):
+        """Crash after the sink's commit, before the engine's: the
+        restart replays a batch the manifest already holds. The sink
+        skips the write, but the dedup state store ahead of it must
+        still commit that batch's state, or the replay fails with
+        STATE_STORE_COMMIT_VALIDATION_FAILED."""
+        app = self._crash_after_sink_commit(
+            spark,
+            self._config(tmp_path),
+            lambda sink: [b.batch_id for b in sink.committed_batches()],
+        )
         rows = app.sink.committed_data(spark).select("partition", "offset").collect()
+        assert len(rows) == len(set(rows)) == 40
+
+    def test_offsets_sink_restart_replays_batch_it_already_committed(self, spark, tmp_path):
+        """The same crash with the in-row offsets sink: its replay of a
+        committed batch must run the batch's plan too."""
+        cfg = self._config(tmp_path)
+        cfg["sink"] = {"type": "offsets", "path": str(tmp_path / "o")}
+        app = self._crash_after_sink_commit(
+            spark,
+            cfg,
+            lambda sink: [int(d.rsplit("=", 1)[1]) for d in sink._committed_dirs()],
+        )
+        rows = app.sink.table(spark).select("_partition", "_offset").collect()
         assert len(rows) == len(set(rows)) == 40
 
     def test_unknown_keys_raise(self, spark, tmp_path):

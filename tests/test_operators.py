@@ -415,6 +415,34 @@ class TestCleanCorpus:
         assert n_copies_left <= 0.05 * (n_in / 3)
         assert {"pred_lang", "quality_score", "token_count"} <= set(cleaned.columns)
 
+    def test_repeat_call_reuses_spark_cache_and_survives_clear_cache(self, spark, sf_small):
+        """Both persisted frames of a second call over a fresh read of the
+        same table are found in Spark's cache, so no new RDD is pinned;
+        after clearCache a third call recomputes the same rows."""
+        from stream_loader_spark.operators.corpus import clean_corpus, CorpusCleanConfig
+        from stream_loader_spark.sources.tables import load_table, table_path
+
+        def pinned():
+            # count the RDDs Spark builds for cached frames (named after
+            # their plan); the near-dup stage's localCheckpoints are per
+            # call, unnamed, and released by the ContextCleaner
+            rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+            return sum(r.name() is not None for r in rdds)
+
+        config = CorpusCleanConfig(keep_langs=("en", "de"), min_quality=0.25)
+        before = pinned()
+        first = sorted(clean_corpus(load_table(spark, sf_small, "documents"), config).collect())
+        after_first = pinned()
+        fresh = spark.read.parquet(table_path(sf_small, "documents"))
+        second = sorted(clean_corpus(fresh, config).collect())
+        assert after_first - before == 2
+        assert pinned() == after_first
+
+        spark.catalog.clearCache()
+        third = sorted(clean_corpus(fresh, config).collect())
+        spark.catalog.clearCache()
+        assert first and first == second == third
+
 
 class TestReviewRegressions:
     def test_salted_join_rejects_right_and_full(self, spark):

@@ -2,29 +2,18 @@
 promises (pushdown, pruning, broadcast, partial aggregation) asserted
 against `.explain` output so they can't silently regress."""
 
-import io
-import contextlib
 import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from stream_loader_spark.plans.queries import QUERIES
-
-
-def plan_of(spark, name, sf_dir):
-    """Physical plan, one line per operator (simple explain mode)."""
-    df = QUERIES[name](spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
+from tools.scale_audit import plan_text
 
 
 class TestPlanShapes:
     def test_q1_pushdown_and_pruning(self, spark, sf_small):
-        plan = plan_of(spark, "q1_pricing_summary", sf_small)
+        plan = plan_text(spark, "q1_pricing_summary", sf_small)
         assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
         # column pruning: only the 6 needed columns reach the scan
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
@@ -34,25 +23,25 @@ class TestPlanShapes:
         assert plan.count("HashAggregate") == 2
 
     def test_q5_joins_broadcast_fact_never_shuffles(self, spark, sf_small):
-        plan = plan_of(spark, "q5_local_supplier_volume", sf_small)
+        plan = plan_text(spark, "q5_local_supplier_volume", sf_small)
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
         # the region filter reaches its scan
         assert "EqualTo(r_name,EUROPE)" in plan
 
     def test_q6_all_predicates_pushed(self, spark, sf_small):
-        plan = plan_of(spark, "q6_forecast_revenue", sf_small)
+        plan = plan_text(spark, "q6_forecast_revenue", sf_small)
         pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
         for fragment in ("l_shipdate", "l_discount", "l_quantity"):
             assert fragment in pushed
 
     def test_recovery_agg_is_two_phase(self, spark, sf_small):
-        plan = plan_of(spark, "a1_committed_positions", sf_small)
+        plan = plan_text(spark, "a1_committed_positions", sf_small)
         assert plan.count("HashAggregate") == 2  # map-side partial + final
         assert plan.count("Exchange") == 1
 
     def test_p3_projection_prunes_event_columns(self, spark, sf_small):
-        plan = plan_of(spark, "p3_metadata_projection", sf_small)
+        plan = plan_text(spark, "p3_metadata_projection", sf_small)
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
         assert "value" not in read_schema  # unused payload column pruned
 
@@ -60,7 +49,7 @@ class TestPlanShapes:
         """Round-1 scale-killer regression: the sessionization window
         must partition on user_id (grows with users), never on the
         8-value bucket derived from it."""
-        plan = plan_of(spark, "sessionize_events", sf_small)
+        plan = plan_text(spark, "sessionize_events", sf_small)
         window_lines = [l for l in plan.splitlines() if "Window" in l or "WindowGroupLimit" in l]
         assert window_lines, plan
         assert any("user_id" in l for l in window_lines)
@@ -71,7 +60,7 @@ class TestPlanShapes:
         operator — an all-pairs product would appear as a nested-loop
         or cartesian join node."""
         for name in ("minhash_lsh_pairs", "simhash_pairs", "embedding_near_dup"):
-            plan = plan_of(spark, name, sf_small)
+            plan = plan_text(spark, name, sf_small)
             assert "CartesianProduct" not in plan, name
             assert "BroadcastNestedLoopJoin" not in plan, name
 
@@ -80,14 +69,14 @@ class TestPlanShapes:
         pass (r3): no posexplode (a 64× row blow-up feeding a 32-sum
         hash aggregate — the r2 shape this replaced), and the only
         Generate in the plan is the band explode."""
-        plan = plan_of(spark, "embedding_near_dup", sf_small)
+        plan = plan_text(spark, "embedding_near_dup", sf_small)
         assert "posexplode" not in plan
         n_generates = plan.count("Generate explode")
         # one per self-join side (Catalyst may or may not reuse the subtree)
         assert 1 <= n_generates <= 2
 
     def test_deterministic_sample_prunes_text(self, spark, sf_small):
-        plan = plan_of(spark, "deterministic_sample", sf_small)
+        plan = plan_text(spark, "deterministic_sample", sf_small)
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
         assert "text" not in read_schema  # only doc_id/lang reach the scan
 
@@ -191,7 +180,7 @@ class TestRound4PlanPins:
         after the broadcast part semi-join — exactly one lineitem scan
         (the de-correlated form Catalyst produces from the SQL text
         scans it twice)."""
-        plan = plan_of(spark, "q17_small_quantity_revenue", sf_small)
+        plan = plan_text(spark, "q17_small_quantity_revenue", sf_small)
         scans = [
             l
             for l in plan.splitlines()
@@ -202,7 +191,7 @@ class TestRound4PlanPins:
     def test_epoch_shuffle_exchanges_on_shard(self, spark, sf_small):
         """The epoch order must never funnel through a single-partition
         global sort: the window exchange hashes on shard."""
-        plan = plan_of(spark, "epoch_shuffle_order", sf_small)
+        plan = plan_text(spark, "epoch_shuffle_order", sf_small)
         assert "Exchange hashpartitioning(shard" in plan
         assert "Exchange SinglePartition" not in plan
 
@@ -210,12 +199,12 @@ class TestRound4PlanPins:
         """The composed epoch build's only corpus-sized exchange is the
         shard cumsum; the rebalance side exchanges only per-domain
         counts (tiny) and broadcasts back."""
-        plan = plan_of(spark, "training_mix_order", sf_small)
+        plan = plan_text(spark, "training_mix_order", sf_small)
         assert "Exchange hashpartitioning(shard" in plan
         assert "Exchange SinglePartition" not in plan or "count" in plan
 
     def test_approx_distinct_has_no_expand_or_join(self, spark, sf_small):
-        plan = plan_of(spark, "approx_distinct_users", sf_small)
+        plan = plan_text(spark, "approx_distinct_users", sf_small)
         assert "Expand" not in plan
         assert "Join" not in plan
 
@@ -225,7 +214,7 @@ class TestRound5PlanPins:
         """Both snapshots reduce to (id, digest) inside the scan-side
         projection, so the full-outer shuffle carries 40 bytes/row, not
         document text."""
-        plan = plan_of(spark, "corpus_diff_status", sf_small)
+        plan = plan_text(spark, "corpus_diff_status", sf_small)
         assert "FullOuter" in plan
         # the digest projection sits below the join: no exchange row
         # should reference the raw text column
@@ -234,17 +223,17 @@ class TestRound5PlanPins:
                 assert "text" not in line, line
 
     def test_embedding_quantization_is_narrow(self, spark, sf_small):
-        plan = plan_of(spark, "embedding_quantization", sf_small)
+        plan = plan_text(spark, "embedding_quantization", sf_small)
         assert "Exchange hashpartitioning" not in plan
         assert "Join" not in plan
 
     def test_stats_moments_single_two_phase_aggregate(self, spark, sf_small):
-        plan = plan_of(spark, "stats_moments_returnflag", sf_small)
+        plan = plan_text(spark, "stats_moments_returnflag", sf_small)
         assert plan.count("HashAggregate") == 2  # partial + final
         assert "Join" not in plan
 
     def test_repeated_ngram_spans_island_window_on_doc_id(self, spark, sf_small):
-        plan = plan_of(spark, "repeated_ngram_spans", sf_small)
+        plan = plan_text(spark, "repeated_ngram_spans", sf_small)
         assert "LeftSemi" in plan
         assert "windowspecdefinition(doc_id" in plan
         assert "Cartesian" not in plan
@@ -252,7 +241,7 @@ class TestRound5PlanPins:
 
 class TestAnalyticsPlanPins:
     def test_funnel_has_no_joins_or_windows(self, spark, sf_small):
-        plan = plan_of(spark, "funnel_stages", sf_small)
+        plan = plan_text(spark, "funnel_stages", sf_small)
         assert "Join" not in plan and "Window" not in plan
         assert plan.count("HashAggregate") == 4  # two two-phase aggregates
 
@@ -260,7 +249,7 @@ class TestAnalyticsPlanPins:
         """Round-5 scale fix: cohorting is a window MIN over uid — one
         events scan, no join. The old plan broadcast a user-count-sized
         cohort relation, which OOMs executors at 100 TB."""
-        plan = plan_of(spark, "retention_cohorts", sf_small)
+        plan = plan_text(spark, "retention_cohorts", sf_small)
         assert "Join" not in plan
         scans = [
             l
@@ -276,11 +265,11 @@ class TestAnalyticsPlanPins:
         (the measured plan ran the parse THREE times per record). The
         NULL-uid rows are dropped by the post-aggregate n_active > 0
         filter instead, so the parse must appear exactly once."""
-        plan = plan_of(spark, "retention_cohorts", sf_small)
+        plan = plan_text(spark, "retention_cohorts", sf_small)
         assert plan.count("get_json_object") == 1, plan
 
     def test_anomaly_broadcasts_stats(self, spark, sf_small):
-        plan = plan_of(spark, "stream_anomaly_stats", sf_small)
+        plan = plan_text(spark, "stream_anomaly_stats", sf_small)
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
@@ -289,7 +278,7 @@ class TestAnalyticsPlanPins:
         the only exchanges are the 1-row bounds aggregate and its
         broadcast — the corpus side never hash-shuffles and no Python
         UDF appears anywhere."""
-        plan = plan_of(spark, "zorder_layout_orders", sf_small)
+        plan = plan_text(spark, "zorder_layout_orders", sf_small)
         assert "BroadcastNestedLoopJoin" in plan  # 1-row scalar cross join
         assert "hashpartitioning" not in plan
         assert "Python" not in plan
@@ -299,7 +288,7 @@ class TestAnalyticsPlanPins:
         """The state merge aggregates directly over the Union of the
         already-hash-partitioned slices: exactly two exchanges (one per
         slice), none for the merge — the fold is state-sized."""
-        plan = plan_of(spark, "incremental_agg_totals", sf_small)
+        plan = plan_text(spark, "incremental_agg_totals", sf_small)
         assert "Union" in plan
         assert plan.count("Exchange hashpartitioning") == 2
         # 3 two-phase aggregates: one per slice + the merge fold
@@ -315,7 +304,7 @@ class TestScaleAuditCensus:
         import sys
 
         sys.path.insert(0, "/root/repo")
-        from tools.scale_audit import audit_one, plan_text
+        from tools.scale_audit import audit_one
         from stream_loader_spark.plans.queries import QUERIES
 
         flagged = {}
@@ -403,7 +392,7 @@ class TestRound5QueryPlans:
     def test_gopher_flags_is_one_codegen_scan(self, spark, sf_small):
         """Pure HOF column expressions: no shuffle, no Python, and only
         the two consumed columns reach the scan."""
-        plan = plan_of(spark, "gopher_quality_flags", sf_small)
+        plan = plan_text(spark, "gopher_quality_flags", sf_small)
         assert "Exchange" not in plan
         assert "Python" not in plan
         read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
@@ -441,14 +430,14 @@ class TestRound5QueryPlans:
         """No-eviction regime (fixture vocabulary < capacity): the
         answer sums the materialized MG summaries — no broadcast
         recount join, no second corpus scan in the final plan."""
-        plan = plan_of(spark, "frequent_tokens", sf_small)
+        plan = plan_text(spark, "frequent_tokens", sf_small)
         assert "BroadcastHashJoin" not in plan
         assert "FileScan" not in plan  # reads only the checkpointed summary
 
     def test_label_centroids_single_aggregation_chain(self, spark, sf_small):
         """posexplode → ONE map-side-combinable (label, pos) aggregate →
         labels-sized rollup; shuffle rows = groups × dim."""
-        plan = plan_of(spark, "label_centroids", sf_small)
+        plan = plan_text(spark, "label_centroids", sf_small)
         assert "Generate posexplode" in plan
         assert plan.count("Exchange hashpartitioning") <= 2
         assert "Python" not in plan
@@ -456,7 +445,7 @@ class TestRound5QueryPlans:
     def test_profile_documents_is_single_expand_pass(self, spark, sf_small):
         """Five exact COUNT(DISTINCT)s plan through ONE Expand over one
         scan — adding profiled columns must never add scans."""
-        plan = plan_of(spark, "profile_documents", sf_small)
+        plan = plan_text(spark, "profile_documents", sf_small)
         assert plan.count("FileScan") == 1
         assert "Expand" in plan
 
@@ -663,7 +652,7 @@ class TestScatterByKey:
         # the operators converted in r12: their plans must keep exactly
         # one hash exchange on the doc id and no post-explode exchange
         for name in ("repetition_stats", "benchmark_contamination"):
-            plan = plan_of(spark, name, sf_small)
+            plan = plan_text(spark, name, sf_small)
             assert "hashpartitioning(doc_id" in plan, name
 
     def test_dsir_feature_build_rides_the_scatter(self, spark, sf_small):
@@ -726,7 +715,7 @@ class TestFuzzyValsPinned:
     ReusedExchange never fires). Silent to correctness tests."""
 
     def test_distinct_value_table_materialized_once(self, spark, sf_small):
-        plan = plan_of(spark, "fuzzy_part_matches", sf_small)
+        plan = plan_text(spark, "fuzzy_part_matches", sf_small)
         # only the two row-expansion joins touch parquet; the candidate
         # self-join's both sides read the checkpointed RDD
         assert plan.count("Scan parquet") == 2

@@ -197,52 +197,6 @@ class TestStatefulWatermarkTracking:
         assert rows[7] == int((base + timedelta(minutes=11)).timestamp() * 1000)
 
 
-class TestStatefulWatermarkTrackingV2:
-    def test_transform_with_state_matches_v1_contract(self, spark, tmp_path):
-        """Same MaxWatermarkProvider contract on the transformWithState
-        API (Spark 4 successor): future records flow but don't advance,
-        state survives micro-batch boundaries."""
-        from datetime import datetime, timedelta, timezone
-
-        pytest.importorskip(
-            "google.protobuf.descriptor",
-            reason="transformWithState's state-server protocol needs protobuf "
-            "(absent in this container); the v1 applyInPandasWithState test "
-            "covers the same contract",
-        )
-        from stream_loader_spark.streaming.stateful import with_tracked_watermark_v2
-
-        src = str(tmp_path / "src")
-        base = datetime.now(timezone.utc) - timedelta(hours=2)
-        write_source(
-            spark, src, [("t", 0, o, base + timedelta(minutes=o)) for o in range(5)]
-        )
-        rows2 = [
-            ("t", 0, 5, base + timedelta(minutes=10)),
-            ("t", 0, 6, datetime.now(timezone.utc) + timedelta(hours=9)),
-            ("t", 0, 7, base + timedelta(minutes=11)),
-        ]
-        spark.createDataFrame(rows2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-
-        sink = ManifestFileSink(str(tmp_path / "out"), meta_cols=None)
-        (
-            StreamPipeline(spark)
-            .from_file_stream(src, SCHEMA, maxFilesPerTrigger=1)
-            .transform(lambda df: with_tracked_watermark_v2(df, 3_600_000))
-            .sink(sink, str(tmp_path / "cp"))
-            .run_available()
-        )
-        rows = {
-            r["offset"]: r["watermark_ms"]
-            for r in sink.committed_data(spark).collect()
-        }
-        assert len(rows) == 8
-        assert rows[4] > rows[0]
-        assert rows[5] == int((base + timedelta(minutes=10)).timestamp() * 1000)
-        assert rows[6] == rows[5]  # future event delivered, not advanced
-        assert rows[7] == int((base + timedelta(minutes=11)).timestamp() * 1000)
-
-
 class TestStreamingWindowedAggregation:
     def test_closed_windows_emit_in_append_mode(self, spark, tmp_path):
         """readStream → watermark → windowed count → foreachBatch: with

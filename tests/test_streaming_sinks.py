@@ -190,6 +190,24 @@ class TestExternalOffsetsSink:
         )
         assert other.committed_positions(spark).count() == 0
 
+    def test_replay_runs_the_batch_plan_and_writes_nothing(self, spark, sf_small, tmp_path):
+        """A replay of a committed batch must still execute its plan, so
+        stateful operators upstream commit their state stores."""
+        sink = ExternalOffsetsSink(
+            str(tmp_path / "data"), str(tmp_path / "offsets"), consumer_group="cg1"
+        )
+        batch = as_stream_records(load_table(spark, sf_small, "events"))
+        sink(batch, 0)
+        offsets_before = sorted(map(tuple, sink.offsets_table(spark).collect()))
+        sc = spark.sparkContext
+        sc.setJobGroup("offsets-replay", "replay of a committed batch")
+        try:
+            sink(batch, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("offsets-replay"))
+        assert sorted(map(tuple, sink.offsets_table(spark).collect())) == offsets_before
+
 
 class TestCompaction:
     def test_compact_then_vacuum_preserves_data_and_positions(self, spark, stream_env):
@@ -333,6 +351,47 @@ class TestCompaction:
         assert sink.committed_data(spark).count() == n2
         assert sink.compact_data(spark) is not None
         assert sink.committed_data(spark).count() == n2
+
+
+class TestManifestScanCost:
+    """The replay check and the recovery read open a bounded number of
+    manifest records, however many batches were committed before."""
+
+    @pytest.mark.parametrize("n_batches", [100, 1000])
+    def test_manifest_reads_do_not_grow_with_committed_batches(
+        self, spark, tmp_path, monkeypatch, n_batches
+    ):
+        from datetime import datetime, timezone
+
+        from stream_loader_spark.sinks import manifest as manifest_mod
+
+        sink = ManifestFileSink(str(tmp_path / "out"))
+        sink.write_batch(
+            spark.createDataFrame(
+                [("t", 0, 0, datetime(2024, 1, 1, tzinfo=timezone.utc))],
+                "topic string, partition int, offset bigint, ts timestamp",
+            ),
+            0,
+        )
+        for b in range(1, n_batches):
+            sink._commit_manifest(b, [])  # dataless commits (heartbeat batches)
+
+        opened = []
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(path))
+            return open(path, *args, **kwargs)
+
+        monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+        assert not sink.is_batch_committed(n_batches)
+        assert not [n for n in opened if n.startswith("batch-")]
+
+        sink.compact_data(spark)
+        sink.vacuum()
+        opened.clear()
+        positions = sink.committed_positions()
+        assert len(opened) == 1, opened
+        assert [(k, p.offset) for k, p in positions.items()] == [(("t", 0), 1)]
 
 
 class TestBackfillThenStream:

@@ -38,7 +38,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stream_loader_spark.session import get_spark  # noqa: E402
 from stream_loader_spark.sources.tables import TABLE_NAMES, table_path  # noqa: E402

@@ -9,8 +9,6 @@ Run with repo_root pointing at a git worktree of an older commit to capture
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -20,20 +18,20 @@ def main() -> None:
     names = sys.argv[4:]
     sys.path.insert(0, repo_root)
     os.makedirs(out_dir, exist_ok=True)
+    # import repo_root's engine before the plan helper next to this file,
+    # so the helper explains repo_root's queries, not this checkout's
     from stream_loader_spark.session import get_spark
+    import stream_loader_spark.plans.queries  # noqa: F401
 
-    from stream_loader_spark.plans.queries import QUERIES  # noqa: E402
+    sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
+    from scale_audit import plan_text
 
     spark = get_spark("dump_plans")
     sf_dir = "/root/testdata/sf0.01"
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(plan_text(spark, name, sf_dir, mode="formatted"))
         print(f"wrote {path}")
 
 

@@ -6,14 +6,14 @@ Usage: python tools/gen_plans.py [sf_dir]   (writes PLANS.md)
 
 from __future__ import annotations
 
-import contextlib
-import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from stream_loader_spark.session import get_spark  # noqa: E402
-from stream_loader_spark.plans.queries import QUERIES  # noqa: E402
+from tools.scale_audit import plan_text  # noqa: E402
 
 # query name → the plan property the capture evidences
 ANNOTATED = {
@@ -160,12 +160,9 @@ def main() -> None:
         "tests/test_plans.py.",
     ]
     for name, note in ANNOTATED.items():
-        df = QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain()
-        out += ["", f"## {name}", f"*{note}*", "```", buf.getvalue().rstrip(), "```"]
-    with open("/root/repo/PLANS.md", "w") as f:
+        plan = plan_text(spark, name, sf_dir).rstrip()
+        out += ["", f"## {name}", f"*{note}*", "```", plan, "```"]
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md ({len(ANNOTATED)} plans)")
 

@@ -18,8 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import split_bytes_for  # noqa: E402
-from stream_loader_spark.session import get_spark  # noqa: E402
+from bench import bench_session, warm_session  # noqa: E402
 from stream_loader_spark.plans.queries import QUERIES  # noqa: E402
 
 
@@ -37,17 +36,7 @@ def main() -> None:
     explain = "--explain" in args
     names = [a for a in args if not a.startswith("--")]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    split = split_bytes_for(sf_dir)
-    spark = get_spark(
-        "profile",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(split),
-            "spark.sql.files.openCostInBytes": str(min(split, 1 << 20)),
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-        },
-    )
-    from bench import warm_session
+    spark = bench_session("profile", sf_dir)
 
     # same unmeasured warm-up as bench.py (window/join/HOF JIT classes
     # included) so solo profiles don't read first-slot inflation

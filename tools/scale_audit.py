@@ -34,11 +34,13 @@ from stream_loader_spark.session import get_spark  # noqa: E402
 from stream_loader_spark.plans.queries import QUERIES  # noqa: E402
 
 
-def plan_text(spark, name: str, sf_dir: str) -> str:
+def plan_text(spark, name: str, sf_dir: str, mode: str | None = None) -> str:
+    """The query's ``explain`` output (physical plan by default; ``mode``
+    as in ``DataFrame.explain``, e.g. "formatted")."""
     df = QUERIES[name](spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain()
+        df.explain(mode=mode)
     return buf.getvalue()
 
 
