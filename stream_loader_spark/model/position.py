@@ -52,8 +52,8 @@ class StreamPosition:
 
 
 def ranges_covered_by(ranges, committed: dict) -> bool:
-    """Replay-guard predicate shared by the transactional-DB and
-    ClickHouse sinks: True iff EVERY (topic, partition) range in the
+    """Replay-guard predicate shared by the transactional-DB, ClickHouse
+    and Iceberg sinks: True iff EVERY (topic, partition) range in the
     batch ends strictly below that partition's committed next-offset.
     ``ranges`` are row-like mappings with topic/partition/end_offset
     (the stream_ranges output); ``committed`` maps (topic, partition)

@@ -83,6 +83,14 @@ def stream_ranges(
     )
 
 
+def end_watermark_ms(row) -> int:
+    """A ``stream_ranges`` row's end watermark in epoch milliseconds. A
+    partition whose every record has a NULL ts gets 0, so a poison
+    batch still commits instead of crash-looping the query."""
+    wm = row["end_watermark"]
+    return int(wm.timestamp() * 1000) if wm is not None else 0
+
+
 def merge_range_table(
     ranges: DataFrame,
     topic_col: str = "topic",

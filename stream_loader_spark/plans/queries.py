@@ -268,7 +268,7 @@ def _sink_fixture_dir(sf_dir: str, name: str) -> str:
     return os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
         "spark-warehouse",
-        "sink_fixtures_v2",
+        "sink_fixtures_v3",
         f"{sf}-{fp}",
         name,
     )
@@ -446,8 +446,8 @@ def k11_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches through the bucketed UpsertSink (every batch REPLACES its
     keys' rows — keep-latest semantics live in the sink, not this
     query), then write a fourth batch's bucket-version DATA with no
-    manifest update (the crash-between-data-and-manifest state) and
-    recover via the sink's own ``current_state`` manifest read — the
+    log record (the crash-between-data-and-commit state) and
+    recover via the sink's own ``current_state`` log read — the
     oracle proves the crashed tail stayed invisible. Batches are
     MONOTONE offset quartiles (integer division, exact in both
     engines), so sink keep-latest == keep-latest-by-offset and the
@@ -502,8 +502,8 @@ def _k11_sink(spark: SparkSession, sf_dir: str):
     FROM r WHERE rn = 1""",
 )
 def k12_upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Upsert time travel: ``current_state(as_of_batch=1)`` reads the
-    manifest's per-batch bucket→version snapshot — the state as of the
+    """Upsert time travel: ``current_state(as_of_batch=1)`` folds the
+    commit log's records up to batch 1 — the state as of the
     SECOND committed batch, with batch 2's writes and the crashed tail
     both invisible. Keep-latest over the first two offset quartiles is
     the exact SQL equivalent (see k11 for why quartile slicing makes

@@ -250,7 +250,7 @@ class ClickHouseHttpStorage:
         whose token ClickHouse deduplicates; it can never overestimate
         because it advances only after insert_batch returns — and any
         insert failure drops the cache so the next batch re-recovers."""
-        from stream_loader_spark.operators.recovery import stream_ranges
+        from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
 
         if self.verify_dedup and not self._dedup_checked:
             self.check_dedup_support()
@@ -270,13 +270,8 @@ class ClickHouseHttpStorage:
                 raise
             for r in ranges:
                 key = (r["topic"], r["partition"])
-                wm = (
-                    int(r["end_watermark"].timestamp() * 1000)
-                    if r["end_watermark"] is not None
-                    else 0
-                )
                 cur = self._positions_cache.get(key)
-                nxt = StreamPosition(int(r["end_offset"]) + 1, wm)
+                nxt = StreamPosition(int(r["end_offset"]) + 1, end_watermark_ms(r))
                 if cur is None or nxt.offset > cur.offset:
                     self._positions_cache[key] = nxt
         finally:

@@ -33,7 +33,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
-from stream_loader_spark.operators.recovery import stream_ranges
+from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
 from stream_loader_spark.model.position import StreamPosition, ranges_covered_by
 
 CHUNK_ROWS = 10_000
@@ -191,9 +191,7 @@ class DbTransactionalSink:
                             r["partition"],
                             r["start_offset"],
                             r["end_offset"],
-                            int(r["end_watermark"].timestamp() * 1000)
-                            if r["end_watermark"] is not None
-                            else 0,
+                            end_watermark_ms(r),
                             batch_id,
                         )
                         for r in ranges

@@ -27,8 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from stream_loader_spark.model.position import StreamPosition
-from stream_loader_spark.operators.recovery import stream_ranges
+from stream_loader_spark.model.position import StreamPosition, ranges_covered_by
+from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
 
 PROPERTY_PREFIX = "__consumer_offset"
 
@@ -100,20 +100,12 @@ class IcebergOffsetsSink:
         """A batch is committed iff every range it covers is already at or
         behind the positions recorded in the table properties — the
         reference's isBatchCommitted check (RecordBatchStorage.scala:44-64)."""
-        committed = self.committed_positions()
-        if not committed:
-            return False
-        for r in ranges:
-            pos = committed.get((r["topic"], r["partition"]))
-            if pos is None or r["end_offset"] >= pos.offset:
-                return False
-        return True
+        return ranges_covered_by(ranges, self.committed_positions())
 
     def _offset_props(self, ranges) -> dict[str, str]:
         return {
             offset_property(self.consumer_group, r["topic"], r["partition"]): (
-                f"{r['end_offset']}:"
-                f"{int(r['end_watermark'].timestamp() * 1000) if r['end_watermark'] is not None else 0}"
+                f"{r['end_offset']}:{end_watermark_ms(r)}"
             )
             for r in ranges
         }

@@ -22,6 +22,11 @@ before manifest → replay overwrites the same dir and then commits; die
 after manifest → replay sees the manifest and skips. No distributed
 coordination, no Kafka metadata.
 
+``CommitLog`` is the one record format behind this sink and the upsert
+sink (and the materialized-view sinks through it): one
+``batch-<id>.json`` record per committed batch, ``compaction-<id>.json``
+records that supersede what they fold, one replay check and one vacuum.
+
 Scale note: one manifest record per batch is driver-side JSON here; at
 100 TB the identical layout becomes a partitioned table (Delta/Iceberg
 or parquet snapshots) — ``compact()`` writes such a parquet snapshot so
@@ -41,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from stream_loader_spark.model.position import StreamPosition
 from stream_loader_spark.model.range import StreamRange
 from stream_loader_spark.model.idempotence import dedup_token
-from stream_loader_spark.operators.recovery import stream_ranges
+from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
 
 
 def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
@@ -65,6 +70,158 @@ def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+class CommitLog:
+    """Append-only commit records in one directory: the durable commit
+    primitive of the manifest and upsert sinks.
+
+    A batch commits by publishing ``batch-<id>.json`` (``append``); the
+    record's presence IS the commit, and its content is the sink's. A
+    compaction record (``compact``) folds every record live at its
+    time and supersedes them: non-negative batch ids up to its
+    ``replaces_upto`` watermark (stream batch ids are monotone, so one
+    integer proves every earlier batch committed) and the reserved
+    negative backfill ids it lists in ``replaces_neg``. The live records
+    are the newest compaction plus the records no compaction folded;
+    ``vacuum`` deletes the rest. Every publish goes through
+    ``atomic_write_json``."""
+
+    # "no compaction yet" sentinel: far below any real batch id,
+    # INCLUDING the reserved negative pre-stream backfill ids (-1)
+    _NO_UPTO = -(1 << 62)
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        os.makedirs(path, exist_ok=True)
+
+    def record_path(self, batch_id: int) -> str:
+        return os.path.join(self.path, f"batch-{batch_id:020d}.json")
+
+    def append(self, batch_id: int, record: dict) -> None:
+        atomic_write_json(self.path, record, os.path.basename(self.record_path(batch_id)))
+
+    def compact(self, record: dict) -> None:
+        atomic_write_json(self.path, record, f"compaction-{record['batch_id']:020d}.json")
+
+    def is_committed(self, batch_id: int) -> bool:
+        if os.path.exists(self.record_path(batch_id)):
+            return True
+        upto, neg = self.watermark()
+        if batch_id < 0:
+            # reserved pre-stream backfill ids sit BELOW the monotone
+            # stream id space, so the watermark proves nothing about
+            # them: a backfill written AFTER a compaction exists must
+            # not be swallowed as "already committed". Only an explicit
+            # per-id fold record marks a vacuumed backfill committed.
+            return batch_id in neg
+        # a vacuumed-away original is still committed: the compaction
+        # record's supersession watermark covers it, so replays after
+        # vacuum stay no-ops
+        return batch_id <= upto
+
+    @staticmethod
+    def is_compaction(rec: dict) -> bool:
+        return "replaces_upto" in rec or bool(rec.get("replaces"))
+
+    @classmethod
+    def _rec_upto(cls, rec: dict) -> int:
+        """Highest NON-NEGATIVE batch id a compaction record supersedes.
+        Records carry it as ``replaces_upto``; legacy records enumerated
+        ``replaces`` explicitly. Reserved negative backfill ids are
+        OUTSIDE the monotone space and never raise the watermark — see
+        ``_rec_neg``."""
+        if "replaces_upto" in rec:
+            return int(rec["replaces_upto"])
+        return max(
+            (i for i in rec.get("replaces", []) if i >= 0), default=cls._NO_UPTO
+        )
+
+    @staticmethod
+    def _rec_neg(rec: dict) -> set[int]:
+        """Folded reserved (negative) backfill ids, enumerated exactly.
+        Bounded by construction: backfills are rare one-shot loads, not
+        per-micro-batch events."""
+        if "replaces_neg" in rec:
+            return set(rec["replaces_neg"])
+        return {i for i in rec.get("replaces", []) if i < 0}
+
+    def watermark(self) -> tuple[int, set[int]]:
+        """(watermark over non-negative ids, folded negative-id set) —
+        reading only compaction records keeps the per-batch committed
+        check O(#compactions), not O(#batches)."""
+        upto = self._NO_UPTO
+        neg: set[int] = set()
+        for name in os.listdir(self.path):
+            if not (name.startswith("compaction-") and name.endswith(".json")):
+                continue
+            with open(os.path.join(self.path, name)) as f:
+                rec = json.load(f)
+            upto = max(upto, self._rec_upto(rec))
+            neg |= self._rec_neg(rec)
+        return upto, neg
+
+    def supersession(self, folded_ids: list[int]) -> dict:
+        """The watermark fields of a compaction record that folds the
+        batches ``folded_ids``: carried forward from earlier compactions,
+        because vacuum deletes superseded compaction records."""
+        upto, neg = self.watermark()
+        return {
+            "replaces_upto": max([upto, *(i for i in folded_ids if i >= 0)]),
+            "replaces_neg": sorted(neg | {i for i in folded_ids if i < 0}),
+        }
+
+    def _resolve(self) -> list[tuple[str, dict, bool]]:
+        """Every record as (path, record, superseded), in name order."""
+        named = []
+        for name in sorted(os.listdir(self.path)):
+            if not name.endswith(".json"):
+                continue
+            path = os.path.join(self.path, name)
+            with open(path) as f:
+                named.append((path, json.load(f)))
+        compactions = [rec for _, rec in named if self.is_compaction(rec)]
+        if not compactions:
+            return [(path, rec, False) for path, rec in named]
+        newest = max(r["batch_id"] for r in compactions)
+        upto = max(self._rec_upto(r) for r in compactions)
+        neg: set[int] = set()
+        for r in compactions:
+            neg |= self._rec_neg(r)
+
+        def superseded(rec: dict) -> bool:
+            if self.is_compaction(rec):
+                return rec["batch_id"] < newest
+            # negative (backfill) ids are live unless explicitly folded —
+            # the watermark only covers the monotone non-negative space
+            b = rec["batch_id"]
+            return b <= upto if b >= 0 else b in neg
+
+        return [(path, rec, superseded(rec)) for path, rec in named]
+
+    def records(self) -> list[dict]:
+        """Every record on disk, superseded ones included."""
+        return [rec for _, rec, _ in self._resolve()]
+
+    def live(self) -> list[dict]:
+        """The newest compaction record (if any) and the records above
+        its watermark, by batch id. Superseded records may or may not
+        be vacuumed yet."""
+        return sorted(
+            (rec for _, rec, gone in self._resolve() if not gone),
+            key=lambda r: (r["batch_id"], not self.is_compaction(r)),
+        )
+
+    def vacuum(self, drop=None) -> None:
+        """Delete the records a compaction superseded (safe any time
+        after the compaction record exists). ``drop(record)`` runs
+        before each record is deleted, so the data it names goes first
+        and a crash never leaves unreferenced data behind."""
+        for path, rec, gone in self._resolve():
+            if gone:
+                if drop is not None:
+                    drop(rec)
+                os.unlink(path)
 
 
 def consume_replayed_batch(batch_df: DataFrame) -> None:
@@ -132,37 +289,14 @@ class ManifestFileSink:
         self.writer_options = writer_options or {}
         self.compaction_keep_ranges = compaction_keep_ranges
         self.commit_metrics = CommitMetrics()
-        os.makedirs(self._manifest_dir, exist_ok=True)
-
-    # -- paths ----------------------------------------------------------
-    @property
-    def _manifest_dir(self) -> str:
-        return os.path.join(self.out_dir, "_manifest")
+        self.log = CommitLog(os.path.join(out_dir, "_manifest"))
 
     def batch_data_dir(self, batch_id: int) -> str:
         return os.path.join(self.out_dir, "data", f"batch={batch_id}")
 
-    def _manifest_path(self, batch_id: int) -> str:
-        return os.path.join(self._manifest_dir, f"batch-{batch_id:020d}.json")
-
     # -- RecordBatchStorage contract ------------------------------------
     def is_batch_committed(self, batch_id: int) -> bool:
-        if os.path.exists(self._manifest_path(batch_id)):
-            return True
-        if batch_id < 0:
-            # reserved pre-stream backfill ids sit BELOW the monotone
-            # stream id space, so the watermark proves nothing about
-            # them: a backfill written AFTER a compaction exists must
-            # not be swallowed as "already committed". Only an explicit
-            # per-id fold record marks a vacuumed backfill committed.
-            upto, neg = self._compaction_state()
-            return batch_id in neg
-        # a vacuumed-away original is still committed: the compaction
-        # record's supersession watermark covers it (batch ids are
-        # monotone — every id at or below the watermark had committed
-        # when the compaction folded it), so replays after vacuum stay
-        # no-ops
-        return batch_id <= self._replaces_upto()
+        return self.log.is_committed(batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.write_batch(batch_df, batch_id)
@@ -188,9 +322,6 @@ class ManifestFileSink:
             for r in ranges
         ]
 
-    def _atomic_write_json(self, record: dict, final_name: str) -> None:
-        atomic_write_json(self._manifest_dir, record, final_name)
-
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
             # replayed micro-batch after restart: commit already atomic+durable
@@ -210,15 +341,7 @@ class ManifestFileSink:
                             row["topic"],
                             row["partition"],
                             StreamPosition(row["start_offset"], 0),
-                            StreamPosition(
-                                row["end_offset"],
-                                # a partition whose every record has a NULL ts
-                                # still commits (watermark floor 0) instead of
-                                # crash-looping the query on a poison batch
-                                int(row["end_watermark"].timestamp() * 1000)
-                                if row["end_watermark"] is not None
-                                else 0,
-                            ),
+                            StreamPosition(row["end_offset"], end_watermark_ms(row)),
                         )
                     )
             self._build_writer(batch_df).save(self.batch_data_dir(batch_id))
@@ -232,24 +355,17 @@ class ManifestFileSink:
         )
 
     def _commit_manifest(self, batch_id: int, ranges: list[StreamRange]) -> None:
-        record = {
-            "batch_id": batch_id,
-            "token": dedup_token(ranges),
-            "data_dir": self.batch_data_dir(batch_id),
-            "ranges": self._range_dicts(ranges),
-        }
-        self._atomic_write_json(record, os.path.basename(self._manifest_path(batch_id)))
+        self.log.append(
+            batch_id,
+            {
+                "batch_id": batch_id,
+                "token": dedup_token(ranges),
+                "data_dir": self.batch_data_dir(batch_id),
+                "ranges": self._range_dicts(ranges),
+            },
+        )
 
     # -- readback -------------------------------------------------------
-    def _read_records(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self._manifest_dir)):
-            if not name.endswith(".json"):
-                continue
-            with open(os.path.join(self._manifest_dir, name)) as f:
-                out.append(json.load(f))
-        return out
-
     @staticmethod
     def _ranges_of(rec: dict) -> list[StreamRange]:
         return [
@@ -262,86 +378,18 @@ class ManifestFileSink:
             for r in rec["ranges"]
         ]
 
-    @staticmethod
-    def _is_compaction(rec: dict) -> bool:
-        return "replaces_upto" in rec or bool(rec.get("replaces"))
-
-    # "no compaction yet" sentinel: far below any real batch id,
-    # INCLUDING the reserved negative pre-stream backfill ids (-1)
-    _NO_UPTO = -(1 << 62)
-
     @classmethod
-    def _rec_upto(cls, rec: dict) -> int:
-        """Highest NON-NEGATIVE batch id a compaction record supersedes.
-        New records carry it as ``replaces_upto`` (bounded — stream
-        batch ids are monotone, so one watermark proves every earlier
-        batch committed); legacy records enumerated ``replaces``
-        explicitly. Reserved negative backfill ids are OUTSIDE the
-        monotone space and never raise the watermark — see
-        ``_rec_neg``."""
-        if "replaces_upto" in rec:
-            return int(rec["replaces_upto"])
-        return max(
-            (i for i in rec.get("replaces", []) if i >= 0), default=cls._NO_UPTO
+    def _committed(cls, rec: dict) -> CommittedBatch:
+        return CommittedBatch(
+            rec["batch_id"], cls._ranges_of(rec), rec["token"], rec["data_dir"]
         )
-
-    @staticmethod
-    def _rec_neg(rec: dict) -> set[int]:
-        """Folded reserved (negative) backfill ids, enumerated exactly.
-        Bounded by construction: backfills are rare one-shot loads, not
-        per-micro-batch events, so the list never grows with stream
-        lifetime the way the old transitive ``replaces`` list did."""
-        if "replaces_neg" in rec:
-            return set(rec["replaces_neg"])
-        return {i for i in rec.get("replaces", []) if i < 0}
-
-    def _compaction_state(self) -> tuple[int, set[int]]:
-        """(watermark over non-negative ids, folded negative-id set) —
-        reading only compaction records keeps the per-batch committed
-        check O(#compactions), not O(#batches)."""
-        upto = self._NO_UPTO
-        neg: set[int] = set()
-        for name in os.listdir(self._manifest_dir):
-            if not (name.startswith("compaction-") and name.endswith(".json")):
-                continue
-            with open(os.path.join(self._manifest_dir, name)) as f:
-                rec = json.load(f)
-            upto = max(upto, self._rec_upto(rec))
-            neg |= self._rec_neg(rec)
-        return upto, neg
-
-    def _replaces_upto(self) -> int:
-        return self._compaction_state()[0]
 
     def committed_batches(self) -> list[CommittedBatch]:
-        """Live batches after compaction resolution.
-
-        Every compaction replaces ALL batches live at its time, so the
-        live set is: the newest compaction record (if any) + original
-        records above the supersession watermark (appended after it).
-        Replaced records/data may or may not be vacuumed yet.
-        """
-        records = self._read_records()
-        compactions = [r for r in records if self._is_compaction(r)]
-        originals = [r for r in records if not self._is_compaction(r)]
-        upto = max((self._rec_upto(r) for r in compactions), default=self._NO_UPTO)
-        neg: set[int] = set()
-        for r in compactions:
-            neg |= self._rec_neg(r)
-        live = [max(compactions, key=lambda r: r["batch_id"])] if compactions else []
-        # negative (backfill) ids are live unless explicitly folded —
-        # the watermark only covers the monotone non-negative space
-        live.extend(
-            r
-            for r in originals
-            if (r["batch_id"] > upto if r["batch_id"] >= 0 else r["batch_id"] not in neg)
-        )
-        return [
-            CommittedBatch(
-                rec["batch_id"], self._ranges_of(rec), rec["token"], rec["data_dir"]
-            )
-            for rec in sorted(live, key=lambda r: r["batch_id"])
-        ]
+        """Live batches after compaction resolution (``CommitLog.live``):
+        the newest compaction record (if any) + original records
+        appended after it. Replaced records/data may or may not be
+        vacuumed yet."""
+        return [self._committed(rec) for rec in self.log.live()]
 
     def committed_positions(self) -> dict[tuple[str, int], StreamPosition]:
         """Next position per (topic, partition) — the A1-shape readback
@@ -426,22 +474,19 @@ class ManifestFileSink:
         consecutive-only merge legitimately unable to collapse them,
         measured growing 29 ranges/batch on the events fixture).
         """
-        live = self.committed_batches()
-        if len(live) < min_batches:
+        records = self.log.live()
+        if len(records) < min_batches:
             return None
+        live = [self._committed(r) for r in records]
         # existing compaction record ids: the new record's id must be
         # strictly above them — when the only NEW live batch is a
         # backfill, max(live id) equals the live compaction's own id
         # and reusing it would make the consolidated write OVERWRITE
-        # the very dir it is reading (and collide manifest names)
-        records = self._read_records()
+        # the very dir it is reading (and collide record names)
         prior_comp_ids = {
-            r["batch_id"] for r in records if self._is_compaction(r)
+            r["batch_id"] for r in self.log.records() if CommitLog.is_compaction(r)
         }
-        max_id = max(
-            max(b.batch_id for b in live),
-            *(i + 1 for i in prior_comp_ids or [self._NO_UPTO]),
-        )
+        max_id = max([b.batch_id for b in live] + [i + 1 for i in prior_comp_ids])
         target = os.path.join(self.out_dir, "data", f"compact={max_id}")
         # same reader as committed_data: without mergeSchema, compacting
         # batches with evolved schemas would silently drop later-added
@@ -457,48 +502,28 @@ class ManifestFileSink:
             merge_ranges([r for b in live for r in b.ranges]),
             keep_exact=self.compaction_keep_ranges,
         )
-        prior_upto, prior_neg = self._compaction_state()
-        # watermark over ORIGINAL stream records only, identified by
-        # each RECORD's own compaction marker — NOT by id membership in
-        # prior_comp_ids. A compaction id can collide with a later real
-        # stream batch id (batches 0-2 → compaction record 2; a
-        # backfill-only compaction then takes id 3; the stream's next
-        # batch is ALSO 3): excluding by id would pin the watermark
-        # below that real batch forever, leaving its manifest record
-        # live next to the compaction that already folded its rows
-        # (permanent double-read, unreclaimable by vacuum). A live
-        # compaction still never raises the watermark — it is excluded
-        # here by what it IS, not what id it got.
-        live_ids = {b.batch_id for b in live}
-        live_nonneg = [
-            r["batch_id"]
-            for r in records
-            if not self._is_compaction(r)
-            and r["batch_id"] >= 0
-            and r["batch_id"] in live_ids
-        ]
         record = {
             "batch_id": max_id,
             "token": dedup_token(merged),
             "data_dir": target,
-            # watermark over the monotone non-negative id space only;
-            # folded reserved backfill ids (negative) are enumerated so
-            # a backfill written AFTER this compaction is never
-            # mistaken for an already-folded one (and vice versa after
-            # vacuum). Carried forward from prior compactions because
-            # vacuum deletes superseded compaction records.
-            "replaces_upto": max([prior_upto, *live_nonneg]),
-            "replaces_neg": sorted(
-                prior_neg | {b.batch_id for b in live if b.batch_id < 0}
+            # the watermark folds ORIGINAL records only, identified by
+            # each record's own compaction marker, not by id: a
+            # compaction id can collide with a later real stream batch
+            # id (batches 0-2 → compaction 2; a backfill-only compaction
+            # then takes id 3; the stream's next batch is ALSO 3), and
+            # excluding by id would pin the watermark below that batch
+            # forever (permanent double-read, unreclaimable by vacuum)
+            **self.log.supersession(
+                [r["batch_id"] for r in records if not CommitLog.is_compaction(r)]
             ),
             "ranges": self._range_dicts(merged),
         }
-        self._atomic_write_json(record, f"compaction-{max_id:020d}.json")
+        self.log.compact(record)
         return target
 
     def vacuum(self) -> list[str]:
-        """Delete data dirs and manifest records superseded by a
-        compaction (safe any time after the compaction record exists).
+        """Delete data dirs and records superseded by a compaction (safe
+        any time after the compaction record exists).
 
         Works record-by-record using each record's own ``data_dir``, so
         superseded COMPACTION outputs (``data/compact=N``) are reclaimed
@@ -507,43 +532,14 @@ class ManifestFileSink:
         import shutil
 
         removed = []
-        records = self._read_records()
-        compactions = [r for r in records if self._is_compaction(r)]
-        if not compactions:
-            return removed
-        newest = max(r["batch_id"] for r in compactions)
-        upto = max(self._rec_upto(r) for r in compactions)
-        neg: set[int] = set()
-        for r in compactions:
-            neg |= self._rec_neg(r)
-        for name in sorted(os.listdir(self._manifest_dir)):
-            if not name.endswith(".json"):
-                continue
-            path = os.path.join(self._manifest_dir, name)
-            with open(path) as f:
-                rec = json.load(f)
-            is_compaction = self._is_compaction(rec)
-            # a still-live negative-id backfill (written after the
-            # compaction, so never folded) must survive vacuum — the
-            # watermark rule would wrongly cover every negative id
-            superseded = (
-                (is_compaction and rec["batch_id"] < newest)
-                or (
-                    not is_compaction
-                    and (
-                        rec["batch_id"] <= upto
-                        if rec["batch_id"] >= 0
-                        else rec["batch_id"] in neg
-                    )
-                )
-            )
-            if not superseded:
-                continue
+
+        def drop(rec: dict) -> None:
             data = rec.get("data_dir")
             if data and os.path.exists(data):
                 shutil.rmtree(data)
                 removed.append(data)
-            os.unlink(path)
+
+        self.log.vacuum(drop)
         return removed
 
     def compact(self, spark: SparkSession) -> str:

@@ -11,7 +11,7 @@ doing DELTA-sized work per batch:
 3. touched prior ⊕ delta merges (state-sized), and the merged rows go
    through ``UpsertSink.write_batch`` — which rewrites only the hash
    buckets those keys land in and gives the crash/replay discipline
-   (atomic manifest, batch ledger, deterministic version dirs).
+   (one commit-log record per batch, deterministic version dirs).
 
 Replays are no-ops BEFORE any aggregation runs: a committed batch id
 short-circuits, so the merge can never double-count a delivered batch
@@ -100,8 +100,9 @@ class IncrementalAggSink:
 
     def view_as_of(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """The finalized view as of an earlier committed batch — rides
-        the upsert manifest's per-batch snapshots (``vacuum`` prunes
-        them), so 'what did this dashboard say after batch N' is a
+        the upsert sink's commit log, whose records fold into the bucket
+        versions as of any retained batch (``vacuum`` folds older ones
+        away), so 'what did this dashboard say after batch N' is a
         directory-list away, never a recomputation."""
         state = self.upsert.current_state(spark, as_of_batch=batch_id).drop(
             "_bucket", _VERSION_COL
@@ -117,10 +118,10 @@ class SketchViewSink:
     (key, day); prior sketches are read back for the touched
     (key, day) cells only and folded in with the scalar two-sketch
     ``hll_union`` (per-cell, no re-aggregation of history); merged
-    rows ride the upsert bucket rewrite + batch ledger. Replays
+    rows ride the upsert bucket rewrite + commit log. Replays
     short-circuit before any sketching, so a redelivered batch never
     double-inserts values — harmless for HLL (duplicate-insensitive)
-    but the ledger also keeps ``n_rows`` exact.
+    but the log also keeps ``n_rows`` exact.
 
     ``range_estimate`` answers the arbitrary-date-range distinct
     question from the stored layer alone (sketch-count-sized merge).

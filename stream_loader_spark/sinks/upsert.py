@@ -3,8 +3,9 @@
 The reference's storages append batches; warehouse loaders frequently
 need the MERGE form instead — each record carries a key and the sink
 keeps only the latest row per key. This sink provides that on plain
-parquet with the repo's manifest discipline (sinks/manifest.py crash
-matrix), structured so a batch rewrites only the state it touches:
+parquet with the repo's commit log (``CommitLog`` and the crash matrix
+in sinks/manifest.py), structured so a batch rewrites only the state it
+touches:
 
 - State is hash-bucketed by key. A batch merges ONLY the buckets its
   keys hash into and rewrites each into
@@ -21,22 +22,26 @@ matrix), structured so a batch rewrites only the state it touches:
   one-file-per-partition-per-batch ``RecordBatcher`` shape), with
   adaptive query execution on or off. The codec is the session's
   (zstd, see session.py).
-- The stored schema is pinned in the manifest (``schema``, next to
-  ``config``), so stored rows are read without inferring it. The pin
-  is the running union of every batch's columns: a batch may add
-  columns (older rows read back NULL) or omit them (carried rows keep
-  their values). A manifest without the pin is inferred once from its
-  live buckets and pinned by its next commit.
-- One atomic manifest (``atomic_write_json``: fsynced temp file,
-  rename, fsynced directory) maps bucket → the version directory
-  holding its current rows and records committed batch ids. Readers
-  union exactly the manifest-named directories; a crash between data
-  and manifest leaves invisible files that the deterministic replay
-  overwrites. Data files are NEVER renamed — object-store safe, same
-  as the manifest file sink.
-- Replays write nothing: the batch id is already in the manifest. The
-  replayed batch's plan still runs into a no-op sink so stateful
-  operators upstream commit their state (``consume_replayed_batch``).
+- A commit appends one small record to the log under ``_manifest/``
+  (``atomic_write_json``: fsynced temp file, rename, fsynced
+  directory) holding only what changed: the buckets it rewrote, whose
+  version is now the batch id. The first record pins the layout
+  (``config``); a record carries the stored schema (``schema``) when
+  the batch widened it. The pin is the running union of every batch's
+  columns, so stored rows are read without inferring it: a batch may
+  add columns (older rows read back NULL) or omit them (carried rows
+  keep their values).
+- The bucket → version map as of any retained batch is the fold of the
+  newest compaction record (written by ``vacuum``: the full map, config
+  and schema) and the records after it. Readers union exactly the
+  directories the log names; a crash between data and record leaves
+  invisible files that the deterministic replay overwrites. Data files
+  are NEVER renamed — object-store safe, same as the manifest file
+  sink.
+- Replays write nothing: the batch's record exists (or a compaction's
+  watermark covers it). The replayed batch's plan still runs into a
+  no-op sink so stateful operators upstream commit their state
+  (``consume_replayed_batch``).
 
 The newest row per key wins. A batch row beats the stored row whatever
 its ``order_col`` value; inside one batch the greatest ``order_col``
@@ -49,14 +54,13 @@ key.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from stream_loader_spark.sinks.manifest import atomic_write_json, consume_replayed_batch
+from stream_loader_spark.sinks.manifest import CommitLog, consume_replayed_batch
 
 # merge-only columns: a batch row's tombstone flag and its priority
 # over stored rows; neither is ever stored
@@ -111,25 +115,44 @@ class UpsertSink:
         # its key from state. The marker participates in within-batch
         # ordering (delete-then-reinsert resolves by order_col) and is
         # never stored — state holds live rows only. Not pinned in the
-        # manifest config: it names a batch column, not a layout choice.
+        # log's config: it names a batch column, not a layout choice.
         if tombstone_col in self.key_cols or tombstone_col == order_col:
             raise ValueError("tombstone_col must not be a key or order column")
         self.tombstone_col = tombstone_col
+        self.log = CommitLog(os.path.join(path, "_manifest"))
 
-    # -- manifest -------------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, "manifest.json")
-
-    def _read_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path) as fh:
-                m = json.load(fh)
-                m.setdefault("history", {})
-                self._check_config(m)
-                return m
-        except FileNotFoundError:
-            return {"versions": {}, "batches": [], "history": {}}
+    # -- commit log -----------------------------------------------------
+    def _records(self) -> list[dict]:
+        """The live log records, oldest first, after refusing state this
+        sink must not open. _bucket_col hashes under THIS sink's
+        num_buckets/key_cols, while the log's version map reflects the
+        layout that wrote it (pinned in the oldest live record): a
+        mismatched or unknown layout would silently merge the wrong
+        bucket directories and duplicate keys."""
+        records = self.log.live()
+        if not records:
+            if os.path.exists(os.path.join(self.path, "manifest.json")):
+                # an empty log over old state would rewrite its buckets
+                # from scratch
+                raise ValueError(
+                    f"upsert sink state at {self.path} is in the single-file "
+                    "manifest.json format, which this version does not "
+                    "read; rebuild the state"
+                )
+            return records
+        stored = records[0].get("config")
+        if stored is None:
+            raise ValueError(
+                f"upsert sink log at {self.path} has committed batches "
+                "but no pinned config: its bucket layout is unknown; "
+                "rebuild the state"
+            )
+        if stored != self._config():
+            raise ValueError(
+                f"upsert sink config mismatch at {self.path}: "
+                f"log pinned {stored}, sink configured {self._config()}"
+            )
+        return records
 
     def _config(self) -> dict:
         return {
@@ -138,36 +161,34 @@ class UpsertSink:
             "order_col": self.order_col,
         }
 
-    def _check_config(self, manifest: dict) -> None:
-        """Refuse to reopen state under a different layout: _bucket_col
-        hashes under THIS sink's num_buckets/key_cols, while the
-        manifest's version map reflects the layout that wrote it — a
-        mismatch would silently merge the wrong bucket directories and
-        duplicate keys. Config is pinned on first write."""
-        stored = manifest.get("config")
-        if stored is not None and stored != self._config():
-            raise ValueError(
-                f"upsert sink config mismatch at {self.path}: "
-                f"manifest pinned {stored}, sink configured {self._config()}"
-            )
-        if stored is None and manifest.get("batches"):
-            # Fail CLOSED on a data-bearing manifest with no pinned
-            # config (written before config pinning existed): its
-            # layout is unknowable from the dirs, and stamping THIS
-            # sink's layout onto it would silently merge the wrong
-            # bucket directories — the exact duplicate-key corruption
-            # the pin exists to prevent.
-            raise ValueError(
-                f"upsert sink manifest at {self.path} has committed "
-                "batches but no pinned config: it predates config "
-                "pinning and its bucket layout is unknown; rebuild the "
-                "state (or open it with the exact original layout and "
-                "a version that does not enforce the pin)"
-            )
+    @staticmethod
+    def _versions(records: list[dict], upto: int | None = None) -> dict[int, int]:
+        """bucket → version as of batch ``upto`` (default: the newest):
+        the compaction's full map, then each later record's buckets."""
+        versions: dict[int, int] = {}
+        for rec in records:
+            if upto is not None and rec["batch_id"] > upto:
+                break
+            if "versions" in rec:
+                versions = {int(b): v for b, v in rec["versions"].items()}
+            versions.update(dict.fromkeys(rec.get("buckets", ()), rec["batch_id"]))
+        return versions
 
-    def _write_manifest(self, manifest: dict) -> None:
-        manifest.setdefault("config", self._config())
-        atomic_write_json(self.path, manifest, os.path.basename(self._manifest_path))
+    @staticmethod
+    def _schema(records: list[dict]) -> StructType:
+        """The stored state's columns: the newest pin in the log."""
+        for rec in reversed(records):
+            if "schema" in rec:
+                return StructType.fromJson(rec["schema"])
+        return StructType()
+
+    @staticmethod
+    def _retained(records: list[dict], batch_id: int) -> None:
+        ids = [r["batch_id"] for r in records]
+        if batch_id not in ids:
+            raise ValueError(
+                f"no retained snapshot for batch {batch_id} (committed: {ids})"
+            )
 
     def _bucket_dir(self, bucket: int, version: int) -> str:
         return os.path.join(
@@ -178,37 +199,22 @@ class UpsertSink:
         return F.pmod(F.hash(*self.key_cols), F.lit(self.num_buckets))
 
     def is_batch_committed(self, batch_id: int) -> bool:
-        return batch_id in self._read_manifest()["batches"]
+        return self.log.is_committed(batch_id)
 
     def bucket_versions(self) -> dict[int, int]:
         """bucket → committed version (test/inspection surface)."""
-        return {int(b): v for b, v in self._read_manifest()["versions"].items()}
+        return self._versions(self._records())
 
     # -- write path -----------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.write_batch(batch_df, batch_id)
 
-    def _state_schema(self, spark: SparkSession, manifest: dict) -> StructType:
-        """The stored state's columns: the manifest's pin, or for a
-        manifest written before the pin existed, the schema merged from
-        every live bucket directory (one footer-reading job, paid once:
-        the next commit pins it). Inferring from the touched buckets
-        alone would miss a column only untouched buckets hold, and the
-        pin would then drop it on their next rewrite."""
-        if "schema" in manifest:
-            return StructType.fromJson(manifest["schema"])
-        dirs = [self._bucket_dir(int(b), v) for b, v in manifest["versions"].items()]
-        dirs = [d for d in dirs if self._dirs_have_files([d])]
-        if not dirs:
-            return StructType()
-        return spark.read.option("mergeSchema", "true").parquet(*dirs).schema
-
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        manifest = self._read_manifest()
-        if batch_id in manifest["batches"]:
+        if self.is_batch_committed(batch_id):
             consume_replayed_batch(batch_df)
             return
-        spark = batch_df.sparkSession
+        records = self._records()
+        stored = pinned = self._schema(records)
         tomb = self.tombstone_col
         is_tomb = F.lit(False)
         if tomb in batch_df.columns:
@@ -227,88 +233,91 @@ class UpsertSink:
                 .save()
             )
             touched = sorted(seen.get["b"])
-            if not touched:
-                manifest["batches"].append(batch_id)
-                self._write_manifest(manifest)
-                return
-
-            stored = self._state_schema(spark, manifest)
-            old_dirs = [
-                self._bucket_dir(b, manifest["versions"][str(b)])
-                for b in touched
-                if str(b) in manifest["versions"]
-            ]
-            # a prior all-delete batch leaves empty-but-present bucket dirs
-            old_dirs = [d for d in old_dirs if self._dirs_have_files([d])]
-            rows = batch
-            if old_dirs:
-                # additive schema evolution: the side that lacks a column
-                # (older files, or a batch omitting it) contributes NULLs
-                old = spark.read.schema(stored).parquet(*old_dirs).withColumns(
-                    {"_bucket": self._bucket_col(), _TOMB: F.lit(False), _PRIO: F.lit(0)}
-                )
-                rows = batch.unionByName(old, allowMissingColumns=True)
-            # ONE exchange: each touched bucket lands whole in one shuffle
-            # partition, so the write below makes one file per bucket. The
-            # newest row per key wins (batch rows over stored ones, see the
-            # module docstring); tombstoned winners are dropped.
-            cols = [c for c in rows.columns if c not in ("_bucket", _TOMB, _PRIO, tomb)]
-            values = [c for c in cols if c not in self.key_cols]
-            merged = (
-                rows.repartition("_bucket")
-                .groupBy("_bucket", *self.key_cols)
-                .agg(
-                    F.max_by(
-                        F.struct(*values, _TOMB), F.struct(_PRIO, self.order_col)
-                    ).alias("_row")
-                )
-                .select(*self.key_cols, "_row.*", "_bucket")
-                .where(~F.col(_TOMB))
-                .select(*cols, "_bucket")
-            )
-            # the deterministic path makes a crashed replay overwrite it
-            (
-                merged.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, "versions", f"v={batch_id}"))
-            )
-            # a bucket whose every key was tombstoned writes NO partition
-            # dir (dynamic partition writes skip empty groups) — create
-            # it empty so the manifest never points at a missing path
-            for b in touched:
-                os.makedirs(self._bucket_dir(b, batch_id), exist_ok=True)
+            if touched:
+                pinned = self._merge(batch, records, stored, touched, batch_id)
         finally:
             batch.unpersist()
+        record: dict = {"batch_id": batch_id, "buckets": touched}
+        if not records:
+            record["config"] = self._config()
+        if pinned != stored:
+            record["schema"] = pinned.jsonValue()
+        self.log.append(batch_id, record)
 
-        for bucket in touched:
-            manifest["versions"][str(bucket)] = batch_id
-        manifest["batches"].append(batch_id)
-        # per-batch snapshot of the bucket→version map: time-travel reads
-        manifest["history"][str(batch_id)] = dict(manifest["versions"])
-        # the pin only widens: stored columns this batch did not carry stay
+    def _merge(
+        self,
+        batch: DataFrame,
+        records: list[dict],
+        stored: StructType,
+        touched: list[int],
+        batch_id: int,
+    ) -> StructType:
+        """Rewrite the ``touched`` buckets as version ``batch_id``: their
+        stored rows merged with the batch. Returns the widened schema
+        pin."""
+        spark = batch.sparkSession
+        tomb = self.tombstone_col
+        versions = self._versions(records)
+        old_dirs = [self._bucket_dir(b, versions[b]) for b in touched if b in versions]
+        # a prior all-delete batch leaves empty-but-present bucket dirs
+        old_dirs = [d for d in old_dirs if self._dirs_have_files([d])]
+        rows = batch
+        if old_dirs:
+            # additive schema evolution: the side that lacks a column
+            # (older files, or a batch omitting it) contributes NULLs
+            old = spark.read.schema(stored).parquet(*old_dirs).withColumns(
+                {"_bucket": self._bucket_col(), _TOMB: F.lit(False), _PRIO: F.lit(0)}
+            )
+            rows = batch.unionByName(old, allowMissingColumns=True)
+        # ONE exchange: each touched bucket lands whole in one shuffle
+        # partition, so the write below makes one file per bucket. The
+        # newest row per key wins (batch rows over stored ones, see the
+        # module docstring); tombstoned winners are dropped.
+        cols = [c for c in rows.columns if c not in ("_bucket", _TOMB, _PRIO, tomb)]
+        values = [c for c in cols if c not in self.key_cols]
+        merged = (
+            rows.repartition("_bucket")
+            .groupBy("_bucket", *self.key_cols)
+            .agg(
+                F.max_by(
+                    F.struct(*values, _TOMB), F.struct(_PRIO, self.order_col)
+                ).alias("_row")
+            )
+            .select(*self.key_cols, "_row.*", "_bucket")
+            .where(~F.col(_TOMB))
+            .select(*cols, "_bucket")
+        )
+        # the deterministic path makes a crashed replay overwrite it
+        (
+            merged.write.partitionBy("_bucket")
+            .mode("overwrite")
+            .parquet(os.path.join(self.path, "versions", f"v={batch_id}"))
+        )
+        # a bucket whose every key was tombstoned writes NO partition
+        # dir (dynamic partition writes skip empty groups) — create
+        # it empty so the log never points at a missing path
+        for b in touched:
+            os.makedirs(self._bucket_dir(b, batch_id), exist_ok=True)
+        # the pin only widens: stored columns this batch did not carry
+        # stay, in their pinned order
         written = merged.drop("_bucket").schema
-        kept = [f for f in stored.fields if f.name not in written.names]
-        manifest["schema"] = StructType(written.fields + kept).jsonValue()
-        self._write_manifest(manifest)
+        return StructType(
+            [written[f.name] if f.name in written.names else f for f in stored.fields]
+            + [f for f in written.fields if f.name not in stored.names]
+        )
 
     # -- read path ------------------------------------------------------
     def current_state(
         self, spark: SparkSession, as_of_batch: int | None = None
     ) -> DataFrame:
         """The committed key-value snapshot. ``as_of_batch`` reads the
-        state as of an earlier committed batch (the manifest keeps one
-        bucket→version snapshot per batch; ``vacuum`` prunes them)."""
-        manifest = self._read_manifest()
-        if as_of_batch is None:
-            versions = manifest["versions"]
-        else:
-            versions = manifest["history"].get(str(as_of_batch))
-            if versions is None:
-                raise ValueError(
-                    f"no retained snapshot for batch {as_of_batch} "
-                    f"(committed: {sorted(int(b) for b in manifest['history'])})"
-                )
-        dirs = [self._bucket_dir(int(b), v) for b, v in versions.items()]
+        state as of an earlier committed batch: any batch the log still
+        holds a record for (``vacuum`` folds older ones away)."""
+        records = self._records()
+        if as_of_batch is not None:
+            self._retained(records, as_of_batch)
+        versions = self._versions(records, as_of_batch)
+        dirs = [self._bucket_dir(b, v) for b, v in versions.items()]
         if not dirs:
             raise ValueError(f"no committed state under {self.path}")
         if not self._dirs_have_files(dirs):
@@ -337,30 +346,20 @@ class UpsertSink:
         prior versions — delta-sized, never a snapshot scan. Downstream
         consumers get a replayable changelog without the sink writing a
         second copy of anything."""
-        manifest = self._read_manifest()
-        snap = manifest["history"].get(str(batch_id))
-        if snap is None:
-            raise ValueError(
-                f"no retained snapshot for batch {batch_id} "
-                f"(committed: {sorted(int(b) for b in manifest['history'])})"
-            )
-        new_dirs = [
-            self._bucket_dir(int(b), v) for b, v in snap.items() if v == batch_id
+        records = self._records()
+        self._retained(records, batch_id)
+        touched = [
+            b for b, v in self._versions(records, batch_id).items() if v == batch_id
         ]
+        new_dirs = [self._bucket_dir(b, batch_id) for b in touched]
         if not new_dirs:
             raise ValueError(f"batch {batch_id} wrote no buckets")
 
-        batches = sorted(int(b) for b in manifest["history"])
-        prior = [b for b in batches if b < batch_id]
+        prior = [r["batch_id"] for r in records if r["batch_id"] < batch_id]
         old_dirs = []
         if prior:
-            prev_snap = manifest["history"][str(prior[-1])]
-            touched = {b for b, v in snap.items() if v == batch_id}
-            old_dirs = [
-                self._bucket_dir(int(b), v)
-                for b, v in prev_snap.items()
-                if b in touched
-            ]
+            prev = self._versions(records, prior[-1])
+            old_dirs = [self._bucket_dir(b, prev[b]) for b in touched if b in prev]
             # emptied-by-deletes prior buckets carry no rows: dropping
             # them routes a rebirth batch to the insert-only branch
             old_dirs = [d for d in old_dirs if self._dirs_have_files([d])]
@@ -447,30 +446,39 @@ class UpsertSink:
     # -- maintenance ----------------------------------------------------
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop version directories unreachable from the last
-        ``keep_last`` batch snapshots (and the current map), pruning
-        older history entries — the retention knob that bounds storage
-        at a multiple of live state instead of all-versions-ever.
-        Returns the removed directory paths."""
+        ``keep_last`` committed batches, folding the older log records
+        into one compaction record — the retention knob that bounds
+        storage at a multiple of live state instead of
+        all-versions-ever. Returns the removed directory paths."""
         import shutil
 
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        manifest = self._read_manifest()
-        kept_batches = sorted(int(b) for b in manifest["history"])[-keep_last:]
+        records = self._records()
+        kept = records[-keep_last:]
         live: set[tuple[int, int]] = set()
-        for b in kept_batches:
-            for bucket, v in manifest["history"][str(b)].items():
-                live.add((int(bucket), v))
-        for bucket, v in manifest["versions"].items():
-            live.add((int(bucket), v))
-
-        # commit the pruned history FIRST: a crash mid-delete then
-        # leaves only orphan directories (re-collected by the next
-        # vacuum), never a retained snapshot pointing at deleted files
-        manifest["history"] = {
-            str(b): manifest["history"][str(b)] for b in kept_batches
-        }
-        self._write_manifest(manifest)
+        if kept:
+            base = kept[0]["batch_id"]
+            versions = self._versions(records, base)
+            live = set(versions.items())
+            live |= {(b, r["batch_id"]) for r in kept[1:] for b in r["buckets"]}
+            if len(records) > keep_last:
+                # commit the compaction FIRST: a crash mid-delete then
+                # leaves only orphan directories (re-collected by the
+                # next vacuum), never a retained batch pointing at
+                # deleted files
+                folded = records[: len(records) - keep_last + 1]
+                record = {
+                    "batch_id": base,
+                    **self.log.supersession([r["batch_id"] for r in folded]),
+                    "versions": {str(b): v for b, v in versions.items()},
+                    "config": self._config(),
+                }
+                schema = self._schema(folded)
+                if schema.fields:
+                    record["schema"] = schema.jsonValue()
+                self.log.compact(record)
+        self.log.vacuum()
 
         removed = []
         root = os.path.join(self.path, "versions")

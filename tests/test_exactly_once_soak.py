@@ -138,15 +138,15 @@ class TestUpsertSinkSoak:
                     # kill between the versioned data write and the
                     # manifest flip: the deterministic v=<batch_id> path
                     # must make the replay overwrite, never duplicate
-                    real = sink._write_manifest
+                    real = sink.log.append
 
-                    def boom(manifest):
+                    def boom(batch_id, record):
                         raise RuntimeError("killed before manifest flip")
 
-                    sink._write_manifest = boom
+                    sink.log.append = boom
                     with pytest.raises(RuntimeError, match="killed"):
                         sink.write_batch(batch, b)
-                    sink._write_manifest = real
+                    sink.log.append = real
                     kills += 1
                 else:
                     sink.write_batch(batch, b)
@@ -325,17 +325,15 @@ class TestCompactionSoak:
                 if rng.random() < 0.5:
                     # die before the compaction record lands: the
                     # consolidated dir exists but originals stay live
-                    real = sink._atomic_write_json
+                    real = sink.log.compact
 
-                    def boom(record, final_name, _real=real):
-                        if final_name.startswith("compaction-"):
-                            raise RuntimeError("killed before compaction record")
-                        _real(record, final_name)
+                    def boom(record):
+                        raise RuntimeError("killed before compaction record")
 
-                    sink._atomic_write_json = boom
+                    sink.log.compact = boom
                     with pytest.raises(RuntimeError, match="killed"):
                         sink.compact_data(spark, min_batches=1)
-                    sink._atomic_write_json = real
+                    sink.log.compact = real
                 else:
                     sink.compact_data(spark, min_batches=1)
             elif roll > 0.7:

@@ -393,6 +393,50 @@ class TestManifestScanCost:
         assert len(opened) == 1, opened
         assert [(k, p.offset) for k, p in positions.items()] == [(("t", 0), 1)]
 
+    def test_upsert_log_reads_and_publish_do_not_grow_with_committed_batches(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The upsert sink on the same log: after 100 or 1,000 records
+        the replay check opens no batch record, a commit publishes a
+        record of the same size, and after ``vacuum`` opening state
+        reads the compaction record plus the records after it."""
+        from stream_loader_spark.sinks import manifest as manifest_mod
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        opened = []
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(path))
+            return open(path, *args, **kwargs)
+
+        monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+        schema = "k long, val string, ver long"
+        real = 5000  # the real commit's batch id, above both counts
+        published = {}
+        for n_batches in (100, 1000):
+            sink = UpsertSink(str(tmp_path / f"s{n_batches}"), ["k"], "ver", num_buckets=4)
+            sink.write_batch(spark.createDataFrame([(k, "a", 1) for k in range(16)], schema), 0)
+            for b in range(1, n_batches):
+                # what a commit touching every bucket publishes
+                sink.log.append(b, {"batch_id": b, "buckets": [0, 1, 2, 3]})
+
+            opened.clear()
+            assert not sink.is_batch_committed(real)
+            assert not [n for n in opened if n.startswith("batch-")]
+
+            sink.write_batch(spark.createDataFrame([(3, "b", 2)], schema), real)
+            published[n_batches] = os.path.getsize(sink.log.record_path(real))
+
+            sink.vacuum(keep_last=2)
+            opened.clear()
+            versions = sink.bucket_versions()
+            assert sorted(opened) == [
+                f"batch-{real:020d}.json",
+                f"compaction-{n_batches - 1:020d}.json",
+            ]
+            assert real in versions.values()
+        assert published[100] == published[1000]
+
 
 class TestBackfillThenStream:
     def test_bootstrap_from_history_then_stream_continues(self, spark, stream_env):
@@ -743,6 +787,19 @@ class TestIcebergTransactionSeam:
 
         # the one atomic commit point
         txn.commitTransaction.assert_called_once()
+
+    def test_replay_guard_boundary(self, spark, tmp_path, monkeypatch):
+        """A range that ends AT the committed next offset is not
+        committed: that offset is the next record to consume."""
+        from stream_loader_spark.model.position import StreamPosition
+
+        sink = self._make_sink(spark, tmp_path, monkeypatch)
+        monkeypatch.setattr(
+            sink, "committed_positions", lambda: {("t", 0): StreamPosition(42, 0)}
+        )
+        rng = {"topic": "t", "partition": 0}
+        assert sink.is_batch_committed([dict(rng, end_offset=41)])
+        assert not sink.is_batch_committed([dict(rng, end_offset=42)])
 
     def test_partitioned_table_refuses_staged_parquet_path(self, spark, tmp_path, monkeypatch):
         """Staged plain parquet carries no partition tuple: the
@@ -1457,19 +1514,19 @@ class TestUpsertSink:
         sink.write_batch(self._df(spark, [(1, "a", 1), (2, "b", 1)]), 0)
 
         boom = RuntimeError("crash before manifest")
-        original = sink._write_manifest
+        original = sink.log.append
         calls = {"n": 0}
 
-        def crashing(manifest):
+        def crashing(batch_id, record):
             calls["n"] += 1
             raise boom
 
-        sink._write_manifest = crashing
+        sink.log.append = crashing
         try:
             with pytest.raises(RuntimeError):
                 sink.write_batch(self._df(spark, [(2, "B", 2)]), 1)
         finally:
-            sink._write_manifest = original
+            sink.log.append = original
         # data for v=1 may exist on disk but is invisible: manifest rules
         state = {r.k: r.val for r in sink.current_state(spark).collect()}
         assert state == {1: "a", 2: "b"}
@@ -1547,14 +1604,14 @@ class TestUpsertSink:
         monkeypatch.setattr(os, "fsync", counting_fsync)
         sink.write_batch(self._df(spark, [(1, "a", 1), (2, "b", 1)]), 0)
         monkeypatch.undo()
-        for path in (sink._manifest_path, sink.path):
+        for path in (sink.log.record_path(0), sink.log.path):
             st = os.stat(path)
             assert (st.st_dev, st.st_ino) in synced, path
 
     def test_failed_manifest_publish_leaves_no_temp_file(self, spark, tmp_path, monkeypatch):
         sink = self._sink(tmp_path)
         sink.write_batch(self._df(spark, [(1, "a", 1)]), 0)
-        with open(sink._manifest_path) as fh:
+        with open(sink.log.record_path(0)) as fh:
             before = fh.read()
 
         def failing_dump(*a, **k):
@@ -1564,8 +1621,9 @@ class TestUpsertSink:
         with pytest.raises(RuntimeError, match="disk full"):
             sink.write_batch(self._df(spark, [(1, "b", 2)]), 1)
         monkeypatch.undo()
-        assert [f for f in os.listdir(sink.path) if f.endswith(".tmp")] == []
-        with open(sink._manifest_path) as fh:
+        assert [f for f in os.listdir(sink.log.path) if f.endswith(".tmp")] == []
+        assert not os.path.exists(sink.log.record_path(1))
+        with open(sink.log.record_path(0)) as fh:
             assert fh.read() == before
         assert [r.val for r in sink.current_state(spark).collect()] == ["a"]
 
@@ -1948,31 +2006,6 @@ class TestUpsertSchemaEvolution:
         state = {r["k"]: (r["val"], r["extra"]) for r in sink.current_state(spark).collect()}
         assert state == {a: ("A", "x"), a2: ("n", None), b: ("B", None)}
 
-    def test_manifest_without_schema_pin_merges_and_gains_it(self, spark, tmp_path):
-        """A manifest written before the schema pin existed: its schema
-        is inferred from every live bucket once, the merge is correct,
-        and the commit pins the schema."""
-        sink = self._sink(tmp_path)
-        a, _, b = self._bucket_keys(spark, sink)
-        base = "k long, val string, ver long"
-        sink.write_batch(spark.createDataFrame([(a, "a", 1), (b, "b", 1)], base), 0)
-        sink.write_batch(
-            spark.createDataFrame([(a, "A", "x", 2)], "k long, val string, extra string, ver long"),
-            1,
-        )
-        with open(sink._manifest_path) as fh:
-            m = json.load(fh)
-        del m["schema"]
-        with open(sink._manifest_path, "w") as fh:
-            json.dump(m, fh)
-        # touches only bucket B, whose files predate the extra column
-        sink.write_batch(spark.createDataFrame([(b, "B", 3)], base), 2)
-        with open(sink._manifest_path) as fh:
-            pinned = [f["name"] for f in json.load(fh)["schema"]["fields"]]
-        assert sorted(pinned) == ["extra", "k", "val", "ver"]
-        state = {r["k"]: (r["val"], r["extra"]) for r in sink.current_state(spark).collect()}
-        assert state == {a: ("A", "x"), b: ("B", None)}
-
     def test_change_feed_across_schema_change(self, spark, tmp_path):
         sink = self._sink(tmp_path)
         sink.write_batch(
@@ -2172,25 +2205,46 @@ class TestUpsertConfigPin:
 
         self._write_one(spark, tmp_path / "state", num_buckets=4)
         # same layout reopens fine
-        UpsertSink(str(tmp_path / "state"), ["k"], "ver", num_buckets=4)._read_manifest()
+        UpsertSink(str(tmp_path / "state"), ["k"], "ver", num_buckets=4).bucket_versions()
         with pytest.raises(ValueError, match="config mismatch"):
             UpsertSink(
                 str(tmp_path / "state"), ["k"], "ver", num_buckets=8
-            )._read_manifest()
+            ).bucket_versions()
 
     def test_data_bearing_manifest_without_config_is_refused(self, spark, tmp_path):
         import json
 
         from stream_loader_spark.sinks.upsert import UpsertSink
 
-        self._write_one(spark, tmp_path / "state", num_buckets=4)
-        mp = os.path.join(str(tmp_path / "state"), "manifest.json")
+        sink = self._write_one(spark, tmp_path / "state", num_buckets=4)
+        mp = sink.log.record_path(0)
         with open(mp) as fh:
             m = json.load(fh)
-        del m["config"]  # simulate a pre-pinning manifest
+        del m["config"]  # simulate a log whose oldest record has no pin
         with open(mp, "w") as fh:
             json.dump(m, fh)
         with pytest.raises(ValueError, match="no pinned config"):
             UpsertSink(
                 str(tmp_path / "state"), ["k"], "ver", num_buckets=4
-            )._read_manifest()
+            ).bucket_versions()
+
+    def test_single_file_manifest_state_is_refused(self, spark, tmp_path):
+        """State written in the single-file ``manifest.json`` format has
+        no log: opening it must fail, not start an empty log over it."""
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        state = tmp_path / "state"
+        os.makedirs(state / "versions" / "v=0" / "_bucket=1")
+        with open(state / "manifest.json", "w") as fh:
+            json.dump({"versions": {"1": 0}, "batches": [0], "history": {}}, fh)
+        sink = UpsertSink(str(state), ["k"], "ver", num_buckets=4)
+        with pytest.raises(ValueError, match="manifest.json"):
+            sink.bucket_versions()
+        with pytest.raises(ValueError, match="manifest.json"):
+            sink.write_batch(
+                spark.createDataFrame([(1, 1, "a")], "k int, ver bigint, v string"), 1
+            )
+        with pytest.raises(ValueError, match="manifest.json"):
+            sink.vacuum()
+        assert os.path.isdir(state / "versions" / "v=0" / "_bucket=1")
+        assert os.listdir(sink.log.path) == []
