@@ -83,6 +83,21 @@ def stream_ranges(
     )
 
 
+def batch_ranges(
+    batch: DataFrame,
+    topic_col: str = "topic",
+    partition_col: str = "partition",
+    offset_col: str = "offset",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """A4 over one micro-batch, as every offsets-tracking sink collects
+    it: the final aggregate runs in ONE task. Its result is one row per
+    (topic, partition), so spreading it over the shuffle partitions
+    only adds per-task cost to every commit. ``record_count`` sums to
+    the batch's row count."""
+    return stream_ranges(batch, topic_col, partition_col, offset_col, ts_col).coalesce(1)
+
+
 def end_watermark_ms(row) -> int:
     """A ``stream_ranges`` row's end watermark in epoch milliseconds. A
     partition whose every record has a NULL ts gets 0, so a poison

@@ -20,6 +20,8 @@ check and pytest verifies them against exact baselines instead.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 from datetime import datetime
 from typing import Callable
 
@@ -249,12 +251,18 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return committed_positions_external(offs, "cg-even")
 
 
+# the fixtures' code-version token: bump it when the written shape of a
+# sink fixture changes
+_FIXTURE_VERSION = 3
+_FIXTURE_TREE = "sink_fixtures_v"
+
+
 def _sink_fixture_dir(sf_dir: str, name: str) -> str:
     """Deterministic, version-stamped scratch dir for sink read-path
     queries: the committed fixture is a pure function of the events
     table, so reusing it across calls is safe and makes repeat runs
-    read-only. The path embeds (a) a code-version token — bump it when
-    the written shape changes — and (b) a fingerprint of the source
+    read-only. The path embeds (a) the code-version token
+    ``_FIXTURE_VERSION`` and (b) a fingerprint of the source
     parquet (size + NANOSECOND mtime: second-resolution stamps let a
     same-second regeneration silently reuse a stale fixture), so a
     regenerated events table can never be compared against a fixture
@@ -268,13 +276,33 @@ def _sink_fixture_dir(sf_dir: str, name: str) -> str:
     return os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
         "spark-warehouse",
-        "sink_fixtures_v3",
+        f"{_FIXTURE_TREE}{_FIXTURE_VERSION}",
         f"{sf}-{fp}",
         name,
     )
 
 
 _FIXTURE_DONE = ".fixture_complete"
+
+# set when this process built a fixture rather than found it complete:
+# bench.py reports ``fixture_reused`` from it
+FIXTURE_BUILT = False
+
+
+def _prune_superseded_fixtures(final_dir: str) -> None:
+    """Delete the fixture trees of older code-version tokens next to
+    ``final_dir``'s tree, when that tree is the current token's: no
+    current code reads them, and each token bump would otherwise leave
+    the earlier fixtures behind for good. Other fingerprints under the
+    current token stay, since concurrent runs may read them."""
+    tree = os.path.dirname(os.path.dirname(final_dir))
+    if os.path.basename(tree) != f"{_FIXTURE_TREE}{_FIXTURE_VERSION}":
+        return
+    root = os.path.dirname(tree)
+    for name in os.listdir(root):
+        m = re.fullmatch(rf"{_FIXTURE_TREE}(\d+)", name)
+        if m and int(m.group(1)) < _FIXTURE_VERSION:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def _build_fixture(final_dir: str, build: Callable[[], None]) -> None:
@@ -295,6 +323,7 @@ def _build_fixture(final_dir: str, build: Callable[[], None]) -> None:
     as the winner finishes."""
     import time as _time
 
+    global FIXTURE_BUILT
     from stream_loader_spark.sinks.manifest import atomic_write_json
 
     done = os.path.join(final_dir, _FIXTURE_DONE)
@@ -325,6 +354,8 @@ def _build_fixture(final_dir: str, build: Callable[[], None]) -> None:
         if not os.path.exists(done):
             build()
             atomic_write_json(final_dir, {"complete": True}, _FIXTURE_DONE)
+            FIXTURE_BUILT = True
+            _prune_superseded_fixtures(final_dir)
     finally:
         os.unlink(lock)
 

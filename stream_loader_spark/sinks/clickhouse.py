@@ -250,7 +250,7 @@ class ClickHouseHttpStorage:
         whose token ClickHouse deduplicates; it can never overestimate
         because it advances only after insert_batch returns — and any
         insert failure drops the cache so the next batch re-recovers."""
-        from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
+        from stream_loader_spark.operators.recovery import batch_ranges, end_watermark_ms
 
         if self.verify_dedup and not self._dedup_checked:
             self.check_dedup_support()
@@ -258,7 +258,7 @@ class ClickHouseHttpStorage:
         t, p, o, ts = self.meta
         batch_df = batch_df.persist()
         try:
-            ranges = stream_ranges(batch_df, t, p, o, ts).collect()
+            ranges = batch_ranges(batch_df, t, p, o, ts).collect()
             if self._positions_cache is None:
                 self._positions_cache = self.committed_positions()
             if ranges_covered_by(ranges, self._positions_cache):

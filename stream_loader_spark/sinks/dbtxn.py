@@ -33,7 +33,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
-from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
+from stream_loader_spark.operators.recovery import batch_ranges, end_watermark_ms
 from stream_loader_spark.model.position import StreamPosition, ranges_covered_by
 
 CHUNK_ROWS = 10_000
@@ -156,11 +156,11 @@ class DbTransactionalSink:
         t, p, o, ts = self.meta
         batch_df = batch_df.persist()
         try:
-            ranges = stream_ranges(batch_df, t, p, o, ts).collect()
+            ranges = batch_ranges(batch_df, t, p, o, ts).collect()
             if self.is_batch_committed(ranges):
                 return
             if self.max_rows_guard is not None:
-                n = batch_df.count()  # persisted above: counts cached blocks
+                n = sum(r["record_count"] for r in ranges)  # no count job
                 if n > self.max_rows_guard:
                     raise ValueError(
                         f"batch of {n} rows exceeds max_rows_guard="

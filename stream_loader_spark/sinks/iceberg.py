@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from stream_loader_spark.model.position import StreamPosition, ranges_covered_by
-from stream_loader_spark.operators.recovery import end_watermark_ms, stream_ranges
+from stream_loader_spark.operators.recovery import batch_ranges, end_watermark_ms
 
 PROPERTY_PREFIX = "__consumer_offset"
 
@@ -123,7 +123,7 @@ class IcebergOffsetsSink:
         """
         batch_df = batch_df.persist()
         try:
-            ranges = stream_ranges(batch_df).collect()
+            ranges = batch_ranges(batch_df).collect()
             if self.is_batch_committed(ranges):
                 return
             props = self._offset_props(ranges)

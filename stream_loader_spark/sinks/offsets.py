@@ -31,9 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_loader_spark.operators.recovery import (
+    batch_ranges,
     committed_positions,
     committed_positions_external,
-    stream_ranges,
 )
 from stream_loader_spark.sinks.manifest import consume_replayed_batch
 from stream_loader_spark.sources.kafka_view import kafka_metadata_columns
@@ -123,7 +123,7 @@ class ExternalOffsetsSink:
             return
         batch_df = batch_df.persist()
         try:
-            ranges = stream_ranges(batch_df).select(
+            ranges = batch_ranges(batch_df).select(
                 F.lit(batch_id).alias("_batch_id"),
                 F.lit(self.consumer_group).alias("_consumer_group"),
                 F.col("topic").alias("_topic"),

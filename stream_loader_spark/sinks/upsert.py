@@ -33,11 +33,14 @@ touches:
   keep their values).
 - The bucket → version map as of any retained batch is the fold of the
   newest compaction record (written by ``vacuum``: the full map, config
-  and schema) and the records after it. Readers union exactly the
-  directories the log names; a crash between data and record leaves
-  invisible files that the deterministic replay overwrites. Data files
-  are NEVER renamed — object-store safe, same as the manifest file
-  sink.
+  and schema) and the records after it. A commit keeps the fold its
+  sink's last commit left and reopens no record while the log's listing
+  is unchanged, so the records it opens do not grow with the records
+  since the last ``vacuum`` (the listing it compares still does).
+  Readers union exactly the directories the log names;
+  a crash between data and record leaves invisible files that the
+  deterministic replay overwrites. Data files are NEVER renamed —
+  object-store safe, same as the manifest file sink.
 - Replays write nothing: the batch's record exists (or a compaction's
   watermark covers it). The replayed batch's plan still runs into a
   no-op sink so stateful operators upstream commit their state
@@ -120,6 +123,8 @@ class UpsertSink:
             raise ValueError("tombstone_col must not be a key or order column")
         self.tombstone_col = tombstone_col
         self.log = CommitLog(os.path.join(path, "_manifest"))
+        # (log listing, live records) as of this sink's last commit
+        self._fold: tuple[list[str], list[dict]] | None = None
 
     # -- commit log -----------------------------------------------------
     def _records(self) -> list[dict]:
@@ -213,7 +218,14 @@ class UpsertSink:
         if self.is_batch_committed(batch_id):
             consume_replayed_batch(batch_df)
             return
-        records = self._records()
+        # the records this sink's last commit left need no reread while
+        # the log's listing is unchanged; a listing that differs (another
+        # writer appended, compacted or vacuumed) refolds
+        names = self.log.names()
+        if self._fold is not None and self._fold[0] == names:
+            records = self._fold[1]
+        else:
+            records = self._records()
         stored = pinned = self._schema(records)
         tomb = self.tombstone_col
         is_tomb = F.lit(False)
@@ -243,6 +255,9 @@ class UpsertSink:
         if pinned != stored:
             record["schema"] = pinned.jsonValue()
         self.log.append(batch_id, record)
+        if not records or batch_id > records[-1]["batch_id"]:
+            name = os.path.basename(self.log.record_path(batch_id))
+            self._fold = (sorted([*names, name]), [*records, record])
 
     def _merge(
         self,

@@ -8,7 +8,7 @@ from it, and typos fail loudly instead of silently dropping a stage.
 
 import json
 import os
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -168,6 +168,85 @@ class TestBuildApp:
         state = app.sink.current_state(spark)
         assert state.count() == 20  # one row per key, latest wins
 
+
+
+class TestManifestCommitShape:
+    """A watermark + dedup + manifest pipeline commits a micro-batch in
+    one task per file it writes: one data file per date per batch."""
+
+    def _drain(self, spark, tmp_path):
+        """Drain 3 files, one micro-batch each, whose rows straddle
+        midnight, over 4 state partitions; returns the app and each
+        commit's job group."""
+        cfg = TestBuildApp()._config(tmp_path)
+        cfg["source"]["options"] = {"maxFilesPerTrigger": 1}
+        cfg["watermark"] = {"column": "ts", "delay": "3 minutes"}
+        cfg["dedup"] = {"keys": ["topic", "partition", "offset"]}
+        for f in range(3):
+            spark.createDataFrame(
+                [
+                    # offsets 20f..20f+9 on Jan 1, 20f+10..20f+19 on Jan 2
+                    ("t", o % 2, o, datetime(2024, 1, 1, 23, 59, 50) + timedelta(seconds=o % 20),
+                     json.dumps({"k": o, "v": "x"}))
+                    for o in range(20 * f, 20 * f + 20)
+                ],
+                REC_SCHEMA,
+            ).coalesce(1).write.mode("append").parquet(cfg["source"]["path"])
+        app = build_app(spark, cfg)
+        sc = spark.sparkContext
+        groups = []
+        commit = app.sink.write_batch
+
+        def grouped(batch_df, batch_id):
+            group = f"manifest-commit-{tmp_path.name}-{batch_id}"
+            sc.setJobGroup(group, "one manifest commit")
+            try:
+                commit(batch_df, batch_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            groups.append(group)
+
+        app.sink.write_batch = grouped
+        # the state store's partition count is pinned at first start
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            app.pipeline.run_available()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+        return app, groups
+
+    def test_one_data_file_per_date_per_batch(self, spark, tmp_path):
+        app, _ = self._drain(spark, tmp_path)
+        batches = app.sink.committed_batches()
+        assert len(batches) == 3
+        for b in batches:
+            dates = sorted(os.listdir(b.data_dir))
+            dates = [d for d in dates if d.startswith("dt=")]
+            assert dates == ["dt=2024-01-01", "dt=2024-01-02"], (b.batch_id, dates)
+            for d in dates:
+                files = [
+                    f for f in os.listdir(os.path.join(b.data_dir, d))
+                    if not f.startswith((".", "_"))
+                ]
+                assert len(files) == 1, (b.batch_id, d, files)
+        assert app.sink.committed_data(spark).count() == 60
+
+    def test_commit_runs_at_most_seven_tasks(self, spark, tmp_path):
+        """Two jobs: the source scan (1 task) and the stateful dedup (4)
+        feed the ranges reduce (1), then the write (1)."""
+        app, groups = self._drain(spark, tmp_path)
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        assert len(groups) == 3
+        for group in groups:
+            jobs = list(tracker.getJobIdsForGroup(group))
+            assert len(jobs) == 2, (group, jobs)
+            # a later job lists the stages it reuses: count each once
+            stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+            tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+            assert 1 <= tasks <= 7, (group, tasks)
 
 class TestConfigHardening:
     def test_dedup_block_validated(self, spark, tmp_path):

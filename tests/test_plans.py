@@ -492,6 +492,13 @@ class TestSinkFixtureGuard:
     builds serialize on an O_EXCL lock, the completion marker is the
     only 'usable' signal, and a complete fixture is never rebuilt."""
 
+    @pytest.fixture(autouse=True)
+    def _restore_build_flag(self, monkeypatch):
+        # a build sets the module's FIXTURE_BUILT; keep it per test
+        from stream_loader_spark.plans import queries as q
+
+        monkeypatch.setattr(q, "FIXTURE_BUILT", False)
+
     def test_build_once_then_read_only(self, tmp_path):
         from stream_loader_spark.plans.queries import _build_fixture, _FIXTURE_DONE
 
@@ -573,6 +580,38 @@ class TestSinkFixtureGuard:
         t2.join(timeout=10)
         assert waiter_done == [True]
         assert calls == ["winner"]  # the loser's build never ran
+
+    def test_build_prunes_older_fixture_trees(self, tmp_path):
+        """Building under the current token deletes the trees of older
+        tokens; other fingerprints under the current token and other
+        scratch dirs stay."""
+        from stream_loader_spark.plans import queries as q
+
+        root = tmp_path / "spark-warehouse"
+        old = root / f"{q._FIXTURE_TREE}{q._FIXTURE_VERSION - 1}" / "sf0.001-1-2" / "k2_manifest"
+        old.mkdir(parents=True)
+        (old / q._FIXTURE_DONE).write_text("{}")
+        cur = root / f"{q._FIXTURE_TREE}{q._FIXTURE_VERSION}"
+        other = cur / "sf0.01-3-4" / "k2_manifest"
+        other.mkdir(parents=True)
+        (root / "scale_probe").mkdir()
+        fdir = str(cur / "sf0.001-5-6" / "k2_manifest")
+        q._build_fixture(fdir, lambda: None)
+        assert sorted(os.listdir(root)) == sorted([cur.name, "scale_probe"])
+        assert other.is_dir()
+        assert os.path.exists(os.path.join(fdir, q._FIXTURE_DONE))
+
+    def test_only_builds_are_recorded(self, tmp_path, monkeypatch):
+        """``FIXTURE_BUILT`` (bench.py's ``fixture_reused``) is set by a
+        build, not by a fixture found complete."""
+        from stream_loader_spark.plans import queries as q
+
+        fdir = str(tmp_path / "fix")
+        q._build_fixture(fdir, lambda: None)
+        assert q.FIXTURE_BUILT is True
+        monkeypatch.setattr(q, "FIXTURE_BUILT", False)
+        q._build_fixture(fdir, lambda: None)  # complete: reused
+        assert q.FIXTURE_BUILT is False
 
     def test_fingerprint_uses_nanosecond_mtime(self):
         from stream_loader_spark.plans.queries import _sink_fixture_dir

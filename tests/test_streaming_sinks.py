@@ -134,6 +134,43 @@ class TestManifestFileSink:
         assert snap_df.count() == sum(len(b.ranges) for b in sink.committed_batches())
 
 
+class TestManifestWriteTasks:
+    """The write takes one task per ``ROWS_PER_WRITE_TASK`` rows of the
+    cached batch, at most one per batch partition."""
+
+    def _write(self, spark, tmp_path, name, rows=100):
+        from datetime import datetime, timezone
+
+        batch = spark.range(0, rows, 1, 4).select(
+            F.lit("t").alias("topic"),
+            (F.col("id") % 2).cast("int").alias("partition"),
+            F.col("id").alias("offset"),
+            F.lit(datetime(2024, 1, 1, tzinfo=timezone.utc)).alias("ts"),
+        )
+        sink = ManifestFileSink(str(tmp_path / name))
+        sink.write_batch(batch, 0)
+        files = [
+            f for f in os.listdir(sink.batch_data_dir(0)) if not f.startswith((".", "_"))
+        ]
+        assert sink.committed_data(spark).count() == rows
+        return files
+
+    def test_small_batch_is_one_file(self, spark, tmp_path):
+        assert len(self._write(spark, tmp_path, "small")) == 1
+
+    def test_large_batch_spreads_over_batch_partitions(self, spark, tmp_path, monkeypatch):
+        from stream_loader_spark.sinks import manifest as manifest_mod
+
+        rows = 2 * manifest_mod.ROWS_PER_WRITE_TASK + 1
+        assert len(self._write(spark, tmp_path, "past", rows=rows)) == 3
+        monkeypatch.setattr(manifest_mod, "ROWS_PER_WRITE_TASK", 30)
+        # ceil(100 / 30) = 4 tasks, one per batch partition
+        assert len(self._write(spark, tmp_path, "large")) == 4
+        monkeypatch.setattr(manifest_mod, "ROWS_PER_WRITE_TASK", 10)
+        # 10 tasks asked, but coalesce never exceeds the 4 partitions
+        assert len(self._write(spark, tmp_path, "larger")) == 4
+
+
 class TestInRowOffsetsSink:
     def test_load_and_recover_positions_from_data(self, spark, stream_env):
         sink = InRowOffsetsSink(stream_env["out"])
@@ -436,6 +473,43 @@ class TestManifestScanCost:
             ]
             assert real in versions.values()
         assert published[100] == published[1000]
+
+    def test_upsert_commit_log_reads_do_not_grow_with_committed_batches(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A commit reuses the fold its sink kept from its own last
+        commit: after 100 or 1,000 records the next commit opens the
+        same number of records (none), and the log it leaves folds to
+        the same versions a fresh reader sees."""
+        from stream_loader_spark.sinks import manifest as manifest_mod
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        opened = []
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(path))
+            return open(path, *args, **kwargs)
+
+        monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+        schema = "k long, val string, ver long"
+        real = 5000
+        counts, sinks = {}, {}
+        for n_batches in (100, 1000):
+            sink = UpsertSink(str(tmp_path / f"s{n_batches}"), ["k"], "ver", num_buckets=4)
+            sink.write_batch(spark.createDataFrame([(k, "a", 1) for k in range(16)], schema), 0)
+            for b in range(1, n_batches):
+                sink.log.append(b, {"batch_id": b, "buckets": [0, 1, 2, 3]})
+            # records another writer appended: this commit refolds
+            sink.write_batch(spark.createDataFrame([(3, "b", 2)], schema), real)
+            opened.clear()
+            sink.write_batch(spark.createDataFrame([(4, "c", 3)], schema), real + 1)
+            counts[n_batches] = len(opened)
+            sinks[n_batches] = sink
+        assert counts[100] == counts[1000] == 0, counts
+        for sink in sinks.values():
+            versions = UpsertSink(sink.path, ["k"], "ver", num_buckets=4).bucket_versions()
+            assert real + 1 in versions.values()
+            assert UpsertSink._versions(sink._fold[1]) == versions
 
 
 class TestBackfillThenStream:
@@ -1222,6 +1296,33 @@ class TestDbTransactionalSink:
         sink(self._batch(spark, n=10), 0)  # under the guard: commits
         assert self._counts(sink)[0] == 10
 
+    def test_max_rows_guard_runs_no_job_of_its_own(self, spark, tmp_path):
+        """The guard reads the row count off the collected ranges: a
+        guarded commit runs the same jobs as an unguarded one."""
+        from stream_loader_spark.sinks.dbtxn import DbTransactionalSink, sqlite_connect
+
+        sc = spark.sparkContext
+        jobs = {}
+        for guard in (None, 100):
+            sink = DbTransactionalSink(
+                sqlite_connect(str(tmp_path / f"db{guard}.sqlite")),
+                data_table="events",
+                offsets_table="_offsets",
+                consumer_group="cg1",
+                data_cols=["topic", "partition", "offset", "value"],
+                max_rows_guard=guard,
+            )
+            sink.ensure_tables()
+            group = f"dbtxn-guard-{guard}"
+            sc.setJobGroup(group, "one transactional commit")
+            try:
+                sink(self._batch(spark), 0)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[guard] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert self._counts(sink) == (25, 2)
+        assert jobs[100] == jobs[None] > 0, jobs
+
 
 class TestDbTxnPortability:
     """The DB-API seam is portable by PARAMETER, not by assumption:
@@ -1492,6 +1593,27 @@ class TestUpsertSink:
         for b, v in v0.items():
             if b not in moved:
                 assert v1[b] == v  # untouched bucket kept its old version
+
+    def test_commit_after_another_writer_refolds_the_log(self, spark, tmp_path):
+        """A sink keeps the fold of its own last commit; a commit or a
+        vacuum by another sink on the same state changes the log's
+        listing, so the next commit reads the log again and merges
+        against the other writer's versions."""
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(16)]), 0)
+        other = self._sink(tmp_path)
+        other.write_batch(self._df(spark, [(k, "b", 2) for k in range(16)]), 1)
+        sink.write_batch(self._df(spark, [(16, "c", 3)]), 2)
+        other.write_batch(self._df(spark, [(k, "d", 4) for k in range(8)]), 3)
+        other.vacuum(keep_last=1)
+        sink.write_batch(self._df(spark, [(17, "e", 5)]), 4)
+        state = {r.k: r.val for r in sink.current_state(spark).collect()}
+        assert state == {
+            **{k: "d" for k in range(8)},
+            **{k: "b" for k in range(8, 16)},
+            16: "c",
+            17: "e",
+        }
 
     def test_within_batch_ties_resolve_by_order_col(self, spark, tmp_path):
         sink = self._sink(tmp_path)
