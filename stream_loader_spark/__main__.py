@@ -32,21 +32,24 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--maintain",
         action="store_true",
-        help="run the configured sink's maintenance (state compaction / "
-        "vacuum) instead of streaming — schedule between processing runs",
+        help="run the configured sink's maintenance instead of streaming "
+        "(manifest: compact data + vacuum; ingest: state compaction) — "
+        "schedule between processing runs",
     )
     parser.add_argument(
         "--vacuum-keep-last",
         type=int,
         default=None,
         help="with --maintain on an upsert-backed sink: also vacuum, "
-        "retaining this many batch snapshots",
+        "retaining this many batch versions",
     )
     parser.add_argument("--app-name", default="stream_loader_spark")
     args = parser.parse_args(argv)
 
     from stream_loader_spark.app import load_app
     from stream_loader_spark.session import get_spark
+    from stream_loader_spark.sinks.manifest import ManifestFileSink
+    from stream_loader_spark.sinks.upsert import UpsertSink
 
     spark = get_spark(args.app_name)
     try:
@@ -59,11 +62,19 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     if args.maintain:
+        sink = app.sink
+        target = getattr(sink, "upsert", sink)
+        if args.vacuum_keep_last is not None and not isinstance(target, UpsertSink):
+            print(f"config error: {type(sink).__name__} keeps no batch versions "
+                  "for --vacuum-keep-last", file=sys.stderr)
+            return 1
         ran = []
-        if hasattr(app.sink, "compact"):
-            ran.append(f"compact={app.sink.compact(spark)}")
-        target = getattr(app.sink, "upsert", app.sink)
-        if args.vacuum_keep_last is not None and hasattr(target, "vacuum"):
+        if isinstance(sink, ManifestFileSink):
+            # fold the live batch dirs, then delete what the fold superseded
+            ran += [f"compact={sink.compact_data(spark)}", f"vacuum_removed={len(sink.vacuum())}"]
+        elif hasattr(sink, "compact"):
+            ran.append(f"compact={sink.compact(spark)}")
+        if args.vacuum_keep_last is not None:
             removed = target.vacuum(keep_last=args.vacuum_keep_last)
             ran.append(f"vacuum_removed={len(removed)}")
         if not ran:

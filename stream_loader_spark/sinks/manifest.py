@@ -38,10 +38,18 @@ sink (and the materialized-view sinks through it): one
 ``batch-<id>.json`` record per committed batch, ``compaction-<id>.json``
 records that supersede what they fold, one replay check and one vacuum.
 
-Scale note: one manifest record per batch is driver-side JSON here; at
-100 TB the identical layout becomes a partitioned table (Delta/Iceberg
-or parquet snapshots) — ``compact()`` writes such a parquet snapshot so
-listings stay O(1) instead of O(#batches).
+Maintenance is ``compact_data`` (fold the live batch dirs into one dir
+under one compaction record) followed by ``vacuum`` (delete what that
+record superseded), so the listing a reader does stays bounded by the
+batches since the last compaction.
+
+Commit metrics (the reference's sinker metrics,
+RecordBatchingSinker.scala:175-208) live in the sink's
+``MetricsRegistry`` (``self.metrics``): ``sink.commits``,
+``sink.commit-ms-last``, ``sink.commit-ms-total`` and the
+per-(topic, partition) ``sink.records-written.by.partition.topic``,
+recorded from the batch's already-collected ranges. A replayed batch
+records nothing.
 """
 
 from __future__ import annotations
@@ -51,7 +59,7 @@ import math
 import os
 import tempfile
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,6 +73,7 @@ from stream_loader_spark.operators.recovery import (
     batch_ranges as stream_ranges,
     end_watermark_ms,
 )
+from stream_loader_spark.streaming.metrics import MetricsRegistry
 
 # rows one write task takes from a cached micro-batch: below it a
 # task's fixed cost (deserializing its Hadoop configuration, opening a
@@ -267,28 +276,6 @@ def consume_replayed_batch(batch_df: DataFrame) -> None:
     batch_df.write.format("noop").mode("overwrite").save()
 
 
-@dataclass
-class CommitMetrics:
-    """The reference's sinker metrics (RecordBatchingSinker.scala:175-208)
-    without Micrometer: commit-duration timer + per-(topic, partition)
-    records-written counters, derived from the batch's already-computed
-    stream ranges — no extra Spark job."""
-
-    commits: int = 0
-    last_commit_ms: int = 0
-    total_commit_ms: int = 0
-    records_written: dict = field(default_factory=dict)  # "topic/partition" -> n
-
-    def observe(self, duration_ms: int, ranges: list) -> None:
-        self.commits += 1
-        self.last_commit_ms = duration_ms
-        self.total_commit_ms += duration_ms
-        for r in ranges:
-            key = f"{r.topic}/{r.partition}"
-            n = r.end.offset - r.start.offset + 1
-            self.records_written[key] = self.records_written.get(key, 0) + n
-
-
 @dataclass(frozen=True)
 class CommittedBatch:
     batch_id: int
@@ -320,7 +307,7 @@ class ManifestFileSink:
         self.meta_cols = meta_cols
         self.writer_options = writer_options or {}
         self.compaction_keep_ranges = compaction_keep_ranges
-        self.commit_metrics = CommitMetrics()
+        self.metrics = MetricsRegistry()
         self.log = CommitLog(os.path.join(out_dir, "_manifest"))
 
     def batch_data_dir(self, batch_id: int) -> str:
@@ -361,12 +348,12 @@ class ManifestFileSink:
             return
         commit_started = time.monotonic()
         ranges: list[StreamRange] = []
+        counts: list[int] = []  # records written per range
         if self.meta_cols is None:
             self._build_writer(batch_df).save(self.batch_data_dir(batch_id))
         else:
             cached = batch_df.persist()
             try:
-                rows = 0
                 # the first action on the batch: it runs the upstream
                 # plan (stateful operators included) and fills the cache
                 for row in stream_ranges(cached, *self.meta_cols).collect():
@@ -378,9 +365,9 @@ class ManifestFileSink:
                             StreamPosition(row["end_offset"], end_watermark_ms(row)),
                         )
                     )
-                    rows += row["record_count"]
+                    counts.append(row["record_count"])
                 # coalesce never raises the partition count
-                tasks = max(1, math.ceil(rows / ROWS_PER_WRITE_TASK))
+                tasks = max(1, math.ceil(sum(counts) / ROWS_PER_WRITE_TASK))
                 self._build_writer(cached.coalesce(tasks)).save(
                     self.batch_data_dir(batch_id)
                 )
@@ -388,9 +375,13 @@ class ManifestFileSink:
                 # a failed write must not leak the cached batch across retries
                 cached.unpersist()
         self._commit_manifest(batch_id, ranges)
-        self.commit_metrics.observe(
-            int((time.monotonic() - commit_started) * 1000), ranges
-        )
+        commit_ms = int((time.monotonic() - commit_started) * 1000)
+        self.metrics.inc("sink.commits")
+        self.metrics.set_gauge("sink.commit-ms-last", commit_ms)
+        self.metrics.inc("sink.commit-ms-total", commit_ms)
+        for r, n in zip(ranges, counts):
+            tags = {"topic": r.topic, "partition": str(r.partition)}
+            self.metrics.inc("sink.records-written.by.partition.topic", n, tags)
 
     def _commit_manifest(self, batch_id: int, ranges: list[StreamRange]) -> None:
         self.log.append(
@@ -579,19 +570,3 @@ class ManifestFileSink:
 
         self.log.vacuum(drop)
         return removed
-
-    def compact(self, spark: SparkSession) -> str:
-        """Snapshot the manifest into parquet (listing-free recovery at
-        scale); returns the snapshot path."""
-        snap = os.path.join(self.out_dir, "_manifest_snapshot")
-        rows = [
-            (b.batch_id, r.topic, r.partition, r.start.offset, r.end.offset, r.end.watermark_ms)
-            for b in self.committed_batches()
-            for r in b.ranges
-        ]
-        spark.createDataFrame(
-            rows,
-            "batch_id long, topic string, partition int, start_offset long, "
-            "end_offset long, end_watermark_ms long",
-        ).write.mode("overwrite").parquet(snap)
-        return snap

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from stream_loader_spark.operators.dedup import incremental_exact_dedup
@@ -47,6 +47,14 @@ def _write_json_atomic(path: str, payload: dict) -> None:
     from stream_loader_spark.sinks.manifest import atomic_write_json
 
     atomic_write_json(os.path.dirname(path), payload, os.path.basename(path))
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed by the action that runs it:
+    the count rides that job instead of running one of its own. Read it
+    with ``rows.get["n"]`` after the action."""
+    rows = Observation()
+    return df.observe(rows, F.count(F.lit(1)).alias("n")), rows
 
 
 def _has_data_files(d: str) -> bool:
@@ -183,25 +191,21 @@ class BatchDirState:
         return int(meta.get("next_gen", (max(gens) + 1 if gens else 1)))
 
     def _write_gen(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        gen: int,
-        partition_by: str | None,
-        fold=None,
+        self, df: DataFrame, gen: int, partition_by: str | None, fold=None
     ) -> int:
         """Write one generation dir (not yet referenced — a crash here
-        leaves an orphan, never a wrong read) and return its row count.
-        ``fold`` optionally re-aggregates the unioned rows first (e.g.
-        merging duplicate (token, doc) rows across segments)."""
+        leaves an orphan, never a wrong read) and return its row count,
+        observed on the write. ``fold`` optionally re-aggregates the
+        unioned rows first (e.g. merging duplicate (token, doc) rows
+        across segments)."""
         if fold is not None:
             df = fold(df)
-        dest = self._gen_dir(gen)
+        df, rows = _counted(df)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
-        w.parquet(dest)
-        return spark.read.parquet(dest).count()
+        w.parquet(self._gen_dir(gen))
+        return rows.get["n"]
 
     def _flip(self, upto: int, gens: list[int], next_gen: int) -> None:
         _write_json_atomic(
@@ -253,7 +257,7 @@ class BatchDirState:
                         os.path.join(self.root, f"batch={b}"), ignore_errors=True
                     )
             return 0
-        n = self._write_gen(spark, df, gen, partition_by, fold)
+        n = self._write_gen(df, gen, partition_by, fold)
         self._flip(upto, [gen], gen + 1)
         # post-commit cleanup; orphans from a crash here are re-collected
         for b in ids:
@@ -312,7 +316,7 @@ class BatchDirState:
             if new_fold:
                 df = self._read_dirs(spark, new_fold)
                 if df is not None:
-                    rows = self._write_gen(spark, df, next_gen, partition_by, fold)
+                    rows = self._write_gen(df, next_gen, partition_by, fold)
                     gens = gens + [next_gen]
                     next_gen += 1
                 upto = new_upto
@@ -329,7 +333,7 @@ class BatchDirState:
             df = self._read_dirs(spark, [self._gen_dir(g) for g in victims])
             survivors = [g for g in gens if g not in victims]
             if df is not None:
-                self._write_gen(spark, df, next_gen, partition_by, fold)
+                self._write_gen(df, next_gen, partition_by, fold)
                 survivors = survivors + [next_gen]
             merged_next = next_gen + 1
             self._flip(upto, survivors, merged_next)
@@ -361,7 +365,7 @@ class BatchDirState:
         gens = self._gens_of(meta)
         ids = self.batch_ids()
         gen = self._next_gen(meta)
-        n = self._write_gen(spark, df, gen, partition_by)
+        n = self._write_gen(df, gen, partition_by)
         upto = max([meta["upto"], *(b + 1 for b in ids)]) if ids else meta["upto"]
         self._flip(upto, [gen], gen + 1)
         for b in ids:
@@ -695,7 +699,8 @@ class NearDupIngestSink:
         losers = comps.where(F.col(self.id_col) != F.col("cluster_id")).select(self.id_col)
         survivors = remaining.join(losers, self.id_col, "left_anti").persist()
 
-        survivors.write.mode("overwrite").parquet(
+        kept, rows = _counted(survivors)
+        kept.write.mode("overwrite").parquet(
             os.path.join(self._corpus_dir, f"batch={batch_id}")
         )
         self._doc_state.write_batch(
@@ -705,7 +710,7 @@ class NearDupIngestSink:
             band_index(survivors, self.text_col, self.id_col, self.num_bands),
             batch_id,
         )
-        self.growth.observe(survivors.count(), batch_id)
+        self.growth.observe(rows.get["n"], batch_id)
         pairs.unpersist()
         batch_df.unpersist()
         survivors.unpersist()
@@ -872,17 +877,21 @@ class IvfIngestSink:
                     shutil.rmtree(self._centroids_dir)
                 os.rename(tmp, self._centroids_dir)
                 cents = self.centroids(spark)
-            assigned = assign_clusters(
-                batch_df,
-                self.num_centroids,
-                self.id_col,
-                self.vec_col,
-                centroids=cents,
+            # every row gets a cell (the trained quantizer is never
+            # empty), so the rows written are the batch's rows
+            assigned, rows = _counted(
+                assign_clusters(
+                    batch_df,
+                    self.num_centroids,
+                    self.id_col,
+                    self.vec_col,
+                    centroids=cents,
+                )
             )
             self._assign_state.write_batch(
                 assigned, batch_id, partition_by="cluster_id"
             )
-            self.growth.observe(batch_df.count(), batch_id)
+            self.growth.observe(rows.get["n"], batch_id)
             self.growth.check("IvfIngestSink")
         finally:
             batch_df.unpersist()

@@ -1,68 +1,25 @@
-"""Observability (SURVEY §2.10): streaming metrics via query listeners.
+"""Observability (SURVEY §2.10): one metrics registry, fed by one
+streaming query listener.
 
-The reference exports Micrometer metrics — records-polled distribution,
-watermark delay gauge, per-partition counters, commit timers
-(StreamLoader.scala:43-44, KafkaSource.scala:157-163,
-RecordBatchingSinker.scala:175-208). Spark surfaces the same facts in
-``StreamingQueryProgress``; this listener normalizes them into a plain
-metrics dict any registry (Prometheus client, StatsD, logs) can export.
+The reference keeps every loader fact in one Micrometer registry: the
+records-polled distribution, the watermark delay gauge, the sinker's
+commit timer and per-partition counters, and every bridged Kafka client
+metric (StreamLoader.scala:43-44, KafkaSource.scala:157-163,
+RecordBatchingSinker.scala:175-208, KafkaMetricsReporter.scala:38-79).
+Here ``MetricsRegistry`` holds counters and gauges keyed by (name,
+tags). ``MetricsListener`` fills one from each
+``StreamingQueryProgress``: the stream facts and each source's Kafka
+facts. ``ManifestFileSink`` keeps its commit counters in its own
+registry (``sink.metrics``). No metric runs a Spark action: each comes
+from a progress event or from what a commit already computed.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-@dataclass
-class ProgressMetrics:
-    batches_completed: int = 0
-    records_total: int = 0
-    last_input_rows_per_sec: float = 0.0
-    last_process_rows_per_sec: float = 0.0
-    last_batch_duration_ms: int = 0
-    last_watermark_delay_ms: int | None = None
-    per_query: dict = field(default_factory=dict)
-
-
-class MetricsListener(StreamingQueryListener):
-    """Collects per-query throughput and watermark-delay metrics."""
-
-    def __init__(self) -> None:
-        self.metrics = ProgressMetrics()
-
-    # StreamingQueryListener interface -------------------------------
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        m = self.metrics
-        m.batches_completed += 1
-        m.records_total += p.numInputRows
-        m.last_input_rows_per_sec = p.inputRowsPerSecond or 0.0
-        m.last_process_rows_per_sec = p.processedRowsPerSecond or 0.0
-        m.last_batch_duration_ms = p.batchDuration
-        watermark = (p.eventTime or {}).get("watermark")
-        # Spark reports the epoch as a placeholder until the first real
-        # watermark; treating it as real would gauge a ~56-year delay
-        if watermark and not watermark.startswith("1970-01-01T00:00:00"):
-            wm = datetime.fromisoformat(watermark.replace("Z", "+00:00"))
-            now = datetime.now(timezone.utc)
-            m.last_watermark_delay_ms = int((now - wm).total_seconds() * 1000)
-        m.per_query[str(p.id)] = {
-            "numInputRows": p.numInputRows,
-            "batchId": p.batchId,
-        }
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
 
 
 def _flatten_offsets(offsets: object) -> dict[tuple[str, int], int]:
@@ -93,49 +50,59 @@ def _parse_json(text: object) -> object:
 
 
 class MetricsRegistry:
-    """Minimal gauge registry: the seam a Prometheus/StatsD exporter
-    plugs into. Mirrors the reference's Micrometer-registry shape
-    (util/Metrics.scala): gauges keyed by (name, tags); removal
-    re-registers a 0.0 constant because exporters like Prometheus
-    cannot unregister (KafkaMetricsReporter.scala:70-79)."""
+    """Counters and gauges keyed by (name, tags): the seam a
+    Prometheus/StatsD exporter plugs into. Mirrors the reference's
+    Micrometer-registry shape (util/Metrics.scala); removal re-registers
+    a 0.0 constant because exporters like Prometheus cannot unregister
+    (KafkaMetricsReporter.scala:70-79)."""
 
     def __init__(self) -> None:
-        self._gauges: dict[tuple[str, tuple[tuple[str, str], ...]], float] = {}
+        self._values: dict[tuple[str, tuple[tuple[str, str], ...]], float] = {}
 
     @staticmethod
     def _key(name: str, tags: dict[str, str] | None):
         return name, tuple(sorted((tags or {}).items()))
 
     def set_gauge(self, name: str, value: float, tags: dict[str, str] | None = None) -> None:
-        self._gauges[self._key(name, tags)] = float(value)
+        self._values[self._key(name, tags)] = float(value)
+
+    def inc(self, name: str, amount: float = 1.0, tags: dict[str, str] | None = None) -> None:
+        key = self._key(name, tags)
+        self._values[key] = self._values.get(key, 0.0) + float(amount)
 
     def remove_gauge(self, name: str, tags: dict[str, str] | None = None) -> None:
         key = self._key(name, tags)
-        if key in self._gauges:
-            self._gauges[key] = 0.0
+        if key in self._values:
+            self._values[key] = 0.0
 
     def snapshot(self) -> dict[str, float]:
         """name.by.<tagkeys>{tag=val,...} → value (flat export form)."""
         out: dict[str, float] = {}
-        for (name, tags), v in self._gauges.items():
+        for (name, tags), v in self._values.items():
             label = name + ("{" + ",".join(f"{k}={val}" for k, val in tags) + "}" if tags else "")
             out[label] = v
         return out
 
 
-class KafkaSourceMetricsBridge(StreamingQueryListener):
-    """Kafka client-metrics bridge, Spark-native (SURVEY §2.10).
+class MetricsListener(StreamingQueryListener):
+    """Records every query's progress into ``registry``.
 
-    The reference registers every Kafka consumer metric as a gauge,
-    making names unique by appending tag keys (records-lag exists
-    per-topic AND per-partition) and dropping the client-id tag
-    (util/KafkaMetricsReporter.scala:38-62). Spark does not expose the
-    consumer's raw metric registry, but ``StreamingQueryProgress``
-    carries the same facts per source: ``metrics`` (min/max/avg
-    offsets-behind-latest — the consumer-lag family) and the
-    ``startOffset``/``endOffset``/``latestOffset`` JSON maps. This
-    listener normalizes both into the registry under the reference's
-    naming convention:
+    Stream facts:
+
+    - ``stream.batches`` and ``stream.records`` — counters;
+    - ``stream.input-rows-per-sec``, ``stream.process-rows-per-sec``,
+      ``stream.batch-duration-ms`` — the last batch's gauges;
+    - ``stream.watermark-delay-ms`` — wall clock minus the event-time
+      watermark, once the query has a real watermark;
+    - ``stream.batch-id.by.query`` and ``stream.input-rows.by.query`` —
+      the last batch of each query, tagged by query id.
+
+    Source facts, under the reference's Kafka client-metrics naming
+    (unique names by appending tag keys, client-id tag dropped;
+    util/KafkaMetricsReporter.scala:38-62). Spark does not expose the
+    consumer's raw metric registry, but each progress source carries the
+    same facts: ``metrics`` (min/max/avg offsets-behind-latest, the
+    consumer-lag family) and the ``endOffset``/``latestOffset`` maps.
 
     - ``kafka.source.<metric>``            — source-level metrics map
     - ``kafka.source.records-consumed``    — numInputRows per progress
@@ -149,14 +116,32 @@ class KafkaSourceMetricsBridge(StreamingQueryListener):
         self.registry = registry or MetricsRegistry()
         self._seen_partitions: set[tuple[str, int]] = set()
 
+    # StreamingQueryListener interface -------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        for src in event.progress.sources:
-            self._bridge_source(src)
+        p = event.progress
+        reg = self.registry
+        reg.inc("stream.batches")
+        reg.inc("stream.records", p.numInputRows)
+        reg.set_gauge("stream.input-rows-per-sec", p.inputRowsPerSecond or 0.0)
+        reg.set_gauge("stream.process-rows-per-sec", p.processedRowsPerSecond or 0.0)
+        reg.set_gauge("stream.batch-duration-ms", p.batchDuration)
+        watermark = (p.eventTime or {}).get("watermark")
+        # Spark reports the epoch as a placeholder until the first real
+        # watermark; treating it as real would gauge a ~56-year delay
+        if watermark and not watermark.startswith("1970-01-01T00:00:00"):
+            wm = datetime.fromisoformat(watermark.replace("Z", "+00:00"))
+            now = datetime.now(timezone.utc)
+            reg.set_gauge("stream.watermark-delay-ms", int((now - wm).total_seconds() * 1000))
+        query = {"query": str(p.id)}
+        reg.set_gauge("stream.batch-id.by.query", p.batchId, query)
+        reg.set_gauge("stream.input-rows.by.query", p.numInputRows, query)
+        for src in p.sources:
+            self._record_source(src)
 
-    def _bridge_source(self, src) -> None:
+    def _record_source(self, src) -> None:
         reg = self.registry
         reg.set_gauge("kafka.source.records-consumed", src.numInputRows or 0)
         if src.inputRowsPerSecond is not None:

@@ -442,8 +442,33 @@ class TestMaintainCli:
         sink = DedupIngestSink(str(tmp_path / "corpus"))
         assert sink._history(spark, exclude_batch=99).count() == 3
 
-    def test_maintain_on_manifest_sink_and_vacuum_on_upsert(self, spark, tmp_path):
+    def test_maintain_on_manifest_sink_and_vacuum_on_upsert(self, spark, tmp_path, capsys):
         from stream_loader_spark.__main__ import main
+        from stream_loader_spark.sinks.manifest import ManifestFileSink
+
+        # manifest sink: two drains leave two batch dirs; --maintain folds
+        # them into one live dir, vacuums the originals and keeps every row
+        mcfg = TestBuildApp()._config(tmp_path / "m")
+        mcfg_path = str(tmp_path / "manifest.json")
+        with open(mcfg_path, "w") as fh:
+            json.dump(mcfg, fh)
+        for _ in range(2):
+            _write_source(spark, mcfg["source"]["path"], n=10)
+            assert main(["--config", mcfg_path, "--drain"]) == 0
+        data = os.path.join(mcfg["sink"]["path"], "data")
+        assert len(os.listdir(data)) == 2
+        assert main(["--config", mcfg_path, "--maintain"]) == 0
+        assert len(os.listdir(data)) == 1
+        sink = ManifestFileSink(mcfg["sink"]["path"], partition_by="dt")
+        assert [b.data_dir for b in sink.committed_batches()] == [
+            os.path.join(data, d) for d in os.listdir(data)
+        ]
+        assert sink.committed_data(spark).count() == 20
+        # the manifest sink keeps no batch versions: retention is a
+        # config error, not a traceback
+        capsys.readouterr()
+        assert main(["--config", mcfg_path, "--maintain", "--vacuum-keep-last", "1"]) == 1
+        assert "config error" in capsys.readouterr().err
 
         _write_source(spark, str(tmp_path / "src"), n=10)
         cfg = {

@@ -184,11 +184,12 @@ class TestMetricsListener:
             import time
 
             for _ in range(50):
-                if listener.metrics.records_total >= 100:
+                if listener.registry.snapshot().get("stream.records", 0) >= 100:
                     break
                 time.sleep(0.2)
-            assert listener.metrics.records_total >= 100
-            assert listener.metrics.batches_completed >= 1
+            snap = listener.registry.snapshot()
+            assert snap["stream.records"] >= 100
+            assert snap["stream.batches"] >= 1
         finally:
             spark.streams.removeListener(listener)
 
@@ -212,8 +213,15 @@ class TestKafkaSourceMetricsBridge:
             self.latestOffset = '{"t": {"0": 107, "1": 50}}'
 
     class _Progress:
-        def __init__(self, sources):
+        def __init__(self, sources, watermark=None):
             self.sources = sources
+            self.id = "q1"
+            self.batchId = 3
+            self.numInputRows = sum(s.numInputRows for s in sources)
+            self.inputRowsPerSecond = 21.5
+            self.processedRowsPerSecond = 30.0
+            self.batchDuration = 1400
+            self.eventTime = {"watermark": watermark} if watermark else {}
 
     class _Event:
         def __init__(self, progress):
@@ -221,13 +229,13 @@ class TestKafkaSourceMetricsBridge:
 
     def test_kafka_progress_bridges_to_gauges(self):
         from stream_loader_spark.streaming.metrics import (
-            KafkaSourceMetricsBridge,
+            MetricsListener,
             MetricsRegistry,
         )
 
-        bridge = KafkaSourceMetricsBridge(MetricsRegistry())
-        bridge.onQueryProgress(self._Event(self._Progress([self._Src()])))
-        snap = bridge.registry.snapshot()
+        listener = MetricsListener(MetricsRegistry())
+        listener.onQueryProgress(self._Event(self._Progress([self._Src()])))
+        snap = listener.registry.snapshot()
         assert snap["kafka.source.records-consumed"] == 42
         assert snap["kafka.source.records-consumed-rate"] == 21.5
         assert snap["kafka.source.maxOffsetsBehindLatest"] == 7.0
@@ -239,15 +247,15 @@ class TestKafkaSourceMetricsBridge:
     def test_non_kafka_source_degrades_gracefully(self):
         """File-stream progress (logOffset JSON, no metrics map) must not
         crash or emit bogus per-partition gauges."""
-        from stream_loader_spark.streaming.metrics import KafkaSourceMetricsBridge
+        from stream_loader_spark.streaming.metrics import MetricsListener
 
         src = self._Src()
         src.metrics = None
         src.endOffset = '{"logOffset": 3}'
         src.latestOffset = None
-        bridge = KafkaSourceMetricsBridge()
-        bridge.onQueryProgress(self._Event(self._Progress([src])))
-        snap = bridge.registry.snapshot()
+        listener = MetricsListener()
+        listener.onQueryProgress(self._Event(self._Progress([src])))
+        snap = listener.registry.snapshot()
         assert snap["kafka.source.records-consumed"] == 42
         assert not any("by.partition.topic" in k for k in snap)
 
@@ -255,17 +263,17 @@ class TestKafkaSourceMetricsBridge:
         """A partition leaving the subscription must stop exporting its
         last lag (KafkaMetricsReporter.scala:70-79 removal parity)."""
         from stream_loader_spark.streaming.metrics import (
-            KafkaSourceMetricsBridge,
+            MetricsListener,
             MetricsRegistry,
         )
 
-        bridge = KafkaSourceMetricsBridge(MetricsRegistry())
-        bridge.onQueryProgress(self._Event(self._Progress([self._Src()])))
+        listener = MetricsListener(MetricsRegistry())
+        listener.onQueryProgress(self._Event(self._Progress([self._Src()])))
         src2 = self._Src()
         src2.endOffset = '{"t": {"0": 120}}'  # partition 1 departed
         src2.latestOffset = '{"t": {"0": 125}}'
-        bridge.onQueryProgress(self._Event(self._Progress([src2])))
-        snap = bridge.registry.snapshot()
+        listener.onQueryProgress(self._Event(self._Progress([src2])))
+        snap = listener.registry.snapshot()
         assert snap["kafka.source.records-lag.by.partition.topic{partition=0,topic=t}"] == 5
         assert snap["kafka.source.records-lag.by.partition.topic{partition=1,topic=t}"] == 0.0
         assert snap["kafka.source.end-offset.by.partition.topic{partition=1,topic=t}"] == 0.0
@@ -277,6 +285,43 @@ class TestKafkaSourceMetricsBridge:
         reg.set_gauge("g", 5.0, {"topic": "t"})
         reg.remove_gauge("g", {"topic": "t"})
         assert reg.snapshot() == {"g{topic=t}": 0.0}
+
+    def test_stream_facts_share_the_registry_with_source_facts(self):
+        """One progress event fills the stream counters and gauges, the
+        per-query entries and the source entries of one registry;
+        counters accumulate across events, gauges keep the last."""
+        from stream_loader_spark.streaming.metrics import MetricsListener
+
+        listener = MetricsListener()
+        listener.onQueryProgress(self._Event(self._Progress([self._Src()])))
+        listener.onQueryProgress(self._Event(self._Progress([self._Src()])))
+        snap = listener.registry.snapshot()
+        assert snap["stream.batches"] == 2
+        assert snap["stream.records"] == 84
+        assert snap["stream.input-rows-per-sec"] == 21.5
+        assert snap["stream.process-rows-per-sec"] == 30.0
+        assert snap["stream.batch-duration-ms"] == 1400
+        assert snap["stream.batch-id.by.query{query=q1}"] == 3
+        assert snap["stream.input-rows.by.query{query=q1}"] == 42
+        assert snap["kafka.source.records-consumed"] == 42
+
+    def test_watermark_delay_waits_for_a_real_watermark(self):
+        """Spark reports the epoch as the watermark until the first real
+        one: that placeholder sets no delay entry, a real one does."""
+        from datetime import datetime, timedelta, timezone
+
+        from stream_loader_spark.streaming.metrics import MetricsListener
+
+        listener = MetricsListener()
+        placeholder = self._Progress([self._Src()], watermark="1970-01-01T00:00:00.000Z")
+        listener.onQueryProgress(self._Event(placeholder))
+        assert "stream.watermark-delay-ms" not in listener.registry.snapshot()
+
+        wm = datetime.now(timezone.utc) - timedelta(minutes=5)
+        real = self._Progress([self._Src()], watermark=wm.strftime("%Y-%m-%dT%H:%M:%S.000Z"))
+        listener.onQueryProgress(self._Event(real))
+        delay = listener.registry.snapshot()["stream.watermark-delay-ms"]
+        assert 299_000 <= delay < 360_000
 
 
 class TestTruncatePropertyBased:
@@ -401,13 +446,15 @@ class TestTimestampNtzNormalization:
 class TestKafkaBridgeWithRealStream:
     def test_bridge_consumes_real_progress_events(self, spark, tmp_path):
         """The unit tests feed fake progress objects; this attaches the
-        bridge to a REAL streaming query so the attribute access paths
-        (progress.sources[i].numInputRows/metrics/endOffset) are
-        validated against Spark's actual event classes."""
+        listener to a REAL streaming query so the attribute access paths
+        (progress.numInputRows/batchId/eventTime and
+        progress.sources[i].numInputRows/metrics/endOffset) are validated
+        against Spark's actual event classes, and the stream-level and
+        source-level entries land in one registry."""
         import time
 
         from stream_loader_spark.sinks.manifest import ManifestFileSink
-        from stream_loader_spark.streaming.metrics import KafkaSourceMetricsBridge
+        from stream_loader_spark.streaming.metrics import MetricsListener
         from stream_loader_spark.streaming.pipeline import StreamPipeline
 
         src = str(tmp_path / "src")
@@ -418,23 +465,30 @@ class TestKafkaBridgeWithRealStream:
             F.current_timestamp().alias("ts"),
         ).coalesce(1).write.parquet(src)
 
-        bridge = KafkaSourceMetricsBridge()
-        spark.streams.addListener(bridge)
+        listener = MetricsListener()
+        spark.streams.addListener(listener)
         try:
-            (
+            query = (
                 StreamPipeline(spark)
                 .from_file_stream(src, "topic string, partition int, offset bigint, ts timestamp")
                 .sink(ManifestFileSink(str(tmp_path / "out")), str(tmp_path / "chk"))
-                .run_available()
+                .trigger(availableNow=True)
+                .start()
             )
+            assert query.awaitTermination(300)
             snap = {}
             for _ in range(50):  # listener callbacks are async
-                snap = bridge.registry.snapshot()
+                snap = listener.registry.snapshot()
                 if snap.get("kafka.source.records-consumed", 0) >= 50:
                     break
                 time.sleep(0.2)
             assert snap.get("kafka.source.records-consumed") == 50
             # file source reports logOffset JSON: no per-partition gauges
             assert not any("by.partition.topic" in k for k in snap)
+            # the same listener filled the stream entries, tagged by query
+            assert snap["stream.records"] == 50
+            assert snap["stream.batches"] >= 1
+            assert snap[f"stream.input-rows.by.query{{query={query.id}}}"] >= 0
+            assert f"stream.batch-id.by.query{{query={query.id}}}" in snap
         finally:
-            spark.streams.removeListener(bridge)
+            spark.streams.removeListener(listener)

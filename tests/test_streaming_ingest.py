@@ -409,6 +409,77 @@ class TestIvfIngest:
         assert sink.assignments(spark).count() == once == 20
 
 
+def _jobs_after_last_write(spark, action):
+    """Run ``action``; return its result and the number of Spark jobs
+    that ran after its last parquet write (each write opens a fresh job
+    group, so the last group holds exactly those jobs)."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    groups = []
+    real = DataFrameWriter.parquet
+
+    def grouped(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        groups.append(f"after-write-{uuid.uuid4().hex}")
+        sc.setJobGroup(groups[-1], "jobs after the last parquet write")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", grouped)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(groups[-1]))
+
+
+class TestCountsRideTheWrites:
+    """Row counts a sink or a compaction needs are observed on the write
+    it already runs: no Spark job runs after the last write to count."""
+
+    def test_near_dup_growth_count_runs_no_job(self, spark, tmp_path):
+        from stream_loader_spark.streaming.ingest import NearDupIngestSink
+
+        sink = NearDupIngestSink(str(tmp_path / "out"))
+        b0 = spark.createDataFrame([(1, NEAR_A), (2, NEAR_A2), (5, OTHER)], DOC_SCHEMA)
+        _, jobs = _jobs_after_last_write(spark, lambda: sink(b0, 0))
+        assert jobs == 0
+        assert sink.growth.status() == {
+            "built_n": 2, "live_n": 2, "growth": 1.0, "needs_rebuild": False
+        }
+        # an all-duplicate batch observes 0 survivors
+        _, jobs = _jobs_after_last_write(
+            spark, lambda: sink(spark.createDataFrame([(7, NEAR_A)], DOC_SCHEMA), 1)
+        )
+        assert jobs == 0
+        assert sink.growth.status()["live_n"] == 2
+
+    def test_ivf_growth_count_runs_no_job(self, spark, tmp_path):
+        from stream_loader_spark.streaming.ingest import IvfIngestSink
+
+        sink = IvfIngestSink(str(tmp_path / "ivf"), num_centroids=4)
+        mk = TestIvfIngest()._vecs
+        for n, (lo, hi) in enumerate([(0, 20), (20, 40)]):
+            _, jobs = _jobs_after_last_write(spark, lambda: sink(mk(spark, lo, hi), n))
+            assert jobs == 0
+        assert sink.growth.status() == {
+            "built_n": 20, "live_n": 40, "growth": 2.0, "needs_rebuild": False
+        }
+
+    def test_compaction_runs_no_read_back_job(self, spark, tmp_path):
+        from stream_loader_spark.streaming.ingest import BatchDirState
+
+        state = BatchDirState(str(tmp_path / "state"))
+        for n in range(3):
+            rows = [(f"h{n}-{i}",) for i in range(n + 1)]
+            state.write_batch(spark.createDataFrame(rows, "h string"), n)
+        folded, jobs = _jobs_after_last_write(spark, lambda: state.compact(spark))
+        assert (folded, jobs) == (3, 0)  # batches 0-1: 1 + 2 rows
+
+
 class TestIngestCompaction:
     """streaming/ingest.py::BatchDirState — bounded state directories."""
 

@@ -129,9 +129,6 @@ class TestManifestFileSink:
         # Hive-style partition dirs exist → readers get partition pruning
         batch_dir = sink.batch_data_dir(0)
         assert any(x.startswith("dt=") for x in os.listdir(batch_dir))
-        snap = sink.compact(spark)
-        snap_df = spark.read.parquet(snap)
-        assert snap_df.count() == sum(len(b.ranges) for b in sink.committed_batches())
 
 
 class TestManifestWriteTasks:
@@ -1509,14 +1506,36 @@ class TestCommitMetrics:
             rows, "topic string, partition int, offset bigint, ts timestamp"
         )
         sink(df, 0)
-        m = sink.commit_metrics
-        assert m.commits == 1
-        assert m.records_written == {"t/0": 5, "t/1": 3}
-        assert m.last_commit_ms >= 0 and m.total_commit_ms >= m.last_commit_ms
+        written = {
+            "sink.records-written.by.partition.topic{partition=0,topic=t}": 5.0,
+            "sink.records-written.by.partition.topic{partition=1,topic=t}": 3.0,
+        }
+        m = sink.metrics.snapshot()
+        assert m["sink.commits"] == 1
+        assert {k: v for k, v in m.items() if "records-written" in k} == written
+        assert m["sink.commit-ms-last"] >= 0
+        assert m["sink.commit-ms-total"] >= m["sink.commit-ms-last"]
 
         sink(df, 0)  # replay: committed batch is a no-op, metrics unchanged
-        assert sink.commit_metrics.commits == 1
-        assert sink.commit_metrics.records_written == {"t/0": 5, "t/1": 3}
+        assert sink.metrics.snapshot() == m
+
+    def test_records_written_counts_records_not_offset_span(self, spark, tmp_path):
+        """Dedup or watermark drops upstream, and compacted topics, leave
+        offset gaps in a batch: offsets {0, 5} are 2 records written,
+        not the 6 offsets their range spans."""
+        from datetime import datetime, timezone
+
+        from stream_loader_spark.sinks.manifest import ManifestFileSink
+
+        sink = ManifestFileSink(str(tmp_path / "out"))
+        ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+        df = spark.createDataFrame(
+            [("t", 0, 0, ts), ("t", 0, 5, ts)],
+            "topic string, partition int, offset bigint, ts timestamp",
+        )
+        sink(df, 0)
+        key = "sink.records-written.by.partition.topic{partition=0,topic=t}"
+        assert sink.metrics.snapshot()[key] == 2
 
 
 class TestQuarantineRouting:
