@@ -253,7 +253,7 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the fixtures' code-version token: bump it when the written shape of a
 # sink fixture changes
-_FIXTURE_VERSION = 3
+_FIXTURE_VERSION = 4
 _FIXTURE_TREE = "sink_fixtures_v"
 
 
@@ -474,9 +474,9 @@ def k8_inrow_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def k11_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC keep-latest read path end-to-end: commit three upsert
-    batches through the bucketed UpsertSink (every batch REPLACES its
-    keys' rows — keep-latest semantics live in the sink, not this
-    query), then write a fourth batch's bucket-version DATA with no
+    batches through the bucketed UpsertSink (every batch's delta
+    REPLACES its keys' rows — keep-latest semantics live in the sink,
+    not this query), then write a fourth batch's delta DATA with no
     log record (the crash-between-data-and-commit state) and
     recover via the sink's own ``current_state`` log read — the
     oracle proves the crashed tail stayed invisible. Batches are
@@ -572,9 +572,9 @@ def k12_upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def k13_upsert_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog read path: ``change_feed(batch_id=1)`` labels every
     key batch 1 wrote as insert (absent before) or update (prior row's
-    columns attached as ``_old_*``), reading ONLY the batch's version
-    dirs plus the touched buckets' prior versions — delta-sized, never
-    a snapshot scan. The SQL equivalent: keep-latest per key within
+    columns attached as ``_old_*``): the batch's delta joined to the
+    state as of batch 0, read from the touched buckets only. The SQL
+    equivalent: keep-latest per key within
     quartile 1 (the new row) left-joined to keep-latest within
     quartile 0 (the prior row)."""
     sink = _k11_sink(spark, sf_dir)

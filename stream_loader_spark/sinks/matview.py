@@ -7,19 +7,21 @@ doing DELTA-sized work per batch:
 1. the batch reduces to mergeable state (count / exact decimal sums /
    min / max per key) — one map-side-combinable aggregate;
 2. prior state is read back for the TOUCHED keys only (left-semi
-   against the delta's keys — untouched keys never enter the job);
-3. touched prior ⊕ delta merges (state-sized), and the merged rows go
-   through ``UpsertSink.write_batch`` — which rewrites only the hash
-   buckets those keys land in and gives the crash/replay discipline
-   (one commit-log record per batch, deterministic version dirs).
+   against the delta's keys — untouched keys never enter the merge);
+3. touched prior ⊕ delta merges, and the merged rows go through
+   ``UpsertSink.write_batch`` — which appends them as the batch's
+   delta, one file per hash bucket they land in, and gives the
+   crash/replay discipline (one commit-log record per batch,
+   deterministic version dirs).
 
 Replays are no-ops BEFORE any aggregation runs: a committed batch id
 short-circuits, so the merge can never double-count a delivered batch
 (the at-least-once → exactly-once bridge, same contract as every other
 sink in sinks/); the replayed plan still runs into a no-op sink so
-upstream state stores commit. At 100 TB the per-batch cost tracks the
-batch's key footprint — buckets touched × bucket size — not the view
-size, the property that makes continuous aggregation affordable.
+upstream state stores commit. The write tracks the batch's key
+footprint, not the view size. The prior-state read folds the upsert
+sink's layers — a base plus every delta since its last ``vacuum`` — so
+its cost grows with the commits since then; ``vacuum`` bounds it.
 """
 
 from __future__ import annotations
@@ -100,10 +102,10 @@ class IncrementalAggSink:
 
     def view_as_of(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """The finalized view as of an earlier committed batch — rides
-        the upsert sink's commit log, whose records fold into the bucket
-        versions as of any retained batch (``vacuum`` folds older ones
-        away), so 'what did this dashboard say after batch N' is a
-        directory-list away, never a recomputation."""
+        the upsert sink's commit log, whose records name the layers of
+        the state as of any retained batch (``vacuum`` folds older ones
+        away), so 'what did this dashboard say after batch N' is one
+        fold of stored layers, never a recomputation."""
         state = self.upsert.current_state(spark, as_of_batch=batch_id).drop(
             "_bucket", _VERSION_COL
         )
@@ -118,7 +120,7 @@ class SketchViewSink:
     (key, day); prior sketches are read back for the touched
     (key, day) cells only and folded in with the scalar two-sketch
     ``hll_union`` (per-cell, no re-aggregation of history); merged
-    rows ride the upsert bucket rewrite + commit log. Replays
+    rows ride the upsert delta write + commit log. Replays
     short-circuit before any sketching, so a redelivered batch never
     double-inserts values — harmless for HLL (duplicate-insensitive)
     but the log also keeps ``n_rows`` exact.

@@ -114,7 +114,9 @@ class MetricsListener(StreamingQueryListener):
 
     def __init__(self, registry: MetricsRegistry | None = None) -> None:
         self.registry = registry or MetricsRegistry()
-        self._seen_partitions: set[tuple[str, int]] = set()
+        # (query id, source description) -> the partitions that source
+        # last reported, so one source never retires another's gauges
+        self._seen_partitions: dict[tuple[str, str], set[tuple[str, int]]] = {}
 
     # StreamingQueryListener interface -------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: N802
@@ -139,9 +141,9 @@ class MetricsListener(StreamingQueryListener):
         reg.set_gauge("stream.batch-id.by.query", p.batchId, query)
         reg.set_gauge("stream.input-rows.by.query", p.numInputRows, query)
         for src in p.sources:
-            self._record_source(src)
+            self._record_source(src, (str(p.id), getattr(src, "description", "")))
 
-    def _record_source(self, src) -> None:
+    def _record_source(self, src, source: tuple[str, str]) -> None:
         reg = self.registry
         reg.set_gauge("kafka.source.records-consumed", src.numInputRows or 0)
         if src.inputRowsPerSecond is not None:
@@ -166,12 +168,13 @@ class MetricsListener(StreamingQueryListener):
         # deletion) must stop exporting: a frozen last-value lag gauge
         # is a lie an alerting pipeline acts on (the reference's
         # KafkaMetricsReporter.scala:70-79 handles removal explicitly)
-        current = set(end)
-        for topic, partition in self._seen_partitions - current:
+        previous = self._seen_partitions.get(source, set())
+        self._seen_partitions[source] = set(end)
+        still = set().union(*self._seen_partitions.values())
+        for topic, partition in previous - still:
             tags = {"topic": topic, "partition": str(partition)}
             reg.remove_gauge("kafka.source.end-offset.by.partition.topic", tags)
             reg.remove_gauge("kafka.source.records-lag.by.partition.topic", tags)
-        self._seen_partitions = current
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass

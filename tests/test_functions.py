@@ -278,6 +278,24 @@ class TestKafkaSourceMetricsBridge:
         assert snap["kafka.source.records-lag.by.partition.topic{partition=1,topic=t}"] == 0.0
         assert snap["kafka.source.end-offset.by.partition.topic{partition=1,topic=t}"] == 0.0
 
+    def test_two_sources_keep_each_others_partitions(self):
+        """A progress event with two sources records both sources'
+        partitions; the second source must not retire the first's
+        gauges as departed."""
+        from stream_loader_spark.streaming.metrics import MetricsListener
+
+        a, b = self._Src(), self._Src()
+        a.description, b.description = "KafkaV2[Subscribe[a]]", "KafkaV2[Subscribe[b]]"
+        a.endOffset, a.latestOffset = '{"a": {"0": 10}}', '{"a": {"0": 12}}'
+        b.endOffset, b.latestOffset = '{"b": {"0": 20}}', '{"b": {"0": 20}}'
+        listener = MetricsListener()
+        for _ in range(2):
+            listener.onQueryProgress(self._Event(self._Progress([a, b])))
+        snap = listener.registry.snapshot()
+        assert snap["kafka.source.end-offset.by.partition.topic{partition=0,topic=a}"] == 10
+        assert snap["kafka.source.records-lag.by.partition.topic{partition=0,topic=a}"] == 2
+        assert snap["kafka.source.end-offset.by.partition.topic{partition=0,topic=b}"] == 20
+
     def test_registry_removal_pins_zero(self):
         from stream_loader_spark.streaming.metrics import MetricsRegistry
 

@@ -451,8 +451,11 @@ class TestManifestScanCost:
             sink = UpsertSink(str(tmp_path / f"s{n_batches}"), ["k"], "ver", num_buckets=4)
             sink.write_batch(spark.createDataFrame([(k, "a", 1) for k in range(16)], schema), 0)
             for b in range(1, n_batches):
-                # what a commit touching every bucket publishes
+                # what a commit touching every bucket publishes, and the
+                # (here empty) delta directories its record names
                 sink.log.append(b, {"batch_id": b, "buckets": [0, 1, 2, 3]})
+                for bucket in range(4):
+                    os.makedirs(sink._bucket_dir(bucket, b))
 
             opened.clear()
             assert not sink.is_batch_committed(real)
@@ -506,7 +509,8 @@ class TestManifestScanCost:
         for sink in sinks.values():
             versions = UpsertSink(sink.path, ["k"], "ver", num_buckets=4).bucket_versions()
             assert real + 1 in versions.values()
-            assert UpsertSink._versions(sink._fold[1]) == versions
+            fresh = UpsertSink(sink.path, ["k"], "ver", num_buckets=4)
+            assert sink._fold[1] == fresh._schema(fresh._records())
 
 
 class TestBackfillThenStream:
@@ -1699,10 +1703,11 @@ class TestUpsertSink:
                 assert len(files) == 1 and files[0].endswith(".zstd.parquet"), (aqe, b, files)
             assert sink.current_state(spark).count() == 64
 
-    def test_commit_on_existing_state_runs_at_most_four_jobs(self, spark, tmp_path):
-        """A commit is one scan of the batch (which also observes the
-        touched buckets) and one shuffled write; no job collects the
-        bucket set, infers the stored schema or joins against state."""
+    def test_commit_on_existing_state_runs_at_most_two_jobs(self, spark, tmp_path):
+        """A commit is one shuffled write of the batch's delta, which
+        also observes the touched buckets; no job caches the batch,
+        collects the bucket set, infers the stored schema or reads
+        state."""
         sink = self._sink(tmp_path)
         sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]), 0)
         batch = self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)])
@@ -1713,7 +1718,7 @@ class TestUpsertSink:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = list(sc.statusTracker().getJobIdsForGroup("upsert-commit-jobs"))
-        assert 1 <= len(jobs) <= 4, jobs
+        assert 1 <= len(jobs) <= 2, jobs
         state = {r.k: r.val for r in sink.current_state(spark).collect()}
         assert state == {k: "b" if k % 5 == 0 else "a" for k in range(64)}
 
@@ -1731,6 +1736,53 @@ class TestUpsertSink:
         )
         state = {r.k: (r.n, r.v) for r in sink.current_state(spark).collect()}
         assert state == {1: (None, "a2"), 2: (5, "b2")}
+
+    def test_value_columns_named_like_the_version_survive(self, spark, tmp_path):
+        """Stored rows carry their version under a reserved name: value
+        columns named ``v`` (the delta directory's key) and ``version``
+        read back as written, across commits, time travel and vacuum."""
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        sink = UpsertSink(str(tmp_path / "state"), ["k"], "version", num_buckets=2)
+        schema = "k long, v string, version long"
+        sink.write_batch(spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema), 0)
+        sink.write_batch(spark.createDataFrame([(1, "A", 5)], schema), 1)
+        sink.write_batch(spark.createDataFrame([(2, "B", 7), (3, "c", 2)], schema), 2)
+
+        def state(as_of=None):
+            df = sink.current_state(spark, as_of_batch=as_of)
+            assert df.columns == ["k", "v", "version"]
+            return {r.k: (r.v, r.version) for r in df.collect()}
+
+        want = {1: ("A", 5), 2: ("B", 7), 3: ("c", 2)}
+        assert state() == want
+        assert state(1) == {1: ("A", 5), 2: ("b", 1)}
+        sink.vacuum(keep_last=2)
+        assert state() == want
+        assert state(1) == {1: ("A", 5), 2: ("b", 1)}
+        feed = {r.k: (r._change, r.v, r._old_v) for r in sink.change_feed(spark, 2).collect()}
+        assert feed == {2: ("update", "B", "b"), 3: ("insert", "c", None)}
+
+    def test_reads_after_vacuum_open_one_directory_per_bucket(self, spark, tmp_path):
+        """``vacuum(keep_last=1)`` folds every delta into one base per
+        bucket: the next read opens those directories and nothing else,
+        and the deltas are gone from disk."""
+        from urllib.parse import urlparse
+
+        sink = self._sink(tmp_path)
+        for b in range(3):
+            sink.write_batch(
+                self._df(spark, [(k, f"v{b}", b) for k in range(0, 32, b + 1)]), b
+            )
+        want = {k: "v2" if k % 3 == 0 else "v1" if k % 2 == 0 else "v0" for k in range(32)}
+        sink.vacuum(keep_last=1)
+        state = sink.current_state(spark)
+        opened = {os.path.dirname(urlparse(f).path) for f in state.inputFiles()}
+        base = os.path.join(sink.path, "versions", "base=2")
+        assert opened == {os.path.join(base, f"_bucket={b}") for b in range(8)}
+        assert sink.bucket_versions() == dict.fromkeys(range(8), 2)
+        assert os.listdir(os.path.join(sink.path, "versions")) == ["base=2"]
+        assert {r.k: r.val for r in state.collect()} == want
 
     def test_commit_fsyncs_manifest_and_directory(self, spark, tmp_path, monkeypatch):
         sink = self._sink(tmp_path)
@@ -1983,6 +2035,23 @@ class TestIncrementalAggSink:
         assert n3 == 8 + 2  # 8 rows of k=3 in batch 0, 2 in batch 1
 
 
+    def test_empty_first_batch_then_rows(self, spark, tmp_path):
+        """A first batch with no rows commits no columns: the next batch
+        finds no committed state to merge and starts the view."""
+        from stream_loader_spark.sinks.matview import IncrementalAggSink
+
+        sink = IncrementalAggSink(str(tmp_path / "mv"), ["k"], ["value"])
+        sink.write_batch(self._rows(spark, 0, 0), 0)
+        with pytest.raises(ValueError, match="no committed state"):
+            sink.current_view(spark)
+        sink.write_batch(self._rows(spark, 0, 30), 1)
+        sink.write_batch(self._rows(spark, 30, 40), 2)
+        once = IncrementalAggSink(str(tmp_path / "once"), ["k"], ["value"])
+        once.write_batch(self._rows(spark, 0, 40), 0)
+        assert sorted(map(tuple, sink.current_view(spark).collect())) == sorted(
+            map(tuple, once.current_view(spark).collect())
+        )
+
     def test_view_as_of_reads_historical_snapshot(self, spark, tmp_path):
         """Time travel on the continuous aggregate: the view as of an
         earlier batch is the aggregate of exactly the data seen then."""
@@ -2212,8 +2281,9 @@ class TestUpsertTombstones:
             ),
             0,
         )
-        with pytest.raises(ValueError, match="empty"):
-            sink2.current_state(spark)
+        empty = sink2.current_state(spark)
+        assert empty.count() == 0
+        assert empty.columns == ["k", "val", "ver"]
 
     def test_change_feed_labels_delete_with_old_values(self, spark, tmp_path):
         sink = self._sink(tmp_path)
@@ -2245,16 +2315,18 @@ class TestUpsertTombstones:
         sink.write_batch(
             spark.createDataFrame([(1, None, True, 2)], self.SCHEMA), 1
         )
-        with pytest.raises(ValueError, match="empty"):
-            sink.current_state(spark)
+        empty = sink.current_state(spark)
+        assert empty.count() == 0
+        assert empty.columns == ["k", "val", "ver"]
         feed = sink.change_feed(spark, 1).collect()
         assert [r["_change"] for r in feed] == ["delete"]
         # replay of the delete batch is still a committed no-op
         sink.write_batch(
             spark.createDataFrame([(1, "ghost", False, 3)], self.SCHEMA), 1
         )
-        with pytest.raises(ValueError, match="empty"):
-            sink.current_state(spark)
+        empty = sink.current_state(spark)
+        assert empty.count() == 0
+        assert empty.columns == ["k", "val", "ver"]
 
 
     def test_feed_after_full_delete_labels_rebirth_as_insert(self, spark, tmp_path):
@@ -2324,6 +2396,78 @@ class TestUpsertModelBased:
             assert got == model, f"trial {trial} diverged"
 
 
+    def test_random_batches_with_vacuums_match_reference_model(self, spark, tmp_path):
+        """Random upsert/delete batches with ``vacuum(keep_last=k)``
+        interleaved: after every vacuum and at the end, the state as of
+        every retained batch equals the model's snapshot after it, and
+        every retained batch's change feed labels equal the model's
+        diff. The batch a vacuum folded into a base has no feed left."""
+        import random
+
+        from stream_loader_spark.sinks.manifest import CommitLog
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        rng = random.Random(20261019)
+        for trial in range(2):
+            sink = UpsertSink(
+                str(tmp_path / f"s{trial}"), ["k"], "ver", num_buckets=4, tombstone_col="_del"
+            )
+            model: dict[int, str] = {}
+            snaps: dict[int, dict] = {}
+            feeds: dict[int, dict] = {}
+            ver = 0
+
+            def check() -> None:
+                for rec in sink._records():
+                    b = rec["batch_id"]
+                    got = sink.current_state(spark, as_of_batch=b).collect()
+                    assert {r["k"]: r["val"] for r in got} == snaps[b], (trial, b)
+                    if CommitLog.is_compaction(rec):
+                        with pytest.raises(ValueError, match="folded"):
+                            sink.change_feed(spark, b)
+                        continue
+                    feed = {
+                        r["k"]: (r["_change"], r["val"], r["_old_val"])
+                        for r in sink.change_feed(spark, b).collect()
+                    }
+                    assert feed == feeds[b], (trial, b)
+
+            for batch_id in range(6):
+                ops = []
+                for _ in range(rng.randint(1, 8)):
+                    ver += 1
+                    k = rng.randint(0, 7)
+                    if rng.random() < 0.3:
+                        ops.append((k, None, True, ver))
+                    else:
+                        ops.append((k, f"v{ver}", False, ver))
+                sink.write_batch(
+                    spark.createDataFrame(ops, "k long, val string, _del boolean, ver long"),
+                    batch_id,
+                )
+                before = dict(model)
+                newest = {}
+                for k, val, dele, v in sorted(ops, key=lambda o: o[3]):
+                    newest[k] = (val, dele)
+                    if dele:
+                        model.pop(k, None)
+                    else:
+                        model[k] = val
+                snaps[batch_id] = dict(model)
+                feeds[batch_id] = {}
+                for k, (val, dele) in newest.items():
+                    if dele and k in before:
+                        feeds[batch_id][k] = ("delete", None, before[k])
+                    elif not dele and k not in before:
+                        feeds[batch_id][k] = ("insert", val, None)
+                    elif not dele and before[k] != val:
+                        feeds[batch_id][k] = ("update", val, before[k])
+                if rng.random() < 0.5:
+                    sink.vacuum(keep_last=rng.randint(1, 3))
+                    check()
+            check()
+
+
 class TestUpsertConfigPin:
     """The bucket layout (num_buckets/key_cols/order_col) is pinned in
     the manifest on first write; reopening under a different layout —
@@ -2368,6 +2512,48 @@ class TestUpsertConfigPin:
             UpsertSink(
                 str(tmp_path / "state"), ["k"], "ver", num_buckets=4
             ).bucket_versions()
+
+    @pytest.mark.parametrize("shape", ["batch", "compaction"])
+    def test_full_rewrite_layout_log_is_refused(self, spark, tmp_path, shape):
+        """A log in the whole-bucket-rewrite record shape (its config has
+        no layout pin) must not be folded as deltas: a key a later
+        version dropped would come back from an earlier one. Every entry
+        point refuses it and writes nothing."""
+        from stream_loader_spark.sinks.manifest import CommitLog
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        state = tmp_path / "state"
+        for v in (0, 1):
+            os.makedirs(state / "versions" / f"v={v}" / "_bucket=1")
+        config = {"num_buckets": 4, "key_cols": ["k"], "order_col": "ver"}
+        log = CommitLog(str(state / "_manifest"))
+        if shape == "batch":
+            log.append(0, {"batch_id": 0, "buckets": [1], "config": config})
+            log.append(1, {"batch_id": 1, "buckets": [1]})
+        else:
+            log.compact(
+                {
+                    "batch_id": 1,
+                    "replaces_upto": 1,
+                    "replaces_neg": [],
+                    "versions": {"1": 1},
+                    "config": config,
+                }
+            )
+        names = log.names()
+        sink = UpsertSink(str(state), ["k"], "ver", num_buckets=4)
+        batch = spark.createDataFrame([(1, 1, "a")], "k int, ver bigint, v string")
+        for call in (
+            sink.bucket_versions,
+            lambda: sink.current_state(spark),
+            lambda: sink.change_feed(spark, 1),
+            lambda: sink.write_batch(batch, 2),
+            sink.vacuum,
+        ):
+            with pytest.raises(ValueError, match="rebuild the state"):
+                call()
+        assert log.names() == names
+        assert not os.path.exists(state / "versions" / "v=2")
 
     def test_single_file_manifest_state_is_refused(self, spark, tmp_path):
         """State written in the single-file ``manifest.json`` format has
