@@ -1449,7 +1449,7 @@ class TestFrequentTokenProperties:
         from stream_loader_spark.operators.text import approx_frequent_tokens
 
         n_tokens = sum(len(d) for d in corpus)
-        capacity = 64  # guard: min_count * 64 > N (N <= 200 here)
+        capacity = 256  # guard: min_count * 256 >= 512 > N (N <= 200 here)
         assert min_count * capacity > n_tokens
         rows = [(i, " ".join(toks)) for i, toks in enumerate(corpus)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
