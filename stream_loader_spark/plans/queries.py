@@ -253,7 +253,7 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the fixtures' code-version token: bump it when the written shape of a
 # sink fixture changes
-_FIXTURE_VERSION = 4
+_FIXTURE_VERSION = 5
 _FIXTURE_TREE = "sink_fixtures_v"
 
 
@@ -310,8 +310,8 @@ def _build_fixture(final_dir: str, build: Callable[[], None]) -> None:
     (both real with concurrent bench/test processes on one sf_dir):
 
     * **racing builders** — a pid-stamped ``O_CREAT|O_EXCL`` lock file
-      serializes builds, so one process can't overwrite batch data or
-      strip a _SUCCESS marker mid-read of another;
+      serializes builds, so one process can't overwrite batch data
+      mid-read of another;
     * **torn fixtures** — a completion marker (written via the sinks'
       own atomic rename) is the ONLY signal the fixture is usable. A
       crash mid-build leaves no marker; the next caller re-runs the
@@ -430,9 +430,9 @@ def k2_manifest_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def k8_inrow_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K8 read path end-to-end: commit three batches through the in-row
-    offsets sink, leave a fourth batch's files WITHOUT the _SUCCESS
-    marker (crashed partial write), then recover via the sink's own
-    A1 aggregation over its committed data — Kafka-free restart
+    offsets sink, write a fourth batch's DATA with no commit record (the
+    crash-between-data-and-record state), then recover via the sink's
+    own A1 aggregation over its committed data — Kafka-free restart
     (reference InDataOffsetBatchStorage.scala:21-22,
     ClickHouseFileStorage.scala:38-47)."""
     from stream_loader_spark.sinks.offsets import InRowOffsetsSink
@@ -444,16 +444,8 @@ def k8_inrow_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> None:
         for b in range(3):
             sink(rec.where(slice_col == b), b)  # idempotent: skips committed
-        pdir = sink._batch_dir(3)
-        rec.where(slice_col == 3).write.mode("overwrite").parquet(pdir)
-        # strip the commit marker BEFORE the fixture is stamped
-        # complete: a crash between the write and this removal leaves
-        # no completion marker, so the next call rebuilds (the
-        # overwrite recreates then re-strips _SUCCESS) — the "crashed"
-        # batch can never be observed looking committed
-        marker = os.path.join(pdir, "_SUCCESS")
-        if os.path.exists(marker):
-            os.remove(marker)  # simulate the crash before commit
+        # the crashed tail: data written, record never appended
+        rec.where(slice_col == 3).write.mode("overwrite").parquet(sink._batch_dir(3))
 
     _build_fixture(fdir, build)
     return sink.committed_positions(spark)

@@ -33,10 +33,11 @@ before manifest → replay overwrites the same dir and then commits; die
 after manifest → replay sees the manifest and skips. No distributed
 coordination, no Kafka metadata.
 
-``CommitLog`` is the one record format behind this sink and the upsert
-sink (and the materialized-view sinks through it): one
-``batch-<id>.json`` record per committed batch, ``compaction-<id>.json``
-records that supersede what they fold, one replay check and one vacuum.
+``CommitLog`` is the one record format behind this sink, the offsets
+sinks and the upsert sink (and the materialized-view sinks through
+it): one ``batch-<id>.json`` record per committed batch,
+``compaction-<id>.json`` records that supersede what they fold, one
+replay check and one vacuum.
 
 Maintenance is ``compact_data`` (fold the live batch dirs into one dir
 under one compaction record) followed by ``vacuum`` (delete what that
@@ -111,7 +112,7 @@ def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
 
 class CommitLog:
     """Append-only commit records in one directory: the durable commit
-    primitive of the manifest and upsert sinks.
+    primitive of the manifest, offsets and upsert sinks.
 
     A batch commits by publishing ``batch-<id>.json`` (``append``); the
     record's presence IS the commit, and its content is the sink's. A
@@ -496,12 +497,13 @@ class ManifestFileSink:
 
         The record is BOUNDED for 100k-batch lifetimes, by construction:
         ``replaces_upto`` is one integer (monotone batch ids make a
-        watermark equivalent to the old transitive id list, which grew
-        one id per batch forever), and the folded ranges pass through
-        ``summarize_ranges`` (``keep_ranges`` exact tails per partition
-        + one historic envelope — sparse per-partition offsets make the
-        consecutive-only merge legitimately unable to collapse them,
-        measured growing 29 ranges/batch on the events fixture).
+        watermark equivalent to listing every folded id, a list that
+        would grow one id per batch forever), and the folded ranges
+        pass through ``summarize_ranges`` (``keep_ranges`` exact tails
+        per partition + one historic envelope — sparse per-partition
+        offsets make the consecutive-only merge legitimately unable to
+        collapse them, measured growing 29 ranges/batch on the events
+        fixture).
         """
         records = self.log.live()
         if len(records) < min_batches:

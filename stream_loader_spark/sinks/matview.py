@@ -76,9 +76,7 @@ class IncrementalAggSink:
         try:
             states = [delta]
             try:
-                prior = self.upsert.current_state(spark).drop(
-                    "_bucket", _VERSION_COL
-                )
+                prior = self.upsert.current_state(spark).drop(_VERSION_COL)
                 # touched keys only: the untouched 99% of a large view
                 # never enters the merge job (null-safe: a NULL group
                 # key is a real aggregation group and must fold too)
@@ -97,7 +95,7 @@ class IncrementalAggSink:
 
     def current_view(self, spark: SparkSession) -> DataFrame:
         """The finalized aggregate table (sums as DOUBLE, avg derived)."""
-        state = self.upsert.current_state(spark).drop("_bucket", _VERSION_COL)
+        state = self.upsert.current_state(spark).drop(_VERSION_COL)
         return finalize_aggregates(state, self.keys)
 
     def view_as_of(self, spark: SparkSession, batch_id: int) -> DataFrame:
@@ -106,9 +104,8 @@ class IncrementalAggSink:
         the state as of any retained batch (``vacuum`` folds older ones
         away), so 'what did this dashboard say after batch N' is one
         fold of stored layers, never a recomputation."""
-        state = self.upsert.current_state(spark, as_of_batch=batch_id).drop(
-            "_bucket", _VERSION_COL
-        )
+        state = self.upsert.current_state(spark, as_of_batch=batch_id)
+        state = state.drop(_VERSION_COL)
         return finalize_aggregates(state, self.keys)
 
 
@@ -170,7 +167,7 @@ class SketchViewSink:
         ).persist()
         try:
             try:
-                prior = self.upsert.current_state(spark).drop("_bucket", _VERSION_COL)
+                prior = self.upsert.current_state(spark).drop(_VERSION_COL)
                 touched = null_safe_join(
                     prior, delta.select(*keys), keys, "left_semi"
                 ).select(
@@ -200,7 +197,7 @@ class SketchViewSink:
     def daily_estimates(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql import functions as F
 
-        state = self.upsert.current_state(spark).drop("_bucket", _VERSION_COL)
+        state = self.upsert.current_state(spark).drop(_VERSION_COL)
         return state.select(
             self.key_col,
             self.date_col,
@@ -213,7 +210,7 @@ class SketchViewSink:
         stored sketch rows in range, never the raw stream."""
         from pyspark.sql import functions as F
 
-        state = self.upsert.current_state(spark).drop("_bucket", _VERSION_COL)
+        state = self.upsert.current_state(spark).drop(_VERSION_COL)
         d = F.col(self.date_col)
         return (
             state.where((d >= d0) & (d <= d1))

@@ -12,15 +12,19 @@ BY query:
   are written in one transaction; recovery is the A3 aggregation over
   the offsets table (ExternalOffsetVerticaFileStorage.scala:46-135).
 
-Here both are implemented against a file/table path with the same
-deterministic-batch-directory idempotence as the manifest sink; the
-``jdbc_url`` seam on each class marks where a real database target
-plugs in (single transaction per batch: ``INSERT`` + offsets commit,
-with the batch token as the dedup key — ClickHouse
-``insert_deduplication_token``, or a unique index on
-``(consumer_group, topic, partition, end_offset)``). A replayed batch
-that is already committed writes nothing, but its plan still runs so
-that stateful operators upstream commit their state.
+Here both are implemented against a file/table path with the manifest
+sink's commit (sinks/manifest.py): batch ``n`` writes deterministic
+``batch=n`` dirs in overwrite mode, then appends one ``CommitLog``
+record naming them. The record is the commit point: the replay check,
+``table()`` and ``offsets_table()`` trust only the dirs a record names,
+so a crash between the write and the record leaves invisible files
+that the replay overwrites. A real database target replaces this with
+one transaction per batch (``INSERT`` + offsets commit, with the batch
+token as the dedup key — ClickHouse ``insert_deduplication_token``, or
+a unique index on ``(consumer_group, topic, partition, end_offset)``;
+see sinks/dbtxn.py). A replayed batch that is already committed writes
+nothing, but its plan still runs so that stateful operators upstream
+commit their state.
 """
 
 from __future__ import annotations
@@ -35,8 +39,17 @@ from stream_loader_spark.operators.recovery import (
     committed_positions,
     committed_positions_external,
 )
-from stream_loader_spark.sinks.manifest import consume_replayed_batch
+from stream_loader_spark.sinks.manifest import CommitLog, consume_replayed_batch
 from stream_loader_spark.sources.kafka_view import kafka_metadata_columns
+
+
+def _committed_table(spark: SparkSession, log: CommitLog, key: str, root: str) -> DataFrame:
+    """The ``key`` dirs the log's records name, read as one table under
+    ``root`` (``basePath`` keeps each dir's ``batch`` column)."""
+    dirs = [rec[key] for rec in log.live()]
+    if not dirs:
+        raise ValueError(f"no committed batches under {root}")
+    return spark.read.option("basePath", root).parquet(*dirs)
 
 
 class InRowOffsetsSink:
@@ -50,12 +63,13 @@ class InRowOffsetsSink:
     def __init__(self, table_dir: str, payload_cols: list[str] | None = None) -> None:
         self.table_dir = table_dir
         self.payload_cols = payload_cols
+        self.log = CommitLog(os.path.join(table_dir, "_manifest"))
 
     def _batch_dir(self, batch_id: int) -> str:
         return os.path.join(self.table_dir, f"batch={batch_id}")
 
     def is_batch_committed(self, batch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._batch_dir(batch_id), "_SUCCESS"))
+        return self.log.is_committed(batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
@@ -67,25 +81,12 @@ class InRowOffsetsSink:
             payload = [c for c in batch_df.columns if c not in ("topic", "partition", "offset", "ts")]
         cols.extend(F.col(c) for c in payload)
         # deterministic per-batch dir + overwrite = idempotent replay
-        batch_df.select(*cols).write.mode("overwrite").parquet(self._batch_dir(batch_id))
-
-    def _committed_dirs(self) -> list[str]:
-        """Only batch dirs whose _SUCCESS marker exists — a crashed
-        partial write must stay invisible to readers and recovery."""
-        if not os.path.isdir(self.table_dir):
-            return []
-        return [
-            os.path.join(self.table_dir, d)
-            for d in sorted(os.listdir(self.table_dir))
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(self.table_dir, d, "_SUCCESS"))
-        ]
+        data_dir = self._batch_dir(batch_id)
+        batch_df.select(*cols).write.mode("overwrite").parquet(data_dir)
+        self.log.append(batch_id, {"batch_id": batch_id, "data_dir": data_dir})
 
     def table(self, spark: SparkSession) -> DataFrame:
-        dirs = self._committed_dirs()
-        if not dirs:
-            raise ValueError("no committed batches")
-        return spark.read.option("basePath", self.table_dir).parquet(*dirs)
+        return _committed_table(spark, self.log, "data_dir", self.table_dir)
 
     def committed_positions(self, spark: SparkSession) -> DataFrame:
         """A1 recovery query over the data table itself."""
@@ -105,6 +106,7 @@ class ExternalOffsetsSink:
         self.data_dir = data_dir
         self.offsets_dir = offsets_dir
         self.consumer_group = consumer_group
+        self.log = CommitLog(os.path.join(offsets_dir, "_manifest"))
 
     def _data_batch_dir(self, batch_id: int) -> str:
         return os.path.join(self.data_dir, f"batch={batch_id}")
@@ -113,14 +115,14 @@ class ExternalOffsetsSink:
         return os.path.join(self.offsets_dir, f"batch={batch_id}")
 
     def is_batch_committed(self, batch_id: int) -> bool:
-        # the offsets write is the commit point (data without offsets is
-        # invisible to recovery and overwritten on replay)
-        return os.path.exists(os.path.join(self._offsets_batch_dir(batch_id), "_SUCCESS"))
+        return self.log.is_committed(batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_batch_committed(batch_id):
             consume_replayed_batch(batch_df)
             return
+        data_dir = self._data_batch_dir(batch_id)
+        offsets_dir = self._offsets_batch_dir(batch_id)
         batch_df = batch_df.persist()
         try:
             ranges = batch_ranges(batch_df).select(
@@ -134,26 +136,18 @@ class ExternalOffsetsSink:
             )
             batch_df.withColumn("_batch_id", F.lit(batch_id)).write.mode(
                 "overwrite"
-            ).parquet(self._data_batch_dir(batch_id))
-            # commit point: offsets table write (atomic per batch dir)
-            ranges.write.mode("overwrite").parquet(self._offsets_batch_dir(batch_id))
+            ).parquet(data_dir)
+            ranges.write.mode("overwrite").parquet(offsets_dir)
         finally:
             # finally: a failed write must not leak the cached batch
             # across foreachBatch retries (same guard as every sibling)
             batch_df.unpersist()
+        self.log.append(
+            batch_id, {"batch_id": batch_id, "data_dir": data_dir, "offsets_dir": offsets_dir}
+        )
 
     def offsets_table(self, spark: SparkSession) -> DataFrame:
-        # only offsets dirs with a _SUCCESS marker: the offsets write IS
-        # the commit point, so partial writes must not steer recovery
-        dirs = [
-            os.path.join(self.offsets_dir, d)
-            for d in sorted(os.listdir(self.offsets_dir))
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(self.offsets_dir, d, "_SUCCESS"))
-        ] if os.path.isdir(self.offsets_dir) else []
-        if not dirs:
-            raise ValueError("no committed offset batches")
-        return spark.read.option("basePath", self.offsets_dir).parquet(*dirs)
+        return _committed_table(spark, self.log, "offsets_dir", self.offsets_dir)
 
     def committed_positions(self, spark: SparkSession) -> DataFrame:
         """A3 recovery query over the offsets table."""

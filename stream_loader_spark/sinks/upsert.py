@@ -42,6 +42,11 @@ append-only storages.
   between data and record leaves invisible files that the
   deterministic replay overwrites. Data files are NEVER renamed —
   object-store safe, same as the manifest file sink.
+- A backfill (a reserved negative batch id) precedes the stream: a
+  negative id below a batch id the log already names is refused with
+  ``ValueError`` before any data is written. The oldest live record
+  carries the pinned layout, and a backfill committed late would sort
+  before it.
 - Replays write nothing: the batch's record exists (or a compaction's
   watermark covers it). The replayed batch's plan still runs into a
   no-op sink so stateful operators upstream commit their state
@@ -248,6 +253,14 @@ class UpsertSink:
         if self.is_batch_committed(batch_id):
             consume_replayed_batch(batch_df)
             return
+        if batch_id < 0:
+            newest = max((r["batch_id"] for r in self.log.live()), default=batch_id)
+            if batch_id < newest:
+                raise ValueError(
+                    f"upsert sink at {self.path}: backfill batch {batch_id} "
+                    f"comes after batch {newest}; backfills must precede "
+                    "the stream, in ascending id order"
+                )
         # the pin this sink's last commit left needs no reread while the
         # log's listing is unchanged; a listing that differs (another
         # writer appended, compacted or vacuumed) refolds

@@ -68,12 +68,7 @@ class PartitionGroupingPipeline:
         for g, pred in self.grouping.items():
             try:
                 pipe = self._pipeline_for(g, pred)
-                saved = pipe._trigger
-                pipe._trigger = {"availableNow": True}
-                try:
-                    started[g] = pipe.start()
-                finally:
-                    pipe._trigger = saved
+                started[g] = pipe.trigger(availableNow=True).start()
             except Exception as e:  # noqa: BLE001 — isolate per group
                 failures[g] = e
         for g, q in started.items():

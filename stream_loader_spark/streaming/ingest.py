@@ -25,11 +25,13 @@ history grows 32 bytes per unique document — at 10B documents that is
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from stream_loader_spark.operators.dedup import incremental_exact_dedup
+from stream_loader_spark.sinks.manifest import atomic_write_json
 
 
 def _read_json(path: str) -> dict | None:
@@ -40,13 +42,6 @@ def _read_json(path: str) -> dict | None:
             return json.load(fh)
     except FileNotFoundError:
         return None
-
-
-def _write_json_atomic(path: str, payload: dict) -> None:
-    # one commit primitive for the whole repo — see sinks/manifest.py
-    from stream_loader_spark.sinks.manifest import atomic_write_json
-
-    atomic_write_json(os.path.dirname(path), payload, os.path.basename(path))
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -84,10 +79,12 @@ class BatchDirState:
     1. the consolidated rows are written to ``compact/g=<gen>`` — not
        yet referenced, so a crash here leaves an orphan, never a wrong
        read;
-    2. ``compaction.json`` flips atomically (temp + rename) to
-       ``{upto, gen}`` — the commit point;
-    3. superseded batch dirs and old generations are deleted — a crash
-       mid-cleanup leaves orphans that the next compaction removes.
+    2. ``compaction.json`` flips atomically (``atomic_write_json``) to
+       ``{upto, gens, next_gen}`` — the commit point;
+    3. every ``batch=<b>`` dir below ``upto`` and every generation the
+       new meta does not name is deleted. Every fold ends in this one
+       flip-and-sweep (``_commit``), so dirs a crash mid-sweep or
+       before a flip leaves behind go at the next fold's commit.
 
     Readers take the referenced generation plus batch dirs ≥ ``upto``;
     the replay-exclusion contract is preserved because the excludable
@@ -100,18 +97,16 @@ class BatchDirState:
         self.root = root
         os.makedirs(self.root, exist_ok=True)
 
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "compaction.json")
-
     def _meta(self) -> dict:
-        return _read_json(self._meta_path) or {"upto": 0, "gen": None}
+        meta = _read_json(os.path.join(self.root, "compaction.json"))
+        return meta or {"upto": 0, "gen": None}
 
     @staticmethod
     def _gens_of(meta: dict) -> list[int]:
         """Referenced generation ids, oldest first. Reads both the
-        multi-generation format ({"gens": [...]}) and the pre-tiered
-        single-generation one ({"gen": g})."""
+        multi-generation format ({"gens": [...]}) and the
+        single-generation one ({"gen": g}) that state written before
+        tiered compaction holds."""
         if "gens" in meta:
             return list(meta["gens"])
         return [meta["gen"]] if meta.get("gen") is not None else []
@@ -207,11 +202,22 @@ class BatchDirState:
         w.parquet(self._gen_dir(gen))
         return rows.get["n"]
 
-    def _flip(self, upto: int, gens: list[int], next_gen: int) -> None:
-        _write_json_atomic(
-            self._meta_path,
-            {"upto": upto, "gens": gens, "next_gen": next_gen},
+    def _commit(self, upto: int, gens: list[int], next_gen: int) -> None:
+        """Flip ``compaction.json`` to ``gens`` + the batch dirs from
+        ``upto``, then delete what it no longer names: every
+        ``batch=<b>`` dir below ``upto`` and every ``compact/g=<g>``
+        dir outside ``gens``."""
+        atomic_write_json(
+            self.root, {"upto": upto, "gens": gens, "next_gen": next_gen}, "compaction.json"
         )
+        for b in self.batch_ids():
+            if b < upto:
+                shutil.rmtree(os.path.join(self.root, f"batch={b}"), ignore_errors=True)
+        comp_root = os.path.join(self.root, "compact")
+        if os.path.isdir(comp_root):
+            for e in os.listdir(comp_root):
+                if e.startswith("g=") and int(e.split("=", 1)[1]) not in gens:
+                    shutil.rmtree(os.path.join(comp_root, e), ignore_errors=True)
 
     def compact(
         self, spark: SparkSession, partition_by: str | None = None, fold=None
@@ -221,17 +227,16 @@ class BatchDirState:
         consolidated (0 = nothing to do). This is the full refold — cost
         is O(total state) per call; for bounded maintenance at high
         batch counts use :meth:`compact_tiered`."""
-        import shutil
-
         meta = self._meta()
         gens = self._gens_of(meta)
         ids = self.batch_ids()
         if not ids:
             return 0
         upto = ids[-1]  # highest id stays replayable, everything below folds
-        # batches below the previous upto are crash-mid-cleanup orphans:
-        # their rows are ALREADY in the current generation, so they are
-        # deleted below but never folded again (double-count guard)
+        # batches below the previous upto are crash-mid-sweep orphans:
+        # their rows are ALREADY in the current generation, so the
+        # commit deletes them but they are never folded again
+        # (double-count guard)
         new_fold = [
             os.path.join(self.root, f"batch={b}")
             for b in ids
@@ -250,21 +255,10 @@ class BatchDirState:
             # writes one empty dir per trigger): still advance upto and
             # drop them, or the directory growth this class exists to
             # bound continues unbounded — the generations are unchanged
-            self._flip(upto, gens, gen)
-            for b in ids:
-                if b < upto:
-                    shutil.rmtree(
-                        os.path.join(self.root, f"batch={b}"), ignore_errors=True
-                    )
+            self._commit(upto, gens, gen)
             return 0
         n = self._write_gen(df, gen, partition_by, fold)
-        self._flip(upto, [gen], gen + 1)
-        # post-commit cleanup; orphans from a crash here are re-collected
-        for b in ids:
-            if b < upto:
-                shutil.rmtree(os.path.join(self.root, f"batch={b}"), ignore_errors=True)
-        for g in gens:
-            shutil.rmtree(self._gen_dir(g), ignore_errors=True)
+        self._commit(upto, [gen], gen + 1)
         return n
 
     def compact_tiered(
@@ -282,29 +276,18 @@ class BatchDirState:
         times over the index's lifetime instead of once per compaction,
         so per-call cost tracks the tail of new data, not O(index).
 
-        Same crash discipline as :meth:`compact`: a new generation dir
-        is unreferenced until the atomic meta flip; superseded dirs are
-        deleted post-commit, and orphans from a crash mid-cleanup are
-        swept on the next call. Returns the row count folded from batch
-        dirs this call (0 = no new batches; tier merges may still run).
+        Same crash discipline as :meth:`compact`: each new generation
+        dir is unreferenced until its ``_commit``, which then deletes
+        every dir the new meta does not name. Returns the row count
+        folded from batch dirs this call (0 = no new batches; tier
+        merges may still run).
         """
-        import shutil
-
         fanout = max(2, fanout)  # merging k dirs into 1 must shrink the list
         meta = self._meta()
         gens = self._gens_of(meta)
         next_gen = self._next_gen(meta)
         upto = int(meta["upto"])
         ids = self.batch_ids()
-
-        # sweep generation orphans (crash between a gen write and its
-        # meta flip, or mid-cleanup): on-disk g dirs not referenced
-        comp_root = os.path.join(self.root, "compact")
-        if os.path.isdir(comp_root):
-            for e in os.listdir(comp_root):
-                if e.startswith("g=") and int(e.split("=", 1)[1]) not in gens:
-                    shutil.rmtree(os.path.join(comp_root, e), ignore_errors=True)
-
         rows = 0
         if ids:
             new_upto = ids[-1]
@@ -320,12 +303,7 @@ class BatchDirState:
                     gens = gens + [next_gen]
                     next_gen += 1
                 upto = new_upto
-                self._flip(upto, gens, next_gen)
-                for b in ids:
-                    if b < upto:
-                        shutil.rmtree(
-                            os.path.join(self.root, f"batch={b}"), ignore_errors=True
-                        )
+                self._commit(upto, gens, next_gen)
 
         while len(gens) > fanout:
             by_size = sorted(gens, key=lambda g: self._dir_bytes(self._gen_dir(g)))
@@ -335,11 +313,9 @@ class BatchDirState:
             if df is not None:
                 self._write_gen(df, next_gen, partition_by, fold)
                 survivors = survivors + [next_gen]
-            merged_next = next_gen + 1
-            self._flip(upto, survivors, merged_next)
-            for g in victims:
-                shutil.rmtree(self._gen_dir(g), ignore_errors=True)
-            gens, next_gen = survivors, merged_next
+            next_gen += 1
+            self._commit(upto, survivors, next_gen)
+            gens = survivors
         return rows
 
     def replace_all(
@@ -351,27 +327,19 @@ class BatchDirState:
         under a different scheme than the rows they supersede.
 
         Same crash discipline as :meth:`compact`: the generation dir is
-        unreferenced until the atomic meta flip, cleanup runs
-        post-commit, and a crash mid-cleanup leaves orphans the next
-        compaction sweeps. Caller contract (stricter than compact):
+        unreferenced until ``_commit``, which deletes every batch dir
+        and generation it supersedes. Caller contract (stricter than
+        compact):
         the stream must be QUIESCED with its last batch fully
         committed — the replacement subsumes even the highest batch id,
         so a replay of that batch afterwards would see its own rows as
         history.
         """
-        import shutil
-
         meta = self._meta()
-        gens = self._gens_of(meta)
         ids = self.batch_ids()
         gen = self._next_gen(meta)
         n = self._write_gen(df, gen, partition_by)
-        upto = max([meta["upto"], *(b + 1 for b in ids)]) if ids else meta["upto"]
-        self._flip(upto, [gen], gen + 1)
-        for b in ids:
-            shutil.rmtree(os.path.join(self.root, f"batch={b}"), ignore_errors=True)
-        for g in gens:
-            shutil.rmtree(self._gen_dir(g), ignore_errors=True)
+        self._commit(max([meta["upto"], *(b + 1 for b in ids)]), [gen], gen + 1)
         return n
 
 
@@ -396,11 +364,11 @@ class IndexGrowthGuard:
     """
 
     def __init__(self, index_dir: str, growth_factor: float = 8.0) -> None:
-        self.path = os.path.join(index_dir, "growth.json")
+        self.index_dir = index_dir
         self.growth_factor = float(growth_factor)
 
     def _state(self) -> dict:
-        return _read_json(self.path) or {
+        return _read_json(os.path.join(self.index_dir, "growth.json")) or {
             "built_n": None,
             "live_n": 0,
             "last_batch": None,
@@ -430,14 +398,14 @@ class IndexGrowthGuard:
             # geometry was sized by whatever built the first non-empty
             # state — that count is the baseline growth is measured from
             st["built_n"] = st["live_n"]
-        _write_json_atomic(self.path, st)
+        atomic_write_json(self.index_dir, st, "growth.json")
 
     def reset(self, built_n: int | None = None) -> None:
         """Re-baseline after a rebuild sized the geometry for the
         current corpus (built_n defaults to the live count)."""
         st = self._state()
         st["built_n"] = int(st["live_n"] if built_n is None else built_n)
-        _write_json_atomic(self.path, st)
+        atomic_write_json(self.index_dir, st, "growth.json")
 
     def status(self) -> dict:
         st = self._state()
@@ -609,7 +577,7 @@ class NearDupIngestSink:
                         "silently loses recall"
                     )
             os.makedirs(self.out_dir, exist_ok=True)
-            _write_json_atomic(path, {"scheme": SIGNATURE_SCHEME})
+            atomic_write_json(self.out_dir, {"scheme": SIGNATURE_SCHEME}, "scheme.json")
         elif existing.get("scheme") != SIGNATURE_SCHEME:
             raise ValueError(
                 f"band index at {self.out_dir!r} was built with scheme "
@@ -741,8 +709,9 @@ class NearDupIngestSink:
 
         if num_bands is not None:
             self.num_bands = int(num_bands)
-        path = os.path.join(self.out_dir, "scheme.json")
-        _write_json_atomic(path, {"scheme": self._scheme, "rebanding": True})
+        atomic_write_json(
+            self.out_dir, {"scheme": self._scheme, "rebanding": True}, "scheme.json"
+        )
         docs = self._doc_state.read(spark)
         if docs is None:
             docs = spark.createDataFrame(
@@ -751,7 +720,7 @@ class NearDupIngestSink:
         n = self._band_state.replace_all(
             spark, band_index(docs, self.text_col, self.id_col, self.num_bands)
         )
-        _write_json_atomic(path, {"scheme": self._scheme})
+        atomic_write_json(self.out_dir, {"scheme": self._scheme}, "scheme.json")
         self._needs_reband = False
         self.growth.reset()
         return n
@@ -872,8 +841,6 @@ class IvfIngestSink:
                 if os.path.isdir(self._centroids_dir):
                     # crash leftover with no data files (centroids()
                     # returned None) — clear it so the rename lands
-                    import shutil
-
                     shutil.rmtree(self._centroids_dir)
                 os.rename(tmp, self._centroids_dir)
                 cents = self.centroids(spark)
@@ -961,8 +928,6 @@ class IvfIngestSink:
         probe contract does not). Returns the number of vectors
         reassigned.
         """
-        import shutil
-
         from stream_loader_spark.operators.similarity import (
             assign_clusters,
             kmeans_centroids,
@@ -1062,8 +1027,7 @@ class IndexIngestSink:
     def _segment(self, batch_df: DataFrame) -> DataFrame:
         # in-row run-length histogram (operators.text.doc_term_counts):
         # the (doc, token) aggregate never crosses document rows, so the
-        # per-micro-batch exchange the old explode+groupBy paid bought
-        # nothing — the segment build is a narrow map ahead of the
+        # segment build is a narrow map with no exchange ahead of the
         # tbucket-partitioned write
         from stream_loader_spark.operators.text import doc_term_counts
 
@@ -1151,14 +1115,13 @@ class IndexIngestSink:
         directories are enumerated driver-side across every live
         segment/generation and read as ONE multi-root scan, so the
         physical plan carries a single scan node however many tiered
-        generations are live. The previous shape (union every live
-        root, then filter tbucket) pruned the same FILES but paid one
-        scan node + listing per generation — measured lookup latency
-        drifting 1.2s → 2.4s as tiered compaction held six generations
-        live, which is exactly the read-side fan-out Lucene bounds
-        with its max-merged tier. Reads 1/n_buckets of the index per
-        distinct bucket, never the corpus; per-segment duplicate
-        (token, doc) rows merge in the aggregate."""
+        generations are live. A union of every live root filtered on
+        tbucket prunes the same files but pays one scan node and one
+        listing per generation (measured: lookup latency 1.2s → 2.4s
+        with six live generations), the read-side fan-out Lucene
+        bounds with its max-merged tier. Reads 1/n_buckets of the
+        index per distinct bucket, never the corpus; per-segment
+        duplicate (token, doc) rows merge in the aggregate."""
         if not terms:
             raise ValueError("terms must be non-empty")
         dirs = self._seg_state.dirs()

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from stream_loader_spark.app import build_app, load_app
 
+from conftest import job_group
+
 REC_SCHEMA = "topic string, partition int, offset bigint, ts timestamp, props string"
 
 
@@ -121,7 +123,7 @@ class TestBuildApp:
         app = self._crash_after_sink_commit(
             spark,
             cfg,
-            lambda sink: [int(d.rsplit("=", 1)[1]) for d in sink._committed_dirs()],
+            lambda sink: [r["batch_id"] for r in sink.log.live()],
         )
         rows = app.sink.table(spark).select("_partition", "_offset").collect()
         assert len(rows) == len(set(rows)) == 40
@@ -193,17 +195,12 @@ class TestManifestCommitShape:
                 REC_SCHEMA,
             ).coalesce(1).write.mode("append").parquet(cfg["source"]["path"])
         app = build_app(spark, cfg)
-        sc = spark.sparkContext
         groups = []
         commit = app.sink.write_batch
 
         def grouped(batch_df, batch_id):
-            group = f"manifest-commit-{tmp_path.name}-{batch_id}"
-            sc.setJobGroup(group, "one manifest commit")
-            try:
+            with job_group(spark) as group:
                 commit(batch_df, batch_id)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
             groups.append(group)
 
         app.sink.write_batch = grouped
@@ -236,17 +233,15 @@ class TestManifestCommitShape:
         """Two jobs: the source scan (1 task) and the stateful dedup (4)
         feed the ranges reduce (1), then the write (1)."""
         app, groups = self._drain(spark, tmp_path)
-        sc = spark.sparkContext
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
+        tracker = spark.sparkContext.statusTracker()
         assert len(groups) == 3
         for group in groups:
-            jobs = list(tracker.getJobIdsForGroup(group))
-            assert len(jobs) == 2, (group, jobs)
+            jobs = group.job_ids()
+            assert len(jobs) == 2, (group.name, jobs)
             # a later job lists the stages it reuses: count each once
             stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
             tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
-            assert 1 <= tasks <= 7, (group, tasks)
+            assert 1 <= tasks <= 7, (group.name, tasks)
 
 class TestConfigHardening:
     def test_dedup_block_validated(self, spark, tmp_path):

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from tools.scale_audit import plan_text
 
+from conftest import job_group
+
 
 class TestPlanShapes:
     def test_q1_pushdown_and_pruning(self, spark, sf_small):
@@ -726,14 +728,10 @@ class TestScatterByKey:
         a = spark.range(1000).selectExpr("id AS doc_id", "id % 7 AS g")
         agg = a.groupBy("g").agg(F.count("*").alias("n"))
         joined = a.join(agg, "g")
-        sc = spark.sparkContext
-        sc.setJobGroup("scatter-derived-probe", "must stay empty")
-        try:
+        with job_group(spark) as probe:
             out = scatter(joined)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
         assert out is joined  # no-op: parallelism is arranged upstream
-        assert list(sc.statusTracker().getJobIdsForGroup("scatter-derived-probe")) == []
+        assert probe.job_ids() == []
 
     def test_scatter_checkpointed_frame_still_respreads(self, spark):
         # localCheckpoint DROPS partitioning and truncates lineage to a

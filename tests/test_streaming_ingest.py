@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from stream_loader_spark.streaming.ingest import DedupIngestSink
 
+from conftest import JobGroup, job_group
+
 DOC_SCHEMA = "doc_id long, text string"
 
 
@@ -413,27 +415,19 @@ def _jobs_after_last_write(spark, action):
     """Run ``action``; return its result and the number of Spark jobs
     that ran after its last parquet write (each write opens a fresh job
     group, so the last group holds exactly those jobs)."""
-    import uuid
-
     from pyspark.sql.readwriter import DataFrameWriter
 
-    sc = spark.sparkContext
-    groups = []
     real = DataFrameWriter.parquet
 
     def grouped(self, *args, **kwargs):
         real(self, *args, **kwargs)
-        groups.append(f"after-write-{uuid.uuid4().hex}")
-        sc.setJobGroup(groups[-1], "jobs after the last parquet write")
+        groups.append(JobGroup(spark).start())
 
-    with pytest.MonkeyPatch.context() as mp:
+    with pytest.MonkeyPatch.context() as mp, job_group(spark) as first:
+        groups = [first]
         mp.setattr(DataFrameWriter, "parquet", grouped)
-        try:
-            out = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(groups[-1]))
+        out = action()
+    return out, len(groups[-1].job_ids())
 
 
 class TestCountsRideTheWrites:
@@ -564,23 +558,62 @@ class TestIngestCompaction:
         for n in range(3):
             sink(spark.createDataFrame([(n, f"doc{n}")], DOC_SCHEMA), n)
 
-        original = ingest_mod._write_json_atomic
-
-        def crashing(path, payload):
+        def crashing(dir_path, record, final_name):
             raise RuntimeError("crash before meta flip")
 
-        ingest_mod._write_json_atomic = crashing
-        try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ingest_mod, "atomic_write_json", crashing)
             with pytest.raises(RuntimeError):
                 sink.compact(spark)
-        finally:
-            ingest_mod._write_json_atomic = original
         hashes_root = os.path.join(str(tmp_path / "out"), "hashes")
         assert self._batch_dirs(hashes_root) == ["batch=0", "batch=1", "batch=2"]
         assert sink._history(spark, exclude_batch=99).count() == 3
         # the next compaction recovers and commits cleanly
         assert sink.compact(spark) == 2
         assert sink._history(spark, exclude_batch=99).count() == 3
+
+    @pytest.mark.parametrize("fold", ["compact", "replace_all"])
+    def test_generation_left_by_crash_mid_sweep_is_deleted(self, spark, tmp_path, fold):
+        """A crash after the meta flip, while superseded generations are
+        deleted, leaves one unreferenced: the next fold deletes it."""
+        import json
+        import shutil
+
+        from stream_loader_spark.streaming.ingest import BatchDirState
+
+        state = BatchDirState(str(tmp_path / "state"))
+
+        def rows(ids):
+            return spark.createDataFrame([(f"h{n}",) for n in ids], "h string")
+
+        for n in range(3):
+            state.write_batch(rows([n]), n)
+        state.compact(spark)  # g=1 holds batches 0-1
+        state.write_batch(rows([3]), 3)
+        real = shutil.rmtree
+
+        def crashing(path, *args, **kwargs):
+            if os.path.basename(path).startswith("g="):
+                raise RuntimeError("crash mid-sweep")
+            real(path, *args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(shutil, "rmtree", crashing)
+            with pytest.raises(RuntimeError):
+                state.compact(spark)  # flips to g=2, then dies deleting g=1
+        gens_root = os.path.join(state.root, "compact")
+        assert sorted(os.listdir(gens_root)) == ["g=1", "g=2"]
+        assert sorted(r.h for r in state.read(spark).collect()) == ["h0", "h1", "h2", "h3"]
+
+        state.write_batch(rows([4]), 4)
+        if fold == "compact":
+            state.compact(spark)
+        else:
+            state.replace_all(spark, rows(range(5)))
+        with open(os.path.join(state.root, "compaction.json")) as fh:
+            gens = json.load(fh)["gens"]
+        assert sorted(os.listdir(gens_root)) == [f"g={g}" for g in gens]
+        assert sorted(r.h for r in state.read(spark).collect()) == [f"h{n}" for n in range(5)]
 
 
 class TestCompactionHardening:

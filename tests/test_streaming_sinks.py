@@ -17,6 +17,8 @@ from stream_loader_spark.sinks.offsets import InRowOffsetsSink, ExternalOffsetsS
 from stream_loader_spark.streaming.pipeline import StreamPipeline
 from stream_loader_spark.operators.recovery import committed_positions
 
+from conftest import job_group
+
 STREAM_SCHEMA = (
     "topic string, partition int, offset bigint, ts timestamp, value double, props string"
 )
@@ -42,6 +44,23 @@ def stream_env(spark, sf_small, tmp_path):
         "checkpoint": str(tmp_path / "cp"),
         "out": str(tmp_path / "out"),
     }
+
+
+@pytest.fixture()
+def no_success_markers(spark):
+    """Hadoop's output committer writes no ``_SUCCESS`` marker while the
+    test runs (a common object-store setting)."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    prior = conf.get(key)
+    conf.set(key, "false")
+    try:
+        yield
+    finally:
+        if prior is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prior)
 
 
 def run_pipeline(spark, env, sink):
@@ -190,6 +209,25 @@ class TestInRowOffsetsSink:
         sink(batch, 0)
         assert sink.table(spark).count() == batch.count()
 
+    def test_commits_without_success_markers(
+        self, spark, sf_small, tmp_path, no_success_markers
+    ):
+        """The log record is the commit: a batch commits, reads back and
+        skips its replay with no ``_SUCCESS`` marker written."""
+        sink = InRowOffsetsSink(str(tmp_path / "out"))
+        batch = as_stream_records(load_table(spark, sf_small, "events"))
+        sink(batch, 0)
+        files = sorted(os.listdir(sink._batch_dir(0)))
+        assert "_SUCCESS" not in files
+        assert sink.is_batch_committed(0)
+        sink(batch, 0)  # replay: skipped, the batch's files stay as written
+        assert sorted(os.listdir(sink._batch_dir(0))) == files
+        assert sink.table(spark).count() == batch.count()
+        expected = committed_positions(batch, "topic", "partition", "offset", "ts")
+        assert sorted(map(tuple, sink.committed_positions(spark).collect())) == sorted(
+            map(tuple, expected.collect())
+        )
+
 
 class TestExternalOffsetsSink:
     def test_load_offsets_table_and_fk_join(self, spark, stream_env, tmp_path):
@@ -233,14 +271,32 @@ class TestExternalOffsetsSink:
         batch = as_stream_records(load_table(spark, sf_small, "events"))
         sink(batch, 0)
         offsets_before = sorted(map(tuple, sink.offsets_table(spark).collect()))
-        sc = spark.sparkContext
-        sc.setJobGroup("offsets-replay", "replay of a committed batch")
-        try:
+        with job_group(spark) as replay:
             sink(batch, 0)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(sc.statusTracker().getJobIdsForGroup("offsets-replay"))
+        assert replay.job_ids()
         assert sorted(map(tuple, sink.offsets_table(spark).collect())) == offsets_before
+
+    def test_commits_without_success_markers(
+        self, spark, sf_small, tmp_path, no_success_markers
+    ):
+        """The log record is the commit: a batch commits, reads back and
+        skips its replay with no ``_SUCCESS`` marker written."""
+        sink = ExternalOffsetsSink(
+            str(tmp_path / "data"), str(tmp_path / "offsets"), consumer_group="cg1"
+        )
+        batch = as_stream_records(load_table(spark, sf_small, "events"))
+        sink(batch, 0)
+        dirs = (sink._data_batch_dir(0), sink._offsets_batch_dir(0))
+        files = [sorted(os.listdir(d)) for d in dirs]
+        assert not any("_SUCCESS" in f for f in files)
+        assert sink.is_batch_committed(0)
+        sink(batch, 0)  # replay: skipped, the batch's files stay as written
+        assert [sorted(os.listdir(d)) for d in dirs] == files
+        assert sink.offsets_table(spark).count() > 0
+        expected = committed_positions(batch, "topic", "partition", "offset", "ts")
+        assert sorted(map(tuple, sink.committed_positions(spark).collect())) == sorted(
+            map(tuple, expected.collect())
+        )
 
 
 class TestCompaction:
@@ -673,15 +729,17 @@ class TestPartialWriteInvisibility:
         sink(batch, 0)
         pos_before = sorted(map(tuple, sink.committed_positions(spark).collect()))
 
-        # simulate a crashed partial write: parquet rows but no _SUCCESS
-        partial = os.path.join(stream_env["out"], "batch=99")
+        # a batch whose write completed (_SUCCESS and all) but whose
+        # commit record was never appended
+        partial = sink._batch_dir(99)
         batch.withColumn("offset", F.col("offset") + 10_000_000).select(
             F.col("topic").alias("_topic"),
             F.col("partition").alias("_partition"),
             F.col("offset").alias("_offset"),
             F.col("ts").alias("_watermark"),
         ).write.mode("overwrite").parquet(partial)
-        os.remove(os.path.join(partial, "_SUCCESS"))
+        assert os.path.exists(os.path.join(partial, "_SUCCESS"))
+        assert not sink.is_batch_committed(99)
 
         # recovery must not be steered past records that never committed
         assert sorted(map(tuple, sink.committed_positions(spark).collect())) == pos_before
@@ -695,13 +753,16 @@ class TestPartialWriteInvisibility:
         sink(batch, 0)
         pos_before = sorted(map(tuple, sink.committed_positions(spark).collect()))
 
-        partial = str(tmp_path / "offsets" / "batch=99")
+        # a batch whose offsets write completed (_SUCCESS and all) but
+        # whose commit record was never appended
+        partial = sink._offsets_batch_dir(99)
         spark.createDataFrame(
             [(99, "cg1", "t", 0, 0, 99_999_999, None)],
             "_batch_id long, _consumer_group string, _topic string, _partition int, "
             "_start_offset long, _end_offset long, _end_watermark timestamp",
         ).write.mode("overwrite").parquet(partial)
-        os.remove(os.path.join(partial, "_SUCCESS"))
+        assert os.path.exists(os.path.join(partial, "_SUCCESS"))
+        assert not sink.is_batch_committed(99)
 
         assert sorted(map(tuple, sink.committed_positions(spark).collect())) == pos_before
 
@@ -1302,7 +1363,6 @@ class TestDbTransactionalSink:
         guarded commit runs the same jobs as an unguarded one."""
         from stream_loader_spark.sinks.dbtxn import DbTransactionalSink, sqlite_connect
 
-        sc = spark.sparkContext
         jobs = {}
         for guard in (None, 100):
             sink = DbTransactionalSink(
@@ -1314,13 +1374,9 @@ class TestDbTransactionalSink:
                 max_rows_guard=guard,
             )
             sink.ensure_tables()
-            group = f"dbtxn-guard-{guard}"
-            sc.setJobGroup(group, "one transactional commit")
-            try:
+            with job_group(spark) as commit:
                 sink(self._batch(spark), 0)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs[guard] = len(sc.statusTracker().getJobIdsForGroup(group))
+            jobs[guard] = len(commit.job_ids())
             assert self._counts(sink) == (25, 2)
         assert jobs[100] == jobs[None] > 0, jobs
 
@@ -1711,13 +1767,9 @@ class TestUpsertSink:
         sink = self._sink(tmp_path)
         sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]), 0)
         batch = self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)])
-        sc = spark.sparkContext
-        sc.setJobGroup("upsert-commit-jobs", "one upsert commit")
-        try:
+        with job_group(spark) as commit:
             sink.write_batch(batch, 1)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = list(sc.statusTracker().getJobIdsForGroup("upsert-commit-jobs"))
+        jobs = commit.job_ids()
         assert 1 <= len(jobs) <= 2, jobs
         state = {r.k: r.val for r in sink.current_state(spark).collect()}
         assert state == {k: "b" if k % 5 == 0 else "a" for k in range(64)}
@@ -1877,6 +1929,56 @@ class TestUpsertSink:
         assert set(after) == set(before)
         for key, off in after.items():
             assert off == before[key] + 1_000_000  # phase-2 offsets win
+
+
+class TestUpsertBackfill:
+    """A backfill (negative batch id) precedes the stream. The oldest
+    live log record pins the layout, so a backfill committed late would
+    sort before it and leave the state unreadable."""
+
+    def _sink(self, tmp_path):
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        return UpsertSink(str(tmp_path / "state"), ["k"], "ver", num_buckets=4)
+
+    def _df(self, spark, rows):
+        return spark.createDataFrame(rows, "k long, val string, ver long")
+
+    def _state(self, spark, sink, as_of=None):
+        return {r.k: r.val for r in sink.current_state(spark, as_of_batch=as_of).collect()}
+
+    @pytest.mark.parametrize("vacuum", [False, True])
+    def test_backfill_after_the_stream_is_refused(self, spark, tmp_path, vacuum):
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(1, "a", 1), (2, "b", 1)]), 0)
+        sink.write_batch(self._df(spark, [(2, "B", 2)]), 1)
+        if vacuum:
+            sink.vacuum(keep_last=1)
+        with pytest.raises(ValueError, match="backfill"):
+            sink.write_batch(self._df(spark, [(3, "c", 0)]), -1)
+        assert not sink.is_batch_committed(-1)
+        assert not os.path.exists(sink._version_dir("v", -1))  # no data written
+        assert self._state(spark, sink) == {1: "a", 2: "B"}
+        sink.write_batch(self._df(spark, [(3, "c", 3)]), 2)
+        assert self._state(spark, sink) == {1: "a", 2: "B", 3: "c"}
+
+    def test_backfills_in_descending_order_are_refused(self, spark, tmp_path):
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(1, "a", 1)]), -1)
+        with pytest.raises(ValueError, match="backfill"):
+            sink.write_batch(self._df(spark, [(2, "b", 1)]), -2)
+        assert self._state(spark, sink) == {1: "a"}
+
+    def test_backfill_then_stream_folds(self, spark, tmp_path):
+        """Batch 0 wins on the keys it shares with the backfill, whatever
+        their order values: the version orders layers."""
+        sink = self._sink(tmp_path)
+        sink.write_batch(self._df(spark, [(1, "old", 9), (2, "x", 9)]), -1)
+        sink.write_batch(self._df(spark, [(1, "new", 0), (3, "y", 0)]), 0)
+        assert self._state(spark, sink) == {1: "new", 2: "x", 3: "y"}
+        assert self._state(spark, sink, as_of=-1) == {1: "old", 2: "x"}
+        sink.vacuum(keep_last=1)
+        assert self._state(spark, sink) == {1: "new", 2: "x", 3: "y"}
 
 
 class TestUpsertTimeTravel:
