@@ -15,10 +15,12 @@ BY query:
 Here both are implemented against a file/table path with the manifest
 sink's commit (sinks/manifest.py): batch ``n`` writes deterministic
 ``batch=n`` dirs in overwrite mode, then appends one ``CommitLog``
-record naming them. The record is the commit point: the replay check,
-``table()`` and ``offsets_table()`` trust only the dirs a record names,
-so a crash between the write and the record leaves invisible files
-that the replay overwrites. A real database target replaces this with
+record ``{"batch_id": n}``. The record is the commit point: the replay
+check, ``table()`` and ``offsets_table()`` trust only the batches a
+record names, so a crash between the write and the record leaves
+invisible files that the replay overwrites. A table in the older
+format (``batch=n`` dirs committed by Hadoop success-marker files, no
+log) is refused at construction: rebuild it. A real database target replaces this with
 one transaction per batch (``INSERT`` + offsets commit, with the batch
 token as the dedup key — ClickHouse ``insert_deduplication_token``, or
 a unique index on ``(consumer_group, topic, partition, end_offset)``;
@@ -43,10 +45,25 @@ from stream_loader_spark.sinks.manifest import CommitLog, consume_replayed_batch
 from stream_loader_spark.sources.kafka_view import kafka_metadata_columns
 
 
-def _committed_table(spark: SparkSession, log: CommitLog, key: str, root: str) -> DataFrame:
-    """The ``key`` dirs the log's records name, read as one table under
-    ``root`` (``basePath`` keeps each dir's ``batch`` column)."""
-    dirs = [rec[key] for rec in log.live()]
+def _open_log(log_root: str, *data_roots: str) -> CommitLog:
+    """The commit log at ``<log_root>/_manifest``. Refuses ``log_root``
+    or ``data_roots`` holding ``batch=<n>`` dirs while the log does not
+    exist: those batches were committed by success-marker files, and
+    readers that trust only records would silently drop them."""
+    path = os.path.join(log_root, "_manifest")
+    if not os.path.isdir(path):
+        for root in (log_root, *data_roots):
+            if os.path.isdir(root) and any(e.startswith("batch=") for e in os.listdir(root)):
+                raise ValueError(
+                    f"{root!r} holds batch dirs but no commit log at {path!r}: "
+                    "it predates commit records; rebuild the table"
+                )
+    return CommitLog(path)
+
+
+def _committed_table(spark: SparkSession, root: str, dirs: list[str]) -> DataFrame:
+    """The committed batches' ``dirs``, read as one table under ``root``
+    (``basePath`` keeps each dir's ``batch`` column)."""
     if not dirs:
         raise ValueError(f"no committed batches under {root}")
     return spark.read.option("basePath", root).parquet(*dirs)
@@ -63,7 +80,7 @@ class InRowOffsetsSink:
     def __init__(self, table_dir: str, payload_cols: list[str] | None = None) -> None:
         self.table_dir = table_dir
         self.payload_cols = payload_cols
-        self.log = CommitLog(os.path.join(table_dir, "_manifest"))
+        self.log = _open_log(table_dir)
 
     def _batch_dir(self, batch_id: int) -> str:
         return os.path.join(self.table_dir, f"batch={batch_id}")
@@ -83,10 +100,11 @@ class InRowOffsetsSink:
         # deterministic per-batch dir + overwrite = idempotent replay
         data_dir = self._batch_dir(batch_id)
         batch_df.select(*cols).write.mode("overwrite").parquet(data_dir)
-        self.log.append(batch_id, {"batch_id": batch_id, "data_dir": data_dir})
+        self.log.append(batch_id, {"batch_id": batch_id})
 
     def table(self, spark: SparkSession) -> DataFrame:
-        return _committed_table(spark, self.log, "data_dir", self.table_dir)
+        dirs = [self._batch_dir(rec["batch_id"]) for rec in self.log.live()]
+        return _committed_table(spark, self.table_dir, dirs)
 
     def committed_positions(self, spark: SparkSession) -> DataFrame:
         """A1 recovery query over the data table itself."""
@@ -106,7 +124,7 @@ class ExternalOffsetsSink:
         self.data_dir = data_dir
         self.offsets_dir = offsets_dir
         self.consumer_group = consumer_group
-        self.log = CommitLog(os.path.join(offsets_dir, "_manifest"))
+        self.log = _open_log(offsets_dir, data_dir)
 
     def _data_batch_dir(self, batch_id: int) -> str:
         return os.path.join(self.data_dir, f"batch={batch_id}")
@@ -142,12 +160,11 @@ class ExternalOffsetsSink:
             # finally: a failed write must not leak the cached batch
             # across foreachBatch retries (same guard as every sibling)
             batch_df.unpersist()
-        self.log.append(
-            batch_id, {"batch_id": batch_id, "data_dir": data_dir, "offsets_dir": offsets_dir}
-        )
+        self.log.append(batch_id, {"batch_id": batch_id})
 
     def offsets_table(self, spark: SparkSession) -> DataFrame:
-        return _committed_table(spark, self.log, "offsets_dir", self.offsets_dir)
+        dirs = [self._offsets_batch_dir(rec["batch_id"]) for rec in self.log.live()]
+        return _committed_table(spark, self.offsets_dir, dirs)
 
     def committed_positions(self, spark: SparkSession) -> DataFrame:
         """A3 recovery query over the offsets table."""

@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 from stream_loader_spark.operators.dedup import incremental_exact_dedup
 from stream_loader_spark.sinks.manifest import atomic_write_json
 
+# the JSON state files, each written only through atomic_write_json
+_META = "compaction.json"
+_GROWTH = "growth.json"
+_SCHEME = "scheme.json"
+
 
 def _read_json(path: str) -> dict | None:
     import json
@@ -98,7 +103,7 @@ class BatchDirState:
         os.makedirs(self.root, exist_ok=True)
 
     def _meta(self) -> dict:
-        meta = _read_json(os.path.join(self.root, "compaction.json"))
+        meta = _read_json(os.path.join(self.root, _META))
         return meta or {"upto": 0, "gen": None}
 
     @staticmethod
@@ -207,9 +212,7 @@ class BatchDirState:
         ``upto``, then delete what it no longer names: every
         ``batch=<b>`` dir below ``upto`` and every ``compact/g=<g>``
         dir outside ``gens``."""
-        atomic_write_json(
-            self.root, {"upto": upto, "gens": gens, "next_gen": next_gen}, "compaction.json"
-        )
+        atomic_write_json(self.root, {"upto": upto, "gens": gens, "next_gen": next_gen}, _META)
         for b in self.batch_ids():
             if b < upto:
                 shutil.rmtree(os.path.join(self.root, f"batch={b}"), ignore_errors=True)
@@ -368,7 +371,7 @@ class IndexGrowthGuard:
         self.growth_factor = float(growth_factor)
 
     def _state(self) -> dict:
-        return _read_json(os.path.join(self.index_dir, "growth.json")) or {
+        return _read_json(os.path.join(self.index_dir, _GROWTH)) or {
             "built_n": None,
             "live_n": 0,
             "last_batch": None,
@@ -398,14 +401,14 @@ class IndexGrowthGuard:
             # geometry was sized by whatever built the first non-empty
             # state — that count is the baseline growth is measured from
             st["built_n"] = st["live_n"]
-        atomic_write_json(self.index_dir, st, "growth.json")
+        atomic_write_json(self.index_dir, st, _GROWTH)
 
     def reset(self, built_n: int | None = None) -> None:
         """Re-baseline after a rebuild sized the geometry for the
         current corpus (built_n defaults to the live count)."""
         st = self._state()
         st["built_n"] = int(st["live_n"] if built_n is None else built_n)
-        atomic_write_json(self.index_dir, st, "growth.json")
+        atomic_write_json(self.index_dir, st, _GROWTH)
 
     def status(self) -> dict:
         st = self._state()
@@ -545,8 +548,7 @@ class NearDupIngestSink:
         SIGNATURE_SCHEME = self._scheme
 
         self._needs_reband = False
-        path = os.path.join(self.out_dir, "scheme.json")
-        existing = _read_json(path)
+        existing = _read_json(os.path.join(self.out_dir, _SCHEME))
         if existing is not None and existing.get("rebanding"):
             # interrupted reband (crash between the band rewrite and the
             # scheme re-stamp): band rows may mix two schemes, so fail
@@ -577,7 +579,7 @@ class NearDupIngestSink:
                         "silently loses recall"
                     )
             os.makedirs(self.out_dir, exist_ok=True)
-            atomic_write_json(self.out_dir, {"scheme": SIGNATURE_SCHEME}, "scheme.json")
+            atomic_write_json(self.out_dir, {"scheme": SIGNATURE_SCHEME}, _SCHEME)
         elif existing.get("scheme") != SIGNATURE_SCHEME:
             raise ValueError(
                 f"band index at {self.out_dir!r} was built with scheme "
@@ -709,9 +711,7 @@ class NearDupIngestSink:
 
         if num_bands is not None:
             self.num_bands = int(num_bands)
-        atomic_write_json(
-            self.out_dir, {"scheme": self._scheme, "rebanding": True}, "scheme.json"
-        )
+        atomic_write_json(self.out_dir, {"scheme": self._scheme, "rebanding": True}, _SCHEME)
         docs = self._doc_state.read(spark)
         if docs is None:
             docs = spark.createDataFrame(
@@ -720,7 +720,7 @@ class NearDupIngestSink:
         n = self._band_state.replace_all(
             spark, band_index(docs, self.text_col, self.id_col, self.num_bands)
         )
-        atomic_write_json(self.out_dir, {"scheme": self._scheme}, "scheme.json")
+        atomic_write_json(self.out_dir, {"scheme": self._scheme}, _SCHEME)
         self._needs_reband = False
         self.growth.reset()
         return n

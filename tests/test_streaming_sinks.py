@@ -228,6 +228,16 @@ class TestInRowOffsetsSink:
             map(tuple, expected.collect())
         )
 
+    def test_table_without_commit_log_is_refused(self, spark, tmp_path):
+        """A table in the success-marker format (``batch=<n>`` dirs, no
+        ``_manifest``) is refused, not read as empty."""
+        out = tmp_path / "out"
+        spark.range(3).write.parquet(str(out / "batch=0"))
+        assert os.path.exists(out / "batch=0" / "_SUCCESS")
+        with pytest.raises(ValueError, match="predates commit records"):
+            InRowOffsetsSink(str(out))
+        assert not os.path.exists(out / "_manifest")
+
 
 class TestExternalOffsetsSink:
     def test_load_offsets_table_and_fk_join(self, spark, stream_env, tmp_path):
@@ -297,6 +307,17 @@ class TestExternalOffsetsSink:
         assert sorted(map(tuple, sink.committed_positions(spark).collect())) == sorted(
             map(tuple, expected.collect())
         )
+
+    @pytest.mark.parametrize("legacy", ["data", "offsets"])
+    def test_table_without_commit_log_is_refused(self, spark, tmp_path, legacy):
+        """Batch dirs in the success-marker format under either root,
+        with no ``_manifest``, are refused, not read as empty."""
+        spark.range(3).write.parquet(str(tmp_path / legacy / "batch=0"))
+        with pytest.raises(ValueError, match="predates commit records"):
+            ExternalOffsetsSink(
+                str(tmp_path / "data"), str(tmp_path / "offsets"), consumer_group="cg1"
+            )
+        assert not os.path.exists(tmp_path / "offsets" / "_manifest")
 
 
 class TestCompaction:
