@@ -253,7 +253,7 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the fixtures' code-version token: bump it when the written shape of a
 # sink fixture changes
-_FIXTURE_VERSION = 5
+_FIXTURE_VERSION = 6
 _FIXTURE_TREE = "sink_fixtures_v"
 
 
@@ -502,10 +502,8 @@ def _k11_sink(spark: SparkSession, sf_dir: str):
         slice_col = F.expr(f"CAST((offset * 4) DIV {hi} AS INT)")
         for b in range(3):
             sink.write_batch(rec.where(slice_col == b), b)
-        tail = rec.where(slice_col == 3).withColumn("_bucket", sink._bucket_col())
-        tail.write.partitionBy("_bucket").mode("overwrite").parquet(
-            os.path.join(fdir, "versions", "v=3")
-        )
+        # the crashed tail: a delta's flat files, record never appended
+        rec.where(slice_col == 3).write.mode("overwrite").parquet(sink._version_dir("v", 3))
 
     _build_fixture(fdir, build)
     return sink

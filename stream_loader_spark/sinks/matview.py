@@ -10,7 +10,7 @@ doing DELTA-sized work per batch:
    against the delta's keys — untouched keys never enter the merge);
 3. touched prior ⊕ delta merges, and the merged rows go through
    ``UpsertSink.write_batch`` — which appends them as the batch's
-   delta, one file per hash bucket they land in, and gives the
+   delta (one file for a small batch), and gives the
    crash/replay discipline (one commit-log record per batch,
    deterministic version dirs).
 

@@ -10,17 +10,18 @@ never rewrites what earlier commits wrote, like the reference's
 append-only storages.
 
 - State is hash-bucketed by key. A commit writes only the batch's
-  newest row per key, tombstones included, into
-  ``versions/v=<batch_id>/_bucket=<b>/``: one exchange on the bucket
-  and one ``max_by`` per key, so each touched bucket lands whole in one
-  shuffle partition and a commit writes one parquet file per touched
-  bucket (the reference's one-file-per-partition-per-batch
-  ``RecordBatcher`` shape), with adaptive query execution on or off.
-  The write observes the set of buckets it touched. It reads no stored
-  state, so a commit costs the batch, not the state. The codec is the
-  session's (zstd, see session.py).
-- A bucket's state is its newest base (written by ``vacuum`` under
-  ``versions/base=<batch_id>/``) plus the deltas committed after it.
+  newest row per key, tombstones included, as plain files under
+  ``versions/v=<batch_id>/``: one ``max_by`` per key, partially
+  aggregated map-side before its one exchange, coalesced to at most
+  ``num_buckets`` files. A small batch lands as one file with adaptive
+  query execution on (the reference's ``FileRecordBatcher`` closes one
+  file per batch too), and never as more than ``num_buckets`` with it
+  off. The write observes the set of buckets its keys hash to. It
+  reads no stored state, so a commit costs the batch, not the state.
+  The codec is the session's (zstd, see session.py).
+- A bucket's state is its newest base (written by ``vacuum``, one
+  directory per bucket under ``versions/base=<batch_id>/_bucket=<b>/``)
+  plus the deltas committed after it that touched the bucket.
   Every reader folds those layers with one aggregate: the newest row
   per key by version, tombstones dropped. Each stored row carries its
   version and tombstone flag under reserved ``_upsert_*`` names that
@@ -192,19 +193,20 @@ class UpsertSink:
     def _layers(
         self, records: list[dict], upto: int | None = None
     ) -> list[tuple[int, str, list[int]]]:
-        """(version, directory, buckets) of every layer of the state as
-        of batch ``upto`` (default: the newest), oldest first: the
-        compaction's bases, then each later record's deltas. A layer's
-        directory holds one ``_bucket=<b>`` directory per bucket."""
+        """(version, kind, buckets) of every layer of the state as of
+        batch ``upto`` (default: the newest), oldest first: the
+        compaction's bases (kind ``base``, one ``_bucket=<b>`` directory
+        per bucket), then each later record's delta (kind ``v``, files
+        holding every bucket it touched)."""
         layers: list[tuple[int, str, list[int]]] = []
         for rec in records:
             v = rec["batch_id"]
             if upto is not None and v > upto:
                 break
             if CommitLog.is_compaction(rec):
-                layers = [(v, self._version_dir("base", v), rec["bases"])]
+                layers = [(v, "base", rec["bases"])]
             else:
-                layers.append((v, self._version_dir("v", v), rec["buckets"]))
+                layers.append((v, "v", rec["buckets"]))
         return [layer for layer in layers if layer[2]]
 
     @staticmethod
@@ -229,9 +231,6 @@ class UpsertSink:
     def _version_dir(self, kind: str, version: int) -> str:
         """``v`` holds a batch's delta, ``base`` a vacuum's fold."""
         return os.path.join(self.path, "versions", f"{kind}={version}")
-
-    def _bucket_dir(self, bucket: int, version: int) -> str:
-        return os.path.join(self._version_dir("v", version), f"_bucket={bucket}")
 
     def _bucket_col(self) -> F.Column:
         return F.pmod(F.hash(*self.key_cols), F.lit(self.num_buckets))
@@ -274,27 +273,27 @@ class UpsertSink:
         is_tomb = F.lit(False)
         if tomb in batch_df.columns:
             is_tomb = F.coalesce(F.col(tomb), F.lit(False))
-        rows = batch_df.withColumns({"_bucket": self._bucket_col(), _TOMB: is_tomb})
-        cols = [c for c in rows.columns if c not in ("_bucket", _TOMB, tomb)]
+        rows = batch_df.withColumn(_TOMB, is_tomb)
+        cols = [c for c in rows.columns if c not in (_TOMB, tomb)]
         values = [c for c in cols if c not in self.key_cols]
-        # ONE exchange: each touched bucket lands whole in one shuffle
-        # partition, so the write makes one file per bucket. The
-        # batch's newest row per key is the delta, tombstones included.
+        # The batch's newest row per key is the delta, tombstones
+        # included. max_by reduces map-side before the one exchange;
+        # the coalesce caps the files when adaptive execution is off
+        # (with it on, a small batch is one partition already).
         delta = (
-            rows.repartition("_bucket")
-            .groupBy("_bucket", *self.key_cols)
+            rows.groupBy(*self.key_cols)
             .agg(
                 F.max_by(F.struct(*values, _TOMB), F.struct(self.order_col)).alias("_row")
             )
-            .select(*self.key_cols, "_row.*", "_bucket")
-            .select(*cols, _TOMB, F.lit(batch_id).cast("long").alias(_VER), "_bucket")
+            .select(*self.key_cols, "_row.*")
+            .select(*cols, _TOMB, F.lit(batch_id).cast("long").alias(_VER))
+            .coalesce(self.num_buckets)
         )
         seen = Observation()
         # the deterministic path makes a crashed replay overwrite it
         (
-            delta.observe(seen, F.collect_set("_bucket").alias("b"))
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
+            delta.observe(seen, F.collect_set(self._bucket_col()).alias("b"))
+            .write.mode("overwrite")
             .parquet(self._version_dir("v", batch_id))
         )
         touched = sorted(seen.get["b"])
@@ -327,16 +326,20 @@ class UpsertSink:
         """The live rows of ``layers`` (of ``buckets`` only, if given):
         the newest row per key by version, tombstones dropped, exactly
         the ``schema`` columns. Read with the pin, so no job infers a
-        schema, and one path per layer unless ``buckets`` picks some."""
+        schema, and one path per layer, except that ``buckets`` picks
+        a base's bucket directories and skips deltas that touched none
+        of them. A delta is read whole (flat files, or one directory
+        per bucket as earlier versions wrote them) and its rows are
+        filtered by bucket."""
         paths, held = [], []
-        for _, d, bs in layers:
-            if buckets is None:
-                paths.append(d)
-                held += bs
-            else:
-                mine = [b for b in bs if b in buckets]
+        for v, kind, bs in layers:
+            mine = bs if buckets is None else [b for b in bs if b in buckets]
+            d = self._version_dir(kind, v)
+            if buckets is not None and kind == "base":
                 paths += [os.path.join(d, f"_bucket={b}") for b in mine]
-                held += mine
+            elif mine:
+                paths.append(d)
+            held += mine
         if not paths:
             return spark.createDataFrame([], schema)
         rows = (
@@ -352,6 +355,8 @@ class UpsertSink:
             )
             .parquet(*paths)
         )
+        if buckets is not None:
+            rows = rows.where(self._bucket_col().isin(buckets))
         if len(set(held)) < len(held):
             # a key lives in one bucket, and a layer holds one row per
             # key: with one layer per bucket there is nothing to fold

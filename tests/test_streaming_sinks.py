@@ -529,10 +529,9 @@ class TestManifestScanCost:
             sink.write_batch(spark.createDataFrame([(k, "a", 1) for k in range(16)], schema), 0)
             for b in range(1, n_batches):
                 # what a commit touching every bucket publishes, and the
-                # (here empty) delta directories its record names
+                # (here empty) delta directory its record names
                 sink.log.append(b, {"batch_id": b, "buckets": [0, 1, 2, 3]})
-                for bucket in range(4):
-                    os.makedirs(sink._bucket_dir(bucket, b))
+                os.makedirs(sink._version_dir("v", b))
 
             opened.clear()
             assert not sink.is_batch_committed(real)
@@ -1757,27 +1756,37 @@ class TestUpsertSink:
         state = {r.k: r.val for r in sink.current_state(spark).collect()}
         assert state == {1: "a", 2: "B"}
 
-    def test_one_zstd_file_per_touched_bucket(self, spark, tmp_path):
-        """Each commit writes one file per touched bucket, however many
-        tasks the batch and the carried-over state arrive in, with
-        adaptive query execution on (the default) or off (as for a batch
-        from a plan with stateful streaming operators)."""
+    def test_one_zstd_file_per_commit(self, spark, tmp_path):
+        """A commit writes its delta as flat files, with no bucket
+        directory, however many tasks the batch arrives in: one file
+        with adaptive query execution on (the default), and at most
+        ``num_buckets`` with it off (as for a batch from a plan with
+        stateful streaming operators), even when there are more shuffle
+        partitions than buckets."""
+        confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
         for aqe in ("true", "false"):
             sink = self._sink(tmp_path / f"aqe_{aqe}")
-            prev = spark.conf.get("spark.sql.adaptive.enabled")
+            prev = {c: spark.conf.get(c) for c in confs}
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            spark.conf.set("spark.sql.shuffle.partitions", str(4 * sink.num_buckets))
             try:
                 sink.write_batch(self._df(spark, [(k, "a", 1) for k in range(64)]).repartition(4), 0)
                 sink.write_batch(
                     self._df(spark, [(k, "b", 2) for k in range(0, 64, 5)]).repartition(4), 1
                 )
             finally:
-                spark.conf.set("spark.sql.adaptive.enabled", prev)
+                for c, v in prev.items():
+                    spark.conf.set(c, v)
             touched = [b for b, v in sink.bucket_versions().items() if v == 1]
             assert len(touched) > 1
-            for b in touched:
-                files = [f for f in os.listdir(sink._bucket_dir(b, 1)) if f.endswith(".parquet")]
-                assert len(files) == 1 and files[0].endswith(".zstd.parquet"), (aqe, b, files)
+            names = os.listdir(sink._version_dir("v", 1))
+            assert not [n for n in names if n.startswith("_bucket=")], names
+            files = [n for n in names if n.endswith(".parquet")]
+            assert all(f.endswith(".zstd.parquet") for f in files), files
+            if aqe == "true":
+                assert len(files) == 1, files
+            else:
+                assert 1 <= len(files) <= sink.num_buckets, files
             assert sink.current_state(spark).count() == 64
 
     def test_commit_on_existing_state_runs_at_most_two_jobs(self, spark, tmp_path):
@@ -2000,6 +2009,102 @@ class TestUpsertBackfill:
         assert self._state(spark, sink, as_of=-1) == {1: "old", 2: "x"}
         sink.vacuum(keep_last=1)
         assert self._state(spark, sink) == {1: "new", 2: "x", 3: "y"}
+
+
+class TestUpsertBucketDirDeltas:
+    """State whose deltas an earlier version wrote as one
+    ``v=<id>/_bucket=<b>/`` directory per touched bucket reads, vacuums
+    and takes new commits beside the flat deltas written now, with no
+    rebuild: every read agrees with a dict model."""
+
+    OPS = [
+        [(k, f"a{k}", False, 1) for k in range(12)],
+        [
+            (1, "b1", False, 2),
+            (2, None, True, 2),
+            (5, "b5", False, 2),
+            (9, None, True, 2),
+            (14, None, True, 2),
+        ],
+        [(2, "c2", False, 3), (3, "c3", False, 3), (5, None, True, 3), (12, "c12", False, 3)],
+        [(1, None, True, 4), (3, "d3", False, 4), (9, "d9", False, 4), (13, "d13", False, 4)],
+        [(0, "e0", False, 5), (2, None, True, 5), (13, "e13", False, 5)],
+    ]
+
+    def _df(self, spark, rows):
+        return spark.createDataFrame(rows, "k long, val string, _del boolean, ver long")
+
+    def _bucketed_commit(self, spark, sink, rows, batch_id):
+        """What the earlier write path left for one batch: the batch's
+        newest row per key (here one row per key) with the reserved
+        columns, partitioned into ``_bucket=<b>`` directories, and the
+        same log record."""
+        from stream_loader_spark.sinks.upsert import _TOMB, _VER
+
+        delta = self._df(spark, rows).select(
+            "k", "val", "ver", F.col("_del").alias(_TOMB), F.lit(batch_id).cast("long").alias(_VER)
+        )
+        delta = delta.withColumn("_bucket", sink._bucket_col())
+        delta.write.partitionBy("_bucket").parquet(sink._version_dir("v", batch_id))
+        record = {
+            "batch_id": batch_id,
+            "buckets": sorted({r._bucket for r in delta.select("_bucket").collect()}),
+        }
+        if batch_id == 0:
+            record["config"] = sink._config()
+            record["schema"] = delta.select("k", "val", "ver").schema.jsonValue()
+        sink.log.append(batch_id, record)
+
+    def test_bucket_dir_deltas_then_flat_deltas_match_model(self, spark, tmp_path):
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        sink = UpsertSink(
+            str(tmp_path / "state"), ["k"], "ver", num_buckets=4, tombstone_col="_del"
+        )
+        model: dict[int, str] = {}
+        snaps, feeds = {}, {}
+        for batch_id, ops in enumerate(self.OPS):
+            if batch_id < 2:
+                self._bucketed_commit(spark, sink, ops, batch_id)
+            elif batch_id < 4:
+                sink.write_batch(self._df(spark, ops), batch_id)
+            feed = {}
+            for k, val, dele, _ in ops:
+                if dele and k in model:
+                    feed[k] = ("delete", None, model.pop(k))
+                elif not dele and k not in model:
+                    feed[k] = ("insert", val, None)
+                elif not dele and model[k] != val:
+                    feed[k] = ("update", val, model[k])
+                if not dele:
+                    model[k] = val
+            snaps[batch_id], feeds[batch_id] = dict(model), feed
+
+        versions = os.path.join(sink.path, "versions")
+        assert any(n.startswith("_bucket=") for n in os.listdir(os.path.join(versions, "v=1")))
+        assert not any(n.startswith("_bucket=") for n in os.listdir(os.path.join(versions, "v=2")))
+
+        def state(as_of=None):
+            rows = sink.current_state(spark, as_of_batch=as_of).collect()
+            return {r.k: r.val for r in rows}
+
+        def change_feed(batch_id):
+            rows = sink.change_feed(spark, batch_id).collect()
+            return {r.k: (r._change, r.val, r._old_val) for r in rows}
+
+        assert state() == snaps[3]
+        for b in range(4):
+            assert state(b) == snaps[b], b
+            assert change_feed(b) == feeds[b], b
+
+        sink.vacuum(keep_last=1)
+        assert sorted(os.listdir(versions)) == ["base=3"]
+        assert state() == state(3) == snaps[3]
+
+        sink.write_batch(self._df(spark, self.OPS[4]), 4)
+        assert state() == snaps[4]
+        assert state(3) == snaps[3]
+        assert change_feed(4) == feeds[4]
 
 
 class TestUpsertTimeTravel:
