@@ -33,8 +33,9 @@ def main(argv: list[str] | None = None) -> int:
         "--maintain",
         action="store_true",
         help="run the configured sink's maintenance instead of streaming "
-        "(manifest: compact data + vacuum; ingest: state compaction) — "
-        "schedule between processing runs",
+        "(manifest: compact data + vacuum; offsets and ingest sinks: "
+        "compact + vacuum their batch-directory table) — schedule "
+        "between processing runs",
     )
     parser.add_argument(
         "--vacuum-keep-last",
@@ -73,7 +74,7 @@ def main(argv: list[str] | None = None) -> int:
             # fold the live batch dirs, then delete what the fold superseded
             ran += [f"compact={sink.compact_data(spark)}", f"vacuum_removed={len(sink.vacuum())}"]
         elif hasattr(sink, "compact"):
-            ran.append(f"compact={sink.compact(spark)}")
+            ran += [f"compact={sink.compact(spark)}", f"vacuum_removed={len(sink.vacuum())}"]
         if args.vacuum_keep_last is not None:
             removed = target.vacuum(keep_last=args.vacuum_keep_last)
             ran.append(f"vacuum_removed={len(removed)}")

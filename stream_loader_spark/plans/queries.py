@@ -253,7 +253,7 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the fixtures' code-version token: bump it when the written shape of a
 # sink fixture changes
-_FIXTURE_VERSION = 6
+_FIXTURE_VERSION = 7
 _FIXTURE_TREE = "sink_fixtures_v"
 
 
@@ -445,7 +445,7 @@ def k8_inrow_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(3):
             sink(rec.where(slice_col == b), b)  # idempotent: skips committed
         # the crashed tail: data written, record never appended
-        rec.where(slice_col == 3).write.mode("overwrite").parquet(sink._batch_dir(3))
+        rec.where(slice_col == 3).write.mode("overwrite").parquet(sink.store.batch_dir("data", 3))
 
     _build_fixture(fdir, build)
     return sink.committed_positions(spark)

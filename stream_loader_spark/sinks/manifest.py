@@ -33,9 +33,10 @@ before manifest → replay overwrites the same dir and then commits; die
 after manifest → replay sees the manifest and skips. No distributed
 coordination, no Kafka metadata.
 
-``CommitLog`` is the one record format behind this sink, the offsets
-sinks and the upsert sink (and the materialized-view sinks through
-it): one ``batch-<id>.json`` record per committed batch,
+``CommitLog`` is the one record format behind this sink, the upsert
+sink (and the materialized-view sinks through it) and the
+batch-directory tables of the offsets and ingest sinks
+(sinks/table.py): one ``batch-<id>.json`` record per committed batch,
 ``compaction-<id>.json`` records that supersede what they fold, one
 replay check and one vacuum.
 
@@ -90,8 +91,9 @@ ROWS_PER_WRITE_TASK = 15_000
 def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
     """Durable atomic JSON publish: fsync the temp file, rename, fsync
     the directory so the rename itself survives power loss. The ONE
-    commit primitive for every manifest in the repo (file sink, upsert,
-    ingest compaction) — copies drift, this doesn't."""
+    commit primitive for every manifest in the repo (``CommitLog`` and
+    the ingest sinks' scheme and growth files) — copies drift, this
+    doesn't."""
     os.makedirs(dir_path, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=dir_path, suffix=".tmp")
     try:
@@ -112,7 +114,8 @@ def atomic_write_json(dir_path: str, record: dict, final_name: str) -> None:
 
 class CommitLog:
     """Append-only commit records in one directory: the durable commit
-    primitive of the manifest, offsets and upsert sinks.
+    primitive of the manifest and upsert sinks and of the batch-directory
+    tables (sinks/table.py) behind the offsets and ingest sinks.
 
     A batch commits by publishing ``batch-<id>.json`` (``append``); the
     record's presence IS the commit, and its content is the sink's. A
@@ -166,44 +169,43 @@ class CommitLog:
 
     @staticmethod
     def is_compaction(rec: dict) -> bool:
-        return "replaces_upto" in rec or bool(rec.get("replaces"))
+        return "replaces_upto" in rec
+
+    def _read(self, name: str) -> dict:
+        """One record. A compaction record without ``replaces_upto``
+        enumerates what it folds, a format this log no longer reads."""
+        with open(os.path.join(self.path, name)) as f:
+            rec = json.load(f)
+        if name.startswith("compaction-") and not self.is_compaction(rec):
+            raise ValueError(
+                f"compaction record {name} in {self.path!r} has no replaces_upto: "
+                "it predates supersession watermarks; rebuild the table"
+            )
+        return rec
 
     @classmethod
-    def _rec_upto(cls, rec: dict) -> int:
-        """Highest NON-NEGATIVE batch id a compaction record supersedes.
-        Records carry it as ``replaces_upto``; legacy records enumerated
-        ``replaces`` explicitly. Reserved negative backfill ids are
-        OUTSIDE the monotone space and never raise the watermark — see
-        ``_rec_neg``."""
-        if "replaces_upto" in rec:
-            return int(rec["replaces_upto"])
-        return max(
-            (i for i in rec.get("replaces", []) if i >= 0), default=cls._NO_UPTO
-        )
-
-    @staticmethod
-    def _rec_neg(rec: dict) -> set[int]:
-        """Folded reserved (negative) backfill ids, enumerated exactly.
-        Bounded by construction: backfills are rare one-shot loads, not
-        per-micro-batch events."""
-        if "replaces_neg" in rec:
-            return set(rec["replaces_neg"])
-        return {i for i in rec.get("replaces", []) if i < 0}
+    def _supersedes(cls, compactions) -> tuple[int, set[int]]:
+        """(watermark over non-negative ids, folded negative-id set) of
+        the compaction records. Reserved negative backfill ids are
+        outside the monotone space and never raise the watermark; a
+        record lists them in ``replaces_neg`` (bounded: backfills are
+        rare one-shot loads)."""
+        upto = cls._NO_UPTO
+        neg: set[int] = set()
+        for rec in compactions:
+            upto = max(upto, rec["replaces_upto"])
+            neg |= set(rec["replaces_neg"])
+        return upto, neg
 
     def watermark(self) -> tuple[int, set[int]]:
-        """(watermark over non-negative ids, folded negative-id set) —
-        reading only compaction records keeps the per-batch committed
-        check O(#compactions), not O(#batches)."""
-        upto = self._NO_UPTO
-        neg: set[int] = set()
-        for name in os.listdir(self.path):
-            if not (name.startswith("compaction-") and name.endswith(".json")):
-                continue
-            with open(os.path.join(self.path, name)) as f:
-                rec = json.load(f)
-            upto = max(upto, self._rec_upto(rec))
-            neg |= self._rec_neg(rec)
-        return upto, neg
+        """``_supersedes`` of the log: reading only compaction records
+        keeps the per-batch committed check O(#compactions), not
+        O(#batches)."""
+        return self._supersedes(
+            self._read(name)
+            for name in os.listdir(self.path)
+            if name.startswith("compaction-") and name.endswith(".json")
+        )
 
     def supersession(self, folded_ids: list[int]) -> dict:
         """The watermark fields of a compaction record that folds the
@@ -217,19 +219,12 @@ class CommitLog:
 
     def _resolve(self) -> list[tuple[str, dict, bool]]:
         """Every record as (path, record, superseded), in name order."""
-        named = []
-        for name in self.names():
-            path = os.path.join(self.path, name)
-            with open(path) as f:
-                named.append((path, json.load(f)))
+        named = [(os.path.join(self.path, name), self._read(name)) for name in self.names()]
         compactions = [rec for _, rec in named if self.is_compaction(rec)]
         if not compactions:
             return [(path, rec, False) for path, rec in named]
         newest = max(r["batch_id"] for r in compactions)
-        upto = max(self._rec_upto(r) for r in compactions)
-        neg: set[int] = set()
-        for r in compactions:
-            neg |= self._rec_neg(r)
+        upto, neg = self._supersedes(compactions)
 
         def superseded(rec: dict) -> bool:
             if self.is_compaction(rec):

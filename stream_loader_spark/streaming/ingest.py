@@ -3,17 +3,21 @@
 Composes the incremental training-corpus operators with Structured
 Streaming: each micro-batch of documents is exact-deduped within
 itself and against the persisted content-hash history, survivors land
-in the corpus directory, and exactly their hashes are appended to the
-history — so the history table stays the authoritative 32-bytes-per-
-document dedup state across restarts.
+in the corpus, and exactly their hashes are appended to the history —
+so the history table stays the authoritative 32-bytes-per-document
+dedup state across restarts.
 
-Exactly-once shape (same discipline as sinks/manifest.py): both the
-corpus rows and the history append for batch ``n`` write to
-deterministic ``batch=n`` subdirectories in overwrite mode, so a
-replayed batch overwrites its own output instead of duplicating it —
-and because the batch's own hashes live in ``batch=n`` of the history,
-a replay reads a history WITHOUT that batch's hashes (its own partial
-write is overwritten, not double-counted).
+Exactly-once shape: every ingest sink keeps its state in one
+batch-directory table (sinks/table.py). Batch ``n`` writes a
+deterministic ``batch=n`` dir under each of the sink's parts (corpus
+and hashes, corpus and bands, assignments, segments) in overwrite
+mode, then appends one ``CommitLog`` record naming the rows each dir
+holds. Readers and the history a batch dedups against see only
+recorded batches, so a crash before the record leaves invisible files
+that the replay overwrites, and a replay of a recorded batch is a
+no-op. ``compact`` folds the recorded dirs into one generation per
+part under one compaction record and ``vacuum`` deletes what it
+superseded; run both between triggers (``--maintain``).
 
 Scale: the per-batch work is the batch's hash aggregate plus an
 anti-join against the history table; with both sides bucketed on
@@ -27,16 +31,18 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_loader_spark.operators.dedup import incremental_exact_dedup
 from stream_loader_spark.sinks.manifest import atomic_write_json
+from stream_loader_spark.sinks.table import BatchTable
 
 # the JSON state files, each written only through atomic_write_json
-_META = "compaction.json"
 _GROWTH = "growth.json"
 _SCHEME = "scheme.json"
+# generations a tiered IndexIngestSink.compact keeps live
+_TIER_FANOUT = 8
 
 
 def _read_json(path: str) -> dict | None:
@@ -49,301 +55,21 @@ def _read_json(path: str) -> dict | None:
         return None
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` with its row count observed by the action that runs it:
-    the count rides that job instead of running one of its own. Read it
-    with ``rows.get["n"]`` after the action."""
-    rows = Observation()
-    return df.observe(rows, F.count(F.lit(1)).alias("n")), rows
-
-
 def _has_data_files(d: str) -> bool:
     """True if the directory tree contains at least one parquet part
     file. The honest emptiness test: deciding 'empty' from a failed
     spark.read would turn a transient IO error into silently-missing
-    state — and, during compaction, into deleting data that was never
-    folded."""
+    state."""
     for _root, _dirs, files in os.walk(d):
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
 
 
-class BatchDirState:
-    """State stored as ``batch=<n>`` directories, with manifest-driven
-    compaction bounding the directory count.
-
-    The ingest sinks append one deterministic directory per micro-batch
-    (replay-safe by overwrite), so state listings grow one directory
-    per batch forever — at one batch per minute that is half a million
-    directories a year, and every history read lists all of them. This
-    helper folds all FULLY-COMMITTED batches (everything below the
-    highest batch id present; only the in-flight batch can ever be
-    replayed) into one consolidated generation directory:
-
-    1. the consolidated rows are written to ``compact/g=<gen>`` — not
-       yet referenced, so a crash here leaves an orphan, never a wrong
-       read;
-    2. ``compaction.json`` flips atomically (``atomic_write_json``) to
-       ``{upto, gens, next_gen}`` — the commit point;
-    3. every ``batch=<b>`` dir below ``upto`` and every generation the
-       new meta does not name is deleted. Every fold ends in this one
-       flip-and-sweep (``_commit``), so dirs a crash mid-sweep or
-       before a flip leaves behind go at the next fold's commit.
-
-    Readers take the referenced generation plus batch dirs ≥ ``upto``;
-    the replay-exclusion contract is preserved because the excludable
-    (in-flight) batch is always ≥ ``upto``. Run ``compact()`` between
-    triggers, like ``vacuum`` — never concurrently with a writing
-    batch.
-    """
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-        os.makedirs(self.root, exist_ok=True)
-
-    def _meta(self) -> dict:
-        meta = _read_json(os.path.join(self.root, _META))
-        return meta or {"upto": 0, "gen": None}
-
-    @staticmethod
-    def _gens_of(meta: dict) -> list[int]:
-        """Referenced generation ids, oldest first. Reads both the
-        multi-generation format ({"gens": [...]}) and the
-        single-generation one ({"gen": g}) that state written before
-        tiered compaction holds."""
-        if "gens" in meta:
-            return list(meta["gens"])
-        return [meta["gen"]] if meta.get("gen") is not None else []
-
-    def _gen_dir(self, gen: int) -> str:
-        return os.path.join(self.root, "compact", f"g={gen}")
-
-    @staticmethod
-    def _dir_bytes(d: str) -> int:
-        total = 0
-        for dirpath, _dirnames, filenames in os.walk(d):
-            for f in filenames:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
-                except OSError:
-                    pass
-        return total
-
-    def batch_ids(self) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch=")
-        )
-
-    def write_batch(self, df: DataFrame, batch_id: int, partition_by: str | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(os.path.join(self.root, f"batch={batch_id}"))
-
-    def dirs(self, exclude_batch: int | None = None) -> list[str]:
-        meta = self._meta()
-        out = [self._gen_dir(g) for g in self._gens_of(meta)]
-        out += [
-            os.path.join(self.root, f"batch={b}")
-            for b in self.batch_ids()
-            if b >= meta["upto"] and b != exclude_batch
-        ]
-        return out
-
-    @staticmethod
-    def _read_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame | None:
-        """Union the given state directories. Empty directories are
-        detected by LISTING (never by catching a failed read — a real
-        read error must propagate, not masquerade as emptiness). Flat
-        layouts read as ONE multi-root scan; only dirs with a Hive
-        layout inside (e.g. cluster_id=<c>) are read per-dir under
-        their own basePath, because a single multi-root read would
-        conflict on the partition-style outer dir names (batch=<n>)."""
-        nonempty = [d for d in dirs if _has_data_files(d)]
-        if not nonempty:
-            return None
-
-        def _hive_inside(d: str) -> bool:
-            return any(
-                "=" in e and os.path.isdir(os.path.join(d, e)) for e in os.listdir(d)
-            )
-
-        nested = [d for d in nonempty if _hive_inside(d)]
-        flat = [d for d in nonempty if d not in nested]
-        parts = []
-        if flat:
-            parts.append(spark.read.parquet(*flat))
-        for d in nested:
-            parts.append(spark.read.option("basePath", d).parquet(d))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def read(self, spark: SparkSession, exclude_batch: int | None = None) -> DataFrame | None:
-        return self._read_dirs(spark, self.dirs(exclude_batch))
-
-    def _next_gen(self, meta: dict) -> int:
-        gens = self._gens_of(meta)
-        return int(meta.get("next_gen", (max(gens) + 1 if gens else 1)))
-
-    def _write_gen(
-        self, df: DataFrame, gen: int, partition_by: str | None, fold=None
-    ) -> int:
-        """Write one generation dir (not yet referenced — a crash here
-        leaves an orphan, never a wrong read) and return its row count,
-        observed on the write. ``fold`` optionally re-aggregates the
-        unioned rows first (e.g. merging duplicate (token, doc) rows
-        across segments)."""
-        if fold is not None:
-            df = fold(df)
-        df, rows = _counted(df)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(self._gen_dir(gen))
-        return rows.get["n"]
-
-    def _commit(self, upto: int, gens: list[int], next_gen: int) -> None:
-        """Flip ``compaction.json`` to ``gens`` + the batch dirs from
-        ``upto``, then delete what it no longer names: every
-        ``batch=<b>`` dir below ``upto`` and every ``compact/g=<g>``
-        dir outside ``gens``."""
-        atomic_write_json(self.root, {"upto": upto, "gens": gens, "next_gen": next_gen}, _META)
-        for b in self.batch_ids():
-            if b < upto:
-                shutil.rmtree(os.path.join(self.root, f"batch={b}"), ignore_errors=True)
-        comp_root = os.path.join(self.root, "compact")
-        if os.path.isdir(comp_root):
-            for e in os.listdir(comp_root):
-                if e.startswith("g=") and int(e.split("=", 1)[1]) not in gens:
-                    shutil.rmtree(os.path.join(comp_root, e), ignore_errors=True)
-
-    def compact(
-        self, spark: SparkSession, partition_by: str | None = None, fold=None
-    ) -> int:
-        """Fold every batch below the highest id present (plus ALL prior
-        generations) into ONE new generation. Returns the number of rows
-        consolidated (0 = nothing to do). This is the full refold — cost
-        is O(total state) per call; for bounded maintenance at high
-        batch counts use :meth:`compact_tiered`."""
-        meta = self._meta()
-        gens = self._gens_of(meta)
-        ids = self.batch_ids()
-        if not ids:
-            return 0
-        upto = ids[-1]  # highest id stays replayable, everything below folds
-        # batches below the previous upto are crash-mid-sweep orphans:
-        # their rows are ALREADY in the current generation, so the
-        # commit deletes them but they are never folded again
-        # (double-count guard)
-        new_fold = [
-            os.path.join(self.root, f"batch={b}")
-            for b in ids
-            if meta["upto"] <= b < upto
-        ]
-        # no new batches AND at most one generation: nothing to do —
-        # but a multi-generation (tiered) layout still consolidates,
-        # so a full refold after compact_tiered() is never a silent no-op
-        if not new_fold and len(gens) <= 1:
-            return 0
-        fold_dirs = [self._gen_dir(g) for g in gens] + new_fold
-        gen = self._next_gen(meta)
-        df = self._read_dirs(spark, fold_dirs)
-        if df is None:
-            # every foldable dir is empty (an all-duplicate stream
-            # writes one empty dir per trigger): still advance upto and
-            # drop them, or the directory growth this class exists to
-            # bound continues unbounded — the generations are unchanged
-            self._commit(upto, gens, gen)
-            return 0
-        n = self._write_gen(df, gen, partition_by, fold)
-        self._commit(upto, [gen], gen + 1)
-        return n
-
-    def compact_tiered(
-        self,
-        spark: SparkSession,
-        partition_by: str | None = None,
-        fold=None,
-        fanout: int = 8,
-    ) -> int:
-        """Generational (Lucene-style tiered) compaction: fold the new
-        fully-committed batches into ONE new generation — never
-        re-reading prior generations — then, while more than ``fanout``
-        generations exist, merge the ``fanout`` SMALLEST (by bytes)
-        into one. Each byte is rewritten O(log_fanout(total/batch))
-        times over the index's lifetime instead of once per compaction,
-        so per-call cost tracks the tail of new data, not O(index).
-
-        Same crash discipline as :meth:`compact`: each new generation
-        dir is unreferenced until its ``_commit``, which then deletes
-        every dir the new meta does not name. Returns the row count
-        folded from batch dirs this call (0 = no new batches; tier
-        merges may still run).
-        """
-        fanout = max(2, fanout)  # merging k dirs into 1 must shrink the list
-        meta = self._meta()
-        gens = self._gens_of(meta)
-        next_gen = self._next_gen(meta)
-        upto = int(meta["upto"])
-        ids = self.batch_ids()
-        rows = 0
-        if ids:
-            new_upto = ids[-1]
-            new_fold = [
-                os.path.join(self.root, f"batch={b}")
-                for b in ids
-                if upto <= b < new_upto
-            ]
-            if new_fold:
-                df = self._read_dirs(spark, new_fold)
-                if df is not None:
-                    rows = self._write_gen(df, next_gen, partition_by, fold)
-                    gens = gens + [next_gen]
-                    next_gen += 1
-                upto = new_upto
-                self._commit(upto, gens, next_gen)
-
-        while len(gens) > fanout:
-            by_size = sorted(gens, key=lambda g: self._dir_bytes(self._gen_dir(g)))
-            victims = by_size[:fanout]
-            df = self._read_dirs(spark, [self._gen_dir(g) for g in victims])
-            survivors = [g for g in gens if g not in victims]
-            if df is not None:
-                self._write_gen(df, next_gen, partition_by, fold)
-                survivors = survivors + [next_gen]
-            next_gen += 1
-            self._commit(upto, survivors, next_gen)
-            gens = survivors
-        return rows
-
-    def replace_all(
-        self, spark: SparkSession, df: DataFrame, partition_by: str | None = None
-    ) -> int:
-        """Replace the ENTIRE state (every batch dir and generation)
-        with ``df`` as one new generation — the primitive behind index
-        re-banding/rebuilds, where the replacement rows are derived
-        under a different scheme than the rows they supersede.
-
-        Same crash discipline as :meth:`compact`: the generation dir is
-        unreferenced until ``_commit``, which deletes every batch dir
-        and generation it supersedes. Caller contract (stricter than
-        compact):
-        the stream must be QUIESCED with its last batch fully
-        committed — the replacement subsumes even the highest batch id,
-        so a replay of that batch afterwards would see its own rows as
-        history.
-        """
-        meta = self._meta()
-        ids = self.batch_ids()
-        gen = self._next_gen(meta)
-        n = self._write_gen(df, gen, partition_by)
-        self._commit(max([meta["upto"], *(b + 1 for b in ids)]), [gen], gen + 1)
-        return n
+def _table(out_dir: str, *parts: str, partition_by: str | None = None) -> BatchTable:
+    """The sink's batch-directory table: ``parts`` are subdirs of
+    ``out_dir``, the log is ``out_dir/_manifest``."""
+    return BatchTable(out_dir, {p: os.path.join(out_dir, p) for p in parts}, partition_by)
 
 
 class IndexGrowthGuard:
@@ -362,8 +88,10 @@ class IndexGrowthGuard:
     :meth:`status` for maintenance jobs to trigger
     re-banding/retraining (``NearDupIngestSink.reband``).
 
-    Counts are updated AFTER a batch commits and keyed by batch id, so
-    a replayed batch does not double-count its rows.
+    A sink counts a batch after its writes and before its commit
+    record, keyed by batch id: a crash between the two replays the
+    batch, whose count the guard skips by id, so a count is never lost
+    nor doubled.
     """
 
     def __init__(self, index_dir: str, growth_factor: float = 8.0) -> None:
@@ -442,55 +170,46 @@ class DedupIngestSink:
     """``foreachBatch`` callable: dedup each batch against history and
     append survivors.
 
-    Layout under ``out_dir``::
+    Layout under ``out_dir`` (a batch-directory table, see module doc)::
 
-        corpus/batch=<n>/   surviving document rows (+ content_hash)
-        hashes/batch=<n>/   exactly the hashes this batch added
+        corpus/   surviving document rows (+ content_hash)
+        hashes/   exactly the hashes each batch added
+        _manifest/
     """
 
     def __init__(self, out_dir: str, text_col: str = "text", id_col: str = "doc_id") -> None:
-        self.out_dir = out_dir
         self.text_col = text_col
         self.id_col = id_col
-        self._hash_state = BatchDirState(self._hashes_dir)
+        self.store = _table(out_dir, "corpus", "hashes")
 
-    @property
-    def _corpus_dir(self) -> str:
-        return os.path.join(self.out_dir, "corpus")
-
-    @property
-    def _hashes_dir(self) -> str:
-        return os.path.join(self.out_dir, "hashes")
-
-    def _history(self, spark: SparkSession, exclude_batch: int) -> DataFrame:
-        """All committed hashes EXCEPT the given batch's own (a replay
-        must not see its previous partial write as 'history')."""
-        hist = self._hash_state.read(spark, exclude_batch=exclude_batch)
-        if hist is None:
-            return spark.createDataFrame([], "content_hash string")
-        return hist.select("content_hash")
+    def _history(self, spark: SparkSession) -> DataFrame:
+        """Every committed hash."""
+        return self.store.read(spark, "hashes", "content_hash string").select("content_hash")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        seen = self._history(spark, exclude_batch=batch_id)
+        if self.store.replayed(batch_df, batch_id):
+            return
         survivors = incremental_exact_dedup(
-            batch_df, seen, text_col=self.text_col, id_col=self.id_col
+            batch_df,
+            self._history(batch_df.sparkSession),
+            text_col=self.text_col,
+            id_col=self.id_col,
         )
-        # deterministic dirs + overwrite = replay-safe (see module doc)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self._corpus_dir, f"batch={batch_id}")
+        rows = self.store.write(
+            batch_id, {"corpus": survivors, "hashes": survivors.select("content_hash")}
         )
-        self._hash_state.write_batch(survivors.select("content_hash"), batch_id)
+        self.store.commit(batch_id, rows)
 
-    def compact(self, spark: SparkSession) -> int:
-        """Fold fully-committed hash batches into one generation (run
-        between triggers; see BatchDirState)."""
-        return self._hash_state.compact(spark)
+    def compact(self, spark: SparkSession) -> dict[str, int]:
+        """Fold the committed batches into one generation per part (run
+        between triggers); returns the rows written per part."""
+        return self.store.compact(spark)
+
+    def vacuum(self) -> list[str]:
+        return self.store.vacuum()
 
     def committed_corpus(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self._corpus_dir).parquet(
-            self._corpus_dir
-        )
+        return self.store.read(spark, "corpus")
 
 
 class NearDupIngestSink:
@@ -503,10 +222,9 @@ class NearDupIngestSink:
       (history always wins — it is already written);
     - within the batch, near-dup clusters keep their min-id member
       (connected components over the batch-only pairs);
-    - survivors' band rows are appended to the index under
-      ``bands/batch=<n>`` — deterministic dir + overwrite, so replays
-      are idempotent and a replay never sees its own partial append
-      as history.
+    - survivors land in ``corpus`` and their band rows in ``bands``,
+      the two parts of the sink's batch-directory table (see module
+      doc); the corpus is also the index's ``(id, text)`` store.
 
     Scale: the per-batch cost is the batch's own MinHash (corpus text
     is shingled only for collision-touched ids, see
@@ -529,8 +247,7 @@ class NearDupIngestSink:
         self.id_col = id_col
         self.num_bands = NUM_BANDS if num_bands is None else int(num_bands)
         self._check_scheme()
-        self._band_state = BatchDirState(self._bands_dir)
-        self._doc_state = BatchDirState(self._docs_dir)
+        self.store = _table(out_dir, "corpus", "bands")
         self.growth = IndexGrowthGuard(self.out_dir, growth_factor)
 
     @property
@@ -564,20 +281,20 @@ class NearDupIngestSink:
             return
         if existing is None:
             # Only stamp a genuinely FRESH index. A directory that
-            # already holds band/doc data but no scheme.json was built
+            # already holds band data but no scheme.json was built
             # by a version that predates scheme stamping — its band
             # hashes come from an unknown family, so stamping and
             # probing it would be exactly the silent recall loss this
             # guard exists to prevent.
-            for sub in (self._bands_dir, self._docs_dir):
-                if os.path.isdir(sub) and os.listdir(sub):
-                    raise ValueError(
-                        f"band index at {self.out_dir!r} has data but no "
-                        "scheme.json: it predates banding-scheme stamping "
-                        "and its band hashes are from an unknown scheme; "
-                        "rebuild the index — probing across schemes "
-                        "silently loses recall"
-                    )
+            bands = os.path.join(self.out_dir, "bands")
+            if os.path.isdir(bands) and os.listdir(bands):
+                raise ValueError(
+                    f"band index at {self.out_dir!r} has data but no "
+                    "scheme.json: it predates banding-scheme stamping "
+                    "and its band hashes are from an unknown scheme; "
+                    "rebuild the index — probing across schemes "
+                    "silently loses recall"
+                )
             os.makedirs(self.out_dir, exist_ok=True)
             atomic_write_json(self.out_dir, {"scheme": SIGNATURE_SCHEME}, _SCHEME)
         elif existing.get("scheme") != SIGNATURE_SCHEME:
@@ -588,35 +305,6 @@ class NearDupIngestSink:
                 "matching version) — probing across schemes silently "
                 "loses recall"
             )
-
-    @property
-    def _corpus_dir(self) -> str:
-        return os.path.join(self.out_dir, "corpus")
-
-    @property
-    def _bands_dir(self) -> str:
-        return os.path.join(self.out_dir, "bands")
-
-    @property
-    def _docs_dir(self) -> str:
-        return os.path.join(self.out_dir, "docs")
-
-    def _index(self, spark: SparkSession, exclude_batch: int):
-        bands = self._band_state.read(spark, exclude_batch=exclude_batch)
-        docs = self._doc_state.read(spark, exclude_batch=exclude_batch)
-        if bands is None or docs is None:
-            return (
-                spark.createDataFrame(
-                    [], f"{self.id_col} long, band int, band_hash bigint"
-                ),
-                spark.createDataFrame(
-                    [], f"{self.id_col} long, {self.text_col} string"
-                ),
-            )
-        return (
-            bands.select(self.id_col, "band", "band_hash"),
-            docs.select(self.id_col, self.text_col),
-        )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from stream_loader_spark.operators.dedup import (
@@ -632,8 +320,15 @@ class NearDupIngestSink:
                 "its band rows may mix two schemes - rerun reband() to "
                 "finish the rebuild before probing"
             )
+        if self.store.replayed(batch_df, batch_id):
+            return
         self.growth.check("NearDupIngestSink")
-        hist_bands, hist_docs = self._index(spark, exclude_batch=batch_id)
+        hist_docs = self.store.read(
+            spark, "corpus", f"{self.id_col} long, {self.text_col} string"
+        ).select(self.id_col, self.text_col)
+        hist_bands = self.store.read(
+            spark, "bands", f"{self.id_col} long, band int, band_hash bigint"
+        ).select(self.id_col, "band", "band_hash")
         batch_df = batch_df.persist()
         pairs = incremental_near_dup_pairs(
             batch_df,
@@ -669,26 +364,26 @@ class NearDupIngestSink:
         losers = comps.where(F.col(self.id_col) != F.col("cluster_id")).select(self.id_col)
         survivors = remaining.join(losers, self.id_col, "left_anti").persist()
 
-        kept, rows = _counted(survivors)
-        kept.write.mode("overwrite").parquet(
-            os.path.join(self._corpus_dir, f"batch={batch_id}")
-        )
-        self._doc_state.write_batch(
-            survivors.select(self.id_col, self.text_col), batch_id
-        )
-        self._band_state.write_batch(
-            band_index(survivors, self.text_col, self.id_col, self.num_bands),
+        rows = self.store.write(
             batch_id,
+            {
+                "corpus": survivors,
+                "bands": band_index(survivors, self.text_col, self.id_col, self.num_bands),
+            },
         )
-        self.growth.observe(rows.get["n"], batch_id)
+        self.growth.observe(rows["corpus"], batch_id)  # before the record
+        self.store.commit(batch_id, rows)
         pairs.unpersist()
         batch_df.unpersist()
         survivors.unpersist()
 
-    def compact(self, spark: SparkSession) -> int:
-        """Fold fully-committed band/doc index batches (run between
-        triggers; see BatchDirState)."""
-        return self._band_state.compact(spark) + self._doc_state.compact(spark)
+    def compact(self, spark: SparkSession) -> dict[str, int]:
+        """Fold the committed batches into one generation per part (run
+        between triggers); returns the rows written per part."""
+        return self.store.compact(spark)
+
+    def vacuum(self) -> list[str]:
+        return self.store.vacuum()
 
     def reband(self, spark: SparkSession, num_bands: int | None = None) -> int:
         """Rebuild the band index from the persisted documents under a
@@ -699,8 +394,9 @@ class NearDupIngestSink:
         Cost is O(corpus text) — one re-shingle/re-hash pass — which is
         the honest price of changing LSH geometry; the guard's
         growth_factor spaces these rebuilds logarithmically over the
-        stream's lifetime. MUST run on a quiesced stream whose last
-        batch fully committed (``replace_all``'s contract). Crash
+        stream's lifetime. One compaction record folds the corpus into
+        one generation and replaces the bands with the rebuilt index
+        (``BatchTable.replace_all``); run it between triggers. Crash
         discipline: the ``rebanding`` marker flips in scheme.json
         first, so a crash between the band rewrite and the scheme
         re-stamp fails CLOSED on reopen (mixed-scheme band rows are
@@ -712,23 +408,21 @@ class NearDupIngestSink:
         if num_bands is not None:
             self.num_bands = int(num_bands)
         atomic_write_json(self.out_dir, {"scheme": self._scheme, "rebanding": True}, _SCHEME)
-        docs = self._doc_state.read(spark)
-        if docs is None:
-            docs = spark.createDataFrame(
-                [], f"{self.id_col} long, {self.text_col} string"
-            )
-        n = self._band_state.replace_all(
-            spark, band_index(docs, self.text_col, self.id_col, self.num_bands)
-        )
+        corpus = self.store.read(spark, "corpus", f"{self.id_col} long, {self.text_col} string")
+        n = self.store.replace_all(
+            spark,
+            {
+                "corpus": corpus,
+                "bands": band_index(corpus, self.text_col, self.id_col, self.num_bands),
+            },
+        )["bands"]
         atomic_write_json(self.out_dir, {"scheme": self._scheme}, _SCHEME)
         self._needs_reband = False
         self.growth.reset()
         return n
 
     def committed_corpus(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self._corpus_dir).parquet(
-            self._corpus_dir
-        )
+        return self.store.read(spark, "corpus")
 
 
 class IvfIngestSink:
@@ -745,9 +439,10 @@ class IvfIngestSink:
       ``assignments/batch=<n>/cluster_id=<c>/`` — Hive-partitioned by
       cluster, so a probe reads only its nprobe clusters' directories
       AT THE SCAN, at any index size.
-    - Deterministic dirs + overwrite keep replays idempotent (same
-      discipline as the dedup ingest sinks); training is deterministic,
-      so a replayed first batch rewrites the identical quantizer.
+    - ``assignments`` is the one part of the sink's batch-directory
+      table (see module doc), so replays are idempotent; training is
+      deterministic, so a first batch replayed before its record
+      rewrites the identical quantizer.
 
     ``topk`` probes the persisted index via ``ivf_probe`` — queries
     never trigger an index rebuild.
@@ -766,8 +461,7 @@ class IvfIngestSink:
         self.kmeans_iterations = kmeans_iterations
         self.id_col = id_col
         self.vec_col = vec_col
-        os.makedirs(self.out_dir, exist_ok=True)
-        self._assign_state = BatchDirState(self._assignments_dir)
+        self.store = _table(out_dir, "assignments", partition_by="cluster_id")
         # the frozen quantizer's cells fatten linearly as the corpus
         # grows past its training-time N (probe cost ~ nprobe * N / C);
         # the guard makes that drift loud instead of silent — the
@@ -778,10 +472,6 @@ class IvfIngestSink:
     @property
     def _centroids_dir(self) -> str:
         return os.path.join(self.out_dir, "centroids")
-
-    @property
-    def _assignments_dir(self) -> str:
-        return os.path.join(self.out_dir, "assignments")
 
     def centroids(self, spark: SparkSession) -> DataFrame | None:
         """The frozen quantizer, or None if never trained. Existence is
@@ -822,6 +512,8 @@ class IvfIngestSink:
         from stream_loader_spark.operators.similarity import assign_clusters
 
         spark = batch_df.sparkSession
+        if self.store.replayed(batch_df, batch_id):
+            return
         # the batch is consumed several times on the training path
         # (take, seed collect, one pass per Lloyd iteration, assignment
         # write) and twice otherwise — recomputing a source-backed
@@ -846,33 +538,29 @@ class IvfIngestSink:
                 cents = self.centroids(spark)
             # every row gets a cell (the trained quantizer is never
             # empty), so the rows written are the batch's rows
-            assigned, rows = _counted(
-                assign_clusters(
-                    batch_df,
-                    self.num_centroids,
-                    self.id_col,
-                    self.vec_col,
-                    centroids=cents,
-                )
+            assigned = assign_clusters(
+                batch_df, self.num_centroids, self.id_col, self.vec_col, centroids=cents
             )
-            self._assign_state.write_batch(
-                assigned, batch_id, partition_by="cluster_id"
-            )
-            self.growth.observe(rows.get["n"], batch_id)
+            rows = self.store.write(batch_id, {"assignments": assigned})
+            self.growth.observe(rows["assignments"], batch_id)  # before the record
+            self.store.commit(batch_id, rows)
             self.growth.check("IvfIngestSink")
         finally:
             batch_df.unpersist()
 
     def assignments(self, spark: SparkSession) -> DataFrame:
-        idx = self._assign_state.read(spark)
-        if idx is None:
-            raise ValueError(f"no committed assignments under {self.out_dir}")
-        return idx.select(self.id_col, self.vec_col, "cluster_id")
+        return self.store.read(spark, "assignments").select(
+            self.id_col, self.vec_col, "cluster_id"
+        )
 
-    def compact(self, spark: SparkSession) -> int:
-        """Fold fully-committed assignment batches into one generation,
-        keeping the cluster_id layout (run between triggers)."""
-        return self._assign_state.compact(spark, partition_by="cluster_id")
+    def compact(self, spark: SparkSession) -> dict[str, int]:
+        """Fold the committed batches into one generation, keeping the
+        cluster_id layout (run between triggers); returns the rows
+        written."""
+        return self.store.compact(spark)
+
+    def vacuum(self) -> list[str]:
+        return self.store.vacuum()
 
     def topk(
         self,
@@ -917,9 +605,10 @@ class IvfIngestSink:
         Cost is O(corpus) — Lloyd refinement plus one full
         reassignment pass — the honest price of changing quantizer
         geometry; the guard's growth factor spaces retrains
-        logarithmically over the stream's lifetime. MUST run on a
-        quiesced stream whose last batch fully committed
-        (``replace_all``'s contract). Crash discipline: the new
+        logarithmically over the stream's lifetime. Run it between
+        triggers: the reassigned vectors replace the assignments under
+        one compaction record (``BatchTable.replace_all``). Crash
+        discipline: the new
         centroids land via write-aside + directory rename BEFORE the
         assignment swap — a crash between the two leaves new centroids
         with old assignments, which ``retrain()`` rerun repairs and
@@ -969,9 +658,7 @@ class IvfIngestSink:
                 self.vec_col,
                 centroids=self.centroids(spark),
             )
-            n = self._assign_state.replace_all(
-                spark, assigned, partition_by="cluster_id"
-            )
+            n = self.store.replace_all(spark, {"assignments": assigned})["assignments"]
         finally:
             corpus.unpersist()
         self.growth.reset()
@@ -1002,9 +689,9 @@ class IndexIngestSink:
       n_buckets)``: a term lookup filters on tbucket, so the scan
       reads 1/n_buckets of the index regardless of corpus size — the
       property that keeps single-term queries interactive at 100 TB.
-    - Replay idempotence and compaction are ``BatchDirState``'s:
-      deterministic ``batch=<n>`` dirs in overwrite mode, fold behind
-      an atomic manifest flip (run ``compact()`` between triggers).
+    - Replay idempotence and compaction are the batch-directory
+      table's (see module doc): ``segments`` is its one part, and
+      ``compact()`` and ``vacuum()`` run between triggers.
     """
 
     def __init__(
@@ -1022,7 +709,7 @@ class IndexIngestSink:
         self.id_col = id_col
         self.n = n
         self.n_buckets = n_buckets
-        self._seg_state = BatchDirState(os.path.join(out_dir, "segments"))
+        self.store = _table(out_dir, "segments", partition_by="tbucket")
 
     def _segment(self, batch_df: DataFrame) -> DataFrame:
         # in-row run-length histogram (operators.text.doc_term_counts):
@@ -1038,8 +725,10 @@ class IndexIngestSink:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._seg_state.write_batch(
-            self._segment(batch_df), batch_id, partition_by="tbucket"
+        if self.store.replayed(batch_df, batch_id):
+            return
+        self.store.commit(
+            batch_id, self.store.write(batch_id, {"segments": self._segment(batch_df)})
         )
 
     def _merge_segments(self, df: DataFrame) -> DataFrame:
@@ -1054,26 +743,21 @@ class IndexIngestSink:
             F.sum("tc").alias("tc")
         )
 
-    def compact(self, spark: SparkSession, tiered: bool = False) -> int:
-        """Merge fully-committed segments, keeping the tbucket layout
-        (run between triggers, like vacuum). ``tiered=False`` folds the
-        whole index into one generation — O(index) per call;
-        ``tiered=True`` uses generational merging
-        (:meth:`BatchDirState.compact_tiered`) so per-call cost tracks
-        newly-arrived segments, the shape that stays bounded at
-        100k-micro-batch lifetimes. Duplicate (token, doc) rows across
-        the folded segments are summed either way."""
-        if tiered:
-            return self._seg_state.compact_tiered(
-                spark, partition_by="tbucket", fold=self._merge_segments
-            )
-        return self._seg_state.compact(
-            spark, partition_by="tbucket", fold=self._merge_segments
+    def compact(self, spark: SparkSession, tiered: bool = False) -> dict[str, int]:
+        """Merge the committed segments, keeping the tbucket layout (run
+        between triggers). ``tiered=False`` folds the whole index into
+        one generation — O(index) per call; ``tiered=True`` uses
+        generational merging (``BatchTable.compact`` with a fanout) so
+        per-call cost tracks newly-arrived segments, the shape that
+        stays bounded at 100k-micro-batch lifetimes. Duplicate (token,
+        doc) rows across the folded segments are summed either way.
+        Returns the rows the fold of new segments wrote."""
+        return self.store.compact(
+            spark, self._merge_segments, _TIER_FANOUT if tiered else None
         )
 
-    def _state(self, spark: SparkSession) -> DataFrame | None:
-        state = self._seg_state.read(spark)
-        return None if state is None else self._merge_segments(state)
+    def vacuum(self) -> list[str]:
+        return self.store.vacuum()
 
     def postings(
         self, spark: SparkSession, min_df: int = 2, max_df: int = 50
@@ -1083,9 +767,7 @@ class IndexIngestSink:
         ingested corpus (pinned by test, including docs split across
         micro-batches). A full-index aggregate: use ``lookup`` for term
         queries; this is the bulk/export path."""
-        state = self._state(spark)
-        if state is None:
-            raise ValueError(f"no committed segments under {self.out_dir}")
+        state = self._merge_segments(self.store.read(spark, "segments"))
         keep = (
             state.groupBy("token")
             .agg(F.count(F.lit(1)).alias("df"), F.sum("tc").alias("tf"))
@@ -1124,8 +806,8 @@ class IndexIngestSink:
         duplicate (token, doc) rows merge in the aggregate."""
         if not terms:
             raise ValueError("terms must be non-empty")
-        dirs = self._seg_state.dirs()
-        if not any(_has_data_files(d) for d in dirs):
+        dirs = self.store.dirs("segments")
+        if not dirs:
             raise ValueError(f"no committed segments under {self.out_dir}")
         term_lit = F.array(*[F.lit(t) for t in terms])
         buckets = sorted(
@@ -1142,7 +824,7 @@ class IndexIngestSink:
             p
             for d in dirs
             for b in buckets
-            if _has_data_files(p := os.path.join(d, f"tbucket={b}"))
+            if os.path.isdir(p := os.path.join(d, f"tbucket={b}"))
         ]
         if not pruned:
             return spark.createDataFrame(

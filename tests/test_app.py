@@ -123,7 +123,7 @@ class TestBuildApp:
         app = self._crash_after_sink_commit(
             spark,
             cfg,
-            lambda sink: [r["batch_id"] for r in sink.log.live()],
+            lambda sink: [r["batch_id"] for r in sink.store.log.live()],
         )
         rows = app.sink.table(spark).select("_partition", "_offset").collect()
         assert len(rows) == len(set(rows)) == 40
@@ -432,10 +432,32 @@ class TestMaintainCli:
         hashes = str(tmp_path / "corpus" / "hashes")
         assert len([d for d in os.listdir(hashes) if d.startswith("batch=")]) == 3
         assert main(["--config", cfg_path, "--maintain"]) == 0
-        assert len([d for d in os.listdir(hashes) if d.startswith("batch=")]) == 1
+        # compact folds every committed batch, vacuum deletes their dirs
+        assert [d for d in os.listdir(hashes) if d.startswith("batch=")] == []
         # history still authoritative after maintenance
         sink = DedupIngestSink(str(tmp_path / "corpus"))
-        assert sink._history(spark, exclude_batch=99).count() == 3
+        assert sink._history(spark).count() == 3
+
+    def test_maintain_compacts_and_vacuums_offsets_table(self, spark, tmp_path, capsys):
+        from stream_loader_spark.__main__ import main
+        from stream_loader_spark.sinks.offsets import InRowOffsetsSink
+
+        cfg = TestBuildApp()._config(tmp_path)
+        cfg["sink"] = {"type": "offsets", "path": str(tmp_path / "o")}
+        cfg_path = str(tmp_path / "app.json")
+        with open(cfg_path, "w") as fh:
+            json.dump(cfg, fh)
+        for _ in range(2):
+            _write_source(spark, cfg["source"]["path"], n=10)
+            assert main(["--config", cfg_path, "--drain"]) == 0
+        sink = InRowOffsetsSink(cfg["sink"]["path"])
+        before = sorted(map(tuple, sink.committed_positions(spark).collect()))
+        capsys.readouterr()
+        assert main(["--config", cfg_path, "--maintain"]) == 0
+        assert capsys.readouterr().out.strip() == "compact={'data': 20} vacuum_removed=2"
+        assert [d for d in os.listdir(cfg["sink"]["path"]) if d.startswith("batch=")] == []
+        assert sorted(map(tuple, sink.committed_positions(spark).collect())) == before
+        assert sink.table(spark).count() == 20
 
     def test_maintain_on_manifest_sink_and_vacuum_on_upsert(self, spark, tmp_path, capsys):
         from stream_loader_spark.__main__ import main

@@ -167,31 +167,33 @@ class TestNearDupIngestLongSoak:
         sink = NearDupIngestSink(str(tmp_path / "out"))
         batches, expected_ids = self._stream(rng)
 
-        def kill_doc_state(s):
-            real = s._doc_state.write_batch
+        def kill_band_write(s):
+            real = s.store._write
 
-            def boom(df, batch_id, partition_by=None):
-                raise RuntimeError("killed before doc-state write")
+            def boom(df, path):
+                if path.startswith(s.store.parts["bands"]):
+                    raise RuntimeError("killed before band write")
+                return real(df, path)
 
-            s._doc_state.write_batch = boom
-            return lambda: setattr(s._doc_state, "write_batch", real)
+            s.store._write = boom
+            return lambda: setattr(s.store, "_write", real)
 
-        def kill_band_state(s):
-            real = s._band_state.write_batch
+        def kill_record(s):
+            real = s.store.commit
 
-            def boom(df, batch_id, partition_by=None):
-                raise RuntimeError("killed before band-state write")
+            def boom(batch_id, rows):
+                raise RuntimeError("killed before commit record")
 
-            s._band_state.write_batch = boom
-            return lambda: setattr(s._band_state, "write_batch", real)
+            s.store.commit = boom
+            return lambda: setattr(s.store, "commit", real)
 
         kills = 0
         for b, docs in enumerate(batches):
             batch = spark.createDataFrame(docs, DOC_SCHEMA)
-            # ~20% of batches crash mid-write (corpus written, index
-            # partially written), then replay — restart semantics
+            # ~20% of batches crash mid-write (corpus written, bands
+            # not) or before the record, then replay — restart semantics
             if rng.random() < 0.2:
-                restore = rng.choice([kill_doc_state, kill_band_state])(sink)
+                restore = rng.choice([kill_band_write, kill_record])(sink)
                 with pytest.raises(RuntimeError, match="killed"):
                     sink(batch, b)
                 restore()
@@ -201,6 +203,7 @@ class TestNearDupIngestLongSoak:
                 sink(batch, b)  # replay of a committed batch
             if (b + 1) % self.COMPACT_EVERY == 0:
                 sink.compact(spark)
+                sink.vacuum()
 
         assert kills >= 5
         kept = sorted(
@@ -211,9 +214,10 @@ class TestNearDupIngestLongSoak:
 
 class TestIndexIngestLongSoak:
     """Long randomized stream through IndexIngestSink with kills before
-    the segment write, replays of committed batches, and interleaved
-    segment merges — the committed index must equal the batch-mode
-    inverted index over the crash-free corpus at every checkpoint."""
+    the segment write or before its commit record, replays of committed
+    batches, and interleaved segment merges and vacuums — the committed
+    index must equal the batch-mode inverted index over the crash-free
+    corpus at every checkpoint."""
 
     N_BATCHES = 48
     DOCS_PER_BATCH = 3
@@ -242,13 +246,22 @@ class TestIndexIngestLongSoak:
         batches, corpus = self._stream(rng)
 
         def kill_segment_write(s):
-            real = s._seg_state.write_batch
+            real = s.store.write
 
-            def boom(df, batch_id, partition_by=None):
+            def boom(batch_id, frames):
                 raise RuntimeError("killed before segment write")
 
-            s._seg_state.write_batch = boom
-            return lambda: setattr(s._seg_state, "write_batch", real)
+            s.store.write = boom
+            return lambda: setattr(s.store, "write", real)
+
+        def kill_record(s):
+            real = s.store.commit
+
+            def boom(batch_id, rows):
+                raise RuntimeError("killed before commit record")
+
+            s.store.commit = boom
+            return lambda: setattr(s.store, "commit", real)
 
         def check(upto):
             streamed = sorted(
@@ -268,7 +281,7 @@ class TestIndexIngestLongSoak:
         for b, docs in enumerate(batches):
             batch = spark.createDataFrame(docs, DOC_SCHEMA)
             if rng.random() < 0.2:
-                restore = kill_segment_write(sink)
+                restore = rng.choice([kill_segment_write, kill_record])(sink)
                 with pytest.raises(RuntimeError, match="killed"):
                     sink(batch, b)
                 restore()
@@ -278,6 +291,7 @@ class TestIndexIngestLongSoak:
                 sink(batch, b)  # replay of a committed batch
             if (b + 1) % self.COMPACT_EVERY == 0:
                 sink.compact(spark)
+                sink.vacuum()
                 check(b)
         assert kills >= 5
         check(self.N_BATCHES - 1)

@@ -5,11 +5,27 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from stream_loader_spark.sinks.table import BatchTable
 from stream_loader_spark.streaming.ingest import DedupIngestSink
 
 from conftest import JobGroup, job_group
 
 DOC_SCHEMA = "doc_id long, text string"
+
+
+def _table(root):
+    """A one-part table ``h`` under ``root``."""
+    return BatchTable(str(root), {"h": str(root / "h")})
+
+
+def _append(spark, store, batch_id, vals):
+    df = spark.createDataFrame([(v,) for v in vals], "h string")
+    store.commit(batch_id, store.write(batch_id, {"h": df}))
+
+
+def _gens(store):
+    """The generations the table's newest compaction record lists."""
+    return store._live()[0]
 
 
 def _write_batch(spark, src, rows):
@@ -464,18 +480,35 @@ class TestCountsRideTheWrites:
         }
 
     def test_compaction_runs_no_read_back_job(self, spark, tmp_path):
-        from stream_loader_spark.streaming.ingest import BatchDirState
-
-        state = BatchDirState(str(tmp_path / "state"))
+        store = _table(tmp_path / "state")
         for n in range(3):
-            rows = [(f"h{n}-{i}",) for i in range(n + 1)]
-            state.write_batch(spark.createDataFrame(rows, "h string"), n)
-        folded, jobs = _jobs_after_last_write(spark, lambda: state.compact(spark))
-        assert (folded, jobs) == (3, 0)  # batches 0-1: 1 + 2 rows
+            _append(spark, store, n, [f"h{n}-{i}" for i in range(n + 1)])
+        folded, jobs = _jobs_after_last_write(spark, lambda: store.compact(spark))
+        assert (folded, jobs) == ({"h": 6}, 0)  # batches 0-2: 1 + 2 + 3 rows
+
+
+class TestCommitRecord:
+    @pytest.mark.parametrize("kind", ["dedup", "near_dup"])
+    def test_uncommitted_corpus_dir_is_invisible(self, spark, tmp_path, kind):
+        """A ``corpus/batch=<n>`` dir written with no commit record (a
+        batch that crashed before its record) is not part of the
+        committed corpus."""
+        from stream_loader_spark.streaming.ingest import NearDupIngestSink
+
+        cls = DedupIngestSink if kind == "dedup" else NearDupIngestSink
+        out = str(tmp_path / "out")
+        sink = cls(out)
+        sink(spark.createDataFrame([(1, NEAR_A), (5, OTHER)], DOC_SCHEMA), 0)
+        spark.createDataFrame([(9, "z1 z2 z3 z4 z5 z6")], DOC_SCHEMA).write.parquet(
+            os.path.join(out, "corpus", "batch=1")
+        )
+        kept = sorted(r["doc_id"] for r in cls(out).committed_corpus(spark).collect())
+        assert kept == [1, 5]
 
 
 class TestIngestCompaction:
-    """streaming/ingest.py::BatchDirState — bounded state directories."""
+    """The ingest sinks' batch-directory tables (sinks/table.py) —
+    bounded state directories."""
 
     def _batch_dirs(self, root):
         return sorted(d for d in os.listdir(root) if d.startswith("batch="))
@@ -488,10 +521,12 @@ class TestIngestCompaction:
             [[(1, "alpha")], [(2, "beta")], [(3, "gamma")], [(4, "delta")]]
         ):
             sink(spark.createDataFrame(rows, DOC_SCHEMA), n)
-        folded = sink.compact(spark)
-        assert folded == 3  # batches 0-2 fold; batch 3 stays replayable
+        # every committed batch folds: a replay of any of them is a
+        # no-op by its record, so none has to stay a batch dir
+        assert sink.compact(spark) == {"corpus": 4, "hashes": 4}
+        sink.vacuum()
         hashes_root = os.path.join(str(tmp_path / "out"), "hashes")
-        assert self._batch_dirs(hashes_root) == ["batch=3"]
+        assert self._batch_dirs(hashes_root) == []
 
         # compacted history still blocks every old duplicate
         sink(spark.createDataFrame([(5, "alpha"), (6, "epsilon")], DOC_SCHEMA), 4)
@@ -499,14 +534,15 @@ class TestIngestCompaction:
         assert kept == [1, 2, 3, 4, 6]
 
     def test_replay_exclusion_survives_compaction(self, spark, tmp_path):
-        """The in-flight batch (highest id) is never folded, so a replay
-        still excludes exactly its own prior write from history."""
+        """A batch folded by compaction and vacuumed stays committed: its
+        replay is a no-op, so its own rows never dedup it as history."""
         from stream_loader_spark.streaming.ingest import DedupIngestSink
 
         sink = DedupIngestSink(str(tmp_path / "out"))
         sink(spark.createDataFrame([(1, "alpha")], DOC_SCHEMA), 0)
         sink(spark.createDataFrame([(2, "beta")], DOC_SCHEMA), 1)
         sink.compact(spark)
+        sink.vacuum()
         # replay batch 1: its own 'beta' must not look like history
         sink(spark.createDataFrame([(2, "beta")], DOC_SCHEMA), 1)
         kept = sorted(r["doc_id"] for r in sink.committed_corpus(spark).collect())
@@ -523,15 +559,16 @@ class TestIngestCompaction:
             (r["vec_id"], r["cluster_id"])
             for r in sink.assignments(spark).collect()
         )
-        assert sink.compact(spark) == 40  # batches 0-1 fold
+        assert sink.compact(spark) == {"assignments": 60}
         after = sorted(
             (r["vec_id"], r["cluster_id"])
             for r in sink.assignments(spark).collect()
         )
         assert after == before
         # cluster partition layout is preserved in the generation dir
-        gen = os.path.join(str(tmp_path / "ivf"), "assignments", "compact", "g=1")
-        assert any(d.startswith("cluster_id=") for d in os.listdir(gen))
+        (gen,) = [g["gen"] for g in _gens(sink.store)]
+        gen_dir = os.path.join(str(tmp_path / "ivf"), "assignments", f"gen={gen}")
+        assert any(d.startswith("cluster_id=") for d in os.listdir(gen_dir))
 
     def test_repeated_compaction_never_double_counts(self, spark, tmp_path):
         from stream_loader_spark.streaming.ingest import DedupIngestSink
@@ -540,19 +577,20 @@ class TestIngestCompaction:
         for n in range(3):
             sink(spark.createDataFrame([(n, f"doc{n}")], DOC_SCHEMA), n)
         sink.compact(spark)
-        assert sink.compact(spark) == 0  # nothing new: no-op, same gen
+        assert sink.compact(spark) == {}  # nothing new: no-op, same gen
         sink(spark.createDataFrame([(9, "doc9")], DOC_SCHEMA), 3)
-        sink.compact(spark)  # folds gen 1 + batch 2 into gen 2
-        hist = sink._history(spark, exclude_batch=99)
-        # docs 0-2 once each via gen 2, doc9 via its live batch dir
+        sink.compact(spark)  # folds the generation + batch 3 into a new one
+        hist = sink._history(spark)
+        # docs 0-2 and doc9 once each, from the one live generation
         assert hist.count() == hist.distinct().count() == 4
+        assert len(_gens(sink.store)) == 1
 
     def test_crash_before_meta_flip_keeps_old_state(self, spark, tmp_path):
-        """Compaction commits at the meta flip: dying after writing the
-        new generation but before the flip must leave readers on the
+        """Compaction commits at its record: dying after writing the new
+        generation but before the record must leave readers on the
         original directories (the orphan gen is never referenced)."""
         from stream_loader_spark.streaming.ingest import DedupIngestSink
-        import stream_loader_spark.streaming.ingest as ingest_mod
+        import stream_loader_spark.sinks.manifest as manifest_mod
 
         sink = DedupIngestSink(str(tmp_path / "out"))
         for n in range(3):
@@ -562,76 +600,73 @@ class TestIngestCompaction:
             raise RuntimeError("crash before meta flip")
 
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(ingest_mod, "atomic_write_json", crashing)
+            mp.setattr(manifest_mod, "atomic_write_json", crashing)
             with pytest.raises(RuntimeError):
                 sink.compact(spark)
         hashes_root = os.path.join(str(tmp_path / "out"), "hashes")
         assert self._batch_dirs(hashes_root) == ["batch=0", "batch=1", "batch=2"]
-        assert sink._history(spark, exclude_batch=99).count() == 3
+        assert sink._history(spark).count() == 3
         # the next compaction recovers and commits cleanly
-        assert sink.compact(spark) == 2
-        assert sink._history(spark, exclude_batch=99).count() == 3
+        assert sink.compact(spark) == {"corpus": 3, "hashes": 3}
+        assert sink._history(spark).count() == 3
 
     @pytest.mark.parametrize("fold", ["compact", "replace_all"])
     def test_generation_left_by_crash_mid_sweep_is_deleted(self, spark, tmp_path, fold):
-        """A crash after the meta flip, while superseded generations are
-        deleted, leaves one unreferenced: the next fold deletes it."""
-        import json
+        """A crash while vacuum deletes a superseded generation leaves
+        the record that names it: the next vacuum deletes it."""
         import shutil
 
-        from stream_loader_spark.streaming.ingest import BatchDirState
-
-        state = BatchDirState(str(tmp_path / "state"))
-
-        def rows(ids):
-            return spark.createDataFrame([(f"h{n}",) for n in ids], "h string")
-
+        store = _table(tmp_path / "state")
         for n in range(3):
-            state.write_batch(rows([n]), n)
-        state.compact(spark)  # g=1 holds batches 0-1
-        state.write_batch(rows([3]), 3)
+            _append(spark, store, n, [f"h{n}"])
+        store.compact(spark)  # one generation holds batches 0-2
+        _append(spark, store, 3, ["h3"])
+        store.compact(spark)  # a new one holds it and batch 3
         real = shutil.rmtree
 
         def crashing(path, *args, **kwargs):
-            if os.path.basename(path).startswith("g="):
+            if os.path.basename(path).startswith("gen="):
                 raise RuntimeError("crash mid-sweep")
             real(path, *args, **kwargs)
 
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(shutil, "rmtree", crashing)
             with pytest.raises(RuntimeError):
-                state.compact(spark)  # flips to g=2, then dies deleting g=1
-        gens_root = os.path.join(state.root, "compact")
-        assert sorted(os.listdir(gens_root)) == ["g=1", "g=2"]
-        assert sorted(r.h for r in state.read(spark).collect()) == ["h0", "h1", "h2", "h3"]
+                store.vacuum()  # dies deleting the first generation
 
-        state.write_batch(rows([4]), 4)
+        def gen_dirs():
+            return sorted(e for e in os.listdir(store.parts["h"]) if e.startswith("gen="))
+
+        assert len(gen_dirs()) == 2
+        assert sorted(r.h for r in store.read(spark, "h").collect()) == ["h0", "h1", "h2", "h3"]
+
+        _append(spark, store, 4, ["h4"])
         if fold == "compact":
-            state.compact(spark)
+            store.compact(spark)
         else:
-            state.replace_all(spark, rows(range(5)))
-        with open(os.path.join(state.root, "compaction.json")) as fh:
-            gens = json.load(fh)["gens"]
-        assert sorted(os.listdir(gens_root)) == [f"g={g}" for g in gens]
-        assert sorted(r.h for r in state.read(spark).collect()) == [f"h{n}" for n in range(5)]
+            rows = spark.createDataFrame([(f"h{n}",) for n in range(5)], "h string")
+            store.replace_all(spark, {"h": rows})
+        store.vacuum()
+        assert gen_dirs() == [f"gen={g['gen']}" for g in _gens(store)]
+        assert [e for e in os.listdir(store.parts["h"]) if e.startswith("batch=")] == []
+        assert sorted(r.h for r in store.read(spark, "h").collect()) == [f"h{n}" for n in range(5)]
 
 
 class TestCompactionHardening:
     def test_all_empty_fold_still_bounds_directories(self, spark, tmp_path):
         """An all-duplicate stream writes one EMPTY hash dir per trigger;
-        compaction must still advance and drop them."""
+        compaction and vacuum must still drop them."""
         from stream_loader_spark.streaming.ingest import DedupIngestSink
 
-        from stream_loader_spark.streaming.ingest import BatchDirState
-
-        # pure all-empty prefix (no generation yet): the upto must still
-        # advance and the empty dirs disappear
-        state = BatchDirState(str(tmp_path / "empties"))
+        # pure all-empty prefix (no generation yet): the records count
+        # no rows, the fold writes nothing and vacuum drops the dirs
+        store = _table(tmp_path / "empties")
         for n in range(3):
-            state.write_batch(spark.createDataFrame([], "h string"), n)
-        assert state.compact(spark) == 0
-        left = [d for d in os.listdir(state.root) if d.startswith("batch=")]
-        assert left == ["batch=2"]
+            _append(spark, store, n, [])
+        assert store.compact(spark) == {"h": 0}
+        store.vacuum()
+        assert os.listdir(store.parts["h"]) == []
+        assert store.read(spark, "h", "h string").count() == 0
 
         # duplicate stream over a real generation: empty dirs fold away
         # on every pass, directory count stays bounded
@@ -640,11 +675,13 @@ class TestCompactionHardening:
         for n in (1, 2, 3):  # all duplicates -> empty hash batch dirs
             sink(spark.createDataFrame([(n + 10, "alpha")], DOC_SCHEMA), n)
         sink.compact(spark)
+        sink.vacuum()
         sink(spark.createDataFrame([(20, "alpha")], DOC_SCHEMA), 4)
         sink.compact(spark)
+        sink.vacuum()
         hashes_root = os.path.join(str(tmp_path / "out"), "hashes")
         dirs = [d for d in os.listdir(hashes_root) if d.startswith("batch=")]
-        assert dirs == ["batch=4"]  # empties dropped despite no new rows
+        assert dirs == []  # empties dropped despite no new rows
         # and history is still authoritative
         sink(spark.createDataFrame([(30, "alpha"), (31, "new")], DOC_SCHEMA), 5)
         kept = sorted(r["doc_id"] for r in sink.committed_corpus(spark).collect())
@@ -688,53 +725,41 @@ class TestCompactionHardening:
 
 class TestCompactionModelBased:
     def test_random_write_compact_sequences_match_reference(self, spark, tmp_path):
-        """Model-based durability: ANY interleaving of batch writes,
-        replays, and compactions leaves the readable state equal to a
-        dict model of committed batches (minus the replay-excluded
-        one). The generation fold must be invisible to readers."""
+        """Model-based durability: ANY interleaving of committed
+        batches, batches that crash before their record, replays of
+        committed batches, full and tiered compactions and vacuums
+        leaves the readable state equal to a dict model of the
+        committed records. Folds, vacuums and unrecorded dirs must be
+        invisible to readers."""
         import random
-
-        from stream_loader_spark.streaming.ingest import BatchDirState
 
         rng = random.Random(814)
         for trial in range(3):
-            state = BatchDirState(str(tmp_path / f"s{trial}"))
+            store = _table(tmp_path / f"s{trial}")
             model: dict[int, list[str]] = {}
             next_batch = 0
-            for _ in range(10):
+            for _ in range(12):
                 op = rng.random()
-                if op < 0.6 or not model:
-                    rows = [f"b{next_batch}r{i}" for i in range(rng.randint(0, 3))]
-                    state.write_batch(
-                        spark.createDataFrame(
-                            [(v,) for v in rows], "val string"
-                        ),
-                        next_batch,
-                    )
+                rows = [f"b{next_batch}r{i}" for i in range(rng.randint(0, 3))]
+                df = spark.createDataFrame([(v,) for v in rows], "h string")
+                if op < 0.5:
+                    # overwrites what a crashed attempt at this id wrote
+                    store.commit(next_batch, store.write(next_batch, {"h": df}))
                     model[next_batch] = rows
                     next_batch += 1
-                elif op < 0.8:
-                    state.compact(spark)  # fold: must not change reads
+                elif op < 0.65:
+                    store.write(next_batch, {"h": df})  # crash before the record
+                elif op < 0.75 and model:
+                    # replay of the newest committed batch: a no-op
+                    assert store.replayed(df, next_batch - 1)
+                    assert not store.log.is_committed(next_batch)
+                elif op < 0.9:
+                    store.compact(spark, fanout=rng.choice([None, 2]))
                 else:
-                    # replay-overwrite of the latest (in-flight) batch
-                    b = next_batch - 1
-                    state.write_batch(
-                        spark.createDataFrame(
-                            [(v,) for v in model[b]], "val string"
-                        ),
-                        b,
-                    )
-                got = state.read(spark)
-                got_vals = sorted(r["val"] for r in got.collect()) if got is not None else []
+                    store.vacuum()
+                got = sorted(r["h"] for r in store.read(spark, "h", "h string").collect())
                 want = sorted(v for vs in model.values() for v in vs)
-                assert got_vals == want, f"trial {trial} diverged"
-                # and the exclude-latest view (what a replay sees)
-                excl = state.read(spark, exclude_batch=next_batch - 1)
-                evals = sorted(r["val"] for r in excl.collect()) if excl is not None else []
-                ewant = sorted(
-                    v for b, vs in model.items() if b != next_batch - 1 for v in vs
-                )
-                assert evals == ewant, f"trial {trial} exclude-view diverged"
+                assert got == want, f"trial {trial} diverged"
 
 
 class TestIndexIngest:
@@ -812,8 +837,8 @@ class TestIndexIngest:
         self._run(spark, src, sink, cp)
 
         before = sorted(tuple(r) for r in sink.postings(spark, 1, 100).collect())
-        folded = sink.compact(spark)  # returns consolidated ROW count
-        assert folded > 0
+        folded = sink.compact(spark)  # returns the rows written
+        assert folded["segments"] > 0
         after = sorted(tuple(r) for r in sink.postings(spark, 1, 100).collect())
         assert before == after
 
@@ -826,7 +851,7 @@ class TestIndexIngest:
         # the pruning column survives compaction as partition dirs
         import glob
 
-        gen_dirs = glob.glob(str(tmp_path / "idx" / "segments" / "compact" / "g=*" / "tbucket=*"))
+        gen_dirs = glob.glob(str(tmp_path / "idx" / "segments" / "gen=*" / "tbucket=*"))
         assert gen_dirs, "compacted generation must keep the tbucket layout"
 
     def test_lookup_rejects_empty_and_missing_state(self, spark, tmp_path):
@@ -860,8 +885,8 @@ class TestIndexIngest:
         # tiered maintenance left multiple live generations
         import glob
 
-        gens = glob.glob(str(tmp_path / "idx" / "segments" / "compact" / "g=*"))
-        assert len(gens) >= 2
+        gens = glob.glob(str(tmp_path / "idx" / "segments" / "gen=*"))
+        assert len(gens) == len(_gens(sink.store)) >= 2
 
         hits = sink.lookup(spark, ["red"])
         plan = hits._jdf.queryExecution().executedPlan().toString()
@@ -915,12 +940,11 @@ class TestIndexIngest:
         assert got() == expected
 
     def test_tiered_compaction_bounds_generations(self, spark, tmp_path):
-        """compact_tiered must (a) never re-read prior generations when
-        folding new batches, (b) cap the live generation count at the
-        fanout, and (c) preserve reads exactly — while the full refold
-        touches O(index) every call."""
+        """Tiered compaction must (a) never re-read prior generations
+        when folding new batches, (b) cap the live generation count at
+        the fanout, and (c) preserve reads exactly — while the full
+        refold touches O(index) every call."""
         import glob
-        import json
 
         from stream_loader_spark.streaming.ingest import IndexIngestSink
 
@@ -937,10 +961,7 @@ class TestIndexIngest:
                 sink.compact(spark, tiered=True)
         # after interleaved tiered compactions the generation list is
         # bounded and reads equal the never-compacted truth
-        meta = json.loads(
-            (tmp_path / "idx" / "segments" / "compaction.json").read_text()
-        )
-        assert len(meta["gens"]) <= max(2, 8)  # default fanout is 8
+        assert len(_gens(sink.store)) <= 8  # the tiered fanout
         got = sorted(tuple(r) for r in sink.postings(spark, 1, 1000).collect())
 
         truth_sink = IndexIngestSink(str(tmp_path / "idx2"), n=1, n_buckets=4)
@@ -955,17 +976,12 @@ class TestIndexIngest:
         assert got == want and len(got) > 0
 
         # explicit small fanout: repeated tier merges keep gens <= fanout
-        state = sink._seg_state
-        state.compact_tiered(spark, partition_by="tbucket",
-                             fold=sink._merge_segments, fanout=fanout)
-        meta = json.loads(
-            (tmp_path / "idx" / "segments" / "compaction.json").read_text()
-        )
-        assert len(meta["gens"]) <= fanout
+        sink.store.compact(spark, sink._merge_segments, fanout=fanout)
+        assert len(_gens(sink.store)) <= fanout
         assert sorted(
             tuple(r) for r in sink.postings(spark, 1, 1000).collect()
         ) == want
         # the tbucket layout survives tier merges (pruned lookups)
         assert glob.glob(
-            str(tmp_path / "idx" / "segments" / "compact" / "g=*" / "tbucket=*")
+            str(tmp_path / "idx" / "segments" / "gen=*" / "tbucket=*")
         )

@@ -195,6 +195,7 @@ class TestInRowOffsetsSink:
         table = sink.table(spark)
         assert table.count() == n
         assert {"_topic", "_partition", "_offset", "_watermark"} <= set(table.columns)
+        assert "batch" not in table.columns  # dirs are read as their own roots
 
         # Kafka-free restart: positions from the data itself (A1)
         pos = sink.committed_positions(spark)
@@ -217,16 +218,34 @@ class TestInRowOffsetsSink:
         sink = InRowOffsetsSink(str(tmp_path / "out"))
         batch = as_stream_records(load_table(spark, sf_small, "events"))
         sink(batch, 0)
-        files = sorted(os.listdir(sink._batch_dir(0)))
+        files = sorted(os.listdir(sink.store.batch_dir("data", 0)))
         assert "_SUCCESS" not in files
         assert sink.is_batch_committed(0)
         sink(batch, 0)  # replay: skipped, the batch's files stay as written
-        assert sorted(os.listdir(sink._batch_dir(0))) == files
+        assert sorted(os.listdir(sink.store.batch_dir("data", 0))) == files
         assert sink.table(spark).count() == batch.count()
         expected = committed_positions(batch, "topic", "partition", "offset", "ts")
         assert sorted(map(tuple, sink.committed_positions(spark).collect())) == sorted(
             map(tuple, expected.collect())
         )
+
+    def test_positions_after_compaction_run_at_most_three_jobs(self, spark, tmp_path):
+        """After 64 one-row batches, ``compact`` and ``vacuum``, the
+        recovery query reads one generation dir: no listing job with
+        one task per batch dir, which Spark adds past 32 paths."""
+        from datetime import datetime, timezone
+
+        sink = InRowOffsetsSink(str(tmp_path / "out"))
+        ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+        schema = "topic string, partition int, offset bigint, ts timestamp"
+        for b in range(64):
+            sink(spark.createDataFrame([("t", 0, b, ts)], schema), b)
+        assert sink.compact(spark) == {"data": 64}
+        assert len(sink.vacuum()) == 64
+        with job_group(spark) as group:
+            rows = sink.committed_positions(spark).collect()
+        assert len(group.job_ids()) <= 3
+        assert [(r.topic, r.partition, r.next_offset) for r in rows] == [("t", 0, 64)]
 
     def test_table_without_commit_log_is_refused(self, spark, tmp_path):
         """A table in the success-marker format (``batch=<n>`` dirs, no
@@ -237,6 +256,17 @@ class TestInRowOffsetsSink:
         with pytest.raises(ValueError, match="predates commit records"):
             InRowOffsetsSink(str(out))
         assert not os.path.exists(out / "_manifest")
+
+
+    def test_records_without_row_counts_are_refused(self, spark, tmp_path):
+        """A log whose batch records carry no row counts (the format
+        before batch-directory tables) is refused, not read."""
+        log = tmp_path / "out" / "_manifest"
+        log.mkdir(parents=True)
+        (log / f"batch-{0:020d}.json").write_text(json.dumps({"batch_id": 0}))
+        sink = InRowOffsetsSink(str(tmp_path / "out"))
+        with pytest.raises(ValueError, match="rebuild"):
+            sink.table(spark)
 
 
 class TestExternalOffsetsSink:
@@ -251,10 +281,7 @@ class TestExternalOffsetsSink:
         assert offsets.where(F.col("_consumer_group") == "cg1").count() > 0
 
         # data ↔ offsets joinable via _batch_id (the reference's _file_id FK)
-        data = spark.read.option("basePath", str(tmp_path / "data")).parquet(
-            str(tmp_path / "data" / "batch=*")
-        )
-        joined = data.join(offsets, "_batch_id")
+        joined = sink.data_table(spark).join(offsets, "_batch_id")
         assert joined.count() >= n
 
         pos = sink.committed_positions(spark)
@@ -296,7 +323,7 @@ class TestExternalOffsetsSink:
         )
         batch = as_stream_records(load_table(spark, sf_small, "events"))
         sink(batch, 0)
-        dirs = (sink._data_batch_dir(0), sink._offsets_batch_dir(0))
+        dirs = (sink.store.batch_dir("data", 0), sink.store.batch_dir("offsets", 0))
         files = [sorted(os.listdir(d)) for d in dirs]
         assert not any("_SUCCESS" in f for f in files)
         assert sink.is_batch_committed(0)
@@ -398,10 +425,11 @@ class TestCompaction:
         assert pos[("t", 1)].offset == top + 2
         assert sink.committed_data(spark).count() == n_batches * 2 * per
 
-    def test_legacy_replaces_list_records_still_read(self, spark, tmp_path):
-        """Pre-watermark compaction records (explicit ``replaces`` id
-        lists) must keep working: committed checks, live-set
-        resolution, vacuum, and a NEW compaction subsuming them."""
+    def test_legacy_replaces_list_records_are_refused(self, spark, tmp_path):
+        """Compaction records that enumerate the ids they fold
+        (``replaces``) instead of carrying the ``replaces_upto``
+        watermark are a format this log no longer reads: every reader
+        that opens one refuses it with "rebuild"."""
         from datetime import datetime, timezone
 
         ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -421,23 +449,15 @@ class TestCompaction:
         del rec["replaces_upto"]
         open(rec_path, "w").write(_json.dumps(rec))
 
-        assert sink.is_batch_committed(1)
-        assert len(sink.committed_batches()) == 1
-        sink.vacuum()
-        assert sink.is_batch_committed(2)
-        # a new batch + compaction subsumes the legacy record
-        sink.write_batch(
-            spark.createDataFrame([("t", 0, 99, ts)], schema), 7
-        )
-        assert sink.compact_data(spark) is not None
-        sink.vacuum()
-        rec2 = _json.loads(
-            open(glob.glob(str(tmp_path / "out" / "_manifest" / "compaction-*.json"))[0]).read()
-        )
-        assert rec2.get("replaces_upto") == 7
-        for b in (0, 1, 2, 7):
-            assert sink.is_batch_committed(b), b
-        assert sink.committed_data(spark).count() == 16
+        assert sink.is_batch_committed(1)  # its own record still exists
+        for read in (
+            lambda: sink.is_batch_committed(7),
+            sink.committed_batches,
+            sink.vacuum,
+            lambda: sink.compact_data(spark),
+        ):
+            with pytest.raises(ValueError, match="rebuild"):
+                read()
 
     def test_crash_before_compaction_record_is_safe(self, spark, stream_env, monkeypatch):
         sink = ManifestFileSink(stream_env["out"])
@@ -589,6 +609,47 @@ class TestManifestScanCost:
             assert sink._fold[1] == fresh._schema(fresh._records())
 
 
+    @pytest.mark.parametrize("kind", ["inrow", "external"])
+    @pytest.mark.parametrize("n_batches", [100, 1000])
+    def test_offsets_replay_check_after_maintenance_does_not_grow(
+        self, spark, tmp_path, monkeypatch, kind, n_batches
+    ):
+        """The offsets sinks' replay check lists the whole log for an id
+        it has no record for. After ``compact`` and ``vacuum`` that log
+        is one compaction record, however many batches committed: the
+        check lists one name and opens at most that record."""
+        from stream_loader_spark.sinks import manifest as manifest_mod
+
+        if kind == "inrow":
+            sink = InRowOffsetsSink(str(tmp_path / "out"))
+        else:
+            sink = ExternalOffsetsSink(
+                str(tmp_path / "data"), str(tmp_path / "offsets"), consumer_group="cg1"
+            )
+        for b in range(n_batches):  # dataless commits (heartbeat batches)
+            sink.store.commit(b, {part: 0 for part in sink.store.parts})
+        sink.compact(spark)
+        sink.vacuum()
+
+        opened, listed = [], []
+        real_listdir = os.listdir
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(path))
+            return open(path, *args, **kwargs)
+
+        def counting_listdir(path):
+            names = real_listdir(path)
+            listed.append(len(names))
+            return names
+
+        monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+        monkeypatch.setattr(os, "listdir", counting_listdir)
+        assert sink.is_batch_committed(n_batches // 2)  # folded, vacuumed
+        assert not sink.is_batch_committed(n_batches)
+        assert listed == [1, 1] and len(opened) == 2, (listed, opened)
+
+
 class TestBackfillThenStream:
     def test_bootstrap_from_history_then_stream_continues(self, spark, stream_env):
         """SURVEY §3.3: load historical data as a bounded backfill batch,
@@ -715,9 +776,8 @@ class TestBackfillAfterCompaction:
 
     def test_legacy_replaces_list_with_negative_ids(self, spark, stream_env):
         """A legacy compaction record enumerating ``replaces`` with a
-        negative id keeps its exact semantics: the enumerated backfill
-        is committed/vacuumable, a NEW (never-enumerated) negative id
-        is not covered."""
+        negative id is refused by the replay check of a reserved id and
+        by vacuum, not read with its old semantics."""
         import json as _json
 
         sink = ManifestFileSink(stream_env["out"])
@@ -735,11 +795,14 @@ class TestBackfillAfterCompaction:
         with open(os.path.join(mdir, comp), "w") as f:
             _json.dump(rec, f)
 
-        sink.vacuum()
-        assert sink.is_batch_committed(-1) and sink.is_batch_committed(0)
-        assert not sink.is_batch_committed(-2)  # a DIFFERENT reserved id
-        n = batch.count()
-        assert sink.committed_data(spark).count() == 2 * n
+        with pytest.raises(ValueError, match="rebuild"):
+            sink.is_batch_committed(-2)
+        with pytest.raises(ValueError, match="rebuild"):
+            sink.vacuum()
+        # nothing was deleted
+        assert sorted(f for f in os.listdir(mdir) if f.startswith("batch-")) == [
+            os.path.basename(sink.log.record_path(b)) for b in (-1, 0)
+        ]
 
 
 class TestPartialWriteInvisibility:
@@ -751,7 +814,7 @@ class TestPartialWriteInvisibility:
 
         # a batch whose write completed (_SUCCESS and all) but whose
         # commit record was never appended
-        partial = sink._batch_dir(99)
+        partial = sink.store.batch_dir("data", 99)
         batch.withColumn("offset", F.col("offset") + 10_000_000).select(
             F.col("topic").alias("_topic"),
             F.col("partition").alias("_partition"),
@@ -775,7 +838,7 @@ class TestPartialWriteInvisibility:
 
         # a batch whose offsets write completed (_SUCCESS and all) but
         # whose commit record was never appended
-        partial = sink._offsets_batch_dir(99)
+        partial = sink.store.batch_dir("offsets", 99)
         spark.createDataFrame(
             [(99, "cg1", "t", 0, 0, 99_999_999, None)],
             "_batch_id long, _consumer_group string, _topic string, _partition int, "
