@@ -253,7 +253,7 @@ def a3_external_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the fixtures' code-version token: bump it when the written shape of a
 # sink fixture changes
-_FIXTURE_VERSION = 7
+_FIXTURE_VERSION = 8
 _FIXTURE_TREE = "sink_fixtures_v"
 
 

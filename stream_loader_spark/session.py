@@ -3,11 +3,23 @@
 Tuned for correctness-vs-DuckDB (UTC session timezone, ANSI mode pinned
 ON — query authors must use try_cast/when guards for null-on-error
 semantics) and for scale-minded defaults (AQE on, shuffle partitions
-sized to cores rather than the 200 default). Parquet is written with
-zstd, ``functions.parquet_config.ParquetConfig``'s default codec, rather
-than Spark's snappy default, for every writer that does not pick its
-own. On a real cluster the same builder is used with ``master`` unset
-(inherited from spark-submit).
+sized to cores rather than the 200 default). On a real cluster the same
+builder is used with ``master`` unset (inherited from spark-submit).
+
+Parquet defaults, for every writer in the session (sink data, upsert
+deltas and bases, batch-table state, materialized views):
+
+- zstd, ``functions.parquet_config.ParquetConfig``'s default codec,
+  rather than Spark's snappy default, for every writer that does not
+  pick its own;
+- timestamps as INT64 ``TIMESTAMP(MICROS)`` rather than Spark's legacy
+  INT96, as the reference's Avro/Proto parquet builders write them.
+  INT64 is smaller and carries footer min/max statistics (INT96 carries
+  none), so a ``ts`` predicate on sink output can skip row groups. This
+  is a session setting, not a ``ParquetConfig`` field: Spark's parquet
+  writer reads ``outputTimestampType`` from the session's SQL conf and
+  ignores a per-write option. Readers read both encodings, so files of
+  either kind mix in one table.
 """
 
 from __future__ import annotations
@@ -72,8 +84,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # ParquetConfig's default codec (see the module docstring)
+        # ParquetConfig's default codec and INT64 timestamps (see the
+        # module docstring)
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # the events fixture stores TIMESTAMP(NANOS); Spark reads those as
         # raw longs and sources/kafka_view converts to micros explicitly
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

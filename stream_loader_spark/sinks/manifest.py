@@ -26,7 +26,8 @@ micro-batch of up to that many rows lands as ONE file per output
 partition (per date under ``partition_by``) in ``data/batch=n/`` — the
 reference's one-file-per-partition-per-batch ``RecordBatcher``/
 ``FileBuilder`` shape. Larger batches get one file per write task per
-output partition.
+output partition. Each file holds its rows ordered by (topic,
+partition, offset), sorted inside the write task.
 
 Crash matrix: die before data write → replay rewrites; die after data,
 before manifest → replay overwrites the same dir and then commits; die
@@ -362,11 +363,15 @@ class ManifestFileSink:
                         )
                     )
                     counts.append(row["record_count"])
-                # coalesce never raises the partition count
+                # coalesce never raises the partition count. Each task
+                # sorts its rows by (partition_by, topic, partition,
+                # offset): the partitioned writer needs them grouped by
+                # date anyway, so this is its one sort, and rows in
+                # stream order make each file's columns compress better
                 tasks = max(1, math.ceil(sum(counts) / ROWS_PER_WRITE_TASK))
-                self._build_writer(cached.coalesce(tasks)).save(
-                    self.batch_data_dir(batch_id)
-                )
+                order = [c for c in (self.partition_by, *self.meta_cols[:3]) if c]
+                ordered = cached.coalesce(tasks).sortWithinPartitions(*order)
+                self._build_writer(ordered).save(self.batch_data_dir(batch_id))
             finally:
                 # a failed write must not leak the cached batch across retries
                 cached.unpersist()

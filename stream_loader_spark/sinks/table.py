@@ -16,9 +16,11 @@ A fold (``compact``, ``replace_all``) writes one ``gen=<g>`` dir per
 part, then one compaction record (``CommitLog.compact``) that folds
 the batches it read and lists the live generations with their row
 counts: ``{"gens": [{"gen": g, "rows": {part: rows}}, ...]}``. A list,
-so that tiered compaction can keep several. ``vacuum`` deletes the dirs
-of the records a compaction superseded, then the records
-(``CommitLog.vacuum``). Run both between triggers, never concurrently
+so that tiered compaction can keep several. ``vacuum`` deletes the
+batch dirs of the records a compaction superseded, then the records
+(``CommitLog.vacuum``), then every generation the newest compaction
+does not list, below its id: superseded ones, and any a fold that died
+before its record left. Run both between triggers, never concurrently
 with a writing batch.
 
 A part that holds files while the table has no log predates commit
@@ -142,12 +144,21 @@ class BatchTable:
     def read(self, spark: SparkSession, part: str, empty: str | None = None) -> DataFrame:
         """The part's committed rows. With none, an empty frame of the
         DDL schema ``empty`` if given, else ``ValueError``."""
-        df = self._read(spark, self.dirs(part))
-        if df is not None:
-            return df
-        if empty is None:
-            raise ValueError(f"no committed batches under {self.parts[part]}")
-        return spark.createDataFrame([], empty)
+        return self.reads(spark, {part: empty})[part]
+
+    def reads(self, spark: SparkSession, empties: dict[str, str | None]) -> dict[str, DataFrame]:
+        """``read`` of each part in ``empties`` (part → ``empty``), all
+        from one reading of the log."""
+        units = self._units(*self._live()[:2])
+        out = {}
+        for part, empty in empties.items():
+            df = self._read(spark, self._dirs(part, units))
+            if df is None:
+                if empty is None:
+                    raise ValueError(f"no committed batches under {self.parts[part]}")
+                df = spark.createDataFrame([], empty)
+            out[part] = df
+        return out
 
     # -- maintenance ----------------------------------------------------
     def compact(self, spark: SparkSession, fold=None, fanout: int | None = None) -> dict[str, int]:
@@ -190,10 +201,10 @@ class BatchTable:
 
     def _publish(self, live, victims, batches, frames) -> dict[str, int]:
         """Write ``frames`` as generation ``gen=<id>`` (unreferenced
-        until the record, so a crash leaves an orphan, never a wrong
-        read), then publish the compaction record that folds
-        ``batches`` and lists the live generations without
-        ``victims``."""
+        until the record, so a crash leaves an orphan that ``vacuum``
+        deletes, never a wrong read), then publish the compaction
+        record that folds ``batches`` and lists the live generations
+        without ``victims``."""
         gens, _, gen = live
         rows = {
             part: 0 if df is None else self._write(df, self._gen_dir(part, gen))
@@ -209,24 +220,39 @@ class BatchTable:
         return rows
 
     def vacuum(self) -> list[str]:
-        """Delete the dirs of every record a compaction superseded, each
-        before its record (``CommitLog.vacuum``), so a crash midway
-        leaves the record for the next vacuum. Returns the dirs
+        """Delete the batch dirs of every record a compaction superseded,
+        each before its record (``CommitLog.vacuum``), so a crash midway
+        leaves the record for the next vacuum. Then delete every
+        ``gen=<g>`` dir the newest compaction does not list whose ``g``
+        is below that compaction's id: the generations it superseded,
+        and any a fold that died before its record left. A fold in
+        progress always writes above that id. Returns the dirs
         removed."""
         keep = {g["gen"] for g in self._live()[0]}
         removed = []
 
-        def drop(rec: dict) -> None:
-            if CommitLog.is_compaction(rec):
-                names = [f"gen={g['gen']}" for g in rec["gens"] if g["gen"] not in keep]
-            else:
-                names = [f"batch={rec['batch_id']}"]
+        def rm(name: str) -> None:
             for root in self.parts.values():
-                for name in names:
-                    d = os.path.join(root, name)
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
-                        removed.append(d)
+                d = os.path.join(root, name)
+                if os.path.isdir(d):
+                    shutil.rmtree(d)
+                    removed.append(d)
+
+        def drop(rec: dict) -> None:
+            if not CommitLog.is_compaction(rec):
+                rm(f"batch={rec['batch_id']}")
 
         self.log.vacuum(drop)
+        if keep:
+            newest = max(keep)  # the newest compaction lists its own generation
+            on_disk = {
+                int(name[4:])
+                for root in self.parts.values()
+                if os.path.isdir(root)
+                for name in os.listdir(root)
+                if name.startswith("gen=")
+            }
+            for g in sorted(on_disk - keep):
+                if g < newest:
+                    rm(f"gen={g}")
         return removed

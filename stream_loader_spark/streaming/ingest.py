@@ -323,12 +323,15 @@ class NearDupIngestSink:
         if self.store.replayed(batch_df, batch_id):
             return
         self.growth.check("NearDupIngestSink")
-        hist_docs = self.store.read(
-            spark, "corpus", f"{self.id_col} long, {self.text_col} string"
-        ).select(self.id_col, self.text_col)
-        hist_bands = self.store.read(
-            spark, "bands", f"{self.id_col} long, band int, band_hash bigint"
-        ).select(self.id_col, "band", "band_hash")
+        hist = self.store.reads(
+            spark,
+            {
+                "corpus": f"{self.id_col} long, {self.text_col} string",
+                "bands": f"{self.id_col} long, band int, band_hash bigint",
+            },
+        )
+        hist_docs = hist["corpus"].select(self.id_col, self.text_col)
+        hist_bands = hist["bands"].select(self.id_col, "band", "band_hash")
         batch_df = batch_df.persist()
         pairs = incremental_near_dup_pairs(
             batch_df,

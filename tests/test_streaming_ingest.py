@@ -138,6 +138,30 @@ class TestNearDupIngest:
         kept = sorted(r["doc_id"] for r in sink.committed_corpus(spark).collect())
         assert kept == [1, 5]
 
+    def test_commit_opens_each_live_record_once(self, spark, tmp_path, monkeypatch):
+        """The corpus and band reads of one commit share one reading of
+        the log: after 30 commits, the next opens 30 records."""
+        from stream_loader_spark.sinks import manifest as manifest_mod
+        from stream_loader_spark.streaming.ingest import NearDupIngestSink
+
+        sink = NearDupIngestSink(str(tmp_path / "out"))
+        sink(spark.createDataFrame([(1, NEAR_A), (5, OTHER)], DOC_SCHEMA), 0)
+        for b in range(1, 30):
+            sink.store.commit(b, {"corpus": 0, "bands": 0})  # dataless batches
+
+        opened = []
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(path))
+            return open(path, *args, **kwargs)
+
+        monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+        sink(spark.createDataFrame([(7, NEAR_A2), (9, "z1 z2 z3 z4 z5 z6")], DOC_SCHEMA), 30)
+        monkeypatch.undo()
+        assert len([n for n in opened if n.startswith("batch-")]) == 30
+        kept = sorted(r["doc_id"] for r in sink.committed_corpus(spark).collect())
+        assert kept == [1, 5, 9]
+
     def test_mismatched_banding_scheme_is_refused(self, spark, tmp_path):
         """An index persisted under one banding scheme must not be
         probed by a build with another: band hashes across schemes
@@ -613,7 +637,7 @@ class TestIngestCompaction:
     @pytest.mark.parametrize("fold", ["compact", "replace_all"])
     def test_generation_left_by_crash_mid_sweep_is_deleted(self, spark, tmp_path, fold):
         """A crash while vacuum deletes a superseded generation leaves
-        the record that names it: the next vacuum deletes it."""
+        that generation on disk: the next vacuum deletes it."""
         import shutil
 
         store = _table(tmp_path / "state")
@@ -650,6 +674,48 @@ class TestIngestCompaction:
         assert gen_dirs() == [f"gen={g['gen']}" for g in _gens(store)]
         assert [e for e in os.listdir(store.parts["h"]) if e.startswith("batch=")] == []
         assert sorted(r.h for r in store.read(spark, "h").collect()) == [f"h{n}" for n in range(5)]
+
+    def test_generation_left_by_fold_crash_before_its_record_is_deleted(self, spark, tmp_path):
+        """A fold that dies before its record leaves a generation no
+        record names; once a later fold takes a higher id, vacuum
+        deletes it."""
+        import stream_loader_spark.sinks.manifest as manifest_mod
+
+        store = _table(tmp_path / "state")
+        for n in range(3):
+            _append(spark, store, n, [f"h{n}"])
+
+        def crashing(dir_path, record, final_name):
+            raise RuntimeError("crash before the compaction record")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(manifest_mod, "atomic_write_json", crashing)
+            with pytest.raises(RuntimeError):
+                store.compact(spark)
+
+        def gen_dirs():
+            return sorted(e for e in os.listdir(store.parts["h"]) if e.startswith("gen="))
+
+        assert gen_dirs() == ["gen=3"]
+        _append(spark, store, 3, ["h3"])  # the rerun fold now takes id 4
+        store.compact(spark)
+        store.vacuum()
+        assert [g["gen"] for g in _gens(store)] == [4]
+        assert gen_dirs() == ["gen=4"]
+        assert sorted(r.h for r in store.read(spark, "h").collect()) == [f"h{n}" for n in range(4)]
+
+    def test_vacuum_keeps_generations_above_the_newest_record(self, spark, tmp_path):
+        """A generation above the newest compaction's id may belong to a
+        fold still writing: vacuum leaves it."""
+        store = _table(tmp_path / "state")
+        for n in range(2):
+            _append(spark, store, n, [f"h{n}"])
+        store.compact(spark)
+        in_progress = os.path.join(store.parts["h"], "gen=5")
+        spark.createDataFrame([("x",)], "h string").write.parquet(in_progress)
+        store.vacuum()
+        assert os.path.isdir(in_progress)
+        assert sorted(r.h for r in store.read(spark, "h").collect()) == ["h0", "h1"]
 
 
 class TestCompactionHardening:

@@ -187,6 +187,195 @@ class TestManifestWriteTasks:
         assert len(self._write(spark, tmp_path, "larger")) == 4
 
 
+def _parquet_files(root):
+    return sorted(
+        os.path.join(d, f) for d, _, files in os.walk(root) for f in files if f.endswith(".parquet")
+    )
+
+
+def _ts_column(path, name="ts"):
+    import pyarrow.parquet as pq
+
+    schema = pq.read_metadata(path).schema
+    return schema.column(schema.names.index(name))
+
+
+def _is_int64_micros(col) -> bool:
+    lt = json.loads(col.logical_type.to_json())
+    return (col.physical_type, lt["Type"], lt.get("timeUnit")) == ("INT64", "Timestamp", "microseconds")
+
+
+class TestSinkParquetEncoding:
+    """Sink parquet stores timestamps as INT64 ``TIMESTAMP(MICROS)``,
+    which carries footer min/max, and a manifest batch file holds its
+    rows in stream order."""
+
+    def _batch(self, spark, rows=400):
+        from datetime import datetime, timezone
+
+        # offsets descend and topics/partitions interleave, so the rows
+        # arrive far from stream order
+        return spark.range(0, rows, 1, 4).select(
+            F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias("topic"),
+            (F.col("id") % 4).cast("int").alias("partition"),
+            (F.lit(10_000) - F.col("id")).alias("offset"),
+            (
+                F.lit(datetime(2024, 1, 1, tzinfo=timezone.utc))
+                + F.make_interval(days=(F.col("id") % 3).cast("int"), secs=F.col("id"))
+            ).alias("ts"),
+        )
+
+    @pytest.mark.parametrize("partition_by", [None, "dt"])
+    def test_manifest_files_are_int64_micros_in_stream_order(self, spark, tmp_path, partition_by):
+        import pyarrow.parquet as pq
+
+        from stream_loader_spark.operators.layout import file_key_ranges
+
+        batch = self._batch(spark)
+        if partition_by:
+            batch = batch.withColumn("dt", F.to_date("ts"))
+        sink = ManifestFileSink(str(tmp_path / "out"), partition_by=partition_by)
+        sink.write_batch(batch, 0)
+        files = _parquet_files(sink.batch_data_dir(0))
+        assert len(files) == (3 if partition_by else 1)
+        for path in files:
+            assert _is_int64_micros(_ts_column(path)), _ts_column(path)
+            rows = pq.read_table(path, columns=["topic", "partition", "offset"]).to_pylist()
+            keys = [(r["topic"], r["partition"], r["offset"]) for r in rows]
+            assert keys == sorted(keys)
+        # INT96 columns carry no statistics, so this was empty
+        assert len(file_key_ranges(sink.batch_data_dir(0), "ts")) == len(files)
+        assert sink.committed_data(spark).count() == 400
+
+    def test_upsert_delta_is_int64_micros(self, spark, tmp_path):
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        sink = UpsertSink(str(tmp_path / "state"), ["partition", "offset"], "ts", num_buckets=4)
+        sink.write_batch(self._batch(spark, rows=40), 0)
+        files = _parquet_files(sink._version_dir("v", 0))
+        assert files
+        for path in files:
+            assert _is_int64_micros(_ts_column(path)), _ts_column(path)
+        assert sink.current_state(spark).count() == 40
+
+
+class TestMixedTimestampEncodings:
+    """A table written partly under Spark's INT96 timestamps and partly
+    under the INT64 default reads as one table, with no rebuild, across
+    the whole calendar range: every read agrees with a model."""
+
+    # micros since the epoch: before the Gregorian cutover, ordinary,
+    # and far in the future
+    OLD = -30_610_224_000_000_000  # 1000-01-01T00:00:00Z
+    FAR = 221_845_437_296_789_012  # 9000-01-01T12:34:56.789012Z
+    TS = [OLD, 0, 1_700_000_000_123_456, FAR]
+
+    @staticmethod
+    def _encoding(spark, kind):
+        key = "spark.sql.parquet.outputTimestampType"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, kind)
+        return lambda: spark.conf.set(key, prior)
+
+    def _commit(self, spark, kind, write):
+        restore = self._encoding(spark, kind)
+        try:
+            write()
+        finally:
+            restore()
+
+    def test_manifest_sink_reads_across_encodings(self, spark, tmp_path):
+        sink = ManifestFileSink(str(tmp_path / "out"))
+        model = set()
+        for batch_id in range(4):
+            rows = [
+                ("t", p, 100 * batch_id + i, self.TS[(batch_id + i) % 4])
+                for i, p in enumerate([0, 1, 0, 1, 2])
+            ]
+            model |= set(rows)
+            df = spark.createDataFrame(
+                rows, "topic string, partition int, offset bigint, us bigint"
+            ).select("topic", "partition", "offset", F.timestamp_micros("us").alias("ts"))
+            kind = "INT96" if batch_id < 2 else "TIMESTAMP_MICROS"
+            self._commit(spark, kind, lambda: sink.write_batch(df, batch_id))
+            (path,) = _parquet_files(sink.batch_data_dir(batch_id))
+            assert _ts_column(path).physical_type == ("INT96" if batch_id < 2 else "INT64")
+
+        def committed():
+            df = sink.committed_data(spark)
+            return sorted(
+                tuple(r)
+                for r in df.select("topic", "partition", "offset", F.unix_micros("ts")).collect()
+            )
+
+        assert committed() == sorted(model)
+        target = sink.compact_data(spark)
+        sink.vacuum()
+        assert [b.data_dir for b in sink.committed_batches()] == [target]
+        assert all(_is_int64_micros(_ts_column(p)) for p in _parquet_files(target))
+        assert committed() == sorted(model)
+        assert {k: p.offset for k, p in sink.committed_positions().items()} == {
+            ("t", 0): 303,
+            ("t", 1): 304,
+            ("t", 2): 305,
+        }
+
+    def test_upsert_sink_reads_across_encodings(self, spark, tmp_path):
+        from stream_loader_spark.sinks.upsert import UpsertSink
+
+        sink = UpsertSink(
+            str(tmp_path / "state"), ["k"], "ver", num_buckets=4, tombstone_col="_del"
+        )
+        # (k, ts micros, delete, ver). Key 3 is rewritten in batch 2
+        # with the row batch 0 stored under INT96: equal across the two
+        # encodings, so it is no change
+        ops = [
+            [(k, self.TS[k % 4], False, 1) for k in range(8)],
+            [(1, self.TS[3], False, 2), (2, None, True, 2), (5, self.TS[0], False, 2)],
+            [(2, self.TS[0], False, 3), (3, self.TS[3], False, 1), (5, None, True, 3)],
+            [(0, self.FAR, False, 4), (3, self.OLD, False, 4), (9, self.TS[2], False, 4)],
+        ]
+        model: dict[int, tuple] = {}  # k -> (ts micros, ver)
+        snaps, feeds = {}, {}
+        for batch_id, rows in enumerate(ops):
+            df = spark.createDataFrame(rows, "k long, us bigint, _del boolean, ver long").select(
+                "k", F.timestamp_micros("us").alias("ts"), "_del", "ver"
+            )
+            kind = "INT96" if batch_id < 2 else "TIMESTAMP_MICROS"
+            self._commit(spark, kind, lambda: sink.write_batch(df, batch_id))
+            feed = {}
+            for k, us, dele, ver in rows:
+                if dele and k in model:
+                    feed[k] = ("delete", None, None, *model.pop(k))
+                elif not dele and k not in model:
+                    feed[k] = ("insert", us, ver, None, None)
+                elif not dele and model[k] != (us, ver):
+                    feed[k] = ("update", us, ver, *model[k])
+                if not dele:
+                    model[k] = (us, ver)
+            snaps[batch_id], feeds[batch_id] = dict(model), feed
+        assert 3 not in feeds[2]
+        (path,) = _parquet_files(sink._version_dir("v", 1))
+        assert _ts_column(path).physical_type == "INT96"
+
+        def state(as_of=None):
+            df = sink.current_state(spark, as_of_batch=as_of)
+            return {r[0]: (r[1], r[2]) for r in df.select("k", F.unix_micros("ts"), "ver").collect()}
+
+        def change_feed(batch_id):
+            df = sink.change_feed(spark, batch_id).select(
+                "k", "_change", F.unix_micros("ts"), "ver", F.unix_micros("_old_ts"), "_old_ver"
+            )
+            return {r[0]: tuple(r[1:]) for r in df.collect()}
+
+        for b in range(4):
+            assert state(b) == snaps[b], b
+            assert change_feed(b) == feeds[b], b
+        sink.vacuum(keep_last=2)  # one base folds INT96 and INT64 deltas
+        assert state() == state(3) == snaps[3]
+        assert change_feed(3) == feeds[3]
+
+
 class TestInRowOffsetsSink:
     def test_load_and_recover_positions_from_data(self, spark, stream_env):
         sink = InRowOffsetsSink(stream_env["out"])
