@@ -202,7 +202,8 @@ def _ts_column(path, name="ts"):
 
 def _is_int64_micros(col) -> bool:
     lt = json.loads(col.logical_type.to_json())
-    return (col.physical_type, lt["Type"], lt.get("timeUnit")) == ("INT64", "Timestamp", "microseconds")
+    got = (col.physical_type, lt["Type"], lt.get("timeUnit"))
+    return got == ("INT64", "Timestamp", "microseconds")
 
 
 class TestSinkParquetEncoding:
@@ -243,7 +244,7 @@ class TestSinkParquetEncoding:
             rows = pq.read_table(path, columns=["topic", "partition", "offset"]).to_pylist()
             keys = [(r["topic"], r["partition"], r["offset"]) for r in rows]
             assert keys == sorted(keys)
-        # INT96 columns carry no statistics, so this was empty
+        # footer min/max per file: an INT96 column has none
         assert len(file_key_ranges(sink.batch_data_dir(0), "ts")) == len(files)
         assert sink.committed_data(spark).count() == 400
 
@@ -360,7 +361,8 @@ class TestMixedTimestampEncodings:
 
         def state(as_of=None):
             df = sink.current_state(spark, as_of_batch=as_of)
-            return {r[0]: (r[1], r[2]) for r in df.select("k", F.unix_micros("ts"), "ver").collect()}
+            rows = df.select("k", F.unix_micros("ts"), "ver").collect()
+            return {r[0]: (r[1], r[2]) for r in rows}
 
         def change_feed(batch_id):
             df = sink.change_feed(spark, batch_id).select(
