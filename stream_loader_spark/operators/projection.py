@@ -8,12 +8,22 @@
   loaders/S3.scala:73). In Spark this is ``to_date`` + ``partitionBy`` —
   Hive-style paths then give partition pruning on read for free.
 - P1 record formatting (1 raw record → 0..N typed rows) is
-  ``from_json``/``from_avro`` + ``explode`` — see ``formatted_records``.
+  ``from_json``/``from_avro``/``from_protobuf`` — see
+  ``formatted_records``. Every formatter emits the FORMATTED record, as
+  the reference's ``RecordFormatter`` hands its ``FileBuilder`` only the
+  typed record (sink/batch/RecordFormatter.scala:18-24): the input's
+  columns followed by the typed columns, with the raw payload column
+  kept in the schema but holding a value only on rows that did not
+  parse (a built-in dead letter). Rows that parsed, and rows whose
+  payload was NULL, hold NULL there, so a sink stores each payload once
+  and fields outside the declared schema are not stored.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stream_loader_spark.sources.kafka_view import kafka_metadata_columns
@@ -33,16 +43,50 @@ def with_date_partition(
     return records.withColumn(partition_col, F.to_date(F.col(ts_col)))
 
 
+_PARSED = "_parsed"
+_CORRUPT = "_corrupt_record"
+
+
+def format_payload(
+    records: DataFrame,
+    parsed: Column,
+    value_col: str,
+    failed: Callable[[Column], Column] | None = None,
+) -> DataFrame:
+    """The one output shape of the P1 formatters: ``records`` followed by
+    the fields of ``parsed`` (a struct Column over the payload), with
+    ``value_col`` NULL except on rows where ``failed`` holds.
+
+    ``failed`` maps the parsed struct Column to a boolean Column; by
+    default a NULL struct over a non-NULL payload, which is how a
+    PERMISSIVE binary decoder reports a payload it could not read."""
+    struct = F.col(_PARSED)
+    bad = failed(struct) if failed else struct.isNull() & F.col(value_col).isNotNull()
+    return (
+        records.withColumn(_PARSED, parsed)
+        .withColumn(value_col, F.when(bad, F.col(value_col)))
+        .select("*", f"{_PARSED}.*")
+        .drop(_PARSED)
+    )
+
+
 def formatted_records(records: DataFrame, schema: str, value_col: str = "props") -> DataFrame:
     """P1: parse the payload into typed columns (JSON flavor).
 
-    ``schema`` is a DDL string, e.g. ``"k INT"``. Unparseable payloads
-    yield NULL fields (permissive mode), matching the reference's
-    formatter contract of 0..N output rows per input.
-    """
-    return records.withColumn("_parsed", F.from_json(F.col(value_col), schema)).select(
-        "*", "_parsed.*"
-    ).drop("_parsed")
+    ``schema`` is a DDL string, e.g. ``"k INT"``. A payload that does
+    not parse (malformed JSON, or a value whose type does not match its
+    field) yields NULL for the fields it could not fill (permissive
+    mode) and keeps its raw text in ``value_col``; the detector is the
+    engine's ``columnNameOfCorruptRecord`` channel, which captures the
+    raw text of exactly the rows Jackson rejected. Every other row
+    holds NULL in ``value_col``, a blank payload included (it parses to
+    no record)."""
+    parsed = F.from_json(
+        F.col(value_col), f"{schema}, {_CORRUPT} STRING", {"columnNameOfCorruptRecord": _CORRUPT}
+    )
+    return format_payload(
+        records, parsed, value_col, lambda p: p[_CORRUPT].isNotNull()
+    ).drop(_CORRUPT)
 
 
 # -- binary record formats (P2 / E4 / E5) ----------------------------------
@@ -85,8 +129,9 @@ def avro_formatted_records(
 ) -> DataFrame:
     """P2/E4: parse binary Avro payloads into typed columns.
 
-    ``mode='PERMISSIVE'`` nulls out corrupt payloads (the formatter's
-    0..N contract); ``'FAILFAST'`` surfaces them as task errors.
+    ``mode='PERMISSIVE'`` nulls out a corrupt payload's fields and keeps
+    its bytes in ``value_col`` (NULL on every row that parsed);
+    ``'FAILFAST'`` surfaces it as a task error.
     """
     if not avro_available(records.sparkSession):
         raise RuntimeError(
@@ -96,7 +141,7 @@ def avro_formatted_records(
     from pyspark.sql.avro.functions import from_avro
 
     parsed = from_avro(F.col(value_col), avro_schema_json, {"mode": mode})
-    return records.withColumn("_parsed", parsed).select("*", "_parsed.*").drop("_parsed")
+    return format_payload(records, parsed, value_col)
 
 
 def protobuf_formatted_records(
@@ -106,7 +151,9 @@ def protobuf_formatted_records(
     value_col: str = "value",
 ) -> DataFrame:
     """E5: parse binary Protobuf payloads into typed columns, from a
-    compiled descriptor-set file (protoc --descriptor_set_out)."""
+    compiled descriptor-set file (protoc --descriptor_set_out). The
+    decoder is FAILFAST, so a corrupt payload fails its task and
+    ``value_col`` is NULL on every row."""
     if not protobuf_available(records.sparkSession):
         raise RuntimeError(
             "Protobuf formatting requires the spark-protobuf package "
@@ -115,57 +162,35 @@ def protobuf_formatted_records(
     from pyspark.sql.protobuf.functions import from_protobuf
 
     parsed = from_protobuf(F.col(value_col), message_name, descFilePath=descriptor_file)
-    return records.withColumn("_parsed", parsed).select("*", "_parsed.*").drop("_parsed")
+    return format_payload(records, parsed, value_col)
 
 
 def formatted_records_split(
     records: DataFrame,
     schema: str,
     value_col: str = "props",
-    corrupt_col: str = "_corrupt_record",
     materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """P1 with a dead-letter path: (good, quarantined) DataFrames.
 
-    ``formatted_records`` follows the reference's permissive contract
-    (unparseable payloads yield NULL fields) — but a loader feeding a
-    warehouse usually wants corrupt bytes ROUTED, not silently nulled.
-    Spark 4's permissive ``from_json`` returns a struct of null FIELDS
-    for malformed input (never a null struct), so mere null-checking
-    cannot distinguish corrupt payloads from valid JSON missing a key;
-    the detector is the engine's own ``columnNameOfCorruptRecord``
-    channel, which captures the raw text of exactly the rows Jackson
-    rejected.
-
-    ``good`` carries the parsed columns (NULL payloads parse to NULL
-    fields and stay good — absence is not corruption); ``quarantined``
-    keeps the original record shape for a replayable dead-letter sink.
-    Both sides are lazy filters over one parse expression and add no
-    shuffle — but they are two separate ACTIONS when written to two
-    sinks, so a ``foreachBatch`` router should ``persist()`` the
-    micro-batch first to pay the source scan once (see
+    Both are filters over ``formatted_records``: ``good`` is the rows
+    whose payload is NULL after formatting (rows that parsed, and rows
+    whose payload was NULL: absence is not corruption), with the typed
+    columns; ``quarantined`` is the rows that kept their payload, in
+    the original record shape, for a replayable dead-letter sink.
+    Neither side adds a shuffle, but they are two separate ACTIONS when
+    written to two sinks, so a ``foreachBatch`` router should
+    ``persist()`` the micro-batch first to pay the source scan once (see
     tests/test_streaming_sinks.py::TestQuarantineRouting). Batch
     callers that consume BOTH sides inside one job can pass
-    ``materialize=True`` instead: the parsed frame is checkpointed so
-    the scan and the JSON parse run once rather than once per side.
+    ``materialize=True`` instead: the formatted frame is checkpointed
+    so the scan and the JSON parse run once rather than once per side.
     """
-    full_schema = f"{schema}, {corrupt_col} STRING"
-    parsed = records.withColumn(
-        "_parsed",
-        F.from_json(
-            F.col(value_col), full_schema, {"columnNameOfCorruptRecord": corrupt_col}
-        ),
-    )
+    formatted = formatted_records(records, schema, value_col)
     if materialize:
-        parsed = parsed.localCheckpoint(eager=False)
-    is_bad = F.col(f"_parsed.{corrupt_col}").isNotNull()
-    good = (
-        parsed.where(~is_bad | F.col(value_col).isNull())
-        .select("*", "_parsed.*")
-        .drop("_parsed", corrupt_col)
-    )
-    quarantined = parsed.where(is_bad).drop("_parsed")
-    return good, quarantined
+        formatted = formatted.localCheckpoint(eager=False)
+    kept = F.col(value_col).isNotNull()
+    return formatted.where(~kept), formatted.where(kept).select(*records.columns)
 
 
 _UDTF_SEQ = iter(range(1_000_000))

@@ -42,9 +42,11 @@ batch-directory tables of the offsets and ingest sinks
 replay check and one vacuum.
 
 Maintenance is ``compact_data`` (fold the live batch dirs into one dir
-under one compaction record) followed by ``vacuum`` (delete what that
-record superseded), so the listing a reader does stays bounded by the
-batches since the last compaction.
+under one compaction record, written like one batch of their rows: one
+file per date per ``ROWS_PER_WRITE_TASK`` rows, in stream order)
+followed by ``vacuum`` (delete what that record superseded), so the
+dirs and files a reader lists and opens stay bounded by the batches
+since the last compaction.
 
 Commit metrics (the reference's sinker metrics,
 RecordBatchingSinker.scala:175-208) live in the sink's
@@ -325,6 +327,19 @@ class ManifestFileSink:
             writer = writer.partitionBy(self.partition_by)
         return writer
 
+    def _save(self, df: DataFrame, rows: int | None, target: str) -> None:
+        """Write ``df`` to ``target``. Given its row count, in one task
+        per ``ROWS_PER_WRITE_TASK`` rows (coalesce never raises the
+        partition count), each sorting its rows by (partition_by, topic,
+        partition, offset): the partitioned writer needs them grouped by
+        date anyway, so this is its one sort, and rows in stream order
+        make each file's columns compress better."""
+        if rows is not None:
+            tasks = max(1, math.ceil(rows / ROWS_PER_WRITE_TASK))
+            order = [c for c in (self.partition_by, *self.meta_cols[:3]) if c]
+            df = df.coalesce(tasks).sortWithinPartitions(*order)
+        self._build_writer(df).save(target)
+
     @staticmethod
     def _range_dicts(ranges: list[StreamRange]) -> list[dict]:
         return [
@@ -363,15 +378,7 @@ class ManifestFileSink:
                         )
                     )
                     counts.append(row["record_count"])
-                # coalesce never raises the partition count. Each task
-                # sorts its rows by (partition_by, topic, partition,
-                # offset): the partitioned writer needs them grouped by
-                # date anyway, so this is its one sort, and rows in
-                # stream order make each file's columns compress better
-                tasks = max(1, math.ceil(sum(counts) / ROWS_PER_WRITE_TASK))
-                order = [c for c in (self.partition_by, *self.meta_cols[:3]) if c]
-                ordered = cached.coalesce(tasks).sortWithinPartitions(*order)
-                self._build_writer(ordered).save(self.batch_data_dir(batch_id))
+                self._save(cached, sum(counts), self.batch_data_dir(batch_id))
             finally:
                 # a failed write must not leak the cached batch across retries
                 cached.unpersist()
@@ -525,7 +532,13 @@ class ManifestFileSink:
         df = self._load_dirs(
             spark, [b.data_dir for b in live if os.path.exists(b.data_dir)]
         )
-        self._build_writer(df).save(target)
+        # the offsets the ranges span bound the rows from above (offsets
+        # dropped upstream leave gaps): the fold may take more write
+        # tasks than its rows need, never fewer
+        rows = None
+        if self.meta_cols is not None:
+            rows = sum(r.end.offset - r.start.offset + 1 for b in live for r in b.ranges)
+        self._save(df, rows, target)
 
         from stream_loader_spark.model.range import merge_ranges, summarize_ranges
 

@@ -243,6 +243,79 @@ class TestManifestCommitShape:
             tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
             assert 1 <= tasks <= 7, (group.name, tasks)
 
+class TestFormattedPayload:
+    """A JSON-formatted manifest sink stores each payload once: as typed
+    columns, with the raw payload column NULL on every row that parsed."""
+
+    @staticmethod
+    def _props_nulls(data_dir):
+        """(null count, row count) of ``props`` in each data file."""
+        import pyarrow.parquet as pq
+
+        out = []
+        for root, _, files in os.walk(data_dir):
+            for f in files:
+                if f.endswith(".parquet"):
+                    md = pq.read_metadata(os.path.join(root, f))
+                    col = md.schema.names.index("props")
+                    nulls = sum(
+                        md.row_group(g).column(col).statistics.null_count
+                        for g in range(md.num_row_groups)
+                    )
+                    out.append((nulls, md.num_rows))
+        return out
+
+    def test_parsed_payloads_are_not_stored(self, spark, tmp_path):
+        cfg = TestBuildApp()._config(tmp_path)
+        _write_source(spark, cfg["source"]["path"])
+        app = build_app(spark, cfg)
+        app.pipeline.run_available()
+        stats = [s for b in app.sink.committed_batches() for s in self._props_nulls(b.data_dir)]
+        assert stats and all(nulls == rows for nulls, rows in stats), stats
+        got = app.sink.committed_data(spark)
+        assert got.count() == 20
+        assert got.where(F.col("k") == 7).select("v").first()[0] == "x7"
+
+    def test_reads_batches_that_stored_the_payload(self, spark, tmp_path, monkeypatch):
+        """Batches committed when every row kept its payload read beside
+        new ones, before and after compaction: no rebuild."""
+        from stream_loader_spark.streaming import pipeline
+
+        def keeps_payload(df, schema, value_col):
+            parsed = F.from_json(F.col(value_col), schema)
+            return df.withColumn("_p", parsed).select("*", "_p.*").drop("_p")
+
+        cfg = TestBuildApp()._config(tmp_path)
+        src = cfg["source"]["path"]
+        _write_source(spark, src, n=10)
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "formatted_records", keeps_payload)
+            build_app(spark, cfg).pipeline.run_available()
+        # new offsets 10..19, one of them not JSON
+        spark.createDataFrame(
+            [
+                ("t", 0, i, datetime(2024, 1, 2), json.dumps({"k": i, "v": f"x{i}"}))
+                for i in range(10, 19)
+            ]
+            + [("t", 0, 19, datetime(2024, 1, 2), "{not json")],
+            REC_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(src)
+        app = build_app(spark, cfg)
+        app.pipeline.run_available()
+        assert len(app.sink.committed_batches()) == 2
+
+        def committed():
+            rows = app.sink.committed_data(spark).select("offset", "props", "k", "v").collect()
+            return sorted(tuple(r) for r in rows)
+
+        old = [(i, json.dumps({"k": i, "v": f"x{i}"}), i, f"x{i}") for i in range(10)]
+        new = [(i, None, i, f"x{i}") for i in range(10, 19)] + [(19, "{not json", None, None)]
+        assert committed() == old + new
+        app.sink.compact_data(spark)
+        app.sink.vacuum()
+        assert committed() == old + new
+
+
 class TestConfigHardening:
     def test_dedup_block_validated(self, spark, tmp_path):
         cfg = {

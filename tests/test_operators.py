@@ -575,9 +575,102 @@ class TestBinaryFormatters:
             '{"type":"record","name":"r","fields":'
             '[{"name":"k","type":"int"},{"name":"name","type":"string"}]}'
         )
-        df = spark.createDataFrame([(bytearray(b"\x02\x04ab"),)], "value binary")
-        out = avro_formatted_records(df, schema).select("k", "name").collect()
-        assert [(r["k"], r["name"]) for r in out] == [(1, "ab")]
+        # the second payload ends before its string: PERMISSIVE decodes
+        # it to a NULL record, and the row keeps its bytes
+        df = spark.createDataFrame(
+            [(0, bytearray(b"\x02\x04ab")), (1, bytearray(b"\x02"))], "i int, value binary"
+        )
+        out = avro_formatted_records(df, schema).orderBy("i").collect()
+        assert [(r["k"], r["name"], r["value"]) for r in out] == [
+            (1, "ab", None),
+            (None, None, bytearray(b"\x02")),
+        ]
+
+
+class TestFormatterContract:
+    """A formatter emits the formatted record: the input's columns, then
+    the typed columns; the payload column holds a value only on rows
+    that did not parse."""
+
+    SCHEMA = "k INT, v STRING"
+    # (offset, payload, typed (k, v), payload kept)
+    ROWS = [
+        (0, '{"k": 1, "v": "a"}', (1, "a"), False),
+        (1, '{"k": 2, "v": "b", "extra": [1, 2]}', (2, "b"), False),
+        (2, '{"v": "c"}', (None, "c"), False),  # a missing key is not corrupt
+        (3, '{"k": "x", "v": "d"}', (None, "d"), True),  # type mismatch
+        (4, '{"k": 99999999999}', (None, None), True),  # overflows INT
+        (5, '{{"k": 5}', (None, None), True),  # malformed
+        (6, "[1, 2]", (None, None), True),  # not an object
+        (7, None, (None, None), False),
+    ]
+
+    def _records(self, spark):
+        return spark.createDataFrame(
+            [("t", 0, o, p) for o, p, _, _ in self.ROWS],
+            "topic string, partition int, offset bigint, props string",
+        )
+
+    def test_payload_kept_only_where_it_did_not_parse(self, spark):
+        from stream_loader_spark.operators.projection import formatted_records
+
+        out = formatted_records(self._records(spark), self.SCHEMA)
+        assert out.columns == ["topic", "partition", "offset", "props", "k", "v"]
+        got = {r["offset"]: ((r["k"], r["v"]), r["props"]) for r in out.collect()}
+        assert got == {o: (typed, p if kept else None) for o, p, typed, kept in self.ROWS}
+
+    def test_typed_columns_match_a_plain_parse(self, spark):
+        """Detecting corrupt payloads changes no typed value: the typed
+        columns are those of a permissive ``from_json`` without the
+        corrupt-record channel."""
+        from stream_loader_spark.operators.projection import formatted_records
+
+        records = self._records(spark)
+        plain = records.select("offset", F.from_json("props", self.SCHEMA).alias("p"))
+        want = {
+            r["offset"]: (r["p"]["k"], r["p"]["v"]) if r["p"] else (None, None)
+            for r in plain.collect()
+        }
+        out = formatted_records(records, self.SCHEMA).collect()
+        assert {r["offset"]: (r["k"], r["v"]) for r in out} == want
+
+    def test_split_routes_on_the_kept_payload(self, spark):
+        from stream_loader_spark.operators.projection import formatted_records_split
+
+        records = self._records(spark)
+        good, bad = formatted_records_split(records, self.SCHEMA)
+        kept = {o for o, _, _, k in self.ROWS if k}
+        assert sorted(r["offset"] for r in good.collect()) == sorted(
+            o for o, _, _, k in self.ROWS if not k
+        )
+        assert good.where(F.col("props").isNotNull()).count() == 0
+        # quarantine is the original record shape, payload intact
+        assert bad.columns == records.columns
+        assert sorted(map(tuple, bad.collect())) == sorted(
+            map(tuple, records.where(F.col("offset").isin(*kept)).collect())
+        )
+
+    def test_helper_over_a_plain_struct(self, spark):
+        """``format_payload`` over any struct Column. By default a row
+        keeps its payload when the struct is NULL over a non-NULL
+        payload, as a PERMISSIVE binary decoder reports a bad payload."""
+        from stream_loader_spark.operators.projection import format_payload
+
+        records = spark.createDataFrame(
+            [(0, "ok"), (1, "bad"), (2, None)], "offset bigint, value string"
+        )
+        parsed = F.when(
+            F.col("value") == "ok", F.struct(F.lit(7).alias("n"), F.lit("s").alias("h"))
+        )
+        out = format_payload(records, parsed, "value")
+        assert out.columns == ["offset", "value", "n", "h"]
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == [(0, None, 7, "s"), (1, "bad", None, None), (2, None, None, None)]
+
+        # a caller's own detector
+        out = format_payload(records, parsed, "value", lambda p: p["h"] != "s")
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == [(0, None, 7, "s"), (1, None, None, None), (2, None, None, None)]
 
 
 class TestComponentsStrategyEquivalence:

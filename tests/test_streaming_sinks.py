@@ -572,6 +572,37 @@ class TestCompaction:
         assert sink.committed_data(spark).count() == 4 * n
         assert len(sink.committed_batches()) == 1
 
+    def test_compaction_writes_one_file_per_date_in_stream_order(self, spark, tmp_path):
+        """Twelve five-row batches over two dates fold into one file per
+        date, its rows sorted by (topic, partition, offset): the fold
+        writes like the write path, not one file per folded batch."""
+        import pyarrow.parquet as pq
+        from datetime import datetime, timezone
+
+        sink = ManifestFileSink(str(tmp_path / "out"), partition_by="dt")
+        model = set()
+        for batch_id in range(12):
+            rows = [
+                (f"t{o % 2}", o % 3, o, datetime(2024, 1, 1 + o % 2, tzinfo=timezone.utc))
+                for o in range(5 * batch_id, 5 * batch_id + 5)
+            ]
+            model |= {r[:3] for r in rows}
+            df = spark.createDataFrame(
+                rows, "topic string, partition int, offset bigint, ts timestamp"
+            ).withColumn("dt", F.to_date("ts"))
+            sink.write_batch(df, batch_id)
+        target = sink.compact_data(spark)
+        files = _parquet_files(target)
+        dates = sorted(os.path.basename(os.path.dirname(f)) for f in files)
+        assert dates == ["dt=2024-01-01", "dt=2024-01-02"], files
+        for path in files:
+            rows = pq.read_table(path, columns=["topic", "partition", "offset"]).to_pylist()
+            keys = [(r["topic"], r["partition"], r["offset"]) for r in rows]
+            assert keys == sorted(keys)
+        sink.vacuum()
+        got = sink.committed_data(spark).select("topic", "partition", "offset").collect()
+        assert sorted(map(tuple, got)) == sorted(model)
+
     def test_compaction_record_stays_bounded_with_sparse_offsets(self, spark, tmp_path):
         """With SPARSE per-partition offsets (offset = a global event id,
         so consecutive-only merging can never collapse across batches),
